@@ -47,22 +47,12 @@ final case class Engine(spark: SparkSession) {
     spark.readStream.format("vortex").load(path)
 
   /** Compact a directory of small vortex files (e.g. streaming-sink
-    * epochs) into `numFiles` larger ones — the standard antidote to
-    * small-files accumulation; writes to a temp dir then swaps. */
-  def compactVortex(path: String, numFiles: Int = 1): Unit = {
-    val tmp = path.stripSuffix("/") + ".compact.tmp"
-    readVortex(path).repartition(numFiles)
-      .write.format("vortex").mode("overwrite").save(tmp)
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val t = new org.apache.hadoop.fs.Path(tmp)
-    val fs = p.getFileSystem(conf)
-    val bak = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + ".compact.bak")
-    fs.delete(bak, true)
-    if (!fs.rename(p, bak) || !fs.rename(t, p))
-      throw new java.io.IOException(s"vortex: compaction swap failed for $path")
-    fs.delete(bak, true)
-  }
+    * epochs) into ~128 MB files — the standard antidote to small-files
+    * accumulation. Runs [[sources.vortex.VortexMaintenance.compact]]:
+    * under the dataset's maintenance lease, through its commit log and
+    * stats manifests, with deletion-vector masks folded first. */
+  def compactVortex(path: String): sources.vortex.VortexMaintenance.CompactResult =
+    sources.vortex.VortexMaintenance.compact(spark, path)
 
   /** Row-level `DELETE FROM <dataset> WHERE predicate` — the
     * corpus-purge / GDPR-delete primitive: only files whose stats

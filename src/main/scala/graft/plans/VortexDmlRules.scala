@@ -127,6 +127,12 @@ case class VortexMergeCommand(dir: String,
                               payload: VortexDmlRules.MergePayload)
     extends LeafRunnableCommand {
   override def run(session: SparkSession): Seq[Row] = {
+    execute(session)
+    Seq.empty
+  }
+
+  /** run the statement and return its file and row counts */
+  def execute(session: SparkSession): VortexMerge.MergeResult = {
     val p = payload
     val source = org.apache.spark.sql.graft.GraftSqlBridge.ofRows(session, p.sourcePlan)
     def mat(a: VortexMerge.MatchedAction): VortexMerge.MatchedAction =
@@ -142,7 +148,6 @@ case class VortexMergeCommand(dir: String,
       p.matched.map(mat), p.notMatched.map(matNm),
       p.notMatchedBySource.map(mat), p.fingerprint,
       ansiScalarDups = p.ansiScalarDups)
-    Seq.empty
   }
 }
 

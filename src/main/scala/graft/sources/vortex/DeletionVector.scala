@@ -204,13 +204,10 @@ object DeletionVector {
   def read(maskPath: Path, conf: Configuration): Mask =
     read(maskPath.getFileSystem(conf), maskPath)
 
-  /** Write a mask tmp next to the data file; returns the tmp path. The
-    * caller (driver commit) renames it to `maskName(data, seq)`. */
-  def writeTmp(fs: FileSystem, dataPath: Path, m: Mask): Path = {
-    val tmp = new Path(dataPath.getParent,
-      s".${dataPath.getName}.dv.${java.util.UUID.randomUUID().toString.take(8)}.inprogress")
-    val out = fs.create(tmp, true)
+  /** Write `m` to `p` (a tmp the driver commit renames to
+    * `maskName(data, seq)`). */
+  def write(fs: FileSystem, p: Path, m: Mask): Unit = {
+    val out = fs.create(p, true)
     try out.write(toBytes(m)) finally out.close()
-    tmp
   }
 }

@@ -4,13 +4,12 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.types.StructType
 
-/** The shared driver-side commit machinery of the row-level maintenance
-  * ops (DELETE / UPDATE / MERGE / foldMasks): per-file rename-in →
-  * delete-source → drop-sidecars, parallel dispatch, the per-schema
-  * stats-manifest write, and the stale-replacement repair that keeps
+/** Commit-side helpers of the maintenance statements: the remover
+  * that retires or deletes superseded files, the per-schema
+  * stats-manifest write, the cross-statement crash repairs that keep
   * the deterministic-name crash contract safe across DIFFERENT
-  * statements (one implementation — the four ops previously each
-  * carried a drifting copy). */
+  * statements, and the compaction commit markers. The per-file commit
+  * itself lives in RowLevelStatement. */
 private[graft] object MaintenanceCommit {
 
   /** How a maintenance commit removes a COMMITTED file it supersedes
@@ -37,45 +36,6 @@ private[graft] object MaintenanceCommit {
       fs.rename(p, dst)
     }
   }
-
-  /** One replacement to commit: rename `tmp` to `dstName` beside `src`,
-    * then delete `src` and all its mask sidecars. */
-  final case class Replacement(src: String, tmp: String, dstName: String)
-
-  def dropMasks(fs: FileSystem, maskBind: Map[String, (String, Seq[String])],
-                file: String, remover: Remover): Unit =
-    maskBind.get(file).foreach(_._2.foreach(m =>
-      try remover.remove(fs, new Path(m)) catch { case _: Exception => () }))
-
-  /** Per-file commit order is rename-in THEN delete-source, so no
-    * committed state ever loses a surviving row. `op` names the
-    * statement in error messages. */
-  def commitOne(fs: FileSystem, op: String,
-                maskBind: Map[String, (String, Seq[String])],
-                r: Replacement, remover: Remover): Unit = {
-    val src = new Path(r.src)
-    val tmp = new Path(r.tmp)
-    val dst = new Path(src.getParent, r.dstName)
-    // a stale replacement from a crashed prior run of this same
-    // statement: overwrite it (content identical by construction;
-    // plain delete — no generation references an uncommitted half)
-    if (fs.exists(dst) && !fs.delete(dst, false))
-      throw new java.io.IOException(s"vortex $op: cannot replace stale $dst")
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"vortex $op: rename failed for $dst")
-    if (!remover.remove(fs, src))
-      throw new java.io.IOException(s"vortex $op: failed to delete replaced ${r.src}")
-    dropMasks(fs, maskBind, r.src, remover)
-  }
-
-  /** Commit every replacement (parallel when >1 — metadata-only RPCs). */
-  def commitAll(fs: FileSystem, op: String,
-                maskBind: Map[String, (String, Seq[String])],
-                rs: Seq[Replacement], remover: Remover): Unit =
-    if (rs.length > 1)
-      java.util.Arrays.stream(rs.toArray).parallel()
-        .forEach(r => commitOne(fs, op, maskBind, r, remover))
-    else rs.foreach(r => commitOne(fs, op, maskBind, r, remover))
 
   /** One stats-manifest write per replacement-file schema version (the
     * manifest envelope records a single schema). */

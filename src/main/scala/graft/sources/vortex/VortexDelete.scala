@@ -2,11 +2,8 @@ package graft.sources.vortex
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Expression, GenericInternalRow, Predicate => CatalystPredicate}
-import org.apache.spark.sql.catalyst.plans.logical
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Predicate => CatalystPredicate}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
 
 /** `DELETE FROM <vortex dataset> WHERE <predicate>` — file-granularity
   * row deletion, the corpus-purge / GDPR-delete primitive a 100 TB
@@ -16,7 +13,9 @@ import org.apache.spark.util.SerializableConfiguration
   * deletes over vortex files — this is capability the 100 TB shape
   * demands (VERDICT r8 "What's missing" #2).
   *
-  * Three tiers, mirroring how the scan reads:
+  * Three tiers, mirroring how the scan reads — the shared row-level
+  * pipeline (RowLevelStatement) runs all three; this object supplies
+  * the per-file classify/rewrite kernel:
   *
   *  1. PLAN (driver, metadata only): the candidate file set is exactly
   *     the set the scan itself would read for this predicate — we plan
@@ -49,11 +48,11 @@ import org.apache.spark.util.SerializableConfiguration
   *     deleted/replaced files go stale harmlessly (entries are
   *     (path, len)-validated).
   *
-  * Crash contract (NO dataset-level atomicity — this is a maintenance
-  * op over a manifest-less directory format): a crash mid-commit can
-  * leave the dataset partially deleted, and the window between a
-  * replacement's rename-in and its source's delete can briefly hold a
-  * survivor twice. RE-RUNNING THE SAME DELETE CONVERGES: already-
+  * Crash contract: a crash mid-commit can leave the PLAIN listing
+  * partially deleted (the commit log's latest generation stays the
+  * pre-statement state), and the window between a replacement's
+  * rename-in and its source's delete can briefly hold a survivor
+  * twice. RE-RUNNING THE SAME DELETE CONVERGES: already-
   * replaced files have no matches and are untouched; a source whose
   * replacement renamed in but whose delete was lost is re-classified,
   * its stale replacement is overwritten (the deterministic name makes
@@ -65,35 +64,19 @@ import org.apache.spark.util.SerializableConfiguration
   * listing view (VortexDataSource.consistentView) resolves a
   * coexisting source/replacement pair to its before state, so a
   * survivor is never served twice (MaintenanceRepairSpec). What
-  * remains out of contract: cross-FILE statement atomicity (a reader
-  * can see file A after and file B before the same statement — a
-  * directory format has no commit log to pin a statement boundary),
-  * and the plan-to-read race (a scan that planned a file the commit
-  * then deleted fails loudly with FileNotFound, never silently).
+  * remains out of contract for plain (non-time-travel) reads:
+  * cross-FILE statement atomicity (a reader can see file A after and
+  * file B before the same statement — pin a commit-log generation for
+  * a statement boundary), and the plan-to-read race (a scan that
+  * planned a file the commit then deleted fails loudly with
+  * FileNotFound, never silently).
   */
 object VortexDelete {
+  import RowLevelStatement.{Candidate, Drop, FileOutcome, Keep, Mask, Replace}
 
   final case class DeleteResult(candidateFiles: Int, untouchedFiles: Int,
                                 droppedFiles: Int, rewrittenFiles: Int,
                                 rowsDeleted: Long, maskedFiles: Int = 0)
-
-  private final case class Candidate(file: String, partCols: Array[String],
-                                     partValues: Array[String],
-                                     plannedChunks: Array[Int],
-                                     bloomCols: Set[String], sketchCols: Set[String],
-                                     dstName: String, relDir: String,
-                                     maskFile: String, nextMaskSeq: Int)
-
-  /** status: 0 untouched, 1 drop whole, 2 rewritten (tmp written),
-    * 3 mask written (deletion-vector mode: tmp holds the UNION mask).
-    * Tasks are non-destructive — `tmp` holds the survivors file (2) or
-    * mask sidecar (3) awaiting the driver's rename; `entry` is the
-    * replacement's manifest entry (relPath already final), built
-    * executor-side. */
-  private final case class FileOutcome(file: String, status: Int, rowsDeleted: Long,
-                                       tmp: Option[String], dstName: Option[String],
-                                       entry: Option[StatsManifest.FileStats],
-                                       schemaJson: Option[String])
 
   /** Replacement basename derived from the SOURCE basename: a re-run
     * after a crash mid-commit regenerates the same name, so the stale
@@ -124,176 +107,44 @@ object VortexDelete {
     * idempotence spec. Production callers use the public overloads. */
   private[graft] def deleteImpl(spark: SparkSession, dir: String, predicate: Column,
                                 deletionVectors: Boolean = false,
-                                failAfterCommits: Int = -1): DeleteResult = {
-    val hconf = spark.sessionState.newHadoopConf()
-    val root = new Path(dir)
-    val fs = root.getFileSystem(hconf)
-    // writer-vs-writer mutual exclusion: the whole statement — repair,
-    // planning, the distributed job, the commit — runs under the
-    // dataset's maintenance lease (see MaintenanceLock for the
-    // contract; a concurrent statement fails loudly, never interleaves)
-    MaintenanceLock.withLock(fs, root, "delete") {
-    // ONE listing walk serves the empty-check, the mask binding for
-    // commit-time cleanup, and the cross-statement stale-replacement
-    // repair (the plan below does its own listing — that one is
-    // inherent to the scan)
-    // complete/roll back any crashed compact batches first (their
-    // markers pair random part-compact names with their absorbed
-    // sources — see MaintenanceCommit.repairStaleCompactions)
-    MaintenanceCommit.repairStaleCompactions(fs, root)
-    val (listed, maskBind) = VortexDataSource.listAllWithMasks(Seq(dir), hconf, consistent = false)
-    // a dataset a prior delete emptied has no schema to infer — the
-    // delete is a no-op, not an error (matches DELETE on an empty table)
-    if (listed.isEmpty) return DeleteResult(0, 0, 0, 0, 0L)
-    val repaired0 = MaintenanceCommit.repairStaleReplacements(fs, listed.map(_._1)) +
-      MaintenanceCommit.repairStaleUpdvAppends(fs, listed.map(_._1), maskBind)
-    // time travel: ensure the commit log's latest generation is the
-    // pre-statement state; superseded files retire instead of deleting; the
-    // statement's own walk is reusable iff the repairs dropped nothing
-    val ttCtx = VortexCommitLog.begin(spark, fs, root, hconf, "delete",
-      if (repaired0 == 0) Some((listed, maskBind)) else None)
-    val remover = ttCtx.map(_.remover).getOrElse(MaintenanceCommit.PlainRemover)
-    val df = spark.read.format("vortex").load(dir)
-    val filtered = df.filter(predicate)
-
-    // resolved predicate over the table's output, bound to ordinal
-    // references so executors can evaluate it without an analyzer
-    val (cond0, output) = filtered.queryExecution.analyzed.collectFirst {
-      case f: logical.Filter => (f.condition, f.child.output)
-    }.getOrElse(throw new IllegalArgumentException(
-      s"vortex delete: cannot resolve predicate $predicate"))
-    // the ANALYZED condition can hold RuntimeReplaceable nodes (BETWEEN,
-    // nvl, ilike, …) whose eval() asserts — normally the optimizer's
-    // ReplaceExpressions rewrites them; we bind pre-optimizer, so apply
-    // the same rewrite here (to fixpoint: a replacement may nest more)
-    val cond = replaceRuntime(cond0)
-    require(cond.deterministic, "vortex delete: predicate must be deterministic")
-    val bound: Expression = BindReferences.bindReference(cond, AttributeSeq(output))
-    val tableSchema: StructType = StructType(output.map(a =>
-      org.apache.spark.sql.types.StructField(a.name, a.dataType, a.nullable, a.metadata)))
-    // classification (pass 1) reads ONLY the predicate's columns — on a
-    // wide corpus table that is the difference between counting matches
-    // over one column and decoding every page of every candidate
-    val refNames = cond.references.map(_.name).toSet
-    val predOutput = output.filter(a => refNames.contains(a.name))
-    val predBound: Expression = BindReferences.bindReference(cond, AttributeSeq(predOutput))
-    val predSchema: StructType = StructType(predOutput.map(a =>
-      org.apache.spark.sql.types.StructField(a.name, a.dataType, a.nullable, a.metadata)))
-
-    // candidate files = what the pushed-down scan would read
-    val parts = filtered.queryExecution.sparkPlan.collect {
-      case b: BatchScanExec => b
-    }.flatMap(_.inputPartitions).collect { case v: VortexInputPartition => v }
-
-    val rootQ = fs.makeQualified(root).toString
-    val manifest = StatsManifest.read(root, hconf)
-
-    val cands: Seq[Candidate] = parts.groupBy(_.file).toSeq.sortBy(_._1).map {
-      case (file, ps) =>
-        val p = new Path(file)
-        val rel = fs.makeQualified(p).toString
-          .stripPrefix(rootQ).stripPrefix("/")
-        val relDir = rel.lastIndexOf('/') match {
-          case -1 => ""
-          case i => rel.substring(0, i)
-        }
-        val entry = manifest.get(rel)
-        val newestMask = ps.head.maskFile
-        val nextSeq = maskBind.get(file).map(_._2.flatMap(m =>
-          DeletionVector.parseName(new Path(m).getName).map(_._2)).max + 1).getOrElse(1)
-        Candidate(file, ps.head.partCols, ps.head.partValues,
-          ps.flatMap(_.chunkIdxs).distinct.sorted.toArray,
-          entry.map(_.cols.filter(_.bloom.isDefined).map(_.name).toSet).getOrElse(Set.empty),
-          entry.map(_.cols.filter(_.sketch.isDefined).map(_.name).toSet).getOrElse(Set.empty),
-          replacementName(p.getName), relDir, newestMask, nextSeq)
-    }
-    if (cands.isEmpty) return DeleteResult(0, 0, 0, 0, 0L)
-
-    val sconf = new SerializableConfiguration(hconf)
-    val outcomes: Array[FileOutcome] = spark.sparkContext
-      .parallelize(cands, cands.length)
-      .map(c => processFile(c, tableSchema, bound, predSchema, predBound,
-        deletionVectors, sconf.value))
-      .collect()
-
-    // COMMIT (driver): metadata-only rename/delete per touched file, in
-    // parallel — the only destructive phase of the job. Per-file order
-    // is rename-in THEN delete-source, so no committed state ever loses
-    // a surviving row; the deterministic replacement name makes a
-    // re-run after any crash converge (see the crash contract above).
-    val committed = new java.util.concurrent.atomic.AtomicInteger(0)
-    def commitOne(o: FileOutcome): Unit = {
-      if (failAfterCommits >= 0 && committed.get() >= failAfterCommits)
-        throw new RuntimeException(
-          s"vortex delete: injected crash after $failAfterCommits commits (test seam)")
-      val src = new Path(o.file)
-      o.status match {
-        case 1 =>
-          if (!remover.remove(fs, src))
-            throw new java.io.IOException(s"vortex delete: failed to delete ${o.file}")
-          MaintenanceCommit.dropMasks(fs, maskBind, o.file, remover)
-        case 2 =>
-          MaintenanceCommit.commitOne(fs, "delete", maskBind,
-            MaintenanceCommit.Replacement(o.file, o.tmp.get, o.dstName.get), remover)
-        case 3 =>
-          // deletion-vector commit: the union mask renames in under
-          // seq+1, THEN older seqs drop (best effort — a crash between
-          // leaves both; readers bind the newest, a superset). Only
-          // PRE-JOB masks are in maskBind — never the new one.
-          val tmp = new Path(o.tmp.get)
-          val dst = new Path(src.getParent, o.dstName.get)
-          if (fs.exists(dst) && !fs.delete(dst, false))
-            throw new java.io.IOException(s"vortex delete: cannot replace stale mask $dst")
-          if (!fs.rename(tmp, dst))
-            throw new java.io.IOException(s"vortex delete: mask rename failed for $dst")
-          MaintenanceCommit.dropMasks(fs, maskBind, o.file, remover)
-        case _ =>
+                                failAfterCommits: Int = -1): DeleteResult =
+    RowLevelStatement.run(spark, dir, "delete") { st =>
+      // a dataset a prior delete emptied has no schema to infer — the
+      // delete is a no-op, not an error (matches DELETE on an empty table)
+      if (st.listed.isEmpty) DeleteResult(0, 0, 0, 0, 0L)
+      else {
+        st.begin()
+        val filtered = spark.read.format("vortex").load(dir).filter(predicate)
+        val pred = RowLevelStatement.bindPredicate(filtered, "delete")
+        val cands = st.candidates(filtered, replacementName)
+        val outcomes = st.perFile(cands)((c, conf) =>
+          processFile(c, pred, deletionVectors, conf))
+        st.commit(outcomes, failAfterCommits)
+        DeleteResult(cands.length,
+          outcomes.count(_.change == Keep),
+          outcomes.count(_.change == Drop),
+          outcomes.count(_.change.isInstanceOf[Replace]),
+          outcomes.map(_.rowsDeleted).sum,
+          outcomes.count(_.change.isInstanceOf[Mask]))
       }
-      committed.incrementAndGet()
-      ()
     }
-    val destructive = outcomes.filter(_.status != 0)
-    if (failAfterCommits >= 0) destructive.foreach(commitOne) // deterministic for the spec
-    else if (destructive.length > 1)
-      java.util.Arrays.stream(destructive).parallel().forEach(o => commitOne(o))
-    else destructive.foreach(commitOne)
 
-    // one manifest commit per replacement-file schema (compact's rule:
-    // the manifest envelope records a single schema). Entries were
-    // built on the executors; the driver only groups and writes.
-    MaintenanceCommit.writeManifests(root, hconf, "delete",
-      outcomes.toSeq.flatMap(o => o.entry.map(e => (o.schemaJson.get, e))))
-    ttCtx.foreach(_.finish())
-
-    DeleteResult(cands.length,
-      outcomes.count(_.status == 0),
-      outcomes.count(_.status == 1),
-      outcomes.count(_.status == 2),
-      outcomes.map(_.rowsDeleted).sum,
-      outcomes.count(_.status == 3))
-    } // MaintenanceLock.withLock
-  }
-
-  /** Runs on an executor: classify one file, write the survivors tmp if
-    * a rewrite is needed, and build the replacement's manifest entry.
-    * NEVER mutates the dataset (retry/speculation-safe). Pass 1
-    * (classification) reads only `predSchema`/`predBound` — the
-    * predicate's columns; pass 2 (rewrite) reads the full
-    * `tableSchema`/`bound`. */
-  private def processFile(c: Candidate, tableSchema: StructType, bound: Expression,
-                          predSchema: StructType, predBound: Expression,
+  /** Runs on an executor: classify one file, then stage its survivors
+    * (rewrite tier) or its union mask (mask tier). NEVER mutates the
+    * dataset (retry/speculation-safe). Classification reads only the
+    * predicate's columns; the row-path rewrite reads the full table
+    * row. */
+  private def processFile(c: Candidate, p: RowLevelStatement.BoundPredicate,
                           deletionVectors: Boolean,
                           conf: org.apache.hadoop.conf.Configuration): FileOutcome = {
-    val path = new Path(c.file)
+    val path = c.path
     val fs = path.getFileSystem(conf)
     val footer = VortexFileReader.readFooter(path, conf)
     val totalRows = footer.chunks.map(_.rowCount.toLong).sum
     val existing: DeletionVector.Mask =
       if (c.maskFile == null) null else DeletionVector.read(fs, new Path(c.maskFile))
     val liveRows = totalRows - (if (existing == null) 0L else existing.cardinality)
-    val pred = CatalystPredicate.create(bound)
-    pred.initialize(0)
-    val predNarrow = CatalystPredicate.create(predBound)
+    val predNarrow = CatalystPredicate.create(p.narrow)
     predNarrow.initialize(0)
 
     if (deletionVectors) {
@@ -304,117 +155,82 @@ object VortexDelete {
       val positions = scala.collection.mutable.ArrayBuffer[Long]()
       c.plannedChunks.foreach { ci =>
         val part = VortexInputPartition(c.file, Array(ci), c.partCols, c.partValues)
-        val r = new VortexPartitionReader(part, conf, predSchema, evolution = true)
-        var p = chunkBase(ci)
+        val r = new VortexPartitionReader(part, conf, p.narrowSchema, evolution = true)
+        var pos = chunkBase(ci)
         try while (r.next()) {
-          if ((existing == null || !existing.isDeleted(p)) && predNarrow.eval(r.get()))
-            positions += p
-          p += 1
+          if ((existing == null || !existing.isDeleted(pos)) && predNarrow.eval(r.get()))
+            positions += pos
+          pos += 1
         } finally r.close()
       }
-      if (positions.isEmpty)
-        return FileOutcome(c.file, 0, 0L, None, None, None, None)
-      if (positions.length.toLong == liveRows)
-        // nothing would survive: drop the file whole (driver deletes
-        // data + masks) instead of masking 100% of it
-        return FileOutcome(c.file, 1, liveRows, None, None, None, None)
-      val union =
-        if (existing == null) DeletionVector.fromPositions(positions.toArray)
-        else DeletionVector.union(existing, DeletionVector.fromPositions(positions.toArray))
-      val tmp = DeletionVector.writeTmp(fs, path, union)
-      return FileOutcome(c.file, 3, positions.length.toLong, Some(tmp.toString),
-        Some(DeletionVector.maskName(path.getName, c.nextMaskSeq)), None, None)
+      // nothing would survive: drop the file whole (data + masks)
+      // instead of masking 100% of it
+      return if (positions.isEmpty) FileOutcome(c.file, Keep)
+      else if (positions.length.toLong == liveRows)
+        FileOutcome(c.file, Drop, rowsDeleted = liveRows)
+      else {
+        val added = DeletionVector.fromPositions(positions.toArray)
+        val union = if (existing == null) added else DeletionVector.union(existing, added)
+        FileOutcome(c.file, Mask(RowLevelStatement.writeMask(c, union, conf)),
+          rowsDeleted = positions.length.toLong)
+      }
     }
 
-    def countMatches(chunkIdxs: Array[Int]): Long = {
-      // mask-aware read: matches are counted among LIVE rows only
-      val part = VortexInputPartition(c.file, chunkIdxs, c.partCols, c.partValues,
+    // mask-aware count: matches are counted among LIVE rows only
+    val matches = {
+      val part = VortexInputPartition(c.file, c.plannedChunks, c.partCols, c.partValues,
         maskFile = c.maskFile)
-      val r = new VortexPartitionReader(part, conf, predSchema, evolution = true)
+      val r = new VortexPartitionReader(part, conf, p.narrowSchema, evolution = true)
       var n = 0L
       try while (r.next()) { if (predNarrow.eval(r.get())) n += 1 } finally r.close()
       n
     }
-
-    val matches = countMatches(c.plannedChunks)
-    if (matches == 0L)
-      return FileOutcome(c.file, 0, 0L, None, None, None, None)
-
-    if (matches == liveRows) {
-      // every live row matches: mark drop-whole (driver deletes), no rewrite
-      return FileOutcome(c.file, 1, liveRows, None, None, None, None)
-    }
+    if (matches == 0L) return FileOutcome(c.file, Keep)
+    // every live row matches: drop whole, no rewrite
+    if (matches == liveRows) return FileOutcome(c.file, Drop, rowsDeleted = liveRows)
 
     // rewrite survivors (predicate FALSE or NULL) with the file's OWN
     // schema — untouched columns, metadata (ts units) and layout
-    // directory all preserved. The tmp is attempt-unique (concurrent
-    // speculative attempts never share a write target); the driver
-    // renames the WINNING attempt's tmp to the deterministic name.
-    val tmp = new Path(path.getParent,
-      s".${c.dstName}.${java.util.UUID.randomUUID().toString.take(8)}.inprogress")
-    val rel0 = if (c.relDir.isEmpty) c.dstName else s"${c.relDir}/${c.dstName}"
-    // columnar survivor rewrite (SurvivorSplice, r15 optimization):
-    // chunk-at-a-time on decoded vectors — same survivors, same exact
-    // stats, ~half the rewrite CPU of the boxed row loop (DelProbe A/B
-    // in BASELINE.md). Falls back to the row path for shredded-struct /
+    // directory all preserved. Columnar survivor rewrite
+    // (SurvivorSplice): chunk-at-a-time on decoded vectors — same
+    // survivors, same exact stats, ~half the rewrite CPU of the boxed
+    // row loop. Falls back to the row path for shredded-struct /
     // nested layouts and partition-column predicates.
-    if (SurvivorSplice.applicable(footer, predSchema)) {
-      try {
-        val r = SurvivorSplice.rewrite(path, tmp, conf, footer, predSchema,
-          predBound, c.plannedChunks, existing, c.bloomCols, c.sketchCols, rel0)
-        return FileOutcome(c.file, 2, r.droppedPred, Some(tmp.toString),
-          Some(c.dstName), Some(r.entry), Some(r.schemaJson))
-      } catch { case e: Throwable =>
-        try fs.delete(tmp, false) catch { case _: Exception => () }
-        throw e
+    if (SurvivorSplice.applicable(footer, p.narrowSchema)) {
+      RowLevelStatement.withTmp(c, c.dstName, conf) { tmp =>
+        val r = SurvivorSplice.rewrite(path, tmp, conf, footer, p.narrowSchema,
+          p.narrow, c.plannedChunks, existing, c.bloomCols, c.sketchCols, c.rel(c.dstName))
+        FileOutcome(c.file, Replace(RowLevelStatement.Staged(tmp.toString, c.dstName,
+          Some(r.entry), r.schemaJson)), rowsDeleted = r.droppedPred)
       }
-    }
-    val fileFields = footer.schema.fields
-    val slot: Array[Int] = fileFields.map(f => tableSchema.fieldIndex(f.name))
-    val writer = new VortexFileWriter(tmp, conf, footer.schema,
-      bloomCols = c.bloomCols, sketchCols = c.sketchCols)
-    var deleted = 0L
-    try {
-      // mask-aware full read: the rewrite folds any existing mask in
-      // (survivors exclude previously-masked rows)
-      val part = VortexInputPartition(c.file, footer.chunks.indices.toArray,
-        c.partCols, c.partValues, maskFile = c.maskFile)
-      val r = new VortexPartitionReader(part, conf, tableSchema, evolution = true)
-      val out = new GenericInternalRow(fileFields.length)
-      try while (r.next()) {
-        val row = r.get()
-        if (pred.eval(row)) deleted += 1
-        else {
-          var i = 0
-          while (i < slot.length) {
-            out.update(i, row.get(slot(i), fileFields(i).dataType)); i += 1
+    } else {
+      val pred = CatalystPredicate.create(p.bound)
+      pred.initialize(0)
+      val fileFields = footer.schema.fields
+      val slot: Array[Int] = fileFields.map(f => p.tableSchema.fieldIndex(f.name))
+      val (staged, deleted) = RowLevelStatement.write(c, c.dstName, footer.schema, conf) { w =>
+        // mask-aware full read: the rewrite folds any existing mask in
+        // (survivors exclude previously-masked rows)
+        val part = VortexInputPartition(c.file, footer.chunks.indices.toArray,
+          c.partCols, c.partValues, maskFile = c.maskFile)
+        val r = new VortexPartitionReader(part, conf, p.tableSchema, evolution = true)
+        val out = new GenericInternalRow(fileFields.length)
+        var deleted = 0L
+        try while (r.next()) {
+          val row = r.get()
+          if (pred.eval(row)) deleted += 1
+          else {
+            var i = 0
+            while (i < slot.length) {
+              out.update(i, row.get(slot(i), fileFields(i).dataType)); i += 1
+            }
+            w.write(out)
           }
-          writer.write(out)
-        }
-      } finally r.close()
-      writer.close()
-    } catch {
-      case e: Throwable => fs.delete(tmp, false); throw e
+        } finally r.close()
+        deleted
+      }
+      FileOutcome(c.file, Replace(staged), rowsDeleted = deleted)
     }
-    // manifest entry for the REPLACEMENT, built here where the footer
-    // bytes are local (VERDICT r9 "What's wrong" #4: no O(files) serial
-    // driver footer re-reads). relPath is the final post-rename path;
-    // len is the tmp's (rename preserves bytes).
-    def named[T](xs: IndexedSeq[Option[T]]): Map[String, T] =
-      fileFields.map(_.name).zip(xs).collect { case (n, Some(v)) => n -> v }.toMap
-    val sums = named(writer.columnSums)
-    val blooms = named(writer.columnBlooms)
-    val sketches = named(writer.columnSketches)
-    val rel = if (c.relDir.isEmpty) c.dstName else s"${c.relDir}/${c.dstName}"
-    val tmpFooter = VortexFileReader.readFooter(tmp, conf)
-    val len = fs.getFileStatus(tmp).getLen
-    val base = StatsManifest.fromFooter(rel, len, tmpFooter)
-    val entry = base.copy(cols = base.cols.map(col => col.copy(
-      sum = sums.get(col.name),
-      bloom = blooms.get(col.name),
-      sketch = sketches.get(col.name))))
-    FileOutcome(c.file, 2, deleted, Some(tmp.toString), Some(c.dstName),
-      Some(entry), Some(tmpFooter.schema.json))
   }
 
   /** DSv2 `sources.Filter` → `Column`, for the SupportsDelete SQL path.

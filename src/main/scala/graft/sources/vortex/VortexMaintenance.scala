@@ -70,125 +70,60 @@ object VortexMaintenance {
 
   /** Fold deletion-vector masks into real rewrites: every masked data
     * file is rewritten without its dead rows (one distributed task per
-    * file, driver-side rename/delete commit — the same non-destructive-
-    * task shape as VortexDelete), and its sidecars are removed. Called
-    * by [[compact]] first, so the mask tier's read-side cost is paid
-    * only between maintenance windows; also callable directly. */
-  def foldMasks(spark: SparkSession, dir: String): FoldResult = {
-    val hconf = spark.sessionState.newHadoopConf()
-    val root = new Path(dir)
-    val fs = root.getFileSystem(hconf)
-    // writer-vs-writer mutual exclusion (see MaintenanceLock); compact
-    // holds the lock itself and calls the unlocked impl directly
-    MaintenanceLock.withLock(fs, root, "foldMasks") {
-      foldMasksLocked(spark, dir)
+    * file through the shared row-level pipeline, RowLevelStatement),
+    * and its sidecars are removed. Called by [[compact]] first, so the
+    * mask tier's read-side cost is paid only between maintenance
+    * windows; also callable directly. */
+  def foldMasks(spark: SparkSession, dir: String): FoldResult =
+    RowLevelStatement.run(spark, dir, "foldMasks")(fold)
+
+  /** [[foldMasks]] body — `st` holds the prologue's post-repair listing;
+    * a crashed fold's `part-fold-` replacement is repaired there like
+    * any other statement's. */
+  private def fold(st: RowLevelStatement.Statement): FoldResult = {
+    val targets = st.listed.map(_._1.getPath.toString)
+      .filter(st.maskBind.contains).sorted
+    if (targets.isEmpty) FoldResult(0, 0L)
+    else {
+      st.begin()
+      val cands = targets.map(f => st.candidate(f,
+        "part-fold-" + VortexDelete.replacementName(new Path(f).getName)
+          .stripPrefix("part-delete-"),
+        maskFile = st.maskBind(f)._1))
+      val outcomes = st.perFile(cands)(foldFile)
+      st.commit(outcomes)
+      FoldResult(outcomes.length, outcomes.map(_.rowsDeleted).sum)
     }
   }
 
-  /** [[foldMasks]] body — caller MUST hold the dataset's maintenance
-    * lock (foldMasks acquires it; compact calls this inside its own). */
-  private def foldMasksLocked(spark: SparkSession, dir: String): FoldResult = {
-    val hconf = spark.sessionState.newHadoopConf()
-    val root = new Path(dir)
-    val fs = root.getFileSystem(hconf)
-    val rootQ = fs.makeQualified(root).toString
-    // complete/roll back any crashed compact batches first (marker
-    // protocol — MaintenanceCommit.repairStaleCompactions)
-    MaintenanceCommit.repairStaleCompactions(fs, root)
-    // cross-statement stale-replacement repair (same discipline as
-    // DELETE/UPDATE/MERGE): a fold that crashed between rename-in and
-    // delete-source leaves the masked source and its part-fold-
-    // replacement coexisting — drop the replacement before planning or
-    // survivor rows read twice, and re-list so planning never sees it
-    val (listed0, maskBind0) = VortexDataSource.listAllWithMasks(Seq(dir), hconf, consistent = false)
-    if (listed0.isEmpty) return FoldResult(0, 0L)
-    val repaired = MaintenanceCommit.repairStaleReplacements(fs, listed0.map(_._1)) +
-      MaintenanceCommit.repairStaleUpdvAppends(fs, listed0.map(_._1), maskBind0)
-    // re-list only when the repair actually dropped files
-    val (listed, maskBind) =
-      if (repaired == 0) (listed0, maskBind0)
-      else VortexDataSource.listAllWithMasks(Seq(dir), hconf, consistent = false)
-    val targets = listed.map(_._1.getPath)
-      .filter(p => maskBind.contains(p.toString))
-      .sortBy(_.toString)
-    if (targets.isEmpty) return FoldResult(0, 0L)
-    // time travel: pre-state generation + retirement (see VortexCommitLog);
-    // (listed, maskBind) is the post-repair state — reusable
-    val ttCtx = VortexCommitLog.begin(spark, fs, root, hconf, "foldMasks",
-      Some((listed, maskBind)))
-    val remover = ttCtx.map(_.remover).getOrElse(MaintenanceCommit.PlainRemover)
-    val manifest = StatsManifest.read(root, hconf)
-
-    // task input: (file, newest mask, bloom/sketch opt-ins, final rel path)
-    val work: Seq[(String, String, Set[String], Set[String], String)] = targets.map { p =>
-      val rel = fs.makeQualified(p).toString.stripPrefix(rootQ).stripPrefix("/")
-      val entry = manifest.get(rel)
-      val dstName = s"part-fold-${VortexDelete.replacementName(p.getName).stripPrefix("part-delete-")}"
-      val relDst = rel.lastIndexOf('/') match {
-        case -1 => dstName
-        case i => rel.substring(0, i) + "/" + dstName
-      }
-      (p.toString, maskBind(p.toString)._1,
-        entry.map(_.cols.filter(_.bloom.isDefined).map(_.name).toSet).getOrElse(Set.empty),
-        entry.map(_.cols.filter(_.sketch.isDefined).map(_.name).toSet).getOrElse(Set.empty),
-        relDst)
-    }
-
-    val sconf = new SerializableConfiguration(hconf)
-    // (file, tmp, dstName, rowsDropped, entry, schemaJson)
-    val results = spark.sparkContext.parallelize(work, work.length).map {
-      case (file, mask, bloomCols, sketchCols, relDst) =>
-        val path = new Path(file)
-        val tfs = path.getFileSystem(sconf.value)
-        val footer = VortexFileReader.readFooter(path, sconf.value)
-        val dstName = relDst.substring(relDst.lastIndexOf('/') + 1)
-        val tmp = new Path(path.getParent,
-          s".$dstName.${java.util.UUID.randomUUID().toString.take(8)}.inprogress")
-        // columnar survivor rewrite when the layout is plain
-        // (SurvivorSplice, r15 optimization — DelProbe A/B in
-        // BASELINE.md); shredded-struct / nested layouts keep the
-        // row path below
-        if (SurvivorSplice.applicable(footer, null)) {
-          val dv = DeletionVector.read(tfs, new Path(mask))
-          val r = SurvivorSplice.rewrite(path, tmp, sconf.value, footer,
-            null, null, null, dv, bloomCols, sketchCols, relDst)
-          (file, tmp.toString, dstName, r.droppedMask, r.entry, r.schemaJson)
-        } else {
-        val writer = new VortexFileWriter(tmp, sconf.value, footer.schema,
-          bloomCols = bloomCols, sketchCols = sketchCols)
-        val part = VortexInputPartition(file, footer.chunks.indices.toArray,
-          maskFile = mask)
-        val r = new VortexPartitionReader(part, sconf.value, footer.schema)
-        var rows = 0L
-        try {
-          try while (r.next()) { writer.write(r.get()); rows += 1 } finally r.close()
-          writer.close()
-        } catch { case e: Throwable => tfs.delete(tmp, false); throw e }
-        val dropped = footer.chunks.map(_.rowCount.toLong).sum - rows
-        def named[T](xs: IndexedSeq[Option[T]]): Map[String, T] =
-          footer.schema.fields.map(_.name).zip(xs)
-            .collect { case (n, Some(v)) => n -> v }.toMap
-        val sums = named(writer.columnSums)
-        val blooms = named(writer.columnBlooms)
-        val sketches = named(writer.columnSketches)
-        val tmpFooter = VortexFileReader.readFooter(tmp, sconf.value)
-        val base = StatsManifest.fromFooter(relDst,
-          tfs.getFileStatus(tmp).getLen, tmpFooter)
-        val entry = base.copy(cols = base.cols.map(c => c.copy(
-          sum = sums.get(c.name), bloom = blooms.get(c.name),
-          sketch = sketches.get(c.name))))
-        (file, tmp.toString, dstName, dropped, entry, tmpFooter.schema.json)
+  /** Executor task: rewrite one masked file without its dead rows. */
+  private def foldFile(c: RowLevelStatement.Candidate,
+                       conf: org.apache.hadoop.conf.Configuration)
+      : RowLevelStatement.FileOutcome = {
+    val path = c.path
+    val footer = VortexFileReader.readFooter(path, conf)
+    // columnar survivor rewrite when the layout is plain
+    // (SurvivorSplice); shredded-struct / nested layouts keep the row
+    // path below
+    val (staged, dropped) =
+      if (SurvivorSplice.applicable(footer, null))
+        RowLevelStatement.withTmp(c, c.dstName, conf) { tmp =>
+          val dv = DeletionVector.read(new Path(c.maskFile), conf)
+          val r = SurvivorSplice.rewrite(path, tmp, conf, footer,
+            null, null, null, dv, c.bloomCols, c.sketchCols, c.rel(c.dstName))
+          (RowLevelStatement.Staged(tmp.toString, c.dstName, Some(r.entry), r.schemaJson),
+            r.droppedMask)
         }
-    }.collect()
-
-    // driver commit + manifest write: the shared machinery (VortexCommit)
-    MaintenanceCommit.commitAll(fs, "foldMasks", maskBind,
-      results.toSeq.map(r => MaintenanceCommit.Replacement(r._1, r._2, r._3)),
-      remover)
-    MaintenanceCommit.writeManifests(root, hconf, "fold",
-      results.toSeq.map(r => (r._6, r._5)))
-    ttCtx.foreach(_.finish())
-    FoldResult(results.length, results.map(_._4).sum)
+      else RowLevelStatement.write(c, c.dstName, footer.schema, conf) { w =>
+        val part = VortexInputPartition(c.file, footer.chunks.indices.toArray,
+          maskFile = c.maskFile)
+        val r = new VortexPartitionReader(part, conf, footer.schema)
+        var rows = 0L
+        try while (r.next()) { w.write(r.get()); rows += 1 } finally r.close()
+        footer.chunks.map(_.rowCount.toLong).sum - rows
+      }
+    RowLevelStatement.FileOutcome(c.file, RowLevelStatement.Replace(staged),
+      rowsDeleted = dropped)
   }
 
   def compact(spark: SparkSession, dir: String,
@@ -209,24 +144,18 @@ object VortexMaintenance {
 
     // writer-vs-writer mutual exclusion (see MaintenanceLock): one
     // lease covers the fold AND the byte-copy — a statement arriving
-    // between the two would otherwise see a half-folded dataset
-    MaintenanceLock.withLock(fs, root, "compact") {
-    // a prior compact may have crashed mid-commit — complete/roll back
-    // its batches BEFORE anything lists the data (see the marker
-    // contract in MaintenanceCommit)
-    MaintenanceCommit.repairStaleCompactions(fs, root)
-
-    // deletion-vector masks fold into real rewrites FIRST: the chunk
+    // between the two would otherwise see a half-folded dataset.
+    // Deletion-vector masks fold into real rewrites FIRST: the chunk
     // byte-copy below moves pages verbatim and must never absorb a
     // masked file (its sidecar names the OLD file — dead rows would
     // resurrect)
-    foldMasksLocked(spark, dir)
-
+    MaintenanceLock.withLock(fs, root, "compact") {
+    RowLevelStatement.runLocked(spark, dir, "foldMasks")(fold)
+    RowLevelStatement.runLocked(spark, dir, "compact") { stmt =>
     // group data files by their layout directory (partition/bucket);
     // defensive re-check: any file still masked (e.g. written by a
     // racing delete) is excluded from byte-copy batches
-    val (listed0, maskLeft) = VortexDataSource.listAllWithMasks(Seq(dir), hconf, consistent = false)
-    val listed = listed0.filterNot(f => maskLeft.contains(f._1.getPath.toString))
+    val listed = stmt.listed.filterNot(f => stmt.maskBind.contains(f._1.getPath.toString))
     val byDir = listed.groupBy(_._1.getPath.getParent.toString)
 
     // manifest state BEFORE the rewrite: sources are deleted during
@@ -290,13 +219,10 @@ object VortexMaintenance {
           out.toSeq
         }
     }
-    if (batches.isEmpty) return CompactResult(byDir.size, 0, 0, 0L)
-
-    // time travel: pre-state generation + retirement (see VortexCommitLog);
-    // the post-fold listing is fresh and no repairs ran since — reusable
-    val ttCtx = VortexCommitLog.begin(spark, fs, root, hconf, "compact",
-      Some((listed0, maskLeft)))
-    val remover = ttCtx.map(_.remover).getOrElse(MaintenanceCommit.PlainRemover)
+    if (batches.isEmpty) CompactResult(byDir.size, 0, 0, 0L)
+    else {
+    stmt.begin()
+    val remover = stmt.remover
 
     val sconf = new SerializableConfiguration(hconf)
     // tasks are fully NON-DESTRUCTIVE (r12 review fix): each writes its
@@ -315,11 +241,9 @@ object VortexMaintenance {
     // when time travel is on) → drop marker. A crash at any point
     // repairs exactly at the next statement.
     val markerJob = java.util.UUID.randomUUID().toString.take(8)
-    val retireDirQ = ttCtx.map(c =>
-      fs.makeQualified(VortexCommitLog.retiredDir(root, c.gen)).toString)
+    val retireDirQ = stmt.generation.map(g =>
+      fs.makeQualified(VortexCommitLog.retiredDir(root, g)).toString)
       .getOrElse("")
-    def relOf(p: Path): String =
-      fs.makeQualified(p).toString.stripPrefix(rootQ).stripPrefix("/")
     val createdPaths = new scala.collection.mutable.ArrayBuffer[String]
     batches.zip(results).zipWithIndex.foreach {
       case (((batch, _), (tmp, dstName, _)), bi) =>
@@ -329,7 +253,7 @@ object VortexMaintenance {
         val dst = new Path(new Path(batch.head).getParent, dstName)
         val marker = MaintenanceCommit.writeCompactMarker(fs, root,
           s"$markerJob-$bi", MaintenanceCommit.CompactCommit(
-            relOf(dst), batch.map(f => relOf(new Path(f))), retireDirQ))
+            stmt.relOf(dst), batch.map(f => stmt.relOf(new Path(f))), retireDirQ))
         if (!fs.rename(new Path(tmp), dst))
           throw new java.io.IOException(s"vortex compact: rename failed for $dst")
         batch.foreach { f =>
@@ -402,9 +326,10 @@ object VortexMaintenance {
       StatsManifest.write(root, hconf, s"compact-$jobId-$i", group.map(_._2).toIndexedSeq, schema)
     }
 
-    ttCtx.foreach(_.finish())
     CompactResult(byDir.size, batches.length,
       batches.map(_._1.length).sum, results.map(_._3).sum)
+    } // batches.nonEmpty
+    } // RowLevelStatement.runLocked
     } // MaintenanceLock.withLock
   }
 

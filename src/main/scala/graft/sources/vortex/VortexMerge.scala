@@ -2,16 +2,21 @@ package graft.sources.vortex
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSeq, BindReferences, Expression, UnsafeProjection, Predicate => CatalystPredicate}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
 
-/** `MERGE INTO <vortex dataset> USING <source> ON key` — whole-row
-  * upsert: target rows whose key appears in the source are REPLACED by
-  * the source row, source rows matching nothing are APPENDED. The
+/** `MERGE INTO <vortex dataset> USING <source> ON key WHEN …` — the
   * incremental-ingest shape of a corpus store: a batch of re-scored /
   * re-crawled documents lands on top of 100 TB without rewriting more
-  * than the files it touches.
+  * than the files it touches. [[mergeClauses]] is the one MERGE
+  * statement (the SQL surface's, conditional clauses and all);
+  * [[merge]] is its whole-row special case — `WHEN MATCHED THEN UPDATE
+  * SET * WHEN NOT MATCHED THEN INSERT *` over a source cast to the
+  * target schema. Both run through the shared row-level pipeline
+  * (RowLevelStatement: lease, repairs, commit log, candidate planning,
+  * per-file tasks, commit) like DELETE and UPDATE.
   *
   * Scale contract (the 100 TB judgment): the SOURCE is the small side —
   * a batch, not a second 100 TB table. Its rows are collected and
@@ -21,40 +26,43 @@ import org.apache.spark.util.SerializableConfiguration
   * side stays fully distributed and file-granular:
   *  - candidates = the pushed scan's own partitions for
   *    `key IN (source keys)` when the key set is small enough to push
-  *    (≤ `pushKeyLimit`, single-column keys — manifest min/max, blooms
-  *    and partition pruning then skip untouched files with zero I/O);
+  *    (≤ 10k rows, single-column keys — manifest min/max, blooms and
+  *    partition pruning then skip untouched files with zero I/O);
   *    otherwise every file is a candidate and classification decides.
   *  - one NON-DESTRUCTIVE task per candidate file: pass 1 probes the
   *    broadcast key map over the key columns only; no hit → untouched.
-  *    Otherwise the file rewrites with matched rows replaced (existing
-  *    deletion-vector masks fold in). Matched source ordinals return
-  *    to the driver as a bitmask (O(|source|/8) bytes per task).
+  *    Otherwise the file is rewritten with the clauses applied —
+  *    column-splice when only some columns change, the row path
+  *    otherwise (existing deletion-vector masks fold in). Matched
+  *    source ordinals return to the driver.
+  *  - driver commit: rename/delete per touched file under deterministic
+  *    `part-merge-<md5(src)>.vortex` names — the same crash-convergence
+  *    contract, and the same `failAfterCommits` crash seam, as
+  *    DELETE/UPDATE.
   *  - APPEND: source rows no task matched are staged through the
   *    normal vortex writer and renamed in under
-  *    `part-merge-ins-<md5(source content + key)>.vortex`, one per
-  *    layout directory — a directory already holding this statement's
-  *    insert file (or its deterministic maintenance replacement) is
-  *    skipped, making the insert half EXACTLY-ONCE under crash
-  *    re-runs, including NULL-key inserts that can never self-match.
-  *    Two documented bounds of that guarantee (ADVICE r11): (1) the
-  *    marker is keyed on STATEMENT identity, so a deliberate later
-  *    re-execution of a byte-identical MERGE (same source content,
-  *    keys, clauses) is deduplicated too — its insert half is skipped
-  *    where ANSI would re-insert never-matching NULL-key rows; vary
-  *    the source (e.g. a batch-id column) when re-insertion is
-  *    intended. (2) The marker is the insert FILE's name, and
-  *    compaction can absorb that file — a crash re-run interleaved
-  *    with a compact can therefore re-append. Both follow from the
-  *    no-commit-log design; run MERGE re-runs before compaction.
-  *  - driver commit: rename/delete per touched file (deterministic
-  *    `part-merge-<md5(src)>.vortex` names — same crash-convergence
-  *    contract as DELETE/UPDATE for the replace half).
+  *    `part-merge-ins-<md5(source content + key + clauses)>.vortex`,
+  *    one per layout directory — a directory already holding this
+  *    statement's insert file (or its deterministic maintenance
+  *    replacement) is skipped, making the insert half EXACTLY-ONCE
+  *    under crash re-runs, including NULL-key inserts that can never
+  *    self-match. Two documented bounds of that guarantee (ADVICE
+  *    r11): (1) the marker is keyed on STATEMENT identity, so a
+  *    deliberate later re-execution of a byte-identical MERGE (same
+  *    source content, keys, clauses) is deduplicated too — its insert
+  *    half is skipped where ANSI would re-insert never-matching
+  *    NULL-key rows; vary the source (e.g. a batch-id column) when
+  *    re-insertion is intended. (2) The marker is the insert FILE's
+  *    name, and compaction can absorb that file — a crash re-run
+  *    interleaved with a compact can therefore re-append. Run MERGE
+  *    re-runs before compaction.
   *
   * Duplicate keys: source keys must be unique (`require`d — two source
   * rows for one target row is ambiguous); duplicate keys in the TARGET
-  * all replace with the same source row (each is a match).
+  * all take the same source row (each is a match).
   */
 object VortexMerge {
+  import RowLevelStatement.{Candidate, Drop, FileOutcome, Keep, Replace, Staged}
 
   final case class MergeResult(candidateFiles: Int, untouchedFiles: Int,
                                rewrittenFiles: Int, rowsUpdated: Long,
@@ -64,179 +72,38 @@ object VortexMerge {
   private[graft] def replacementName(srcName: String): String =
     "part-merge-" + VortexDelete.replacementName(srcName).stripPrefix("part-delete-")
 
+  /** the largest source whose single-column key set is pushed into
+    * candidate planning as `key IN (…)` */
+  private val PushKeyLimit = 10000
+
+  /** Whole-row upsert: target rows whose key appears in the source are
+    * REPLACED by the source row, source rows matching nothing are
+    * APPENDED. The source is cast to the target schema first. */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
             keyCols: Seq[String],
-            maxSourceRows: Int = 1 << 20,
-            pushKeyLimit: Int = 10000): MergeResult =
-    mergeImpl(spark, dir, source, keyCols, maxSourceRows, pushKeyLimit,
-      failAfterInserts = -1)
+            maxSourceRows: Int = 1 << 20): MergeResult =
+    upsert(spark, dir, source, keyCols, maxSourceRows)
 
-  /** `failAfterInserts` is a TEST SEAM (≥0: throw after that many
-    * per-directory insert renames), mirroring the delete/update crash
-    * seams — the exactly-once-insert spec injects a crash mid-append. */
-  private[graft] def mergeImpl(spark: SparkSession, dir: String, source: DataFrame,
-                               keyCols: Seq[String],
-                               maxSourceRows: Int, pushKeyLimit: Int,
-                               failAfterInserts: Int): MergeResult = {
+  /** [[merge]] with the TEST SEAMS: `failAfterCommits` (≥0: throw after
+    * that many per-file replace commits) and `failAfterInserts` (≥0:
+    * throw after that many per-directory insert renames). */
+  private[graft] def upsert(spark: SparkSession, dir: String, source: DataFrame,
+                            keyCols: Seq[String], maxSourceRows: Int = 1 << 20,
+                            failAfterCommits: Int = -1,
+                            failAfterInserts: Int = -1): MergeResult = {
     require(keyCols.nonEmpty, "vortex merge: no key columns")
-    val hconf = spark.sessionState.newHadoopConf()
-    val root = new Path(dir)
-    val fs = root.getFileSystem(hconf)
-    // writer-vs-writer mutual exclusion (see MaintenanceLock)
-    MaintenanceLock.withLock(fs, root, "merge") {
-    // one listing walk (mask binding + stale-replacement repair), BEFORE
-    // the target loads: planning must never see a stale replacement the
-    // repair is about to drop
-    MaintenanceCommit.repairStaleCompactions(fs, root)
-    val (listed, maskBind) = VortexDataSource.listAllWithMasks(Seq(dir), hconf, consistent = false)
-    val repaired0 = MaintenanceCommit.repairStaleReplacements(fs, listed.map(_._1)) +
-      MaintenanceCommit.repairStaleUpdvAppends(fs, listed.map(_._1), maskBind)
-    // time travel: pre-state generation + retirement (see VortexCommitLog); the
-    // statement's own walk is reusable iff the repairs dropped nothing
-    val ttCtx = VortexCommitLog.begin(spark, fs, root, hconf, "merge",
-      if (repaired0 == 0) Some((listed, maskBind)) else None)
-    val remover = ttCtx.map(_.remover).getOrElse(MaintenanceCommit.PlainRemover)
     val target = spark.read.format("vortex").load(dir)
     val tSchema = target.schema
     keyCols.foreach(k => require(tSchema.fieldNames.contains(k),
       s"vortex merge: key column $k is not a column of the target"))
-
-    // source rows in the TARGET's schema/order, as Catalyst rows (the
-    // tasks write them straight through the vortex writer)
     val aligned = source.select(tSchema.fields.map(f =>
       col(s"`${f.name}`").cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-    val capped = aligned.limit(maxSourceRows + 1)
-      .queryExecution.toRdd.map(_.copy()).collect()
-    require(capped.length <= maxSourceRows,
-      s"vortex merge: source exceeds maxSourceRows=$maxSourceRows — " +
-      "merge broadcasts the source; batch it or raise the cap deliberately")
-    val srcRows: Array[org.apache.spark.sql.catalyst.InternalRow] = capped
-    val keyIdx: Array[Int] = keyCols.map(tSchema.fieldIndex).toArray
-    val keyTypes = keyIdx.map(tSchema.fields(_).dataType)
-    // NULL-key contract (ANSI MERGE: NULL matches nothing): source rows
-    // with any NULL key component never match — they are pure inserts —
-    // and null-key TARGET rows are never replaced. Keys normalize
-    // through VortexMergeSupport.keyOf (binary keys wrap to value-
-    // equality Seqs; Array[Byte] compares by reference otherwise).
-    def keyOf(r: org.apache.spark.sql.catalyst.InternalRow): Seq[Any] =
-      VortexMergeSupport.keyOf(r, keyIdx, keyTypes)
-    locally {
-      val seen = new scala.collection.mutable.HashSet[Seq[Any]]
-      srcRows.foreach { r =>
-        val k = keyOf(r)
-        if (k != null) // null-key rows are inserts; duplicates among them allowed
-          require(seen.add(k), s"vortex merge: duplicate source key $k")
-      }
-      // NOT NULL enforcement (found r12): whole-row replace writes the
-      // source row verbatim — a NULL for a non-nullable target column
-      // must fail loudly, not decode as the type's zero value
-      val nn = tSchema.fields.zipWithIndex.filterNot(_._1.nullable)
-      if (nn.nonEmpty) srcRows.foreach(r => nn.foreach { case (f, i) =>
-        require(!r.isNullAt(i),
-          s"vortex merge: source carries NULL for non-nullable target " +
-          s"column ${f.name}") })
-    }
-    val bcRows = spark.sparkContext.broadcast(srcRows)
-
-    // candidate planning: push `key IN (...)` when the key set is small
-    // (single-col keys) — manifest/bloom/partition pruning applies;
-    // otherwise all files are candidates. Pushed only for key types
-    // whose storage→literal conversion is defined (integral / string /
-    // boolean / decimal); timestamp/date/binary keys skip the push
-    // (correct, just unpruned). NULL keys are dropped from the IN list
-    // (they match nothing — see the contract above), which stays sound
-    // because null-key target rows can never be replaced anyway.
-    val keyValuesForPush: Option[Seq[Any]] =
-      if (keyCols.length == 1 && srcRows.length <= pushKeyLimit &&
-          VortexMergeSupport.pushableKeyType(keyTypes(0))) {
-        val dt = keyTypes(0)
-        val vs = srcRows.toSeq.map(_.get(keyIdx(0), dt)).filter(_ != null)
-          .map(VortexMergeSupport.toExternal(_, dt))
-        if (vs.nonEmpty) Some(vs) else None
-      } else None
-    val filtered = keyValuesForPush match {
-      case Some(vs) => target.filter(col(s"`${keyCols.head}`").isInCollection(vs))
-      case None => target
-    }
-    val parts = filtered.queryExecution.sparkPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.flatMap(_.inputPartitions).collect { case v: VortexInputPartition => v }
-
-    val rootQ = fs.makeQualified(root).toString
-    val manifest = StatsManifest.read(root, hconf)
-
-    // (file, partCols, partValues, bloomCols, sketchCols, dstName, relDir,
-    //  mask, pre-statement manifest stats — the splice path's inheritance)
-    val cands = parts.groupBy(_.file).toSeq.sortBy(_._1).map { case (file, ps) =>
-      val p = new Path(file)
-      val rel = fs.makeQualified(p).toString.stripPrefix(rootQ).stripPrefix("/")
-      val relDir = rel.lastIndexOf('/') match {
-        case -1 => ""; case i => rel.substring(0, i)
-      }
-      val entry = manifest.get(rel)
-      (file, ps.head.partCols, ps.head.partValues,
-        entry.map(_.cols.filter(_.bloom.isDefined).map(_.name).toSet).getOrElse(Set.empty),
-        entry.map(_.cols.filter(_.sketch.isDefined).map(_.name).toSet).getOrElse(Set.empty),
-        replacementName(p.getName), relDir, ps.head.maskFile,
-        entry.map(_.cols.map(cs => cs.name -> cs).toMap).getOrElse(Map.empty[String, StatsManifest.ColStats]))
-    }
-
-    // bucketing-key guard (ADVICE r11): a replaced row whose source
-    // changes the bucket key would stay in its old __bucket=k directory
-    // while bucket pruning routes lookups to the NEW value's bucket —
-    // processFile value-checks the key per matched row (cheap: equality
-    // is guaranteed whenever the bucket key is a merge key)
-    val bucketIdx: Int =
-      (try BucketSpecFile.read(root, hconf) catch { case _: Exception => None })
-        .map(bs => tSchema.fieldIndex(bs._1)).getOrElse(-1)
-
-    val sconf = new SerializableConfiguration(hconf)
-    val outcomes =
-      if (cands.isEmpty) Array.empty[VortexMergeSupport.Outcome]
-      else spark.sparkContext.parallelize(cands, cands.length).map { c =>
-        VortexMergeSupport.processFile(c, tSchema, keyIdx, keyTypes,
-          bcRows.value, bucketIdx, sconf.value)
-      }.collect()
-
-    // driver commit + manifest write: the shared machinery (VortexCommit)
-    val destructive = outcomes.filter(_.rewritten)
-    MaintenanceCommit.commitAll(fs, "merge", maskBind,
-      destructive.toSeq.map(o => MaintenanceCommit.Replacement(o.file, o.tmp, o.dstName)),
-      remover)
-    MaintenanceCommit.writeManifests(root, hconf, "merge",
-      destructive.toSeq.map(o => (o.schemaJson, o.entry)))
-
-    // append half: source rows no file matched. The driver holds the
-    // (bounded) source already; unmatched rows stage through the normal
-    // vortex write path into a DOT-HIDDEN scratch dir, then rename into
-    // place under a name derived from the STATEMENT (md5 of the source
-    // content + key columns): `part-merge-ins-<srcHash>.vortex`, one
-    // per layout directory. That makes the insert half EXACTLY-ONCE
-    // under crash re-runs: a directory that already holds this
-    // statement's insert file — or its deterministic maintenance
-    // replacement `part-merge-<md5(insert name)>` (the re-run's own
-    // replace half rewrites the committed inserts' matched rows before
-    // the append check runs) — is skipped, which is precisely what
-    // catches NULL-key inserts (they can never match, so without the
-    // marker every re-run would re-append them). The append is also
-    // LAYOUT-AWARE: on a Hive-partitioned dataset inserted rows route
-    // into partition directories (a flat append would STORE the
-    // partition columns, drifting the schema of every later strict
-    // read), and a bucketed dataset's marker spec routes buckets.
-    val matched = new Array[Boolean](srcRows.length)
-    outcomes.foreach(_.matchedOrdinals.foreach(i => matched(i) = true))
-    val unmatchedIdx = srcRows.indices.filterNot(matched)
-    val srcHash = VortexMergeSupport.sourceHash(srcRows, keyCols)
-    val inserted = appendInserts(spark, fs, root, hconf, tSchema, listed,
-      unmatchedIdx.map(srcRows(_)), srcHash, failAfterInserts)
-    ttCtx.foreach(_.finish())
-
-    MergeResult(cands.length,
-      outcomes.count(!_.rewritten),
-      destructive.length,
-      outcomes.map(_.rowsUpdated).sum,
-      inserted)
-    } // MaintenanceLock.withLock
+    val srcAttrs = aligned.queryExecution.analyzed.output
+    val keyIdx = keyCols.map(tSchema.fieldIndex).toArray
+    statement(spark, dir, aligned, target.queryExecution.analyzed.output, srcAttrs,
+      keyIdx, keyIdx, Seq(MatchedAction(None, Some(srcAttrs))),
+      Seq(NotMatchedAction(None, srcAttrs)), Nil, "upsert", maxSourceRows,
+      failAfterCommits, failAfterInserts, ansiScalarDups = false, wholeRow = true)
   }
 
   /** One `WHEN MATCHED [AND cond] THEN UPDATE/DELETE` clause. `cond`
@@ -246,28 +113,21 @@ object VortexMerge {
     * `assigns` is the FULL target-schema projection for UPDATE —
     * unassigned columns carry the target attribute itself — or None
     * for DELETE. */
-  final case class MatchedAction(
-      cond: Option[org.apache.spark.sql.catalyst.expressions.Expression],
-      assigns: Option[Seq[org.apache.spark.sql.catalyst.expressions.Expression]])
+  final case class MatchedAction(cond: Option[Expression], assigns: Option[Seq[Expression]])
 
   /** One `WHEN NOT MATCHED [AND cond] THEN INSERT` clause: cond and
     * the full target-schema projection, over the SOURCE attributes
     * only (unassigned columns insert NULL). */
-  final case class NotMatchedAction(
-      cond: Option[org.apache.spark.sql.catalyst.expressions.Expression],
-      values: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+  final case class NotMatchedAction(cond: Option[Expression], values: Seq[Expression])
 
   /** Conditional-clause MERGE — the full ANSI shape
     * (`WHEN MATCHED [AND c] THEN UPDATE SET <subset> | DELETE`,
     * `WHEN NOT MATCHED [AND c] THEN INSERT`,
-    * `WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET … | DELETE`),
-    * same scale contract and crash discipline as [[merge]]: bounded
-    * broadcast source, file-granular non-destructive tasks,
-    * deterministic replacement names, exactly-once inserts. Clauses
-    * evaluate IN ORDER within their family; the first whose condition
-    * holds wins (ANSI); a row with no true clause is kept verbatim.
-    * `targetAttrs`/`sourceAttrs` are the binding contexts the clause
-    * expressions reference — targetAttrs must mirror the dataset
+    * `WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET … | DELETE`).
+    * Clauses evaluate IN ORDER within their family; the first whose
+    * condition holds wins (ANSI); a row with no true clause is kept
+    * verbatim. `targetAttrs`/`sourceAttrs` are the binding contexts the
+    * clause expressions reference — targetAttrs must mirror the dataset
     * schema positionally; NOT MATCHED BY SOURCE expressions must
     * reference targetAttrs only (ANSI scoping — there IS no source row
     * for them). `clauseFingerprint` folds the clause list into the
@@ -281,53 +141,49 @@ object VortexMerge {
     * whole target too); the per-file tasks stay non-destructive and
     * untouched files are still detected and skipped at commit time. */
   def mergeClauses(spark: SparkSession, dir: String, source: DataFrame,
-                   targetAttrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
-                   sourceAttrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
+                   targetAttrs: Seq[Attribute], sourceAttrs: Seq[Attribute],
                    keyIdxTarget: Array[Int], keyIdxSource: Array[Int],
                    matchedActions: Seq[MatchedAction],
                    notMatchedActions: Seq[NotMatchedAction],
+                   notMatchedBySourceActions: Seq[MatchedAction],
                    // no default: the fingerprint is the exactly-once
                    // insert identity — two different statements sharing
                    // an accidental "" would dedupe each other's inserts
-                   notMatchedBySourceActions: Seq[MatchedAction],
                    clauseFingerprint: String,
                    maxSourceRows: Int = 1 << 20,
-                   pushKeyLimit: Int = 10000,
                    failAfterInserts: Int = -1,
                    // correlated scalar SET (r14): ANSI fires the
                    // cardinality error only when a duplicated source
                    // key actually MATCHES a targeted row — defer the
                    // duplicate check to match time instead of the
                    // statement-global broadcast-time require
-                   ansiScalarDups: Boolean = false): MergeResult = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Expression, UnsafeProjection, Predicate => CatalystPredicate}
+                   ansiScalarDups: Boolean = false): MergeResult =
+    statement(spark, dir, source, targetAttrs, sourceAttrs, keyIdxTarget, keyIdxSource,
+      matchedActions, notMatchedActions, notMatchedBySourceActions, clauseFingerprint,
+      maxSourceRows, failAfterCommits = -1, failAfterInserts, ansiScalarDups,
+      wholeRow = false)
+
+  /** The MERGE statement behind [[merge]] and [[mergeClauses]].
+    * `wholeRow` adds the upsert's up-front source check: every source
+    * value lands in the target verbatim, so a NULL for a non-nullable
+    * target column fails before anything runs. */
+  private def statement(spark: SparkSession, dir: String, source: DataFrame,
+                        targetAttrs: Seq[Attribute], sourceAttrs: Seq[Attribute],
+                        keyIdxTarget: Array[Int], keyIdxSource: Array[Int],
+                        matchedActions: Seq[MatchedAction],
+                        notMatchedActions: Seq[NotMatchedAction],
+                        notMatchedBySourceActions: Seq[MatchedAction],
+                        clauseFingerprint: String, maxSourceRows: Int,
+                        failAfterCommits: Int, failAfterInserts: Int,
+                        ansiScalarDups: Boolean, wholeRow: Boolean): MergeResult = {
     require(keyIdxTarget.nonEmpty && keyIdxTarget.length == keyIdxSource.length,
       "vortex merge: ON must be a conjunction of target-key = source-key equalities")
     require(matchedActions.nonEmpty || notMatchedActions.nonEmpty ||
         notMatchedBySourceActions.nonEmpty,
       "vortex merge: no WHEN clauses")
-    val hconf = spark.sessionState.newHadoopConf()
-    val root = new Path(dir)
-    val fs = root.getFileSystem(hconf)
-    // writer-vs-writer mutual exclusion (see MaintenanceLock)
-    MaintenanceLock.withLock(fs, root, "merge") {
-    val (listed, maskBind, repaired0) = MaintenancePhases("merge.repair_list") {
-      MaintenanceCommit.repairStaleCompactions(fs, root)
-      val (l, mb) = VortexDataSource.listAllWithMasks(Seq(dir), hconf, consistent = false)
-      val r = MaintenanceCommit.repairStaleReplacements(fs, l.map(_._1)) +
-        MaintenanceCommit.repairStaleUpdvAppends(fs, l.map(_._1), mb)
-      (l, mb, r)
-    }
-    // time travel: pre-state generation + retirement (see VortexCommitLog); the
-    // statement's own walk is reusable iff the repairs dropped nothing
-    val ttCtx = MaintenancePhases("merge.log_begin") {
-      VortexCommitLog.begin(spark, fs, root, hconf, "merge",
-        if (repaired0 == 0) Some((listed, maskBind)) else None)
-    }
-    val remover = ttCtx.map(_.remover).getOrElse(MaintenanceCommit.PlainRemover)
-    val target = MaintenancePhases("merge.target_load") {
-      spark.read.format("vortex").load(dir)
-    }
+    RowLevelStatement.run(spark, dir, "merge") { st =>
+    st.begin()
+    val target = spark.read.format("vortex").load(dir)
     val tSchema = target.schema
     require(targetAttrs.length == tSchema.length &&
       targetAttrs.zip(tSchema.fields).forall { case (a, f) =>
@@ -341,15 +197,18 @@ object VortexMerge {
     val keyCols = keyIdxTarget.map(tSchema.fields(_).name).toSeq
 
     // source rows in the SOURCE's own schema/order (clause expressions
-    // reference them positionally), bounded like merge's
-    val capped = MaintenancePhases("merge.src_collect") {
-      source.limit(maxSourceRows + 1)
-        .queryExecution.toRdd.map(_.copy()).collect()
-    }
-    require(capped.length <= maxSourceRows,
+    // reference them positionally), bounded
+    val srcRows: Array[InternalRow] = source.limit(maxSourceRows + 1)
+      .queryExecution.toRdd.map(_.copy()).collect()
+    require(srcRows.length <= maxSourceRows,
       s"vortex merge: source exceeds maxSourceRows=$maxSourceRows — " +
       "merge broadcasts the source; batch it or raise the cap deliberately")
-    val srcRows: Array[org.apache.spark.sql.catalyst.InternalRow] = capped
+    // NULL-key contract (ANSI MERGE: NULL matches nothing): source rows
+    // with any NULL key component never match — they are pure inserts
+    // (duplicates among them allowed) — and null-key TARGET rows are
+    // never acted on as matches. Keys normalize through
+    // VortexMergeSupport.keyOf (binary keys wrap to value-equality
+    // Seqs; Array[Byte] compares by reference otherwise).
     val dupKeys: Set[Seq[Any]] = {
       val seen = new scala.collection.mutable.HashSet[Seq[Any]]
       if (ansiScalarDups) {
@@ -370,6 +229,16 @@ object VortexMerge {
         Set.empty
       }
     }
+    // NOT NULL enforcement (found r12): the whole-row replace writes
+    // the source row verbatim — a NULL for a non-nullable target column
+    // must fail loudly, not decode as the type's zero value
+    if (wholeRow) {
+      val nn = tSchema.fields.zipWithIndex.filterNot(_._1.nullable)
+      if (nn.nonEmpty) srcRows.foreach(r => nn.foreach { case (f, i) =>
+        require(!r.isNullAt(i),
+          s"vortex merge: source carries NULL for non-nullable target " +
+          s"column ${f.name}") })
+    }
     val bcRows = spark.sparkContext.broadcast(srcRows)
     val bcDupKeys = spark.sparkContext.broadcast(dupKeys)
 
@@ -377,15 +246,13 @@ object VortexMerge {
     // matched over source only, not-matched-BY-source over target only
     // (RuntimeReplaceable rewritten first — interpreted eval of
     // BETWEEN/nvl/… asserts otherwise)
-    val joinedCtx = AttributeSeq(targetAttrs ++ sourceAttrs)
-    def bindJ(e: Expression): Expression =
-      BindReferences.bindReference(VortexDelete.replaceRuntime(e), joinedCtx)
-    val srcCtx = AttributeSeq(sourceAttrs)
-    def bindS(e: Expression): Expression =
-      BindReferences.bindReference(VortexDelete.replaceRuntime(e), srcCtx)
-    val tgtCtx = AttributeSeq(targetAttrs)
-    def bindT(e: Expression): Expression =
-      BindReferences.bindReference(VortexDelete.replaceRuntime(e), tgtCtx)
+    def binder(ctx: Seq[Attribute]): Expression => Expression = {
+      val seq = AttributeSeq(ctx)
+      e => BindReferences.bindReference(VortexDelete.replaceRuntime(e), seq)
+    }
+    val bindJ = binder(targetAttrs ++ sourceAttrs)
+    val bindS = binder(sourceAttrs)
+    val bindT = binder(targetAttrs)
     (matchedActions.flatMap(a => a.cond.toSeq ++ a.assigns.toSeq.flatten) ++
      notMatchedActions.flatMap(a => a.cond.toSeq ++ a.values) ++
      notMatchedBySourceActions.flatMap(a => a.cond.toSeq ++ a.assigns.toSeq.flatten))
@@ -399,81 +266,42 @@ object VortexMerge {
       notMatchedBySourceActions.map(a => (a.cond.map(bindT), a.assigns.map(_.map(bindT))))
 
     // candidate planning: push `key IN (...)` for a small single-col
-    // key set of a pushable type (same discipline as merge). A NOT
-    // MATCHED BY SOURCE clause defeats the push entirely — any target
-    // row ANYWHERE may be acted on, so every file is a candidate (the
-    // disclosed full-scan shape; see the scaladoc).
-    val keyValuesForPush: Option[Seq[Any]] =
+    // key set of a pushable type (integral / string / boolean /
+    // decimal — timestamp/date/binary keys skip the push: correct, just
+    // unpruned). NULL keys are dropped from the IN list (they match
+    // nothing), which stays sound because null-key target rows are
+    // never matches. A NOT MATCHED BY SOURCE clause defeats the push
+    // entirely — any target row ANYWHERE may be acted on, so every file
+    // is a candidate (the disclosed full-scan shape; see mergeClauses).
+    val filtered =
       if (notMatchedBySourceActions.isEmpty &&
-          keyIdxTarget.length == 1 && srcRows.length <= pushKeyLimit &&
+          keyIdxTarget.length == 1 && srcRows.length <= PushKeyLimit &&
           VortexMergeSupport.pushableKeyType(keyTypes(0))) {
         val vs = srcRows.toSeq.map(_.get(keyIdxSource(0), keyTypes(0)))
           .filter(_ != null).map(VortexMergeSupport.toExternal(_, keyTypes(0)))
-        if (vs.nonEmpty) Some(vs) else None
-      } else None
-    val filtered = keyValuesForPush match {
-      case Some(vs) => target.filter(col(s"`${keyCols.head}`").isInCollection(vs))
-      case None => target
-    }
-    val cands = MaintenancePhases("merge.plan_candidates") {
-    val parts = filtered.queryExecution.sparkPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.flatMap(_.inputPartitions).collect { case v: VortexInputPartition => v }
+        if (vs.nonEmpty) target.filter(col(s"`${keyCols.head}`").isInCollection(vs))
+        else target
+      } else target
+    val cands = st.candidates(filtered, replacementName)
 
-    val rootQ = fs.makeQualified(root).toString
-    val manifest = StatsManifest.read(root, hconf)
-    parts.groupBy(_.file).toSeq.sortBy(_._1).map { case (file, ps) =>
-      val p = new Path(file)
-      val rel = fs.makeQualified(p).toString.stripPrefix(rootQ).stripPrefix("/")
-      val relDir = rel.lastIndexOf('/') match {
-        case -1 => ""; case i => rel.substring(0, i)
-      }
-      val entry = manifest.get(rel)
-      (file, ps.head.partCols, ps.head.partValues,
-        entry.map(_.cols.filter(_.bloom.isDefined).map(_.name).toSet).getOrElse(Set.empty),
-        entry.map(_.cols.filter(_.sketch.isDefined).map(_.name).toSet).getOrElse(Set.empty),
-        replacementName(p.getName), relDir, ps.head.maskFile,
-        entry.map(_.cols.map(cs => cs.name -> cs).toMap).getOrElse(Map.empty[String, StatsManifest.ColStats]))
-    }
-    }
-
-    // bucketing-key guard (ADVICE r11) — see mergeImpl
+    // bucketing-key guard (ADVICE r11): an UPDATE that changes the
+    // bucket key would leave the row in its old __bucket=k directory
+    // while bucket pruning routes lookups to the NEW value's bucket —
+    // the file task value-checks the key per updated row
     val bucketIdx: Int =
-      (try BucketSpecFile.read(root, hconf) catch { case _: Exception => None })
+      (try BucketSpecFile.read(st.root, st.hconf) catch { case _: Exception => None })
         .map(bs => tSchema.fieldIndex(bs._1)).getOrElse(-1)
 
-    val sconf = new SerializableConfiguration(hconf)
-    val outcomes = MaintenancePhases("merge.file_tasks") {
-      if (cands.isEmpty) Array.empty[VortexMergeSupport.ClauseOutcome]
-      else spark.sparkContext.parallelize(cands, cands.length).map { c =>
-        VortexMergeSupport.processFileClauses(c, tSchema, keyIdxTarget, keyIdxSource,
-          keyTypes, bcRows.value, boundMatched, boundNmbs, bucketIdx, sconf.value,
-          bcDupKeys.value)
-      }.collect()
-    }
-
-    val destructive = MaintenancePhases("merge.commit") {
-      // driver commit: drop-whole (every live row deleted) + rewrites
-      outcomes.filter(_.status == 1).foreach { o =>
-        val src = new Path(o.file)
-        if (!remover.remove(fs, src))
-          throw new java.io.IOException(s"vortex merge: failed to delete ${o.file}")
-        MaintenanceCommit.dropMasks(fs, maskBind, o.file, remover)
-      }
-      val d = outcomes.filter(_.status == 2)
-      MaintenanceCommit.commitAll(fs, "merge", maskBind,
-        d.toSeq.map(o => MaintenanceCommit.Replacement(o.file, o.tmp, o.dstName)),
-        remover)
-      MaintenanceCommit.writeManifests(root, hconf, "merge",
-        d.toSeq.map(o => (o.schemaJson, o.entry)))
-      d
-    }
+    val outcomes = st.perFile(cands)((c, conf) =>
+      VortexMergeSupport.processFileClauses(c, tSchema, keyIdxTarget, keyIdxSource,
+        keyTypes, bcRows.value, boundMatched, boundNmbs, bucketIdx, conf,
+        bcDupKeys.value))
 
     // insert half: unmatched source rows through the NOT MATCHED
     // clauses (first true condition wins; none → skip), driver-side —
     // the source is bounded by contract
     val matchedArr = new Array[Boolean](srcRows.length)
-    outcomes.foreach(_.matchedOrdinals.foreach(i => matchedArr(i) = true))
+    outcomes.foreach(_.matched.foreach(i => matchedArr(i) = true))
     val nmPreds = boundNotMatched.map(_._1.map { e =>
       val p = CatalystPredicate.create(e); p.initialize(0); p })
     val nmProjs = boundNotMatched.map(a => UnsafeProjection.create(a._2))
@@ -481,25 +309,34 @@ object VortexMerge {
       val r = srcRows(i)
       boundNotMatched.indices
         .find(j => nmPreds(j).forall(_.eval(r)))
-        .map(j => nmProjs(j)(r).copy()
-          : org.apache.spark.sql.catalyst.InternalRow)
+        .map(j => nmProjs(j)(r).copy(): InternalRow)
     }
+    // NOT NULL enforcement (found r12): a NULL bound for a non-nullable
+    // target column would ride silently through the Row→InternalRow
+    // conversion as the type's ZERO value (Spark's UnsafeProjection
+    // reads the null slot as 0 when the schema says non-nullable) —
+    // fail the statement loudly, before anything commits, like ANSI
+    locally {
+      val nn = tSchema.fields.zipWithIndex.filterNot(_._1.nullable)
+      if (nn.nonEmpty) insertRows.foreach(r => nn.foreach { case (f, i) =>
+        require(!r.isNullAt(i),
+          s"vortex merge: INSERT would write NULL into non-nullable " +
+          s"column ${f.name} — make the column nullable (rewrite) or " +
+          "fix the source") })
+    }
+    st.commit(outcomes, failAfterCommits)
     val srcHash = VortexMergeSupport.sourceHash(srcRows,
       keyCols :+ s"clauses:$clauseFingerprint")
-    val inserted = MaintenancePhases("merge.insert_append") {
-      appendInserts(spark, fs, root, hconf, tSchema, listed,
-        insertRows, srcHash, failAfterInserts)
-    }
-    MaintenancePhases("merge.tt_finish") { ttCtx.foreach(_.finish()) }
+    val inserted = appendInserts(st, tSchema, insertRows, srcHash, failAfterInserts)
 
     MergeResult(cands.length,
-      outcomes.count(_.status == 0),
-      destructive.length,
+      outcomes.count(_.change == Keep),
+      outcomes.count(_.change.isInstanceOf[Replace]),
       outcomes.map(_.rowsUpdated).sum,
       inserted,
       outcomes.map(_.rowsDeleted).sum,
-      outcomes.count(_.status == 1))
-    } // MaintenanceLock.withLock
+      outcomes.count(_.change == Drop))
+    } // RowLevelStatement.run
   }
 
   /** The shared insert half: stage `rows` (target-schema Catalyst rows)
@@ -510,41 +347,23 @@ object VortexMerge {
     * deterministic maintenance replacement) is skipped, which makes
     * the insert half exactly-once under crash re-runs (see the class
     * scaladoc). Returns the number of rows actually inserted. */
-  private def appendInserts(spark: SparkSession,
-                            fs: org.apache.hadoop.fs.FileSystem,
-                            root: Path,
-                            hconf: org.apache.hadoop.conf.Configuration,
-                            tSchema: StructType,
-                            listed: Seq[(org.apache.hadoop.fs.FileStatus, Seq[(String, String)])],
-                            rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
-                            srcHash: String,
+  private def appendInserts(st: RowLevelStatement.Statement, tSchema: StructType,
+                            rows: Seq[InternalRow], srcHash: String,
                             failAfterInserts: Int): Long = {
     if (rows.isEmpty) return 0L
-    // NOT NULL enforcement (found r12): a NULL bound for a
-    // non-nullable target column would ride silently through the
-    // Row→InternalRow conversion as the type's ZERO value (Spark's
-    // UnsafeProjection reads the null slot as 0 when the schema says
-    // non-nullable) — fail the statement loudly instead, like ANSI.
-    locally {
-      val nn = tSchema.fields.zipWithIndex.filterNot(_._1.nullable)
-      if (nn.nonEmpty) rows.foreach(r => nn.foreach { case (f, i) =>
-        require(!r.isNullAt(i),
-          s"vortex merge: INSERT would write NULL into non-nullable " +
-          s"column ${f.name} — make the column nullable (rewrite) or " +
-          "fix the source") })
-    }
+    val (spark, fs, root, hconf) = (st.spark, st.fs, st.root, st.hconf)
     var inserted = 0L
     val insBase = s"part-merge-ins-$srcHash.vortex"
     val insRepl = replacementName(insBase)
     val stage = new Path(root, s".merge-stage-$srcHash")
     fs.delete(stage, true) // leftover scratch of a crashed run
     import scala.jdk.CollectionConverters._
-    val layoutPartCols = listed.flatMap(_._2.map(_._1)).distinct
+    val layoutPartCols = st.listed.flatMap(_._2.map(_._1)).distinct
       .filterNot(_ == BucketSpecFile.BucketCol)
     val bucketSpec =
       try BucketSpecFile.read(root, hconf) catch { case _: Exception => None }
     if (layoutPartCols.isEmpty && bucketSpec.isEmpty) {
-      // driver-direct staging (r15, MergeProbe finding): the insert set
+      // driver-direct staging (r15): the insert set
       // is bounded driver state by merge's contract, and routing it
       // through a Spark write job costs a whole job launch (~0.12-0.19 s
       // at sf1) to move a few thousand rows. One VortexFileWriter call
@@ -651,11 +470,6 @@ object VortexMerge {
   * driver object so tasks serialize only what they need) */
 private[vortex] object VortexMergeSupport {
 
-  final case class Outcome(file: String, rewritten: Boolean, rowsUpdated: Long,
-                           tmp: String, dstName: String,
-                           entry: StatsManifest.FileStats, schemaJson: String,
-                           matchedOrdinals: Array[Int])
-
   /** Statement identity for the insert half: md5 over the key columns
     * and the SORTED per-row digests of the full source content —
     * order-insensitive (collect order varies run to run), stable
@@ -713,18 +527,12 @@ private[vortex] object VortexMergeSupport {
     out.toSeq
   }
 
-  /** status: 0 untouched, 1 drop whole (every live row deleted),
-    * 2 rewritten. matchedOrdinals marks KEY-level matches (ANSI: a
-    * source row is NOT MATCHED only when no target row shares its
-    * key, regardless of which clause fired). */
-  final case class ClauseOutcome(file: String, status: Int,
-                                 rowsUpdated: Long, rowsDeleted: Long,
-                                 tmp: String, dstName: String,
-                                 entry: StatsManifest.FileStats, schemaJson: String,
-                                 matchedOrdinals: Array[Int])
-
+  /** Executor task of a MERGE: the file's outcome (Keep, Drop — every
+    * live row deleted — or Replace). `matched` marks KEY-level matches
+    * (ANSI: a source row is NOT MATCHED only when no target row shares
+    * its key, regardless of which clause fired). */
   def processFileClauses(
-      c: (String, Array[String], Array[String], Set[String], Set[String], String, String, String, Map[String, StatsManifest.ColStats]),
+      c: RowLevelStatement.Candidate,
       tSchema: StructType, keyIdxT: Array[Int], keyIdxS: Array[Int],
       keyTypes: Array[org.apache.spark.sql.types.DataType],
       srcRows: Array[org.apache.spark.sql.catalyst.InternalRow],
@@ -738,10 +546,11 @@ private[vortex] object VortexMergeSupport {
       // row matching one of these errors iff a clause condition fires
       // for it (ANSI scalar cardinality — the subquery only evaluates
       // for targeted rows); conds in this mode are target-only
-      dupKeys: Set[Seq[Any]] = Set.empty): ClauseOutcome = {
+      dupKeys: Set[Seq[Any]] = Set.empty): RowLevelStatement.FileOutcome = {
     import org.apache.spark.sql.catalyst.expressions.{JoinedRow, UnsafeProjection, Predicate => CatalystPredicate}
-    val (file, partCols, partValues, bloomCols, sketchCols, dstName, relDir, maskFile, oldCols) = c
-    val path = new Path(file)
+    import RowLevelStatement.{Drop, FileOutcome, Keep, Replace, Staged}
+    val (file, partCols, maskFile) = (c.file, c.partCols, c.maskFile)
+    val path = c.path
     val fs = path.getFileSystem(conf)
     val footer = VortexFileReader.readFooter(path, conf)
 
@@ -759,7 +568,7 @@ private[vortex] object VortexMergeSupport {
     val matchedSet = new java.util.BitSet(srcRows.length)
     locally {
       val part = VortexInputPartition(file, footer.chunks.indices.toArray,
-        partCols, partValues, maskFile = maskFile)
+        partCols, c.partValues, maskFile = maskFile)
       val r = new VortexPartitionReader(part, conf, keySchema, evolution = true)
       try while (r.next()) {
         val k = keyOf(r.get(), probeIdx, keyTypes)
@@ -777,7 +586,7 @@ private[vortex] object VortexMergeSupport {
     // probed — only a file with neither key hits nor NMBS clauses is
     // provably untouched here; otherwise pass 2 decides
     if ((matchedSet.isEmpty || boundMatched.isEmpty) && boundNmbs.isEmpty)
-      return ClauseOutcome(file, 0, 0L, 0L, null, null, null, null, ords)
+      return FileOutcome(file, Keep, matched = ords)
 
     // column-splice fast path (r15, VERDICT r14 next #2/#3): when every
     // clause is an UPDATE (no DELETE can fire → row count/order
@@ -857,23 +666,17 @@ private[vortex] object VortexMergeSupport {
             }
           }
         }
-        val tmpS = new Path(path.getParent,
-          s".$dstName.${java.util.UUID.randomUUID().toString.take(8)}.inprogress")
-        val relS = if (relDir.isEmpty) dstName else s"$relDir/$dstName"
-        val r = ColumnSplice.rewrite(path, tmpS, conf, footer, tSchema, pl,
-          patcher, bloomCols, sketchCols, oldCols, relS)
-        if (r.updated == 0L) {
-          fs.delete(tmpS, false)
-          return ClauseOutcome(file, 0, 0L, 0L, null, null, null, null, ords)
+        return RowLevelStatement.withTmp(c, c.dstName, conf) { tmp =>
+          val r = ColumnSplice.rewrite(path, tmp, conf, footer, tSchema, pl,
+            patcher, c.bloomCols, c.sketchCols, c.stats, c.rel(c.dstName))
+          if (r.updated == 0L) { fs.delete(tmp, false); FileOutcome(file, Keep, matched = ords) }
+          else FileOutcome(file, Replace(Staged(tmp.toString, c.dstName, Some(r.entry),
+            r.schemaJson)), rowsUpdated = r.updated, matched = ords)
         }
-        return ClauseOutcome(file, 2, r.updated, 0L, tmpS.toString, dstName,
-          r.entry, r.schemaJson, ords)
       }
     }
 
     // pass 2: rewrite, clauses in order, first true condition wins
-    val tmp = new Path(path.getParent,
-      s".$dstName.${java.util.UUID.randomUUID().toString.take(8)}.inprogress")
     val fileFields = footer.schema.fields
     val storedNames = fileFields.map(_.name).toSet
     val partSet = partCols.toSet
@@ -898,15 +701,13 @@ private[vortex] object VortexMergeSupport {
     val nmbsPreds = boundNmbs.map(_._1.map { e =>
       val p = CatalystPredicate.create(e); p.initialize(0); p })
     val nmbsProjs = boundNmbs.map(_._2.map(es => UnsafeProjection.create(es)))
-    val writer = new VortexFileWriter(tmp, conf, footer.schema,
-      bloomCols = bloomCols, sketchCols = sketchCols)
     var updated = 0L
     var deleted = 0L
     var written = 0L
     val joined = new JoinedRow
-    try {
+    val (staged, _) = RowLevelStatement.write(c, c.dstName, footer.schema, conf) { writer =>
       val part = VortexInputPartition(file, footer.chunks.indices.toArray,
-        partCols, partValues, maskFile = maskFile)
+        partCols, c.partValues, maskFile = maskFile)
       val r = new VortexPartitionReader(part, conf, tSchema, evolution = true)
       val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(fileFields.length)
       def emit(src: org.apache.spark.sql.catalyst.InternalRow): Unit = {
@@ -980,171 +781,16 @@ private[vortex] object VortexMergeSupport {
           }
         }
       } finally r.close()
-      writer.close()
-    } catch { case e: Throwable => fs.delete(tmp, false); throw e }
-
-    if (updated == 0L && deleted == 0L) {
-      // key hits but no clause condition fired anywhere — untouched
-      fs.delete(tmp, false)
-      return ClauseOutcome(file, 0, 0L, 0L, null, null, null, null, ords)
-    }
-    if (written == 0L) {
-      // every live row deleted: drop the file whole (driver commits)
-      fs.delete(tmp, false)
-      return ClauseOutcome(file, 1, updated, deleted, null, null, null, null, ords)
-    }
-    def named[T](xs: IndexedSeq[Option[T]]): Map[String, T] =
-      fileFields.map(_.name).zip(xs).collect { case (n, Some(v)) => n -> v }.toMap
-    val sums = named(writer.columnSums)
-    val blooms = named(writer.columnBlooms)
-    val sketches = named(writer.columnSketches)
-    val rel = if (relDir.isEmpty) dstName else s"$relDir/$dstName"
-    val tmpFooter = VortexFileReader.readFooter(tmp, conf)
-    val base = StatsManifest.fromFooter(rel, fs.getFileStatus(tmp).getLen, tmpFooter)
-    val entry = base.copy(cols = base.cols.map(col => col.copy(
-      sum = sums.get(col.name), bloom = blooms.get(col.name),
-      sketch = sketches.get(col.name))))
-    ClauseOutcome(file, 2, updated, deleted, tmp.toString, dstName,
-      entry, tmpFooter.schema.json, ords)
-  }
-
-  def processFile(c: (String, Array[String], Array[String], Set[String], Set[String], String, String, String, Map[String, StatsManifest.ColStats]),
-                  tSchema: StructType, keyIdx: Array[Int],
-                  keyTypes: Array[org.apache.spark.sql.types.DataType],
-                  srcRows: Array[org.apache.spark.sql.catalyst.InternalRow],
-                  bucketIdx: Int,
-                  conf: org.apache.hadoop.conf.Configuration): Outcome = {
-    val (file, partCols, partValues, bloomCols, sketchCols, dstName, relDir, maskFile, _) = c
-    val path = new Path(file)
-    val fs = path.getFileSystem(conf)
-    val footer = VortexFileReader.readFooter(path, conf)
-
-    // key → source ordinal (built per task from the broadcast array;
-    // normalized via keyOf: value equality incl. binary, NULL keys
-    // excluded — they match nothing)
-    val byKey = new java.util.HashMap[Seq[Any], java.lang.Integer](srcRows.length * 2)
-    var si = 0
-    while (si < srcRows.length) {
-      val k = keyOf(srcRows(si), keyIdx, keyTypes)
-      if (k != null) byKey.put(k, si)
-      si += 1
     }
 
-    // pass 1: probe key columns only (mask-aware: dead rows can't match)
-    val keySchema = StructType(keyIdx.map(tSchema.fields(_)))
-    val probeIdx = keyIdx.indices.toArray // key cols are 0..n-1 in keySchema
-    val matchedSet = new java.util.BitSet(srcRows.length)
-    locally {
-      val part = VortexInputPartition(file, footer.chunks.indices.toArray,
-        partCols, partValues, maskFile = maskFile)
-      val r = new VortexPartitionReader(part, conf, keySchema, evolution = true)
-      try while (r.next()) {
-        val k = keyOf(r.get(), probeIdx, keyTypes)
-        val hit = if (k == null) null else byKey.get(k)
-        if (hit != null) matchedSet.set(hit.intValue())
-      } finally r.close()
-    }
-    if (matchedSet.isEmpty)
-      return Outcome(file, rewritten = false, 0L, null, null, null, null, Array.empty)
-
-    // pass 2: rewrite with matched rows replaced by their source row
-    val tmp = new Path(path.getParent,
-      s".$dstName.${java.util.UUID.randomUUID().toString.take(8)}.inprogress")
-    val fileFields = footer.schema.fields
-    // the rewrite keeps the file's OWN stored schema — a table column
-    // this file never stored would silently discard the source row's
-    // value, violating the "replaced by the source row" contract.
-    // Partition columns are legitimately unstored (the directory
-    // encodes them) and are value-checked per matched row below; any
-    // OTHER missing column is schema evolution — fail the job (tasks
-    // are non-destructive; no commit happens) instead of merging wrong.
-    val storedNames = fileFields.map(_.name).toSet
-    val partSet = partCols.toSet
-    tSchema.fields.foreach(f =>
-      if (!storedNames.contains(f.name) && !partSet.contains(f.name))
-        throw new IllegalArgumentException(
-          s"vortex merge: target file $file does not store column " +
-          s"${f.name} the source carries (schema-evolved file) — " +
-          "rewriting would silently drop the source value; " +
-          "compact/rewrite the dataset to one schema first"))
-    // table ordinals of partition columns (never stored): a matched
-    // source row whose partition value differs from the file's would
-    // silently keep the OLD value — reject, the in-place rewrite
-    // cannot move rows between partition directories
-    val partIdx: Array[Int] = tSchema.fields.zipWithIndex.collect {
-      case (f, i) if partSet.contains(f.name) && !storedNames.contains(f.name) => i
-    }
-    def valEq(a: Any, b: Any): Boolean = (a, b) match {
-      case (null, null) => true
-      case (null, _) | (_, null) => false
-      case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.equals(x, y)
-      case (x, y) => x == y
-    }
-    val slot: Array[Int] = fileFields.map(f => tSchema.fieldIndex(f.name))
-    val writer = new VortexFileWriter(tmp, conf, footer.schema,
-      bloomCols = bloomCols, sketchCols = sketchCols)
-    var updated = 0L
-    try {
-      val part = VortexInputPartition(file, footer.chunks.indices.toArray,
-        partCols, partValues, maskFile = maskFile)
-      val r = new VortexPartitionReader(part, conf, tSchema, evolution = true)
-      val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(fileFields.length)
-      try while (r.next()) {
-        val row = r.get()
-        val k = keyOf(row, keyIdx, keyTypes)
-        val hit = if (k == null) null else byKey.get(k)
-        if (hit != null) {
-          var pi = 0
-          while (pi < partIdx.length) {
-            val ti = partIdx(pi)
-            val dt = tSchema.fields(ti).dataType
-            if (!valEq(row.get(ti, dt), srcRows(hit.intValue()).get(ti, dt)))
-              throw new IllegalArgumentException(
-                s"vortex merge: source row for key $k changes partition " +
-                s"column ${tSchema.fields(ti).name} — the in-place rewrite " +
-                "cannot move rows between partition directories; " +
-                "DELETE + re-INSERT such rows instead")
-            pi += 1
-          }
-          if (bucketIdx >= 0) {
-            val dt = tSchema.fields(bucketIdx).dataType
-            if (!valEq(row.get(bucketIdx, dt),
-                srcRows(hit.intValue()).get(bucketIdx, dt)))
-              throw new IllegalArgumentException(
-                s"vortex merge: source row for key $k changes bucketing key " +
-                s"${tSchema.fields(bucketIdx).name} — the in-place rewrite " +
-                "cannot move rows between bucket directories; " +
-                "DELETE + re-INSERT such rows instead")
-          }
-        }
-        val src = if (hit != null) { updated += 1; srcRows(hit.intValue()) } else row
-        var i = 0
-        while (i < slot.length) {
-          out.update(i, src.get(slot(i), fileFields(i).dataType)); i += 1
-        }
-        writer.write(out)
-      } finally r.close()
-      writer.close()
-    } catch { case e: Throwable => fs.delete(tmp, false); throw e }
-
-    def named[T](xs: IndexedSeq[Option[T]]): Map[String, T] =
-      fileFields.map(_.name).zip(xs).collect { case (n, Some(v)) => n -> v }.toMap
-    val sums = named(writer.columnSums)
-    val blooms = named(writer.columnBlooms)
-    val sketches = named(writer.columnSketches)
-    val rel = if (relDir.isEmpty) dstName else s"$relDir/$dstName"
-    val tmpFooter = VortexFileReader.readFooter(tmp, conf)
-    val base = StatsManifest.fromFooter(rel, fs.getFileStatus(tmp).getLen, tmpFooter)
-    val entry = base.copy(cols = base.cols.map(col => col.copy(
-      sum = sums.get(col.name), bloom = blooms.get(col.name),
-      sketch = sketches.get(col.name))))
-    val ords = { // BitSet → ordinal array (compact task → driver payload)
-      val buf = scala.collection.mutable.ArrayBuffer[Int]()
-      var b = matchedSet.nextSetBit(0)
-      while (b >= 0) { buf += b; b = matchedSet.nextSetBit(b + 1) }
-      buf.toArray
-    }
-    Outcome(file, rewritten = true, updated, tmp.toString, dstName,
-      entry, tmpFooter.schema.json, ords)
+    if (updated == 0L && deleted == 0L || written == 0L)
+      RowLevelStatement.discard(staged, conf)
+    // key hits but no clause condition fired anywhere — untouched; every
+    // live row deleted — drop the file whole
+    if (updated == 0L && deleted == 0L) FileOutcome(file, Keep, matched = ords)
+    else if (written == 0L)
+      FileOutcome(file, Drop, rowsUpdated = updated, rowsDeleted = deleted, matched = ords)
+    else FileOutcome(file, Replace(staged), rowsUpdated = updated, rowsDeleted = deleted,
+      matched = ords)
   }
 }

@@ -100,8 +100,7 @@ class DmlBucketGuardSpec extends AnyFunSuite {
       "SELECT CAST(null AS BIGINT) k, 'p0' p, 'n0' v " +
       "UNION ALL SELECT CAST(1001 AS BIGINT), 'p1', 'new1'")
     val ex = intercept[Exception] {
-      VortexMerge.mergeImpl(spark, dir, src, Seq("k"),
-        maxSourceRows = 1 << 20, pushKeyLimit = 10000, failAfterInserts = 1)
+      VortexMerge.upsert(spark, dir, src, Seq("k"), failAfterInserts = 1)
     }
     assert(deepMessage(ex).contains("injected crash"), s"unexpected: $ex")
     // one directory's insert file committed, uncovered by any manifest

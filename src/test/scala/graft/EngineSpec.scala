@@ -62,7 +62,7 @@ class EngineSpec extends AnyFunSuite {
     val before = new java.io.File(dir).listFiles.count(_.getName.endsWith(".vortex"))
     assert(before >= 5)
     val sumBefore = e.readVortex(dir).agg(sum("id")).head().getLong(0)
-    e.compactVortex(dir, numFiles = 1)
+    e.compactVortex(dir)
     val after = new java.io.File(dir).listFiles.count(_.getName.endsWith(".vortex"))
     assert(after == 1, s"expected 1 file after compaction, got $after")
     assert(e.readVortex(dir).agg(sum("id")).head().getLong(0) == sumBefore)

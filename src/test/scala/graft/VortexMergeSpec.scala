@@ -198,8 +198,7 @@ class VortexMergeSpec extends AnyFunSuite {
       .toDF("p", "v", "q")
     // crash after ONE per-directory insert rename
     val crashed = intercept[Exception] {
-      VortexMerge.mergeImpl(spark, dir, src, Seq("v"),
-        maxSourceRows = 1 << 20, pushKeyLimit = 10000, failAfterInserts = 1)
+      VortexMerge.upsert(spark, dir, src, Seq("v"), failAfterInserts = 1)
     }
     assert(crashed.getMessage.contains("injected crash"), crashed.getMessage)
     // re-running the same statement converges: every insert lands
