@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark: every SparkEntry query at SPARK_GRAFT_SF_DIR,
   * best of 2 runs per query (the same methodology as the DuckDB
@@ -11,45 +13,265 @@ import org.apache.spark.sql.SparkSession
   * is produced (final sorts and all output columns included). A bare
   * count() would let Catalyst drop top-level sorts and prune every
   * column — under-timing exactly the ordered-dump queries.
+  *
+  * Each timed rep runs under the job group `<row>#<rep>`; a listener
+  * sums that group's execution counters, and the full line carries the
+  * best rep's counters per row under "counters".
   */
 object Bench {
 
   /** run the physical plan to completion; returns produced row count */
-  def force(df: org.apache.spark.sql.DataFrame): Long =
+  def force(df: DataFrame): Long =
     df.queryExecution.toRdd.mapPartitions { it =>
       var c = 0L
       while (it.hasNext) { it.next(); c += 1 }
       Iterator.single(c)
     }.fold(0L)(_ + _)
 
+  /** (requested, effective) local thread count.
+    * The requested thread count is HONORED by default (VERDICT r15
+    * next #2: the former silent min(req, 6) cap broke the harness's
+    * measurement contract — its 32-vs-8 scaling block was really
+    * 6-vs-6 noise). The host's sustained-CPU cliff is real (>~12 busy
+    * threads for more than a ~25 s burst window punishes every vCPU
+    * ~70× for a long stretch; measured with a plain Java spin loop,
+    * no Spark involved), so the protection moved to where the harness
+    * can see it: thread-scaled pacing between reps, the settle gates,
+    * and both requested and effective counts on the JSON line. An
+    * EXPLICIT opt-in cap remains for A/Bs: SPARK_GRAFT_CPUS_CAP=<n>
+    * applies min(req, n) and the line discloses it via
+    * cpus_requested != cpus. */
+  def cpuCounts(): (Int, Int) = {
+    val req = sys.env.getOrElse("SPARK_GRAFT_CPUS", "6").toInt
+    (req, sys.env.get("SPARK_GRAFT_CPUS_CAP").map(c => math.min(req, c.toInt)).getOrElse(req))
+  }
+
+  /** The rows to run: all of `all`, or the comma-separated names in
+    * `only` (SPARK_GRAFT_BENCH_ONLY) in suite order. An `only` that
+    * names no row or an unknown row is an error, never an empty bench. */
+  def selectRows(all: Seq[String], only: Option[String]): Either[String, Seq[String]] =
+    only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet) match {
+      case None => Right(all)
+      case Some(names) if names.isEmpty =>
+        Left("SPARK_GRAFT_BENCH_ONLY is set but names no row")
+      case Some(names) =>
+        val unknown = names.diff(all.toSet).toSeq.sorted
+        if (unknown.nonEmpty)
+          Left(s"SPARK_GRAFT_BENCH_ONLY names unknown rows: ${unknown.mkString(",")}")
+        else Right(all.filter(names))
+    }
+
+  /** Execution counters of the jobs run under one job group; `peakMem`
+    * is the sum of the tasks' peak execution memory. */
+  final case class Counters(jobs: Long = 0, stages: Long = 0, tasks: Long = 0,
+      runMs: Long = 0, shuffleRead: Long = 0, shuffleWrite: Long = 0,
+      memSpill: Long = 0, diskSpill: Long = 0, peakMem: Long = 0) {
+    def +(o: Counters): Counters = Counters(jobs + o.jobs, stages + o.stages,
+      tasks + o.tasks, runMs + o.runMs, shuffleRead + o.shuffleRead,
+      shuffleWrite + o.shuffleWrite, memSpill + o.memSpill,
+      diskSpill + o.diskSpill, peakMem + o.peakMem)
+    def json: String = s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"run_ms":$runMs,""" +
+      s""""shuffle_read":$shuffleRead,"shuffle_write":$shuffleWrite,"mem_spill":$memSpill,""" +
+      s""""disk_spill":$diskSpill,"peak_mem":$peakMem}"""
+  }
+
+  /** Sums Counters per job group (the `spark.jobGroup.id` job property,
+    * set by `setJobGroup`); jobs outside a group are ignored. Read it
+    * only after draining the listener bus. */
+  final class CounterListener extends SparkListener {
+    private val stageGroup = mutable.Map[Int, String]()
+    private val byGroup = mutable.Map[String, Counters]()
+    private def add(group: String, c: Counters): Unit = synchronized {
+      byGroup(group) = byGroup.getOrElse(group, Counters()) + c
+    }
+    private def groupOf(stage: Int): Option[String] = synchronized(stageGroup.get(stage))
+    def apply(group: String): Option[Counters] = synchronized(byGroup.get(group))
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .foreach { g =>
+          synchronized(e.stageIds.foreach(stageGroup(_) = g))
+          add(g, Counters(jobs = 1))
+        }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      groupOf(e.stageInfo.stageId).foreach(add(_, Counters(stages = 1)))
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      groupOf(e.stageId).foreach { g =>
+        val m = e.taskMetrics
+        add(g, if (m == null) Counters(tasks = 1) else Counters(tasks = 1,
+          runMs = m.executorRunTime,
+          shuffleRead = m.shuffleReadMetrics.totalBytesRead,
+          shuffleWrite = m.shuffleWriteMetrics.bytesWritten,
+          memSpill = m.memoryBytesSpilled, diskSpill = m.diskBytesSpilled,
+          peakMem = m.peakExecutionMemory))
+      }
+  }
+
+  /** Pacing and retry policy of the timed reps.
+    * Pause between timed runs so the host's burst bucket refills and a
+    * heavy query doesn't throttle the NEXT measurement (sleep ≈ the
+    * previous run's wall time, capped); pacing time is not counted
+    * anywhere. paceMs = 0 disables pacing and every retry. Above the
+    * ~12-sustained-thread allowance the bucket drains ≈ (threads−12)/12
+    * faster than one wall-second of sleep refills it, so the sleep (and
+    * its cap) scale by `paceScale` = max(1, threads / 12) — keeping a
+    * local[32] run under the cliff WITHOUT touching any timed region. */
+  final case class Policy(reps: Int, paceMs: Int, paceScale: Double, settle: () => Unit)
+
+  /** One row's outcome: the best and pre-retry best seconds, the job
+    * group of the best rep, whether a retry lowered the best, and the
+    * error when any timed rep failed. */
+  final case class Measured(best: Double, rawBest: Double, bestGroup: String,
+                            retried: Boolean, err: Option[String])
+
+  /** Time `run` under policy `p`. A failing query must surface as an
+    * ERROR, never as a wall-time: time-to-crash numbers silently poison
+    * the round's benchmark. `median` is the row's recorded paced median
+    * (the retry reference). */
+  def measure(spark: SparkSession, name: String, run: () => Unit, p: Policy,
+              median: Option[Double]): Measured = {
+    var err: Option[String] = None
+    var n = 0
+    def rep(): (Double, String) = {
+      val group = s"$name#$n"; n += 1
+      spark.sparkContext.setJobGroup(group, name)
+      val t0 = System.nanoTime()
+      try run() catch {
+        case e: Throwable =>
+          err = Some(e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse("").take(160))
+      } finally spark.sparkContext.clearJobGroup()
+      val dt = (System.nanoTime() - t0) / 1e9
+      // refill pause: proportional to the burn (thread-scaled), bounded
+      if (p.paceMs > 0)
+        Thread.sleep(math.min((p.paceMs * p.paceScale).toLong,
+          math.max(200L, (dt * 1000 * p.paceScale).toLong)))
+      (dt, group)
+    }
+    var times = Vector.fill(p.reps)(rep())
+    def best = times.minBy(_._1)
+    // a FAILED retry never clobbers the valid measurements already taken
+    def retry(): Unit = { val t = rep(); if (err.isEmpty) times :+= t else err = None }
+    // a query whose BEST rep is still slow may have had every rep land
+    // in a host-throttled window (sub-second queries measure 10 s+
+    // there); grant one retry after a full refill pause before
+    // believing it. Threshold 1.0 s matches tools/baseline.py exactly
+    // (asymmetric thresholds would bias the comparison).
+    if (err.isEmpty && p.paceMs > 0 && best._1 > 1.0) {
+      Thread.sleep(p.paceMs.toLong)
+      p.settle() // don't retry INTO a still-throttled window
+      retry()
+    }
+    val rawBest = best._1
+    // per-row median rule: a best rep far above the recorded paced
+    // median is (with very high prior) the throttle, not a regression —
+    // re-measure on a settled host, bounded to 2 extra reps. A REAL
+    // regression survives every retry and still ships large.
+    // Heavy rows (median ≥ 2 s) trigger at 1.5× (VERDICT r15 next
+    // #1a: d_jaccard read 1.9× its median in BOTH r15 harness runs —
+    // under the old uniform 2.5× trigger — on comment-only diffs);
+    // sub-2 s rows keep 2.5× (their noise band is legitimately wide).
+    var extra = 0
+    def trigger(m: Double): Double = if (m >= 2.0) 1.5 * m else 2.5 * m
+    while (err.isEmpty && p.paceMs > 0 && extra < 2 &&
+           median.exists(m => best._1 > math.max(trigger(m), 0.25))) {
+      p.settle()
+      retry()
+      extra += 1
+    }
+    Measured(best._1, rawBest, best._2, extra > 0 && best._1 < rawBest, err)
+  }
+
+  // error text goes inside JSON string literals: escape quote and
+  // backslash and blank every control char, so an exotic message can't
+  // produce invalid JSON exactly in the high-failure round the line
+  // exists to disclose
+  private def esc(s: String): String =
+    s.flatMap {
+      case '"'           => "\\\""
+      case '\\'          => "\\\\"
+      case c if c < ' '  => " "
+      case c             => c.toString
+    }
+
+  /** The full JSON line and the compact one. Failed rows go to
+    * "errors" only; every other row gets its time in "queries" and its
+    * best rep's counters (looked up by job group) in "counters". */
+  def report(results: Seq[(String, Measured)], counters: String => Option[Counters],
+             cpus: Int, cpusReq: Int, settledMs: Long, sfDir: String): (String, String) = {
+    val ok = results.collect { case (k, m) if m.err.isEmpty => k -> m }
+    val bad = results.collect { case (k, Measured(_, _, _, _, Some(e))) => k -> e }
+    val retriedRows = ok.count(_._2.retried)
+    // 4-decimal seconds (0.1 ms grain): full Double repr tripled the
+    // line length, and an over-long line is exactly what the harness's
+    // tail capture has truncated in past rounds ("parsed": null)
+    def fmt(v: Double): String = BigDecimal(v)
+      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
+    val qs = ok.map { case (k, m) => s"\"" + k + "\":" + fmt(m.best) }
+      .mkString("{", ",", "}")
+    val errs = bad.map { case (k, e) => s"\"" + k + "\":\"" + esc(e) + "\"" }
+      .mkString("{", ",", "}")
+    val cs = ok.map { case (k, m) =>
+      s"\"" + k + "\":" + counters(m.bestGroup).getOrElse(Counters()).json }
+      .mkString("{", ",", "}")
+    val total = ok.map(_._2.best).sum
+    val rawTotal = ok.map(_._2.rawBest).sum
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","raw_total":${fmt(rawTotal)},"retried_rows":$retriedRows,"cpus":$cpus,"cpus_requested":$cpusReq,"settled_ms":$settledMs,"queries":$qs,"errors":$errs,"counters":$cs,"sf":"$sfDir"}"""
+    // The harness's capture keeps only a 2000-char stdout TAIL, and the
+    // full line (~3 kB at 131 queries — the names alone are 1.6 kB)
+    // has had its head truncated into "parsed": null for six rounds.
+    // The VERY LAST stdout line is therefore a compact self-contained
+    // JSON: totals + errors + the SLOWEST queries that fit (the perf
+    // signal), with the truncation disclosed via "omitted" (count) and
+    // "omitted_max" (the slowest omitted time — every missing query is
+    // at or under it). Full precision and full coverage stay in
+    // BENCH.json and on stderr.
+    // 1850 (was 1700): r15's budget hid 105/172 rows and manufactured
+    // 6 phantom "dropped" + 6 phantom "new" queries in PERF_r15
+    // (VERDICT r15 next #3). The harness tail keeps 2000 merged chars;
+    // the only bytes after this line are sbt's ~70-char success
+    // epilogue, so 1850 leaves real slack while fitting every row
+    // ≥ ~0.25 s.
+    val budget = 1850
+    def fmt2(v: Double): String = BigDecimal(v)
+      .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
+    // errors share the byte budget: a high-failure round (the case
+    // where the compact line matters MOST) must not blow the cap with
+    // per-failure messages — keep the first few, count the rest
+    val errsShown = bad.take(5)
+    val errsCompact = (errsShown.map { case (k, e) =>
+        s"\"" + k + "\":\"" + esc(e.take(40)) + "\"" } ++
+      (if (bad.size > errsShown.size)
+         Seq(s"\"__more_errors\":${bad.size - errsShown.size}") else Nil))
+      .mkString("{", ",", "}")
+    val bySlowest = ok.map { case (k, m) => k -> m.best }.sortBy(-_._2)
+    val head = s"""{"metric":"total","value":${fmt2(total)},"unit":"sec","raw_total":${fmt2(rawTotal)},"retried_rows":$retriedRows,"cpus":$cpus,"cpus_requested":$cpusReq,"sf":"$sfDir","errors":$errsCompact,"""
+    val fixedTailLen = """"omitted":999,"omitted_max":99999.99,"queries":{}}""".length
+    val entries = mutable.ListBuffer[String]()
+    var used = head.length + fixedTailLen
+    var omitted = 0; var omittedMax = 0.0
+    bySlowest.foreach { case (k, v) =>
+      val e = s"\"" + k + "\":" + fmt2(v)
+      if (used + e.length + 1 <= budget) { entries += e; used += e.length + 1 }
+      else { omitted += 1; omittedMax = math.max(omittedMax, v) }
+    }
+    val compact = head + s""""omitted":$omitted,"omitted_max":${fmt2(omittedMax)},""" +
+      entries.mkString("\"queries\":{", ",", "}}")
+    (line, compact)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // The requested thread count is HONORED by default (VERDICT r15
-    // next #2: the former silent min(req, 6) cap broke the driver's
-    // measurement contract — its 32-vs-8 scaling block was really
-    // 6-vs-6 noise). The host's sustained-CPU cliff is real (>~12 busy
-    // threads for more than a ~25 s burst window punishes every vCPU
-    // ~70× for a long stretch; measured with a plain Java spin loop,
-    // no Spark involved), so the protection moved to where the driver
-    // can see it: thread-scaled pacing between reps (below), the
-    // settle gates, and both requested and effective counts on the
-    // JSON line. An EXPLICIT opt-in cap remains for A/Bs:
-    // SPARK_GRAFT_CPUS_CAP=<n> applies min(req, n) and the line
-    // discloses it via cpus_requested != cpus.
-    val cpusReq = sys.env.getOrElse("SPARK_GRAFT_CPUS", "6").toInt
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS_CAP")
-      .map(c => math.min(cpusReq, c.toInt)).getOrElse(cpusReq)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    // Pause between timed runs so the host's burst bucket refills and a
-    // heavy query doesn't throttle the NEXT measurement (sleep ≈ the
-    // previous run's wall time, capped); pacing time is not counted
-    // anywhere. 0 disables. Above the ~12-sustained-thread allowance
-    // the bucket drains ≈ (threads−12)/12 faster than one wall-second
-    // of sleep refills it, so the sleep (and its cap) scale with the
-    // effective thread count — keeping a local[32] run under the cliff
-    // WITHOUT touching any timed region.
+    // Enumerate the query suites FIRST — suites register their own
+    // datasets (e.g. the stored IVF index) at object init, and a
+    // dataset registered after materializeAll would be built inside
+    // its row's first timed rep.
+    val allQueries = SparkEntry.queries
+    val rows = selectRows(allQueries.keys.toSeq, sys.env.get("SPARK_GRAFT_BENCH_ONLY")) match {
+      case Right(r) => r
+      case Left(msg) => System.err.println(s"[bench] $msg"); sys.exit(2)
+    }
+    val (cpusReq, cpus) = cpuCounts()
     val paceMs = sys.env.getOrElse("SPARK_GRAFT_BENCH_PACE_MS", "10000").toInt
-    val paceScale = math.max(1.0, cpus / 12.0)
     // Throttle-settle gate: the driver runs Bench right after its own
     // 32-thread correctness pass, which can leave the host's burst
     // bucket drained — the FIRST measurements then time the penalty,
@@ -79,36 +301,17 @@ object Bench {
     val settledMs = settle()
     if (settledMs > 1000)
       System.err.println(s"[bench] host throttle detected at startup; settled ${settledMs} ms")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val policy = Policy(sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt, paceMs,
+      math.max(1.0, cpus / 12.0), () => settle())
+    val spark = SparkEntry.session(cpus)
+    val counters = new CounterListener
+    spark.sparkContext.addSparkListener(counters)
     // warm the JVM/codegen/file-footer paths so the first measured
     // query doesn't absorb ~3 s of one-time startup cost
     graft.Tables.names.foreach(n => graft.Tables.t(spark, sfDir, n).count())
     // pre-materialize the vortex read-row datasets OUTSIDE any timed
     // region: the s*/p*_vortex rows then time the scan, not the write.
-    // Enumerate the query suites FIRST — suites register their own
-    // datasets (e.g. the stored IVF index) at object init, and a
-    // dataset registered after materializeAll would be built inside
-    // its row's first timed rep.
-    val allQueries = SparkEntry.queries
     graft.queries.VortexQueries.materializeAll(spark, sfDir)
-    // optional focus list for perf iteration (comma-separated names)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a failing query must surface as an ERROR, never as a wall-time:
-    // time-to-crash numbers silently poison the round's benchmark
-    // test hook: prove the error path end-to-end (set to any string to
-    // add a query that always throws; see tools/bench_fail_test.sh)
-    val injected: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      if (sys.env.contains("SPARK_GRAFT_BENCH_INJECT_FAIL"))
-        Map("___injected_failure" -> ((_, _) => sys.error("injected bench failure")))
-      else Map.empty
     // Self-defense against host throttle (the official artifact measured
     // the HOST, not the engine, in r9/r11/r12 — a 1.3–1.7× uniform
     // inflation on unchanged code): a shipped reference table of the
@@ -120,9 +323,9 @@ object Bench {
     //      mid-suite throttle inflates 5–8×);
     //   2. each known-heavy row (median ≥ 2 s) re-checks the settle
     //      probe immediately before timing;
-    //   3. any row whose best rep lands >2.5× its recorded median is
+    //   3. any row whose best rep lands far above its recorded median is
     //      re-measured (bounded) on a settled host — the throttle is
-    //      the host's number, not the engine's.
+    //      the host's number, not the engine's (see `measure`).
     // Both totals ship: value = stabilized (the grade), raw_total =
     // pre-retry (the disclosure; a large gap IS the throttle evidence).
     // r14 (VERDICT r13 next #7): the sf1 scale run gets the same
@@ -147,95 +350,22 @@ object Bench {
           b.result()
         } finally in.close()
       } catch { case _: Exception => Map.empty }
-    var retriedRows = 0
-    val results = (allQueries ++ injected)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .toSeq.sortBy { case (name, _) => -medians.getOrElse(name, 0.0) }
-      .zipWithIndex.map { case ((name, fn), qIdx) =>
-      var err: Option[String] = None
-      def rep(): Double = {
-        val t0 = System.nanoTime()
-        try { force(fn(spark, sfDir)) } catch {
-          case e: Throwable =>
-            err = Some(e.getClass.getSimpleName + ": " +
-              Option(e.getMessage).getOrElse("").replaceAll("[\\\\\"\\n\\r\\t]", " ").take(160))
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // refill pause: proportional to the burn (thread-scaled),
-        // bounded (see above)
-        if (paceMs > 0)
-          Thread.sleep(math.min((paceMs * paceScale).toLong,
-            math.max(200L, (dt * 1000 * paceScale).toLong)))
-        dt
+    val results = rows.sortBy(name => -medians.getOrElse(name, 0.0))
+      .zipWithIndex.map { case (name, qIdx) =>
+        // settle BEFORE timing (VERDICT r15 next #1b): every known-heavy
+        // row (median ≥ 2 s) AND each of the first 6 rows outright —
+        // heavy rows run first, right where a burst bucket drained by the
+        // harness's preceding 32-thread correctness pass lands, and the
+        // r15 harness artifact showed the startup gate alone does not
+        // cover rows 2..k
+        if (paceMs > 0 && (qIdx < 6 || medians.getOrElse(name, 0.0) >= 2.0)) settle()
+        val fn = allQueries(name)
+        name -> measure(spark, name, () => force(fn(spark, sfDir)), policy, medians.get(name))
       }
-      // settle BEFORE timing (VERDICT r15 next #1b): every known-heavy
-      // row (median ≥ 2 s) AND each of the first 6 rows outright —
-      // heavy rows run first, right where a burst bucket drained by the
-      // driver's preceding 32-thread correctness pass lands, and the
-      // r15 driver artifact showed the startup gate alone does not
-      // cover rows 2..k
-      if (paceMs > 0 && (qIdx < 6 || medians.getOrElse(name, 0.0) >= 2.0)) settle()
-      var times = (0 until reps).map(_ => rep())
-      // a query whose BEST rep is still slow may have had every rep land
-      // in a host-throttled window (sub-second queries measure 10 s+
-      // there); grant one retry after a full refill pause before
-      // believing it. Threshold 1.0 s matches tools/baseline.py exactly
-      // (asymmetric thresholds would bias the comparison), and a FAILED
-      // retry never clobbers the valid measurements already taken.
-      if (err.isEmpty && paceMs > 0 && times.min > 1.0) {
-        Thread.sleep(paceMs.toLong)
-        settle() // don't retry INTO a still-throttled window
-        val t = rep()
-        if (err.isEmpty) times = times :+ t else err = None
-      }
-      val rawBest = times.min
-      // per-row median rule: a best rep far above the recorded paced
-      // median is (with very high prior) the throttle, not a regression —
-      // re-measure on a settled host, bounded to 2 extra reps. A REAL
-      // regression survives every retry and still ships large.
-      // Heavy rows (median ≥ 2 s) trigger at 1.5× (VERDICT r15 next
-      // #1a: d_jaccard read 1.9× its median in BOTH r15 driver runs —
-      // under the old uniform 2.5× trigger — on comment-only diffs);
-      // sub-2 s rows keep 2.5× (their noise band is legitimately wide).
-      var extra = 0
-      def trigger(m: Double): Double = if (m >= 2.0) 1.5 * m else 2.5 * m
-      while (err.isEmpty && paceMs > 0 && extra < 2 &&
-             medians.get(name).exists(m => times.min > math.max(trigger(m), 0.25))) {
-        settle()
-        val t = rep()
-        if (err.isEmpty) times = times :+ t else err = None
-        extra += 1
-      }
-      if (extra > 0 && times.min < rawBest) retriedRows += 1
-      name -> (times.min, rawBest, err)
-    }
-    val ok = results.collect { case (k, (v, _, None)) => k -> v }
-    val rawOk = results.collect { case (k, (_, r, None)) => k -> r }
-    val bad = results.collect { case (k, (_, _, Some(e))) => k -> e }
-    // error text goes inside JSON string literals: even though capture
-    // already blanks ["\\\n\r\t], escape defensively so an exotic
-    // control char (or a future capture-path change) can't produce
-    // invalid JSON exactly in the high-failure round the line exists
-    // to disclose
-    def esc(s: String): String =
-      s.flatMap {
-        case '"'           => "\\\""
-        case '\\'          => "\\\\"
-        case c if c < ' '  => " "
-        case c             => c.toString
-      }
-    // 4-decimal seconds (0.1 ms grain): full Double repr tripled the
-    // line length, and an over-long line is exactly what the driver's
-    // tail capture has truncated in past rounds ("parsed": null)
-    def fmt(v: Double): String = BigDecimal(v)
-      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = ok.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val errs = bad.map { case (k, e) => s"\"" + k + "\":\"" + esc(e) + "\"" }
-      .mkString("{", ",", "}")
-    val total = if (ok.nonEmpty) ok.map(_._2).sum else 0.0
-    val rawTotal = if (rawOk.nonEmpty) rawOk.map(_._2).sum else 0.0
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","raw_total":${fmt(rawTotal)},"retried_rows":$retriedRows,"cpus":$cpus,"cpus_requested":$cpusReq,"settled_ms":$settledMs,"queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
+    // one drain, after the last row and outside every timed region
+    org.apache.spark.sql.graft.ListenerBusDrain(spark.sparkContext)
+    val (line, compact) = report(results, counters(_), cpus, cpusReq, settledMs, sfDir)
+    val bad = results.collect { case (k, Measured(_, _, _, _, Some(e))) => k -> e }
     // durability, three channels: stdout (the driver's primary
     // capture), stderr (survives stdout-only truncation), and a file
     // (survives any tail capture). Flush stdout so the line isn't
@@ -253,47 +383,6 @@ object Bench {
     bad.foreach { case (k, e) => System.err.println(s"[bench] $k FAILED: $e") }
     System.err.flush()
     println(line)
-    // The driver's capture keeps only a 2000-char stdout TAIL, and the
-    // full line (~3 kB at 131 queries — the names alone are 1.6 kB)
-    // has had its head truncated into "parsed": null for six rounds.
-    // The VERY LAST stdout line is therefore a compact self-contained
-    // JSON under 1700 bytes: totals + errors + the SLOWEST queries
-    // that fit (the perf signal), with the truncation disclosed via
-    // "omitted" (count) and "omitted_max" (the slowest omitted time —
-    // every missing query is at or under it). Full precision and full
-    // coverage stay in BENCH.json and on stderr above.
-    // 1850 (was 1700): r15's budget hid 105/172 rows and manufactured
-    // 6 phantom "dropped" + 6 phantom "new" queries in PERF_r15
-    // (VERDICT r15 next #3). The driver tail keeps 2000 merged chars;
-    // the only bytes after this line are sbt's ~70-char success
-    // epilogue, so 1850 leaves real slack while fitting every row
-    // ≥ ~0.25 s. Coverage is disclosed via omitted/omitted_max as
-    // before; full precision and full coverage stay in BENCH.json.
-    val budget = 1850
-    def fmt2(v: Double): String = BigDecimal(v)
-      .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    // errors share the byte budget: a high-failure round (the case
-    // where the compact line matters MOST) must not blow the cap with
-    // per-failure messages — keep the first few, count the rest
-    val errsShown = bad.take(5)
-    val errsCompact = (errsShown.map { case (k, e) =>
-        s"\"" + k + "\":\"" + esc(e.take(40)) + "\"" } ++
-      (if (bad.size > errsShown.size)
-         Seq(s"\"__more_errors\":${bad.size - errsShown.size}") else Nil))
-      .mkString("{", ",", "}")
-    val bySlowest = ok.toSeq.sortBy(-_._2)
-    val head = s"""{"metric":"total","value":${fmt2(total)},"unit":"sec","raw_total":${fmt2(rawTotal)},"retried_rows":$retriedRows,"cpus":$cpus,"cpus_requested":$cpusReq,"sf":"$sfDir","errors":$errsCompact,"""
-    val fixedTailLen = """"omitted":999,"omitted_max":99999.99,"queries":{}}""".length
-    val entries = scala.collection.mutable.ListBuffer[String]()
-    var used = head.length + fixedTailLen
-    var omitted = 0; var omittedMax = 0.0
-    bySlowest.foreach { case (k, v) =>
-      val e = s"\"" + k + "\":" + fmt2(v)
-      if (used + e.length + 1 <= budget) { entries += e; used += e.length + 1 }
-      else { omitted += 1; omittedMax = math.max(omittedMax, v) }
-    }
-    val compact = head + s""""omitted":$omitted,"omitted_max":${fmt2(omittedMax)},""" +
-      entries.mkString("\"queries\":{", ",", "}}")
     println(compact)
     System.out.flush()
     spark.stop()

@@ -1,15 +1,16 @@
 package graft
-object ExplainOne extends App {
-  val spark = org.apache.spark.sql.SparkSession.builder().master("local[8]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false").getOrCreate()
-  spark.sparkContext.setLogLevel("ERROR")
-  args.drop(1).foreach { name =>
-    println(s"==== $name ====")
-    println(SparkEntry.queries(name)(spark, args(0)).queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode))
+
+/** Prints the formatted physical plan of SparkEntry queries on the
+  * session Bench runs them on (same thread count, same config).
+  * Usage: runMain graft.ExplainOne <sfDir> <query>... */
+object ExplainOne {
+  def main(args: Array[String]): Unit = {
+    val spark = SparkEntry.session(Bench.cpuCounts()._2)
+    args.drop(1).foreach { name =>
+      println(s"==== $name ====")
+      println(SparkEntry.queries(name)(spark, args(0)).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
+    }
+    spark.stop()
   }
-  spark.stop()
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Spark half of the randomized differential-testing harness
@@ -13,16 +12,7 @@ import java.nio.file.{Files, Paths}
 object FuzzRun {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, qfile) = (args(0), args(1), args(2))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // extra generator-built tables (nested/decimal coverage):
     // GRAFT_FUZZ_EXTRA = "name=/abs/file.parquet,name2=..." — registered

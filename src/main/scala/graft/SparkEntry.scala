@@ -16,6 +16,22 @@ object SparkEntry {
     Coverage3.set, EventsOps.set, TextOps.set, DedupOps.set, SimilarityOps.set,
     RetrievalOps.set, VortexQueries.set)
 
+  /** The session Bench, Verify, FuzzRun and ExplainOne run on:
+    * local[cpus] with `cpus` shuffle partitions, UTC, the graft
+    * extensions, µs parquet timestamps and no UI. */
+  def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     Tables.registerAll(spark, "/root/testdata/sf0.001")

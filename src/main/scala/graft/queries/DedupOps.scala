@@ -22,9 +22,6 @@ object DedupOps {
   import set._
 
   /** Distinct (doc_id, token) pairs — whitespace tokens. */
-  /** probe access (LshProbe) */
-  private[graft] def tokensFor(s: SparkSession, d: String): DataFrame = tokens(s, d)
-
   private def tokens(s: SparkSession, d: String): DataFrame =
     Tables.t(s, d, "documents")
       .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("w"))
@@ -104,9 +101,8 @@ object DedupOps {
   }
 
   /** Qualifying (sa, sb, jac) DISTINCT-SET pairs for `sets` =
-    * distinctSetsDF output — the join half of [[jaccardDocPairs]],
-    * exposed for stage attribution (JacProbe). */
-  private[graft] def jaccardSetPairs(s: SparkSession, sets: DataFrame, tau: Double): DataFrame = {
+    * distinctSetsDF output — the join half of [[jaccardDocPairs]]. */
+  private def jaccardSetPairs(s: SparkSession, sets: DataFrame, tau: Double): DataFrame = {
     val st = sets.select(col("sid"), explode(col("toks")).as("w"))
     val dfreq = st.groupBy("w").agg(count(lit(1)).as("df"))
     // per-set token array sorted rare-first (ties by token): the prefix

@@ -74,7 +74,7 @@ object RetrievalOps {
   }
 
   /** per-doc rounded BM25 score frame: tf pass × broadcast stats */
-  private[graft] def bm25Scores(s: SparkSession, d: String): DataFrame = {
+  private def bm25Scores(s: SparkSession, d: String): DataFrame = {
     val t = tfFrame(s, d)
     t.crossJoin(broadcast(statsFrame(t)))
       .withColumn("s6", expr(s"CAST(${scoreSql(identity)} AS DECIMAL(18,6))"))

@@ -26,7 +26,7 @@ object SimilarityOps {
 
   case class QVec(id: Long, label: Int, q: Array[Long], saa: Long)
 
-  private[graft] def qvecs(s: SparkSession, d: String): Dataset[QVec] = {
+  private def qvecs(s: SparkSession, d: String): Dataset[QVec] = {
     import s.implicits._
     Tables.t(s, d, "embeddings").select(col("vec_id"), col("label"), col("embedding"))
       .as[(Long, Int, Seq[Float])]
