@@ -2,6 +2,7 @@ package graft
 import scala.collection.mutable
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ListenerBusPost
 
 /** Per-round benchmark: every SparkEntry query at SPARK_GRAFT_SF_DIR,
   * best of 2 runs per query (the same methodology as the DuckDB
@@ -62,18 +63,28 @@ object Bench {
     }
 
   /** Execution counters of the jobs run under one job group; `peakMem`
-    * is the sum of the tasks' peak execution memory. */
+    * is the sum of the tasks' peak execution memory, `compiles` the
+    * generated-code compiles (CodeGenerator cache misses) during the
+    * group's rep: a row that recompiles on every run shows it here. */
   final case class Counters(jobs: Long = 0, stages: Long = 0, tasks: Long = 0,
       runMs: Long = 0, shuffleRead: Long = 0, shuffleWrite: Long = 0,
-      memSpill: Long = 0, diskSpill: Long = 0, peakMem: Long = 0) {
+      memSpill: Long = 0, diskSpill: Long = 0, peakMem: Long = 0, compiles: Long = 0) {
     def +(o: Counters): Counters = Counters(jobs + o.jobs, stages + o.stages,
       tasks + o.tasks, runMs + o.runMs, shuffleRead + o.shuffleRead,
       shuffleWrite + o.shuffleWrite, memSpill + o.memSpill,
-      diskSpill + o.diskSpill, peakMem + o.peakMem)
+      diskSpill + o.diskSpill, peakMem + o.peakMem, compiles + o.compiles)
     def json: String = s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"run_ms":$runMs,""" +
       s""""shuffle_read":$shuffleRead,"shuffle_write":$shuffleWrite,"mem_spill":$memSpill,""" +
-      s""""disk_spill":$diskSpill,"peak_mem":$peakMem}"""
+      s""""disk_spill":$diskSpill,"peak_mem":$peakMem,"compiles":$compiles}"""
   }
+
+  /** The compile count of one timed rep, posted on the listener bus
+    * so the job group's Counters carry it. */
+  final case class RepCompiles(group: String, compiles: Long) extends SparkListenerEvent
+
+  /** generated-code compiles so far in this JVM (driver and local executors) */
+  private def compileCount(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Sums Counters per job group (the `spark.jobGroup.id` job property,
     * set by `setJobGroup`); jobs outside a group are ignored. Read it
@@ -105,6 +116,10 @@ object Bench {
           memSpill = m.memoryBytesSpilled, diskSpill = m.diskBytesSpilled,
           peakMem = m.peakExecutionMemory))
       }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case RepCompiles(g, n) => add(g, Counters(compiles = n))
+      case _ =>
+    }
   }
 
   /** Pacing and retry policy of the timed reps.
@@ -135,12 +150,14 @@ object Bench {
     def rep(): (Double, String) = {
       val group = s"$name#$n"; n += 1
       spark.sparkContext.setJobGroup(group, name)
+      val c0 = compileCount()
       val t0 = System.nanoTime()
       try run() catch {
         case e: Throwable =>
           err = Some(e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse("").take(160))
       } finally spark.sparkContext.clearJobGroup()
       val dt = (System.nanoTime() - t0) / 1e9
+      ListenerBusPost(spark.sparkContext, RepCompiles(group, compileCount() - c0))
       // refill pause: proportional to the burn (thread-scaled), bounded
       if (p.paceMs > 0)
         Thread.sleep(math.min((p.paceMs * p.paceScale).toLong,

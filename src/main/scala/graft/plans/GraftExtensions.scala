@@ -177,6 +177,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => FastJsonRule)
     e.injectOptimizerRule(_ => FastRegexCountRule)
     e.injectOptimizerRule(_ => SortThroughProject)
+    // before CollapseCodegenStages on the non-adaptive and the adaptive
+    // path alike: filter constants stop being inlined into generated code
+    e.injectColumnar(_ => ParameterizeFilterLiterals.columnarRule)
     // graft's custom expressions, for sessions that only speak SQL
     // (the register() helpers cover programmatic sessions)
     import org.apache.spark.sql.catalyst.FunctionIdentifier

@@ -1,6 +1,7 @@
 package graft.sources.vortex
 
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.graft.FieldIndex
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
@@ -72,7 +73,6 @@ object FilterPruning {
       java.lang.Integer.compare(b.length, s.length)
   }
 
-  /** true → the chunk definitely contains no matching row. */
   /** Filter constants arrive in µs; unit-scaled timestamp columns
     * (VortexFormat.TsUnitKey) store longs in their own unit, so the
     * constant maps into that domain. Only exactly-representable values
@@ -89,12 +89,50 @@ object FilterPruning {
       case _ => None
     }
 
-  def canSkip(filter: Filter, chunk: ChunkMeta, schema: StructType): Boolean = {
-    def col(name: String): Option[(ColumnChunkMeta, DataType, String)] = {
-      val i = schema.fieldNames.indexOf(name)
-      if (i < 0) None
-      else Some((chunk.columns(i), schema.fields(i).dataType, VortexFormat.tsUnit(schema.fields(i))))
+  /** true → the chunk definitely contains no matching row. */
+  def canSkip(filter: Filter, chunk: ChunkMeta, schema: StructType): Boolean =
+    canSkip(filter, chunk, schema, in => inKeys(in, schema))
+
+  /** The chunk-skip test of one scan's filters over chunks positionally
+    * aligned with `schema`. Each IN list is converted to sorted keys
+    * once (see [[inKeys]]), not once per chunk. */
+  def pruner(filters: Seq[Filter], schema: StructType): ChunkMeta => Boolean = {
+    val keys = new java.util.IdentityHashMap[In, Option[Array[Long]]]()
+    val keysOf = (in: In) => keys.computeIfAbsent(in, _ => inKeys(in, schema))
+    chunk => filters.exists(canSkip(_, chunk, schema, keysOf))
+  }
+
+  /** An IN list on an integral, date or µs-timestamp column as sorted
+    * keys in the stored domain. None when any value is null or has no
+    * exact key, or the column has another type or unit: such lists keep
+    * the per-value range test, whose answer for them is the same. */
+  private[graft] def inKeys(in: In, schema: StructType): Option[Array[Long]] =
+    FieldIndex(schema, in.attribute).flatMap { i =>
+      val f = schema.fields(i)
+      val keyed = f.dataType match {
+        case ByteType | ShortType | IntegerType | LongType | DateType => true
+        case TimestampType | TimestampNTZType => VortexFormat.tsUnit(f) == "us"
+        case _ => false
+      }
+      val out = new Array[Long](in.values.length)
+      var ok = keyed
+      var j = 0
+      while (ok && j < out.length) {
+        toDomain(in.values(j), f.dataType) match {
+          case Some(Left(l)) => out(j) = l
+          case _ => ok = false
+        }
+        j += 1
+      }
+      if (!ok) None else { java.util.Arrays.sort(out); Some(out) }
     }
+
+  private def canSkip(filter: Filter, chunk: ChunkMeta, schema: StructType,
+                      keysOf: In => Option[Array[Long]]): Boolean = {
+    def col(name: String): Option[(ColumnChunkMeta, DataType, String)] =
+      FieldIndex(schema, name).map { i =>
+        (chunk.columns(i), schema.fields(i).dataType, VortexFormat.tsUnit(schema.fields(i)))
+      }
     def rangeSkip(name: String, v: Any)(decide: (Int, Int) => Boolean): Boolean =
       col(name) match {
         case Some((m, dt, unit)) if m.min.isDefined =>
@@ -112,12 +150,23 @@ object FilterPruning {
       case GreaterThanOrEqual(a, v) => rangeSkip(a, v)((_, cMax) => cMax > 0)
       case LessThan(a, v) => rangeSkip(a, v)((cMin, _) => cMin <= 0)
       case LessThanOrEqual(a, v) => rangeSkip(a, v)((cMin, _) => cMin < 0)
-      case In(a, vs) if vs != null && vs.nonEmpty =>
-        vs.forall(v => rangeSkip(a, v)((cMin, cMax) => cMin < 0 || cMax > 0))
+      case in @ In(a, vs) if vs != null && vs.nonEmpty =>
+        keysOf(in) match {
+          // skip iff no key falls in [min, max]
+          case Some(keys) => col(a).exists { case (m, _, _) =>
+            m.min.isDefined && {
+              val lo = PageCodec.bytesToLong(m.min.get)
+              val at = java.util.Arrays.binarySearch(keys, lo)
+              val first = if (at >= 0) at else -at - 1
+              first == keys.length || keys(first) > PageCodec.bytesToLong(m.max.get)
+            }
+          }
+          case None => vs.forall(v => rangeSkip(a, v)((cMin, cMax) => cMin < 0 || cMax > 0))
+        }
       case IsNull(a) => col(a).exists { case (m, _, _) => m.nullCount == 0 }
       case IsNotNull(a) => col(a).exists { case (m, _, _) => m.nullCount == chunk.rowCount }
-      case And(l, r) => canSkip(l, chunk, schema) || canSkip(r, chunk, schema)
-      case Or(l, r) => canSkip(l, chunk, schema) && canSkip(r, chunk, schema)
+      case And(l, r) => canSkip(l, chunk, schema, keysOf) || canSkip(r, chunk, schema, keysOf)
+      case Or(l, r) => canSkip(l, chunk, schema, keysOf) && canSkip(r, chunk, schema, keysOf)
       case _ => false
     }
   }
@@ -132,7 +181,7 @@ object FilterPruning {
   def bloomSkip(filter: Filter, bloomOf: String => Option[Sbbf],
                 schema: StructType): Boolean = {
     def hashOf(name: String, v: Any): Option[Long] = {
-      val i = schema.fieldNames.indexOf(name)
+      val i = FieldIndex(schema, name).getOrElse(-1)
       if (i < 0 || v == null) return None
       val dt = schema.fields(i).dataType
       dt match {

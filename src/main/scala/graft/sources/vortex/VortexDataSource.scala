@@ -23,10 +23,11 @@ import org.apache.spark.util.SerializableConfiguration
   * (README.md:63-69).
   *
   * Scale design: schema + chunk index come from per-file footers
-  * (driver reads footers only); one InputPartition covers ~128 MB of
-  * consecutive chunks, so a 100 TB dataset fans out to ~800k splits
-  * scheduled across executors; filters prune whole chunks via footer
-  * stats before any page I/O; executors cache footers per JVM.
+  * (driver reads footers only); one InputPartition covers a run of
+  * consecutive chunks of at most ~128 MB, and a scan smaller than
+  * cores × 128 MB splits by rows across every core; filters prune
+  * whole chunks via footer stats before any page I/O; executors cache
+  * footers per JVM.
   */
 class VortexDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "vortex"
@@ -658,7 +659,10 @@ class VortexScanBuilder(schema: StructType, paths: Seq[String],
   }
 }
 
-/** One split = consecutive surviving chunks of one file, ~128 MB.
+/** One split = consecutive surviving chunks of one file: about 1/P of
+  * the scan's rows for P = defaultParallelism, at least one chunk, and
+  * at most ~128 MB (VortexFormat.TargetSplitBytes); a file smaller
+  * than VortexFormat.DefaultChunkRows rows is one split.
   * `partKey` (nullable) carries the typed Hive-partition values so the
   * scan can report KeyGroupedPartitioning — Spark groups splits by key
   * and storage-partitioned joins / partition-keyed aggregations run
@@ -693,7 +697,7 @@ class VortexScan(fileSchema: StructType, required: StructType,
     new VortexMicroBatchStream(required, paths, checkpointLocation)
   }
   override def description(): String =
-    s"VortexScan(files=${paths.mkString(",")}, pushed=[${filters.mkString(", ")}]" +
+    s"VortexScan(files=${paths.mkString(",")}, pushed=[${filters.map(VortexScan.describe).mkString(", ")}]" +
       pushedLimit.map(n => s", pushedLimit=$n").getOrElse("") +
       versionAsOf.map(v => s", versionAsOf=$v").getOrElse("") + ")"
 
@@ -719,7 +723,7 @@ class VortexScan(fileSchema: StructType, required: StructType,
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     required.fieldNames.map(org.apache.spark.sql.connector.expressions.Expressions.column)
   override def filter(runtimeFilters: Array[Filter]): Unit =
-    filters = filters ++ runtimeFilters
+    if (runtimeFilters.nonEmpty) filters = filters ++ runtimeFilters
 
   /** Dataset bucket layout, read once per scan from the root marker. */
   private lazy val datasetBucket: Option[(String, Int)] =
@@ -766,16 +770,17 @@ class VortexScan(fileSchema: StructType, required: StructType,
     else new UnknownPartitioning(parts.length)
   }
 
-  /** planning is memoized per pushed-filter set: Spark calls
+  /** planning is memoized per pushed-filter array: Spark calls
     * planInputPartitions from estimateStatistics, batch planning, and
-    * every runtime-filter round — only a filter change re-plans. */
-  private var lastPlan: (Seq[Filter], Array[InputPartition]) = _
+    * every runtime-filter round — only `filter`, which replaces the
+    * array, re-plans. Keyed by identity, so a runtime IN list of 75k
+    * keys is never compared element by element. */
+  private var lastPlan: (Array[Filter], Array[InputPartition]) = _
   /** (rows, encoded bytes) of the memoized plan's kept chunks */
   private var lastPlanTotals: (Long, Long) = (0L, 0L)
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val planKey = filters.toSeq
-    if (lastPlan != null && lastPlan._1 == planKey) return lastPlan._2
+    if (lastPlan != null && (lastPlan._1 eq filters)) return lastPlan._2
     val spark = SparkSession.active
     val conf = spark.sessionState.newHadoopConf()
     // a pinned read plans from the commit-log generation's file set
@@ -871,6 +876,10 @@ class VortexScan(fileSchema: StructType, required: StructType,
     // manifests whose chunk stats were dropped) still prune at FILE
     // level before their footer fetch; schema-LESS (round-3) entries
     // never prune — see the strict-schema note below.
+    val pruners = scala.collection.mutable.Map[StructType, VortexFormat.ChunkMeta => Boolean]()
+    def prunerFor(schema: StructType) =
+      pruners.getOrElseUpdate(schema, FilterPruning.pruner(filters.toSeq, schema))
+    val skipData = prunerFor(dataSchema)
     val survivingPruned = surviving.filter { case (st, _) =>
       if (filters.isEmpty) true
       else {
@@ -888,9 +897,7 @@ class VortexScan(fileSchema: StructType, required: StructType,
           })
         if (bloomDrop) false
         else chunkSources.get(st.getPath.toString) match {
-          case Some(chunks) =>
-            !chunks.forall(ch =>
-              filters.exists(fl => FilterPruning.canSkip(fl, ch.toChunkMeta, dataSchema)))
+          case Some(chunks) => !chunks.forall(ch => skipData(ch.toChunkMeta))
           case None =>
             // strict schema check even for file-level stats: min/max
             // are raw storage bytes decoded under the EXPECTED type,
@@ -901,8 +908,7 @@ class VortexScan(fileSchema: StructType, required: StructType,
             // footer fetch and keep the drift guard.
             manifestEntries.get(st.getPath.toString) match {
               case Some(m) if m.len == st.getLen && m.schemaRecordedAndMatches(expectedUnits) =>
-                !filters.exists(fl =>
-                  FilterPruning.canSkip(fl, m.toChunkMeta(dataSchema), dataSchema))
+                !skipData(m.toChunkMeta(dataSchema))
               case _ => true
             }
         }
@@ -923,9 +929,9 @@ class VortexScan(fileSchema: StructType, required: StructType,
       else Long.MaxValue
     var totRows = 0L
     var totBytes = 0L
-    // (file, kept (chunkIdx, bytes), partCols, partVals, partKey, bucket, mask)
+    // (file, kept (chunkIdx, rows, bytes), partCols, partVals, partKey, bucket, mask)
     val pendingFiles = scala.collection.mutable.ArrayBuffer[
-      (String, Array[(Int, Long)], Array[String], Array[String],
+      (String, Array[(Int, Long, Long)], Array[String], Array[String],
        org.apache.spark.sql.catalyst.expressions.GenericInternalRow, Int, String)]()
     survivingPruned.foreach { case (st, kvs0) =>
       if (limitRemaining > 0L) {
@@ -978,14 +984,14 @@ class VortexScan(fileSchema: StructType, required: StructType,
               PartitionedLayout.toInternal(v, partSchema(k).dataType)
             }.toArray[Any])
         val mask = maskBind.get(f.toString).map(_._1).orNull
-        val kept = scala.collection.mutable.ArrayBuffer[(Int, Long)]()
+        val kept = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
+        val skip = prunerFor(pruneSchema)
         chunkMetas.zipWithIndex.foreach { case ((chunk, chunkBytes), ci) =>
           // tier 2: per-chunk stats pruning (manifest metas carry the
           // same nullCount/min/max the footer would). Sound over a
           // masked file too: a mask only REMOVES rows, so min/max can
           // only over-approximate.
-          val keep = limitRemaining > 0L &&
-            !filters.exists(fl => FilterPruning.canSkip(fl, chunk, pruneSchema))
+          val keep = limitRemaining > 0L && !skip(chunk)
           if (keep) {
             // pushed-LIMIT trim accounting trusts rowCount; a masked
             // chunk delivers FEWER rows, so decrementing by rowCount
@@ -995,48 +1001,57 @@ class VortexScan(fileSchema: StructType, required: StructType,
               limitRemaining = math.max(0L, limitRemaining - chunk.rowCount)
             totRows += chunk.rowCount
             totBytes += chunkBytes
-            kept += ((ci, chunkBytes))
+            kept += ((ci, chunk.rowCount.toLong, chunkBytes))
           }
         }
         if (kept.nonEmpty) pendingFiles += ((f.toString, kept.toArray, pc, pv, pk, bucketId, mask))
       }
     }
-    // Split-size selection AFTER the walk, when total kept bytes are
-    // known — Spark's own FilePartition.maxSplitBytes rule: cap at
-    // TargetSplitBytes (the object-store-friendly ceiling), but shrink
-    // toward totalBytes/defaultParallelism so a dataset smaller than
-    // cores×128MB still fans out across every core instead of
-    // single-threading one big file (the sf1 finding: a 6M-row
-    // single-file scan planned ONE task while DuckDB used all
-    // threads). Keyed (Hive-partitioned / bucketed) files keep the
-    // static ceiling ONLY while storage-partitioned execution is on:
-    // their HasPartitionKey contract then feeds KeyGroupedPartitioning,
-    // where duplicate keys from intra-file splits would break the
-    // one-partition-per-key report; with SPJ off (the default) we
-    // report UnknownPartitioning anyway, so keyed files fan out too.
-    val dynTarget = {
-      val parallelism = math.max(spark.sparkContext.defaultParallelism, 1)
-      math.min(VortexFormat.TargetSplitBytes,
-        math.max(VortexFormat.MinSplitBytes, totBytes / parallelism + 1))
-    }
+    // Split planning AFTER the walk, when the kept rows are known. A
+    // file holding the share r of the scan's kept rows splits into
+    // ceil(r × P) contiguous chunk groups of similar row counts
+    // (P = defaultParallelism), so a scan smaller than cores × 128 MB
+    // still runs on every core instead of one task per file. A group
+    // holds at least one chunk, and a file gets at most one group per
+    // started DefaultChunkRows rows: a file smaller than one default
+    // chunk is one task's worth of decoding, and splitting it only adds
+    // tasks. A group also closes once it holds TargetSplitBytes, the
+    // object-store-friendly ceiling. Keyed
+    // (Hive-partitioned / bucketed) files keep only that ceiling while
+    // storage-partitioned execution is on: their HasPartitionKey
+    // contract then feeds KeyGroupedPartitioning, where duplicate keys
+    // from intra-file splits would break the one-partition-per-key
+    // report; with SPJ off (the default) the scan reports
+    // UnknownPartitioning, so keyed files fan out too.
+    val parallelism = math.max(spark.sparkContext.defaultParallelism, 1).toLong
     val spjOn =
       spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false") == "true"
     pendingFiles.foreach { case (f, kept, pc, pv, pk, bucketId, mask) =>
-      val target = if (pk == null || !spjOn) dynTarget else VortexFormat.TargetSplitBytes
+      val fileRows = kept.map(_._2).sum
+      val groups =
+        if ((pk != null && spjOn) || fileRows == 0L) 1L
+        else Seq(kept.length.toLong, (fileRows * parallelism + totRows - 1) / totRows,
+          (fileRows + VortexFormat.DefaultChunkRows - 1) / VortexFormat.DefaultChunkRows).min
       var cur = scala.collection.mutable.ArrayBuffer[Int]()
       var bytes = 0L
-      kept.foreach { case (ci, chunkBytes) =>
-        cur += ci
-        bytes += chunkBytes
-        if (bytes >= target) {
+      var rowsBefore = 0L
+      var group = 0L
+      kept.foreach { case (ci, rows, chunkBytes) =>
+        // the group whose row range holds this chunk's midpoint
+        val g = if (groups == 1L) 0L else (rowsBefore + rows / 2) * groups / fileRows
+        if (cur.nonEmpty && (g != group || bytes >= VortexFormat.TargetSplitBytes)) {
           parts += VortexInputPartition(f, cur.toArray, pc, pv, pk, bucketId, mask)
           cur = scala.collection.mutable.ArrayBuffer[Int](); bytes = 0L
         }
+        group = g
+        cur += ci
+        bytes += chunkBytes
+        rowsBefore += rows
       }
       if (cur.nonEmpty) parts += VortexInputPartition(f, cur.toArray, pc, pv, pk, bucketId, mask)
     }
     val out = parts.toArray
-    lastPlan = (planKey, out)
+    lastPlan = (filters, out)
     lastPlanTotals = (totRows, totBytes)
     out
   }
@@ -1046,6 +1061,37 @@ class VortexScan(fileSchema: StructType, required: StructType,
     val bc: Broadcast[SerializableConfiguration] =
       SparkSession.active.sparkContext.broadcast(conf)
     new VortexReaderFactory(bc, required, evolution)
+  }
+}
+
+object VortexScan {
+  import org.apache.spark.sql.sources.{And, In, Not, Or}
+
+  /** IN lists longer than this render as a count and a value range */
+  private val InListShown = 10
+
+  /** A pushed filter for the plan text. A long IN list (a join-derived
+    * runtime filter can hold ~75k keys, and adaptive planning renders
+    * the scan on every plan update) renders as
+    * `In(col, <n values in [lo, hi]>)`. */
+  def describe(f: Filter): String = f match {
+    case In(a, vs) if vs.length > InListShown =>
+      var lo: Any = null; var hi: Any = null
+      val range = try {
+        vs.foreach { v =>
+          if (v != null) {
+            val c = v.asInstanceOf[Comparable[Any]]
+            if (lo == null || c.compareTo(lo) < 0) lo = v
+            if (hi == null || c.compareTo(hi) > 0) hi = v
+          }
+        }
+        if (lo == null) "" else s" in [$lo, $hi]"
+      } catch { case _: ClassCastException => "" }
+      s"In($a, <${vs.length} values$range>)"
+    case And(l, r) => s"And(${describe(l)},${describe(r)})"
+    case Or(l, r) => s"Or(${describe(l)},${describe(r)})"
+    case Not(c) => s"Not(${describe(c)})"
+    case _ => f.toString
   }
 }
 

@@ -37,12 +37,9 @@ object VortexFormat {
   /** per-column cap on a file's manifest bloom (~1% fp up to ~100k
     * distinct keys at 10 bits/key; degrades gracefully past it) */
   val DefaultBloomMaxBytes = 128 * 1024
-  /** target bytes per InputPartition (split granularity for executors) */
+  /** ceiling on the bytes of one InputPartition (split planning in
+    * VortexScan.planInputPartitions) */
   val TargetSplitBytes: Long = 128L * 1024 * 1024
-  /** floor for the parallelism-adaptive split target (≙ Spark's
-    * filesOpenCostInBytes role: below this, per-task overhead beats
-    * added parallelism) */
-  val MinSplitBytes: Long = 8L * 1024 * 1024
 
   // page encodings
   val EncPlain: Byte = 0

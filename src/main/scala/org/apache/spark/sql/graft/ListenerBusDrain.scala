@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.SparkListenerEvent
 
 /** Waits until every posted listener event has been delivered, so
   * counters read afterwards are complete. The bus is `private[spark]`,
@@ -8,4 +9,10 @@ import org.apache.spark.SparkContext
   * [[InternalRowDataFrame]]). */
 object ListenerBusDrain {
   def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+}
+
+/** Posts an event to every registered listener (the bus is
+  * `private[spark]`, as above). */
+object ListenerBusPost {
+  def apply(sc: SparkContext, e: SparkListenerEvent): Unit = sc.listenerBus.post(e)
 }

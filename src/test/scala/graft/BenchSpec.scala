@@ -90,4 +90,23 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(j.get("queries").get("retry_row").asDouble >= 0.3)
     assert(j.get("errors").size == 0)
   }
+
+  test("every row's counters carry the rep's generated-code compiles") {
+    listener
+    // a query shape no other test runs: its first rep compiles, the
+    // second finds the code cached
+    val fresh = Bench.measure(spark, "fresh_row", () =>
+      Bench.force(spark.range(0, 500, 1, 2).selectExpr("id * 31 + 17 AS k").groupBy("k").count()),
+      unpaced, None)
+    val other = Bench.measure(spark, "other_row", () => Bench.force(spark.range(10).toDF()),
+      unpaced, None)
+    ListenerBusDrain(spark.sparkContext)
+    assert(listener("fresh_row#0").exists(_.compiles >= 1))
+    assert(listener("fresh_row#1").exists(_.compiles == 0))
+    val (full, _) = Bench.report(Seq("fresh_row" -> fresh, "other_row" -> other),
+      listener(_), 2, 2, 0L, "sf_test")
+    val cs = json.readTree(full).get("counters")
+    assert(cs.size == 2)
+    Seq("fresh_row", "other_row").foreach(r => assert(cs.get(r).has("compiles"), r))
+  }
 }

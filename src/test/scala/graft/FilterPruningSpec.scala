@@ -75,4 +75,74 @@ class FilterPruningSpec extends AnyFunSuite {
     assert(!canSkip(EqualTo("nope", 1L), c, schema))
     assert(!canSkip(StringContains("s", "c"), c, schema))
   }
+
+  test("IN: the sorted-key path answers exactly as the per-value path") {
+    import graft.sources.vortex.FilterPruning
+    val rnd = new scala.util.Random(20261017L)
+    val t0 = 1577836800000000L // 2020-01-01 in µs
+    val sch = StructType(Seq(
+      StructField("b", ByteType), StructField("i", IntegerType), StructField("l", LongType),
+      StructField("dt", DateType), StructField("tu", TimestampType),
+      VortexFormat.withTsUnit(StructField("tm", TimestampType), "ms"),
+      VortexFormat.withTsUnit(StructField("tn", TimestampType), "ns"),
+      StructField("db", DoubleType), StructField("s", StringType),
+      StructField("dec", DecimalType(10, 2))))
+    def instant(us: Long) = java.time.Instant.EPOCH.plus(us, java.time.temporal.ChronoUnit.MICROS)
+    // per column: the stored long of key k, and an IN value near key k
+    // (sometimes between stored keys, so it has no exact key)
+    val stored: Array[Int => Long] = Array(
+      k => k, k => k, k => k * 1000L, k => 18000L + k, k => t0 + k * 1000L,
+      k => (t0 + k * 1000L) / 1000L, k => (t0 + k * 1000L) * 1000L,
+      k => java.lang.Double.doubleToLongBits(k / 2.0), _ => 0L, k => k * 100L)
+    val value: Array[Int => Any] = Array(
+      k => k.toByte, k => k, k => k * 1000L + (if (rnd.nextInt(4) == 0) 1 else 0),
+      k => java.time.LocalDate.ofEpochDay(18000L + k),
+      k => instant(t0 + k * 1000L + (if (rnd.nextInt(4) == 0) 7 else 0)),
+      k => instant(t0 + k * 1000L + (if (rnd.nextInt(4) == 0) 500 else 0)),
+      k => instant(t0 + k * 1000L),
+      k => k / 2.0, k => f"v$k%03d", k => new java.math.BigDecimal(k))
+    val outcomes = scala.collection.mutable.Set[(Int, Boolean)]()
+    var sortedPath = 0
+    (0 until 4000).foreach { _ =>
+      val base = rnd.nextInt(60); val width = 1 + rnd.nextInt(12); val rows = 8
+      val columns = sch.fields.indices.map { c =>
+        val ks = Array.fill(rows)(base + rnd.nextInt(width))
+        val nulls = Array.fill(rows)(rnd.nextInt(10) == 0)
+        val e = if (c == 8) PageCodec.encode(new ColVec(rows, nulls, null,
+                  ks.map(k => f"v$k%03d".getBytes("UTF-8"))), StringType)
+                else PageCodec.encode(new ColVec(rows, nulls, ks.map(stored(c)), null),
+                  sch.fields(c).dataType)
+        VortexFormat.ColumnChunkMeta(0, 0, e.encoding, e.compressed, e.nullCount, e.min, e.max)
+      }.toArray
+      val chunk = VortexFormat.ChunkMeta(rows, columns)
+      val c = rnd.nextInt(sch.length)
+      val name = sch.fields(c).name
+      val vs = Array.fill[Any](1 + rnd.nextInt(8))(
+        if (rnd.nextInt(20) == 0) null else value(c)(rnd.nextInt(80) - 10))
+      val in = In(name, vs)
+      val perValue = vs.forall(v => canSkip(EqualTo(name, v), chunk, sch))
+      assert(canSkip(in, chunk, sch) == perValue, s"$in on $name")
+      assert(FilterPruning.pruner(Seq(in), sch)(chunk) == perValue, s"$in on $name")
+      if (FilterPruning.inKeys(in, sch).isDefined) sortedPath += 1
+      outcomes += ((c, perValue))
+    }
+    // both answers occur on every key-domain column, and the sorted
+    // path served most of their lists
+    (0 to 4).foreach(c => assert(outcomes((c, true)) && outcomes((c, false)), sch.fields(c).name))
+    assert(sortedPath > 1000)
+  }
+
+  test("IN: sorted keys exist only for exact, non-null keys on key-domain µs columns") {
+    import graft.sources.vortex.FilterPruning.inKeys
+    val sch = StructType(Seq(StructField("l", LongType), StructField("db", DoubleType),
+      VortexFormat.withTsUnit(StructField("tm", TimestampType), "ms"),
+      StructField("tu", TimestampType)))
+    assert(inKeys(In("l", Array(5L, 1L, 5L, 3)), sch).map(_.toSeq) == Some(Seq(1L, 3L, 5L, 5L)))
+    assert(inKeys(In("l", Array(5L, null)), sch).isEmpty)
+    assert(inKeys(In("db", Array(1.0)), sch).isEmpty)
+    assert(inKeys(In("tm", Array(java.time.Instant.EPOCH)), sch).isEmpty)
+    assert(inKeys(In("tu", Array(java.time.Instant.ofEpochSecond(1))), sch)
+      .map(_.toSeq) == Some(Seq(1000000L)))
+    assert(inKeys(In("nope", Array(1L)), sch).isEmpty)
+  }
 }
