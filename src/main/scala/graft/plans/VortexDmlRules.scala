@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import graft.sources.vortex.{VortexDelete, VortexMerge, VortexTable, VortexUpdate}
+import graft.sources.vortex.{RowLevelStatement, VortexDelete, VortexMerge, VortexTable, VortexUpdate}
 
 /** SQL statement surface for UPDATE and MERGE over vortex datasets
   * (VERDICT r10 "What's missing" #1/#2): DELETE already plans through
@@ -77,7 +77,7 @@ object VortexDmlRules {
     * re-resolves them against its fresh scan. */
   private[plans] def toColumn(session: SparkSession, e: Expression): Column =
     GraftSqlBridge.column(
-      VortexDelete.replaceRuntime(DmlSubqueries.materialize(session, e)).transform {
+      RowLevelStatement.prepare(DmlSubqueries.materialize(session, e)).transform {
         case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
       })
 

@@ -89,11 +89,9 @@ private[graft] object ColumnSplice {
   final case class Result(updated: Long, entry: StatsManifest.FileStats,
                           schemaJson: String)
 
-  /** Execute the splice rewrite of `path` into `tmp`. Returns the
-    * number of patched rows and the new manifest entry (untouched
-    * columns inherit `oldCols` stats). The caller deletes `tmp` when
-    * updated == 0 (untouched file) — the write itself is
-    * non-destructive either way. */
+  /** Execute the splice rewrite of `path` into `tmp` (non-destructive).
+    * Returns the number of patched rows and the new manifest entry
+    * (untouched columns inherit `oldCols` stats). */
   def rewrite(path: Path, tmp: Path, conf: Configuration, footer: Footer,
               tableSchema: StructType, p: Plan, patcher: RowPatch,
               bloomCols: Set[String], sketchCols: Set[String],

@@ -3,18 +3,21 @@ package graft.sources.vortex
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Expression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSeq, BasePredicate, BindReferences, BoundReference, CommonExpressionRef, EmptyRow, Expression, GenericInternalRow, In, InSet, JoinedRow, Literal, Projection, RuntimeReplaceable, UnsafeProjection, With, Predicate => CatalystPredicate}
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.util.SerializableConfiguration
 
 /** The one pipeline every row-level maintenance statement runs through
-  * — DELETE, UPDATE, MERGE (whole-row and clause), foldMasks and the
-  * commit of compact. In the Delta Lake design DELETE and UPDATE are
-  * special cases of MERGE; here they share everything but their
-  * per-file kernel:
+  * — DELETE, UPDATE, MERGE, foldMasks and the commit of compact. As in
+  * the Delta Lake design, DELETE and UPDATE are special cases of MERGE:
+  * every statement is a [[Shape]] — an ordered list of target-only
+  * clauses plus, for MERGE, a keyed source — and shares everything,
+  * its per-file kernel included:
   *
   *  1. PROLOGUE ([[run]]): the dataset's maintenance lease, the
   *     crashed-compaction repair, ONE raw listing with the mask
@@ -24,19 +27,39 @@ import org.apache.spark.util.SerializableConfiguration
   *     statement knows it has work ([[Statement.begin]]), the commit
   *     log's pre-statement generation and the remover that retires
   *     superseded files into it.
-  *  2. PLAN ([[Statement.candidates]]): the candidate files are exactly
+  *  2. BIND ([[bind]], [[where]]): predicates and projections are
+  *     prepared ([[prepare]]) and bound to ordinals in one place.
+  *  3. PLAN ([[Statement.candidates]]): the candidate files are exactly
   *     the files the pushed-down scan of a filtered DataFrame would
   *     read — partition, manifest min/max, bloom and chunk pruning all
   *     apply; a file no input partition mentions is never opened.
-  *  3. FILE TASKS ([[Statement.perFile]]): one task per candidate. A
-  *     task never mutates the dataset: it writes only attempt-unique
-  *     dot-hidden tmps ([[withTmp]] deletes them when the task fails)
-  *     and returns a [[FileOutcome]] whose manifest entries were built
-  *     executor-side, where the new footer is local.
-  *  4. COMMIT ([[Statement.commit]]): metadata-only renames and removals
+  *  4. FILE TASKS ([[Statement.execute]]): one task per candidate runs
+  *     [[execute]]. A task never mutates the dataset: it writes only
+  *     attempt-unique dot-hidden tmps ([[withTmp]] deletes them when
+  *     the task fails) and returns a [[FileOutcome]] whose manifest
+  *     entries were built executor-side, where the new footer is local.
+  *  5. COMMIT ([[Statement.commit]]): metadata-only renames and removals
   *     per touched file, in parallel, then one stats-manifest write per
   *     schema version. The post-statement generation is published when
   *     the statement body returns normally.
+  *
+  * The kernel table — [[execute]] takes the first row that applies:
+  *
+  *  | kernel          | when                                              |
+  *  |-----------------|---------------------------------------------------|
+  *  | Keep            | classification: no live row of the planned chunks is acted on |
+  *  | Drop            | every live row is deleted                          |
+  *  | Mask            | deletion vectors on, delete-only                   |
+  *  | AppendMask      | deletion vectors on, update-only, not every live row matches |
+  *  | SurvivorSplice  | delete-only, no keyed source, plain layout, every referenced column stored (foldMasks) |
+  *  | ColumnSplice    | update-only, no mask, every changed and referenced column stored, bucket key unchanged |
+  *  | Row             | anything else: the one row loop, with the partition/bucket move guard and the schema-evolution guard |
+  *
+  * Classification reads only the columns the conditions and keys
+  * reference, over the planned chunks, mask-aware; it counts every row
+  * when a Drop, a mask or MERGE's matched source ordinals need it, and
+  * stops at the first hit otherwise. foldMasks skips it: the mask is
+  * what it drops.
   *
   * Crash contract: per-file commit order is rename-in THEN remove
   * source, so no committed state ever loses a row; replacement names
@@ -117,11 +140,11 @@ private[graft] object RowLevelStatement {
     * append name carries the mask seq — see repairStaleUpdvAppends) */
   final case class AppendMask(data: Staged, mask: Staged) extends Change
 
-  /** One file task's result. `matched` (MERGE only) lists the source
+  /** One file task's result: its change, the kernel that ran, and the
+    * rows updated and deleted. `matched` (MERGE only) lists the source
     * ordinals whose key this file holds. */
-  final case class FileOutcome(file: String, change: Change,
-                               rowsUpdated: Long = 0L, rowsDeleted: Long = 0L,
-                               matched: Array[Int] = Array.emptyIntArray)
+  final case class FileOutcome(file: String, change: Change, kernel: Kernel.Value,
+                               rowsUpdated: Long, rowsDeleted: Long, matched: Array[Int])
 
   /** A statement's state after the prologue. */
   final class Statement private[RowLevelStatement] (
@@ -181,15 +204,23 @@ private[graft] object RowLevelStatement {
             ps.head.maskFile)
         }
 
-    /** one distributed job, one task per candidate */
-    def perFile(cands: Seq[Candidate])(task: (Candidate, Configuration) => FileOutcome)
-        : Seq[FileOutcome] =
-      if (cands.isEmpty) Seq.empty
-      else {
-        val sconf = new SerializableConfiguration(hconf)
-        spark.sparkContext.parallelize(cands, cands.length)
-          .map(c => task(c, sconf.value)).collect().toSeq
-      }
+    /** the dataset's bucketing key, if it is bucketed */
+    def bucketKey: Option[String] =
+      (try BucketSpecFile.read(root, hconf) catch { case _: Exception => None }).map(_._1)
+
+    /** one distributed job, one task per candidate, each running
+      * [[RowLevelStatement.execute]] */
+    def execute(cands: Seq[Candidate], shape: Shape): Seq[FileOutcome] = {
+      val outcomes =
+        if (cands.isEmpty) Seq.empty
+        else {
+          val sconf = new SerializableConfiguration(hconf)
+          spark.sparkContext.parallelize(cands, cands.length)
+            .map(c => RowLevelStatement.execute(c, shape, sconf.value)).collect().toSeq
+        }
+      lastOutcomes = outcomes
+      outcomes
+    }
 
     /** Commit every outcome (in parallel when more than one), then
       * write the new files' manifest entries. `failAfterCommits` is a
@@ -268,7 +299,8 @@ private[graft] object RowLevelStatement {
     withTmp(c, dstName, conf) { tmp =>
       val writer = new VortexFileWriter(tmp, conf, schema,
         bloomCols = c.bloomCols, sketchCols = c.sketchCols)
-      val t = fill(writer)
+      // a failed fill must not leave the tmp's stream open
+      val t = try fill(writer) catch { case e: Throwable => writer.abort(); throw e }
       writer.close()
       val footer = VortexFileReader.readFooter(tmp, conf)
       def named[V](xs: IndexedSeq[Option[V]]): Map[String, V] =
@@ -299,28 +331,369 @@ private[graft] object RowLevelStatement {
     p.getFileSystem(conf).delete(p, false)
   }
 
-  /** A DELETE/UPDATE predicate resolved against the table and bound to
-    * ordinals, twice: over the full table row (`bound`, for rewrites)
-    * and over the predicate's own columns only (`narrow`, for the
-    * classification pass — on a wide table that is the difference
-    * between decoding one column and every page of every candidate). */
-  final case class BoundPredicate(tableSchema: StructType, bound: Expression,
-                                  narrowSchema: StructType, narrow: Expression)
+  // ------------------------------------------------ statement shape
 
-  def bindPredicate(filtered: DataFrame, op: String): BoundPredicate = {
-    val (cond0, output) = filtered.queryExecution.analyzed.collectFirst {
+  /** One target-only clause: `cond` over the table row (None = every
+    * row) and `assigns`, the full table-width projection (None =
+    * DELETE). MERGE's WHEN MATCHED clauses have the same shape, bound
+    * over the table row ++ the source row. */
+  final case class Clause(cond: Option[Expression], assigns: Option[Seq[Expression]])
+
+  /** MERGE's keyed source: the broadcast source rows, the key ordinals
+    * in the table row and in the source row, the key types, the WHEN
+    * MATCHED clauses, and the keys held by more than one source row
+    * (correlated scalar SET; empty otherwise). */
+  final case class Keyed(rows: Broadcast[Array[InternalRow]], keyIdxT: Array[Int],
+                         keyIdxS: Array[Int], keyTypes: Array[DataType],
+                         matched: Seq[Clause], dupKeys: Broadcast[Set[Seq[Any]]])
+
+  /** A statement as its file tasks run it: DELETE WHERE p is
+    * `[(p, DELETE)]`, UPDATE is `[(p, SET)]`, MERGE is its keyed source
+    * plus its NOT MATCHED BY SOURCE clauses, foldMasks has no clause
+    * (only the mask drops rows). `tableSchema` is the row the clauses
+    * are bound over (null = each file's own schema); `mustStore` lists
+    * the columns a row-path rewrite needs stored in the file; and
+    * `bucketIdx` is the bucketing key's table ordinal (-1 = none). */
+  final case class Shape(op: String, tableSchema: StructType, clauses: Seq[Clause],
+                         keyed: Option[Keyed] = None, deletionVectors: Boolean = false,
+                         bucketIdx: Int = -1, mustStore: Seq[String] = Nil) {
+    /** every clause, the keyed source's WHEN MATCHED ones first */
+    def all: Seq[Clause] = keyed.map(_.matched).getOrElse(Nil) ++ clauses
+    def deleteOnly: Boolean = all.forall(_.assigns.isEmpty)
+    def updateOnly: Boolean = all.nonEmpty && all.forall(_.assigns.isDefined)
+  }
+
+  /** The kernel a file task ran — see the table in the header. */
+  object Kernel extends Enumeration {
+    val Keep, Drop, Mask, AppendMask, SurvivorSplice, ColumnSplice, Row = Value
+  }
+
+  /** TEST SEAM: the outcomes of the last statement [[Statement.execute]]
+    * ran in this JVM. */
+  @volatile private[graft] var lastOutcomes: Seq[FileOutcome] = Nil
+
+  // ------------------------------------------------ binding
+
+  /** The preparation every bound expression gets: RuntimeReplaceable
+    * and `With` forms inline (their interpreted eval asserts, and a
+    * `With`'s CommonExpressionRefs cannot eval either — BETWEEN is
+    * both), then [[preBindOptimize]] runs once at the top. Statements
+    * bind ANALYZED expressions, which the optimizer never saw. Inlining
+    * a ref duplicates its common subexpression, which per-row eval
+    * can afford. */
+  def prepare(e: Expression): Expression = preBindOptimize(inline(e))
+
+  private def inline(e: Expression): Expression = e.transformUp {
+    case r: RuntimeReplaceable => inline(r.replacement)
+    case w: With =>
+      val defs = w.defs.map(d => d.id -> d.child).toMap
+      // a ref bound to an OUTER With's def is legal — leave it for the
+      // outer pass instead of throwing
+      inline(w.child.transformUp { case ref: CommonExpressionRef => defs.getOrElse(ref.id, ref) })
+  }
+
+  /** The optimizer rewrites a bound expression would otherwise skip,
+    * both semantics-preserving:
+    *
+    *  - a literal `In` above the conversion threshold becomes an
+    *    `InSet` (a hash probe instead of a linear scan per row — 33.9 s
+    *    → 2.86 s on the sf1 subquery UPDATE row);
+    *  - foldable subtrees fold once. Folding that THROWS (ANSI division
+    *    by zero, unevaluable placeholders) leaves the node for
+    *    execution, as the optimizer's ConstantFolding does.
+    *
+    * Deliberately not rewritten: CASE-branch simplification (foldable
+    * branches are covered by the fold) and common-subexpression
+    * elimination (each bound expression evaluates once per row). */
+  private def preBindOptimize(e: Expression): Expression = {
+    val inSetThreshold =
+      try org.apache.spark.sql.internal.SQLConf.get.optimizerInSetConversionThreshold
+      catch { case _: Exception => 10 }
+    e.transformUp {
+      case in @ In(v, list)
+          if list.length > inSetThreshold && list.forall(_.isInstanceOf[Literal]) =>
+        InSet(v, scala.collection.immutable.HashSet() ++
+          list.map(_.asInstanceOf[Literal].value))
+      case c if c.foldable && !c.isInstanceOf[Literal] =>
+        try Literal.create(c.eval(EmptyRow), c.dataType)
+        catch { case _: Exception => c }
+    }
+  }
+
+  /** The one binding site of predicates and projections: [[prepare]],
+    * require determinism, bind to the ordinals of `ctx`. */
+  def bind(op: String, what: String, ctx: Seq[Attribute])(e: Expression): Expression = {
+    val p = prepare(e)
+    require(p.deterministic, s"vortex $op: $what must be deterministic")
+    BindReferences.bindReference(p, AttributeSeq(ctx))
+  }
+
+  /** The WHERE of `filtered` (a table scan under one Filter) bound over
+    * the table row, and that row's schema. */
+  def where(filtered: DataFrame, op: String): (StructType, Expression) = {
+    val (cond, output) = filtered.queryExecution.analyzed.collectFirst {
       case f: logical.Filter => (f.condition, f.child.output)
     }.getOrElse(throw new IllegalArgumentException(
       s"vortex $op: cannot resolve the predicate"))
-    // the ANALYZED condition can hold RuntimeReplaceable nodes (BETWEEN,
-    // nvl, ilike, …) whose eval() asserts — see VortexDelete.replaceRuntime
-    val cond = VortexDelete.replaceRuntime(cond0)
-    require(cond.deterministic, s"vortex $op: predicate must be deterministic")
-    def schemaOf(as: Seq[org.apache.spark.sql.catalyst.expressions.Attribute]) =
-      StructType(as.map(a => StructField(a.name, a.dataType, a.nullable, a.metadata)))
-    val refNames = cond.references.map(_.name).toSet
-    val narrowOutput = output.filter(a => refNames.contains(a.name))
-    BoundPredicate(schemaOf(output), BindReferences.bindReference(cond, AttributeSeq(output)),
-      schemaOf(narrowOutput), BindReferences.bindReference(cond, AttributeSeq(narrowOutput)))
+    (StructType(output.map(a => StructField(a.name, a.dataType, a.nullable, a.metadata))),
+      bind(op, "predicate", output)(cond))
+  }
+
+  // ------------------------------------------------ the file task
+
+  /** Run `s` on one candidate (executor side): classify the file, choose
+    * its kernel in the order of the header's table, stage the output.
+    * Never mutates the dataset (retry/speculation-safe). */
+  def execute(c: Candidate, s: Shape, conf: Configuration): FileOutcome = {
+    val footer = VortexFileReader.readFooter(c.path, conf)
+    val schema = if (s.tableSchema == null) footer.schema else s.tableSchema
+    val mask = if (c.maskFile == null) null else DeletionVector.read(new Path(c.maskFile), conf)
+    val total = footer.chunks.map(_.rowCount.toLong).sum
+    val live = total - (if (mask == null) 0L else mask.cardinality)
+    val planned = if (c.plannedChunks == null) footer.chunks.indices.toArray else c.plannedChunks
+    val ev = new Eval(s, schema.length)
+    def outcome(change: Change, k: Kernel.Value, updated: Long, deleted: Long) =
+      FileOutcome(c.file, change, k, updated, deleted, ev.matchedOrdinals)
+    def staged(tmp: Path, entry: StatsManifest.FileStats, schemaJson: String) =
+      Replace(Staged(tmp.toString, c.dstName, Some(entry), schemaJson))
+    val fold = s.clauses.isEmpty && s.keyed.isEmpty
+    // foldMasks rewrites every candidate; the rows it drops are the masked ones
+    val (acted, deleted, positions) =
+      if (fold) (1L, total - live, Array.emptyLongArray) else classify(c, s, ev, schema, footer, mask, planned, conf)
+    if (acted == 0L) return outcome(Keep, Kernel.Keep, 0L, 0L)
+    if (!fold && deleted == live) return outcome(Drop, Kernel.Drop, 0L, live)
+    val bucketMoves = s.bucketIdx >= 0 && ev.changed.contains(s.bucketIdx)
+    lazy val splice = ColumnSplice.plan(footer, c.maskFile, schema,
+      ev.changed.map(schema(_).name).toSet, ev.spliceRefs.toSet)
+    // the file's next mask: the acted rows on top of the existing one
+    def nextMask = {
+      val added = DeletionVector.fromPositions(positions)
+      if (mask == null) added else DeletionVector.union(mask, added)
+    }
+    if (s.deletionVectors && s.deleteOnly) {
+      outcome(Mask(writeMask(c, nextMask, conf)), Kernel.Mask, 0L, acted)
+    } else if (s.deletionVectors && s.updateOnly && acted < live) {
+      val (append, updated, _) = rowPass(c, s, ev, schema, footer, mask, planned,
+        VortexUpdate.appendName(c.path.getName, c.nextMaskSeq), appendOnly = true, conf)
+      val m = try writeMask(c, nextMask, conf)
+        catch { case e: Throwable => discard(append, conf); throw e }
+      outcome(AppendMask(append, m), Kernel.AppendMask, updated, 0L)
+    } else if (s.deleteOnly && s.keyed.isEmpty &&
+        SurvivorSplice.applicable(footer, ev.refs.toSeq.map(schema(_).name))) {
+      withTmp(c, c.dstName, conf) { tmp =>
+        val r = SurvivorSplice.rewrite(c.path, tmp, conf, footer, schema, ev.refs,
+          if (fold) null else (row: InternalRow) => ev.decide(row) >= 0, planned, mask,
+          c.bloomCols, c.sketchCols, c.rel(c.dstName))
+        outcome(staged(tmp, r.entry, r.schemaJson), Kernel.SurvivorSplice, 0L,
+          if (fold) deleted else r.droppedPred)
+      }
+    } else if (s.updateOnly && mask == null && !bucketMoves && splice.isDefined) {
+      val pl = splice.get
+      val projs = ev.projections(pl.changedFileCols.map(pl.fileToTable(_)))
+      val patcher = new ColumnSplice.RowPatch {
+        override def patch(t: InternalRow): InternalRow = {
+          val j = ev.decide(t)
+          if (j < 0) null else projs(j)(ev.input)
+        }
+      }
+      withTmp(c, c.dstName, conf) { tmp =>
+        val r = ColumnSplice.rewrite(c.path, tmp, conf, footer, schema, pl, patcher,
+          c.bloomCols, c.sketchCols, c.stats, c.rel(c.dstName))
+        outcome(staged(tmp, r.entry, r.schemaJson), Kernel.ColumnSplice, r.updated, 0L)
+      }
+    } else {
+      val (data, updated, dropped) = rowPass(c, s, ev, schema, footer, mask,
+        footer.chunks.indices.toArray, c.dstName, appendOnly = false, conf)
+      outcome(Replace(data), Kernel.Row, updated, if (fold) deleted else dropped)
+    }
+  }
+
+  /** The classification pass: decide every live row of the planned
+    * chunks, reading only the columns the conditions and keys
+    * reference. Returns the rows acted on, the rows deleted, and —
+    * with deletion vectors — the acted rows' stored ordinals. Stops at
+    * the first hit unless a Drop, a mask or MERGE's matched source
+    * ordinals need the full count. */
+  private def classify(c: Candidate, s: Shape, ev: Eval, schema: StructType,
+                       footer: VortexFormat.Footer, mask: DeletionVector.Mask,
+                       planned: Array[Int], conf: Configuration): (Long, Long, Array[Long]) = {
+    val full = s.keyed.isDefined || !s.updateOnly || s.deletionVectors
+    val narrow = StructType(ev.refs.map(schema(_)))
+    val wide = new GenericInternalRow(schema.length)
+    val positions = scala.collection.mutable.ArrayBuilder.make[Long]
+    var acted = 0L
+    var deleted = 0L
+    liveRows(c, narrow, footer, mask, planned, conf) { (pos, row) =>
+      var i = 0
+      while (i < ev.refs.length) {
+        wide.update(ev.refs(i), row.get(i, narrow(i).dataType)); i += 1
+      }
+      val j = ev.decide(wide)
+      if (j >= 0) {
+        acted += 1
+        if (ev.deletes(j)) deleted += 1
+        if (s.deletionVectors) positions += pos
+      }
+      full || acted == 0L
+    }
+    (acted, deleted, positions.result())
+  }
+
+  /** THE row loop: stream the live rows of `chunks` through the clauses
+    * into a file named `dst` with the file's own stored schema.
+    * `appendOnly` (merge-on-read UPDATE) writes only the updated rows;
+    * otherwise kept rows copy, updated rows are replaced and deleted
+    * rows dropped. Returns the staged file, rows updated, rows deleted. */
+  private def rowPass(c: Candidate, s: Shape, ev: Eval, schema: StructType,
+                      footer: VortexFormat.Footer, mask: DeletionVector.Mask,
+                      chunks: Array[Int], dst: String, appendOnly: Boolean,
+                      conf: Configuration): (Staged, Long, Long) = {
+    val fileFields = footer.schema.fields
+    val stored = footer.schema.fieldNames.toSet
+    // a column the file does not store would be computed, then dropped
+    // by the slot map below — fail the job (tasks commit nothing)
+    s.mustStore.filterNot(c.partCols.contains).foreach(n => require(stored(n),
+      s"vortex ${s.op}: " + (if (s.keyed.isEmpty)
+        s"SET column $n is not stored in ${c.file} (schema-evolved file) — rewriting " +
+          "would silently drop the assignment; "
+      else s"target file ${c.file} does not store column $n (schema-evolved file) — ") +
+      "compact/rewrite the dataset to one schema first"))
+    // an UPDATE must not move a row out of its partition or bucket
+    // directory: partition columns live in the path, and bucket pruning
+    // would route lookups of the new value elsewhere
+    val moveGuarded: Array[(Int, String, String)] =
+      schema.fields.indices.filter(i => c.partCols.contains(schema(i).name) && !stored(schema(i).name))
+        .map(i => (i, "partition column", "partition")).toArray ++
+      (if (s.bucketIdx >= 0) Array((s.bucketIdx, "bucketing key", "bucket")) else Array.empty)
+    def valEq(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.equals(x, y)
+      case _ => a == b
+    }
+    val slot = fileFields.map(f => schema.fieldIndex(f.name))
+    val projs = ev.projections(schema.indices.toArray)
+    var updated = 0L
+    var deleted = 0L
+    val (staged, _) = write(c, dst, footer.schema, conf) { w =>
+      val out = new GenericInternalRow(fileFields.length)
+      def emit(r: InternalRow): Unit = {
+        var i = 0
+        while (i < slot.length) { out.update(i, r.get(slot(i), fileFields(i).dataType)); i += 1 }
+        w.write(out)
+      }
+      liveRows(c, schema, footer, mask, chunks, conf) { (_, row) =>
+        val j = ev.decide(row)
+        if (j < 0) { if (!appendOnly) emit(row) }
+        else if (ev.deletes(j)) deleted += 1
+        else {
+          val upd = projs(j)(ev.input)
+          moveGuarded.foreach { case (ti, what, dir) =>
+            val dt = schema(ti).dataType
+            if (!valEq(row.get(ti, dt), upd.get(ti, dt)))
+              throw new IllegalArgumentException(
+                s"vortex ${s.op}: UPDATE clause changes $what ${schema(ti).name} — the " +
+                s"in-place rewrite cannot move rows between $dir directories")
+          }
+          updated += 1
+          emit(upd)
+        }
+        true
+      }
+    }
+    (staged, updated, deleted)
+  }
+
+  /** Visit the live rows of `chunks` (ascending) read as `schema`:
+    * `f(stored ordinal, row)` until it returns false. The mask applies
+    * here rather than in the reader, so every ordinal stays exact. */
+  private def liveRows(c: Candidate, schema: StructType, footer: VortexFormat.Footer,
+                       mask: DeletionVector.Mask, chunks: Array[Int], conf: Configuration)
+                      (f: (Long, InternalRow) => Boolean): Unit = {
+    val base = footer.chunks.scanLeft(0L)(_ + _.rowCount)
+    val r = new VortexPartitionReader(
+      VortexInputPartition(c.file, chunks, c.partCols, c.partValues), conf, schema, evolution = true)
+    var k = -1
+    var left = 0L
+    var pos = 0L
+    var go = true
+    try while (go && r.next()) {
+      while (left == 0L) { k += 1; left = footer.chunks(chunks(k)).rowCount; pos = base(chunks(k)) }
+      if (mask == null || !mask.isDeleted(pos)) go = f(pos, r.get())
+      pos += 1
+      left -= 1
+    } finally r.close()
+  }
+
+  /** A shape's clauses compiled for one task. [[decide]] picks the
+    * clause a target row takes — the first whose condition holds
+    * (ANSI); [[input]] is then the row its projection reads: the
+    * target row, or target ++ source on a key match. */
+  private final class Eval(s: Shape, width: Int) {
+    private val keyed = s.keyed.orNull
+    private val all: Array[Clause] = s.all.toArray
+    private val nMatched = if (keyed == null) 0 else keyed.matched.length
+    private val conds: Array[BasePredicate] = all.map(_.cond.map { e =>
+      val p = CatalystPredicate.create(e); p.initialize(0); p }.orNull)
+    private val srcRows = if (keyed == null) null else keyed.rows.value
+    private val dupKeys = if (keyed == null) null else keyed.dupKeys.value
+    private val byKey = new java.util.HashMap[Seq[Any], Integer]()
+    if (keyed != null) srcRows.indices.foreach { i =>
+      val k = VortexMergeSupport.keyOf(srcRows(i), keyed.keyIdxS, keyed.keyTypes)
+      if (k != null) byKey.put(k, i)
+    }
+    private val matched = new java.util.BitSet
+    private val joined = new JoinedRow
+    var input: InternalRow = _
+
+    private def targetRefs(e: Expression): Seq[Int] =
+      e.collect { case b: BoundReference if b.ordinal < width => b.ordinal }
+    private def changedOf(assigns: Seq[Expression]): Seq[Int] = assigns.indices.filter(p =>
+      assigns(p) match { case b: BoundReference => b.ordinal != p; case _ => true })
+
+    /** table ordinals the conditions and keys read */
+    val refs: Array[Int] = (Option(keyed).map(_.keyIdxT.toSeq).getOrElse(Nil) ++
+      all.flatMap(_.cond.toSeq.flatMap(targetRefs))).distinct.sorted.toArray
+    /** table ordinals some UPDATE clause assigns */
+    val changed: Array[Int] = all.flatMap(_.assigns.toSeq.flatMap(changedOf)).distinct.sorted
+    /** what the column splice decodes: [[refs]] plus the changed values' inputs */
+    def spliceRefs: Seq[Int] = refs.toSeq ++ all.flatMap(_.assigns.toSeq.flatMap(a =>
+      changed.toSeq.flatMap(p => targetRefs(a(p)))))
+
+    def deletes(j: Int): Boolean = all(j).assigns.isEmpty
+
+    /** per clause, the projection of the table ordinals `cols` (null for DELETE) */
+    def projections(cols: Array[Int]): Array[Projection] =
+      all.map(_.assigns.map(a => UnsafeProjection.create(cols.toSeq.map(a(_)))).orNull)
+
+    /** the clause `t` takes, or -1: kept as it is */
+    def decide(t: InternalRow): Int = {
+      input = t
+      if (keyed != null) {
+        val k = VortexMergeSupport.keyOf(t, keyed.keyIdxT, keyed.keyTypes)
+        val hit = if (k == null) null else byKey.get(k)
+        if (hit != null) {
+          matched.set(hit.intValue())
+          input = joined(t, srcRows(hit.intValue()))
+          val j = first(0, nMatched)
+          // >1 source row for this key: ANSI errors iff a clause fires
+          if (j >= 0 && dupKeys.contains(k))
+            throw new IllegalStateException("vortex merge: scalar subquery produced more " +
+              s"than one row for key $k (ANSI cardinality)")
+          return j
+        }
+      }
+      first(nMatched, all.length)
+    }
+
+    private def first(from: Int, until: Int): Int = {
+      var j = from
+      while (j < until) {
+        if (conds(j) == null || conds(j).eval(input)) return j
+        j += 1
+      }
+      -1
+    }
+
+    /** the source ordinals whose key a decided row held */
+    def matchedOrdinals: Array[Int] = matched.stream().toArray
   }
 }

@@ -3,14 +3,16 @@ package graft.sources.vortex
 import java.io.{BufferedOutputStream, DataOutputStream}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Predicate => CatalystPredicate}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 
 /** Columnar survivor rewrite for DELETE-shaped maintenance (r15
   * optimization round; guide §1.2 "per-task work" + §2.3 narrower
   * rows): rewrites a file dropping a subset of its rows — the data
-  * pass behind the rewrite-tier DELETE, `foldMasks`, and the DELETE
-  * statements inside correlated DML — chunk-at-a-time on decoded
+  * pass behind the rewrite-tier DELETE and `foldMasks` (the
+  * SurvivorSplice row of RowLevelStatement's kernel table) —
+  * chunk-at-a-time on decoded
   * column vectors instead of row-at-a-time through boxed
   * reader.value()/appender calls (the measured cost of the old path:
   * 2 virtual calls + 1 box per CELL — 27 M of them for a 1.5 M-row
@@ -20,8 +22,8 @@ import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
   *  - decode every stored column once (the stats passes need every
   *    column's values regardless — manifest sums/blooms/sketches are
   *    EXACT, so no pass-through of stale stats is ever possible);
-  *  - build the keep-index (mask ordinals + optional predicate over
-  *    the predicate's columns only — pruned chunks skip the eval);
+  *  - build the keep-index (mask ordinals + the optional drop test
+  *    over the referenced columns only — pruned chunks skip the eval);
   *  - a chunk losing NO rows copies its pages byte-for-byte (metas
   *    with shifted offsets — the encode CPU is skipped; with
   *    clustered delete keys, the 100 TB layout, most chunks of a
@@ -41,16 +43,16 @@ import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
   * SurvivorSpliceSpec pins read-back + manifest equivalence against
   * the row path.
   *
-  * Applicability ([[applicable]]; caller falls back to the row path
-  * otherwise): every stored column is a plain page type — no shredded
-  * structs, no nested blobs — and, when a predicate is supplied, every
-  * predicate column is stored in the file (a predicate over a
+  * Applicability ([[applicable]]; RowLevelStatement falls back to the
+  * row path otherwise): every stored column is a plain page type — no
+  * shredded structs, no nested blobs — and every column the drop test
+  * references is stored in the file (a predicate over a
   * partition-directory column falls back).
   */
 private[graft] object SurvivorSplice {
   import VortexFormat._
 
-  def applicable(footer: Footer, predSchema: StructType): Boolean = {
+  def applicable(footer: Footer, refs: Seq[String]): Boolean = {
     val plain = footer.schema.fields.forall { f =>
       f.dataType match {
         case _: StructType => false
@@ -59,21 +61,22 @@ private[graft] object SurvivorSplice {
       }
     }
     val stored = footer.schema.fieldNames.toSet
-    plain && (predSchema == null || predSchema.fieldNames.forall(stored.contains))
+    plain && refs.forall(stored.contains)
   }
 
-  /** `droppedPred` counts predicate matches among LIVE rows (what a
-    * DELETE statement reports); `droppedMask` counts previously-masked
-    * rows folded away (what foldMasks reports on top). */
+  /** `droppedPred` counts the rows `drop` removed among LIVE rows
+    * (what a DELETE statement reports); `droppedMask` counts
+    * previously-masked rows folded away. */
   final case class Result(droppedPred: Long, droppedMask: Long,
                           entry: StatsManifest.FileStats, schemaJson: String)
 
-  /** Rewrite `path` into `tmp`, dropping masked rows and (when
-    * `predBound` is non-null) rows matching the predicate within
-    * `plannedChunks`. Returns the dropped count and the replacement's
-    * manifest entry (every column's stats recomputed exactly). */
+  /** Rewrite `path` into `tmp`, dropping masked rows and (when `drop`
+    * is non-null) the live rows of `plannedChunks` it is true for.
+    * `drop` sees a `schema`-wide row holding the `refs` ordinals.
+    * Returns the dropped counts and the replacement's manifest entry
+    * (every column's stats recomputed exactly). */
   def rewrite(path: Path, tmp: Path, conf: Configuration, footer: Footer,
-              predSchema: StructType, predBound: Expression,
+              schema: StructType, refs: Array[Int], drop: InternalRow => Boolean,
               plannedChunks: Array[Int], mask: DeletionVector.Mask,
               bloomCols: Set[String], sketchCols: Set[String],
               relPath: String): Result = {
@@ -86,12 +89,8 @@ private[graft] object SurvivorSplice {
       if (plannedChunks != null) plannedChunks.foreach(b.set) else b.set(0, footer.chunks.length)
       b
     }
-    val pred = if (predBound == null) null else CatalystPredicate.create(predBound)
-    if (pred != null) pred.initialize(0)
-    // predicate columns: file ordinal per predSchema ordinal
-    val predFileCols: Array[Int] =
-      if (predSchema == null) Array.emptyIntArray
-      else predSchema.fields.map(f => footer.schema.fieldIndex(f.name))
+    // referenced columns: file ordinal per refs entry
+    val refFileCols: Array[Int] = refs.map(t => footer.schema.fieldIndex(schema(t).name))
 
     // whole-file stats accumulators — the writer's discipline
     val sumable = fileFields.map(ChunkStats.sumable)
@@ -116,8 +115,7 @@ private[graft] object SurvivorSplice {
     try {
       out = new BufferedOutputStream(fs.create(tmp, true), 1 << 20)
       out.write(Magic); pos += Magic.length
-      val evalRow =
-        if (predSchema == null) null else new GenericInternalRow(predSchema.length)
+      val evalRow = if (drop == null) null else new GenericInternalRow(schema.length)
       var ci = 0
       while (ci < footer.chunks.length) {
         val chunk = footer.chunks(ci)
@@ -142,22 +140,22 @@ private[graft] object SurvivorSplice {
         val keep = new Array[Int](rows)
         var k = 0
         val base = chunkBase(ci)
-        val evalHere = pred != null && planned.get(ci)
+        val evalHere = drop != null && planned.get(ci)
         var i = 0
         while (i < rows) {
           if (mask != null && mask.isDeleted(base + i)) droppedMask += 1
           else {
-            var drop = false
+            var dropped = false
             if (evalHere) {
               var j = 0
-              while (j < predFileCols.length) {
-                val fc = predFileCols(j)
-                evalRow.update(j, VortexFileReader.value(vecs(fc), i, fileFields(fc).dataType))
+              while (j < refFileCols.length) {
+                val fc = refFileCols(j)
+                evalRow.update(refs(j), VortexFileReader.value(vecs(fc), i, fileFields(fc).dataType))
                 j += 1
               }
-              drop = pred.eval(evalRow)
+              dropped = drop(evalRow)
             }
-            if (drop) droppedPred += 1 else { keep(k) = i; k += 1 }
+            if (dropped) droppedPred += 1 else { keep(k) = i; k += 1 }
           }
           i += 1
         }

@@ -1,8 +1,6 @@
 package graft.sources.vortex
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Predicate => CatalystPredicate}
 import org.apache.spark.sql.types.StructType
 
 /** `DELETE FROM <vortex dataset> WHERE <predicate>` — file-granularity
@@ -13,40 +11,16 @@ import org.apache.spark.sql.types.StructType
   * deletes over vortex files — this is capability the 100 TB shape
   * demands (VERDICT r8 "What's missing" #2).
   *
-  * Three tiers, mirroring how the scan reads — the shared row-level
-  * pipeline (RowLevelStatement) runs all three; this object supplies
-  * the per-file classify/rewrite kernel:
-  *
-  *  1. PLAN (driver, metadata only): the candidate file set is exactly
-  *     the set the scan itself would read for this predicate — we plan
-  *     `load(dir).filter(pred)` and take the files of its
-  *     `VortexInputPartition`s, so partition-directory pruning,
-  *     manifest min/max, bloom filters, and chunk pruning all apply
-  *     for free. A file no partition mentions is provably match-free
-  *     and is never opened, let alone rewritten.
-  *  2. CLASSIFY + REWRITE (one distributed job, one task per candidate
-  *     file, NON-DESTRUCTIVE): pass 1 counts predicate matches over the
-  *     PLANNED chunks only (pruned chunks cannot match). 0 matches
-  *     (stats false positive) → untouched. All rows match → the file is
-  *     marked drop-whole, no rewrite I/O. Otherwise pass 2 writes the
-  *     survivors (rows where the predicate is FALSE or NULL — SQL
-  *     DELETE semantics) to a dot-hidden tmp file in the same layout
-  *     directory and builds the replacement's stats-manifest entry
-  *     EXECUTOR-SIDE (the footer is local and cached there — the
-  *     driver never re-reads per-file footers). Tasks mutate nothing:
-  *     a task retry or speculative duplicate re-writes its own tmp and
-  *     the job stays correct (crashed attempts leave only dot-hidden
-  *     `.inprogress` litter, reclaimed by `VortexMaintenance.vacuum`).
-  *  3. COMMIT (driver): for each rewritten file, rename tmp → a
-  *     replacement named DETERMINISTICALLY from the source file
-  *     (md5 of the source basename), then delete the source; drop-whole
-  *     sources are deleted outright. Renames/deletes are metadata-only
-  *     RPCs, issued in parallel. Then one stats-manifest commit per
-  *     replacement-file schema version, from the entries the executors
-  *     returned. Untouched files' existing manifest entries are not
-  *     rewritten — byte-identical before and after; entries for
-  *     deleted/replaced files go stale harmlessly (entries are
-  *     (path, len)-validated).
+  * The statement is the single clause `[(predicate, DELETE)]` of the
+  * shared row-level pipeline: RowLevelStatement plans the candidates
+  * (exactly the files the pushed-down scan of `load(dir).filter(pred)`
+  * reads), runs one non-destructive task per candidate — whose kernel
+  * (untouched, drop-whole, mask, SurvivorSplice or the row path) comes
+  * from RowLevelStatement's kernel table — and commits under a
+  * replacement name derived DETERMINISTICALLY from the source file
+  * (md5 of the source basename). Survivors are the rows where the
+  * predicate is FALSE or NULL (SQL DELETE semantics); untouched files'
+  * manifest entries are not rewritten.
   *
   * Crash contract: a crash mid-commit can leave the PLAIN listing
   * partially deleted (the commit log's latest generation stays the
@@ -72,7 +46,7 @@ import org.apache.spark.sql.types.StructType
   * FileNotFound, never silently).
   */
 object VortexDelete {
-  import RowLevelStatement.{Candidate, Drop, FileOutcome, Keep, Mask, Replace}
+  import RowLevelStatement.{Clause, Drop, Keep, Mask, Replace, Shape}
 
   final case class DeleteResult(candidateFiles: Int, untouchedFiles: Int,
                                 droppedFiles: Int, rewrittenFiles: Int,
@@ -115,10 +89,10 @@ object VortexDelete {
       else {
         st.begin()
         val filtered = spark.read.format("vortex").load(dir).filter(predicate)
-        val pred = RowLevelStatement.bindPredicate(filtered, "delete")
+        val (schema, cond) = RowLevelStatement.where(filtered, "delete")
         val cands = st.candidates(filtered, replacementName)
-        val outcomes = st.perFile(cands)((c, conf) =>
-          processFile(c, pred, deletionVectors, conf))
+        val outcomes = st.execute(cands, Shape("delete", schema, Seq(Clause(Some(cond), None)),
+          deletionVectors = deletionVectors))
         st.commit(outcomes, failAfterCommits)
         DeleteResult(cands.length,
           outcomes.count(_.change == Keep),
@@ -128,110 +102,6 @@ object VortexDelete {
           outcomes.count(_.change.isInstanceOf[Mask]))
       }
     }
-
-  /** Runs on an executor: classify one file, then stage its survivors
-    * (rewrite tier) or its union mask (mask tier). NEVER mutates the
-    * dataset (retry/speculation-safe). Classification reads only the
-    * predicate's columns; the row-path rewrite reads the full table
-    * row. */
-  private def processFile(c: Candidate, p: RowLevelStatement.BoundPredicate,
-                          deletionVectors: Boolean,
-                          conf: org.apache.hadoop.conf.Configuration): FileOutcome = {
-    val path = c.path
-    val fs = path.getFileSystem(conf)
-    val footer = VortexFileReader.readFooter(path, conf)
-    val totalRows = footer.chunks.map(_.rowCount.toLong).sum
-    val existing: DeletionVector.Mask =
-      if (c.maskFile == null) null else DeletionVector.read(fs, new Path(c.maskFile))
-    val liveRows = totalRows - (if (existing == null) 0L else existing.cardinality)
-    val predNarrow = CatalystPredicate.create(p.narrow)
-    predNarrow.initialize(0)
-
-    if (deletionVectors) {
-      // mask tier: record matching STORED ordinals (among live rows)
-      // over the planned chunks only — pruned chunks cannot match, and
-      // ordinal bases come from the footer's chunk row counts
-      val chunkBase = footer.chunks.scanLeft(0L)(_ + _.rowCount)
-      val positions = scala.collection.mutable.ArrayBuffer[Long]()
-      c.plannedChunks.foreach { ci =>
-        val part = VortexInputPartition(c.file, Array(ci), c.partCols, c.partValues)
-        val r = new VortexPartitionReader(part, conf, p.narrowSchema, evolution = true)
-        var pos = chunkBase(ci)
-        try while (r.next()) {
-          if ((existing == null || !existing.isDeleted(pos)) && predNarrow.eval(r.get()))
-            positions += pos
-          pos += 1
-        } finally r.close()
-      }
-      // nothing would survive: drop the file whole (data + masks)
-      // instead of masking 100% of it
-      return if (positions.isEmpty) FileOutcome(c.file, Keep)
-      else if (positions.length.toLong == liveRows)
-        FileOutcome(c.file, Drop, rowsDeleted = liveRows)
-      else {
-        val added = DeletionVector.fromPositions(positions.toArray)
-        val union = if (existing == null) added else DeletionVector.union(existing, added)
-        FileOutcome(c.file, Mask(RowLevelStatement.writeMask(c, union, conf)),
-          rowsDeleted = positions.length.toLong)
-      }
-    }
-
-    // mask-aware count: matches are counted among LIVE rows only
-    val matches = {
-      val part = VortexInputPartition(c.file, c.plannedChunks, c.partCols, c.partValues,
-        maskFile = c.maskFile)
-      val r = new VortexPartitionReader(part, conf, p.narrowSchema, evolution = true)
-      var n = 0L
-      try while (r.next()) { if (predNarrow.eval(r.get())) n += 1 } finally r.close()
-      n
-    }
-    if (matches == 0L) return FileOutcome(c.file, Keep)
-    // every live row matches: drop whole, no rewrite
-    if (matches == liveRows) return FileOutcome(c.file, Drop, rowsDeleted = liveRows)
-
-    // rewrite survivors (predicate FALSE or NULL) with the file's OWN
-    // schema — untouched columns, metadata (ts units) and layout
-    // directory all preserved. Columnar survivor rewrite
-    // (SurvivorSplice): chunk-at-a-time on decoded vectors — same
-    // survivors, same exact stats, ~half the rewrite CPU of the boxed
-    // row loop. Falls back to the row path for shredded-struct /
-    // nested layouts and partition-column predicates.
-    if (SurvivorSplice.applicable(footer, p.narrowSchema)) {
-      RowLevelStatement.withTmp(c, c.dstName, conf) { tmp =>
-        val r = SurvivorSplice.rewrite(path, tmp, conf, footer, p.narrowSchema,
-          p.narrow, c.plannedChunks, existing, c.bloomCols, c.sketchCols, c.rel(c.dstName))
-        FileOutcome(c.file, Replace(RowLevelStatement.Staged(tmp.toString, c.dstName,
-          Some(r.entry), r.schemaJson)), rowsDeleted = r.droppedPred)
-      }
-    } else {
-      val pred = CatalystPredicate.create(p.bound)
-      pred.initialize(0)
-      val fileFields = footer.schema.fields
-      val slot: Array[Int] = fileFields.map(f => p.tableSchema.fieldIndex(f.name))
-      val (staged, deleted) = RowLevelStatement.write(c, c.dstName, footer.schema, conf) { w =>
-        // mask-aware full read: the rewrite folds any existing mask in
-        // (survivors exclude previously-masked rows)
-        val part = VortexInputPartition(c.file, footer.chunks.indices.toArray,
-          c.partCols, c.partValues, maskFile = c.maskFile)
-        val r = new VortexPartitionReader(part, conf, p.tableSchema, evolution = true)
-        val out = new GenericInternalRow(fileFields.length)
-        var deleted = 0L
-        try while (r.next()) {
-          val row = r.get()
-          if (pred.eval(row)) deleted += 1
-          else {
-            var i = 0
-            while (i < slot.length) {
-              out.update(i, row.get(slot(i), fileFields(i).dataType)); i += 1
-            }
-            w.write(out)
-          }
-        } finally r.close()
-        deleted
-      }
-      FileOutcome(c.file, Replace(staged), rowsDeleted = deleted)
-    }
-  }
 
   /** DSv2 `sources.Filter` → `Column`, for the SupportsDelete SQL path.
     * None for a filter shape we can't translate (canDeleteWhere then
@@ -260,82 +130,6 @@ object VortexDelete {
       case s.Or(l, r) => for { lc <- filterToColumn(l); rc <- filterToColumn(r) } yield lc || rc
       case s.Not(x) => filterToColumn(x).map(not)
       case _ => None
-    }
-  }
-
-  /** The optimizer's ReplaceExpressions + RewriteWithExpression, applied
-    * to one standalone expression: interpreted eval of a
-    * RuntimeReplaceable asserts, its replacement can be a `With` whose
-    * CommonExpressionRef nodes can't eval either (BETWEEN is both), and
-    * delete/update bind conditions from the ANALYZED plan (pre-rule).
-    * Inlining the refs duplicates the common subexpression — fine for
-    * interpreted per-row eval. */
-  private[graft] def replaceRuntime(e: Expression): Expression =
-    preBindOptimize(e.transformUp {
-      case r: org.apache.spark.sql.catalyst.expressions.RuntimeReplaceable =>
-        replaceRuntime0(r.replacement)
-      case w: org.apache.spark.sql.catalyst.expressions.With =>
-        val defs = w.defs.map(d => d.id -> d.child).toMap
-        replaceRuntime0(w.child.transformUp {
-          case ref: org.apache.spark.sql.catalyst.expressions.CommonExpressionRef =>
-            // a ref bound to an OUTER With's def is legal — leave it
-            // for the outer pass instead of throwing
-            defs.getOrElse(ref.id, ref)
-        })
-    })
-
-  /** the raw RuntimeReplaceable/With inlining, without the optimize
-    * sweep (recursive inner passes — the sweep runs once, at the top) */
-  private def replaceRuntime0(e: Expression): Expression =
-    e.transformUp {
-      case r: org.apache.spark.sql.catalyst.expressions.RuntimeReplaceable =>
-        replaceRuntime0(r.replacement)
-      case w: org.apache.spark.sql.catalyst.expressions.With =>
-        val defs = w.defs.map(d => d.id -> d.child).toMap
-        replaceRuntime0(w.child.transformUp {
-          case ref: org.apache.spark.sql.catalyst.expressions.CommonExpressionRef =>
-            defs.getOrElse(ref.id, ref)
-        })
-    }
-
-  /** Pre-bind optimization sweep (r13 — the s15c InSet lesson from r12,
-    * generalized; VERDICT r12 next #7): the maintenance machinery binds
-    * ANALYZED expressions for interpreted/codegen evaluation inside its
-    * own per-file tasks, so EVERY Catalyst optimizer rewrite is
-    * silently skipped for them. Two matter for real predicates and are
-    * semantics-preserving:
-    *
-    *  - literal `In` above the conversion threshold → `InSet` (hash
-    *    probe). A user-written `WHERE k IN (<5k literals>)` through
-    *    SQL UPDATE/DELETE/MERGE otherwise evaluates as an interpreted
-    *    LINEAR scan per row per bound site (the shape that measured
-    *    33.9 s → 2.86 s on the r12 sf1 subquery row; this generalizes
-    *    that fix from the subquery materializer to every bind site).
-    *  - constant folding of foldable subtrees (literal-heavy arithmetic
-    *    / string predicates fold once at plan time). Folding that
-    *    THROWS (ANSI division by zero, unevaluable plan-time
-    *    placeholders) leaves the node for execution — same contract as
-    *    the optimizer's ConstantFolding.
-    *
-    * Audited and deliberately NOT rewritten here (note per VERDICT r12
-    * next #7): CASE-branch simplification (non-foldable branches
-    * evaluate per row regardless; foldable ones are covered by the
-    * fold), and common-subexpression elimination (the bound sites
-    * evaluate each expression once per row already). */
-  private[graft] def preBindOptimize(e: Expression): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.{In, InSet, Literal}
-    val inSetThreshold =
-      try org.apache.spark.sql.internal.SQLConf.get.optimizerInSetConversionThreshold
-      catch { case _: Exception => 10 }
-    e.transformUp {
-      case in @ In(v, list)
-          if list.length > inSetThreshold && list.forall(_.isInstanceOf[Literal]) =>
-        InSet(v, scala.collection.immutable.HashSet() ++
-          list.map(_.asInstanceOf[Literal].value))
-      case c if c.foldable && !c.isInstanceOf[Literal] =>
-        try Literal.create(
-          c.eval(org.apache.spark.sql.catalyst.expressions.EmptyRow), c.dataType)
-        catch { case _: Exception => c }
     }
   }
 

@@ -159,6 +159,10 @@ final class VortexFileWriter(path: Path, conf: Configuration, schema: StructType
     out.write(tail.array())
     out.flush(); out.close()
   }
+
+  /** Close the output without writing a footer — for a writer whose
+    * caller failed; the partial file is the caller's to delete. */
+  def abort(): Unit = try stream.close() catch { case _: Exception => () }
 }
 
 /** Single-slot async page prefetcher: while the consumer decodes chunk

@@ -90,40 +90,11 @@ object VortexMaintenance {
         "part-fold-" + VortexDelete.replacementName(new Path(f).getName)
           .stripPrefix("part-delete-"),
         maskFile = st.maskBind(f)._1))
-      val outcomes = st.perFile(cands)(foldFile)
+      // no clauses: only the mask drops rows
+      val outcomes = st.execute(cands, RowLevelStatement.Shape("foldMasks", null, Nil))
       st.commit(outcomes)
       FoldResult(outcomes.length, outcomes.map(_.rowsDeleted).sum)
     }
-  }
-
-  /** Executor task: rewrite one masked file without its dead rows. */
-  private def foldFile(c: RowLevelStatement.Candidate,
-                       conf: org.apache.hadoop.conf.Configuration)
-      : RowLevelStatement.FileOutcome = {
-    val path = c.path
-    val footer = VortexFileReader.readFooter(path, conf)
-    // columnar survivor rewrite when the layout is plain
-    // (SurvivorSplice); shredded-struct / nested layouts keep the row
-    // path below
-    val (staged, dropped) =
-      if (SurvivorSplice.applicable(footer, null))
-        RowLevelStatement.withTmp(c, c.dstName, conf) { tmp =>
-          val dv = DeletionVector.read(new Path(c.maskFile), conf)
-          val r = SurvivorSplice.rewrite(path, tmp, conf, footer,
-            null, null, null, dv, c.bloomCols, c.sketchCols, c.rel(c.dstName))
-          (RowLevelStatement.Staged(tmp.toString, c.dstName, Some(r.entry), r.schemaJson),
-            r.droppedMask)
-        }
-      else RowLevelStatement.write(c, c.dstName, footer.schema, conf) { w =>
-        val part = VortexInputPartition(c.file, footer.chunks.indices.toArray,
-          maskFile = c.maskFile)
-        val r = new VortexPartitionReader(part, conf, footer.schema)
-        var rows = 0L
-        try while (r.next()) { w.write(r.get()); rows += 1 } finally r.close()
-        footer.chunks.map(_.rowCount.toLong).sum - rows
-      }
-    RowLevelStatement.FileOutcome(c.file, RowLevelStatement.Replace(staged),
-      rowsDeleted = dropped)
   }
 
   def compact(spark: SparkSession, dir: String,

@@ -3,7 +3,7 @@ package graft.sources.vortex
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSeq, BindReferences, Expression, UnsafeProjection, Predicate => CatalystPredicate}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, UnsafeProjection, Predicate => CatalystPredicate}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -29,12 +29,11 @@ import org.apache.spark.sql.types.StructType
   *    (≤ 10k rows, single-column keys — manifest min/max, blooms and
   *    partition pruning then skip untouched files with zero I/O);
   *    otherwise every file is a candidate and classification decides.
-  *  - one NON-DESTRUCTIVE task per candidate file: pass 1 probes the
-  *    broadcast key map over the key columns only; no hit → untouched.
-  *    Otherwise the file is rewritten with the clauses applied —
-  *    column-splice when only some columns change, the row path
-  *    otherwise (existing deletion-vector masks fold in). Matched
-  *    source ordinals return to the driver.
+  *  - one NON-DESTRUCTIVE task per candidate file runs the statement
+  *    as a keyed source (the broadcast rows, keys and WHEN MATCHED
+  *    clauses) plus its NOT MATCHED BY SOURCE clauses; its kernel comes
+  *    from RowLevelStatement's kernel table. Matched source ordinals
+  *    return to the driver.
   *  - driver commit: rename/delete per touched file under deterministic
   *    `part-merge-<md5(src)>.vortex` names — the same crash-convergence
   *    contract, and the same `failAfterCommits` crash seam, as
@@ -62,7 +61,7 @@ import org.apache.spark.sql.types.StructType
   * all take the same source row (each is a match).
   */
 object VortexMerge {
-  import RowLevelStatement.{Candidate, Drop, FileOutcome, Keep, Replace, Staged}
+  import RowLevelStatement.{Drop, Keep, Replace}
 
   final case class MergeResult(candidateFiles: Int, untouchedFiles: Int,
                                rewrittenFiles: Int, rowsUpdated: Long,
@@ -244,26 +243,15 @@ object VortexMerge {
 
     // bind clause expressions: matched over target ++ source, not-
     // matched over source only, not-matched-BY-source over target only
-    // (RuntimeReplaceable rewritten first — interpreted eval of
-    // BETWEEN/nvl/… asserts otherwise)
-    def binder(ctx: Seq[Attribute]): Expression => Expression = {
-      val seq = AttributeSeq(ctx)
-      e => BindReferences.bindReference(VortexDelete.replaceRuntime(e), seq)
-    }
-    val bindJ = binder(targetAttrs ++ sourceAttrs)
-    val bindS = binder(sourceAttrs)
-    val bindT = binder(targetAttrs)
-    (matchedActions.flatMap(a => a.cond.toSeq ++ a.assigns.toSeq.flatten) ++
-     notMatchedActions.flatMap(a => a.cond.toSeq ++ a.values) ++
-     notMatchedBySourceActions.flatMap(a => a.cond.toSeq ++ a.assigns.toSeq.flatten))
-      .foreach(e =>
-        require(e.deterministic, "vortex merge: clause expressions must be deterministic"))
-    val boundMatched: Seq[(Option[Expression], Option[Seq[Expression]])] =
-      matchedActions.map(a => (a.cond.map(bindJ), a.assigns.map(_.map(bindJ))))
+    val bindJ = RowLevelStatement.bind("merge", "clause expressions", targetAttrs ++ sourceAttrs) _
+    val bindS = RowLevelStatement.bind("merge", "clause expressions", sourceAttrs) _
+    val bindT = RowLevelStatement.bind("merge", "clause expressions", targetAttrs) _
+    def clause(a: MatchedAction, bind: Expression => Expression) =
+      RowLevelStatement.Clause(a.cond.map(bind), a.assigns.map(_.map(bind)))
+    val matched = matchedActions.map(clause(_, bindJ))
+    val nmbs = notMatchedBySourceActions.map(clause(_, bindT))
     val boundNotMatched: Seq[(Option[Expression], Seq[Expression])] =
       notMatchedActions.map(a => (a.cond.map(bindS), a.values.map(bindS)))
-    val boundNmbs: Seq[(Option[Expression], Option[Seq[Expression]])] =
-      notMatchedBySourceActions.map(a => (a.cond.map(bindT), a.assigns.map(_.map(bindT))))
 
     // candidate planning: push `key IN (...)` for a small single-col
     // key set of a pushable type (integral / string / boolean /
@@ -288,14 +276,11 @@ object VortexMerge {
     // bucket key would leave the row in its old __bucket=k directory
     // while bucket pruning routes lookups to the NEW value's bucket —
     // the file task value-checks the key per updated row
-    val bucketIdx: Int =
-      (try BucketSpecFile.read(st.root, st.hconf) catch { case _: Exception => None })
-        .map(bs => tSchema.fieldIndex(bs._1)).getOrElse(-1)
-
-    val outcomes = st.perFile(cands)((c, conf) =>
-      VortexMergeSupport.processFileClauses(c, tSchema, keyIdxTarget, keyIdxSource,
-        keyTypes, bcRows.value, boundMatched, boundNmbs, bucketIdx, conf,
-        bcDupKeys.value))
+    val outcomes = st.execute(cands, RowLevelStatement.Shape("merge", tSchema, nmbs,
+      Some(RowLevelStatement.Keyed(bcRows, keyIdxTarget, keyIdxSource, keyTypes, matched,
+        bcDupKeys)),
+      bucketIdx = st.bucketKey.map(tSchema.fieldIndex).getOrElse(-1),
+      mustStore = tSchema.fieldNames.toSeq))
 
     // insert half: unmatched source rows through the NOT MATCHED
     // clauses (first true condition wins; none → skip), driver-side —
@@ -466,8 +451,9 @@ object VortexMerge {
   }
 }
 
-/** executor-side half of [[VortexMerge]] (kept out of the closure-heavy
-  * driver object so tasks serialize only what they need) */
+/** [[VortexMerge]]'s key and statement-identity helpers, shared with
+  * the file tasks (kept out of the closure-heavy driver object so tasks
+  * serialize only what they need) */
 private[vortex] object VortexMergeSupport {
 
   /** Statement identity for the insert half: md5 over the key columns
@@ -525,272 +511,5 @@ private[vortex] object VortexMergeSupport {
       j += 1
     }
     out.toSeq
-  }
-
-  /** Executor task of a MERGE: the file's outcome (Keep, Drop — every
-    * live row deleted — or Replace). `matched` marks KEY-level matches
-    * (ANSI: a source row is NOT MATCHED only when no target row shares
-    * its key, regardless of which clause fired). */
-  def processFileClauses(
-      c: RowLevelStatement.Candidate,
-      tSchema: StructType, keyIdxT: Array[Int], keyIdxS: Array[Int],
-      keyTypes: Array[org.apache.spark.sql.types.DataType],
-      srcRows: Array[org.apache.spark.sql.catalyst.InternalRow],
-      boundMatched: Seq[(Option[org.apache.spark.sql.catalyst.expressions.Expression],
-                         Option[Seq[org.apache.spark.sql.catalyst.expressions.Expression]])],
-      boundNmbs: Seq[(Option[org.apache.spark.sql.catalyst.expressions.Expression],
-                      Option[Seq[org.apache.spark.sql.catalyst.expressions.Expression]])],
-      bucketIdx: Int,
-      conf: org.apache.hadoop.conf.Configuration,
-      // keys with >1 source row (correlated scalar SET mode): a target
-      // row matching one of these errors iff a clause condition fires
-      // for it (ANSI scalar cardinality — the subquery only evaluates
-      // for targeted rows); conds in this mode are target-only
-      dupKeys: Set[Seq[Any]] = Set.empty): RowLevelStatement.FileOutcome = {
-    import org.apache.spark.sql.catalyst.expressions.{JoinedRow, UnsafeProjection, Predicate => CatalystPredicate}
-    import RowLevelStatement.{Drop, FileOutcome, Keep, Replace, Staged}
-    val (file, partCols, maskFile) = (c.file, c.partCols, c.maskFile)
-    val path = c.path
-    val fs = path.getFileSystem(conf)
-    val footer = VortexFileReader.readFooter(path, conf)
-
-    val byKey = new java.util.HashMap[Seq[Any], java.lang.Integer](srcRows.length * 2)
-    var si = 0
-    while (si < srcRows.length) {
-      val k = keyOf(srcRows(si), keyIdxS, keyTypes)
-      if (k != null) byKey.put(k, si)
-      si += 1
-    }
-
-    // pass 1: probe key columns only (mask-aware)
-    val keySchema = StructType(keyIdxT.map(tSchema.fields(_)))
-    val probeIdx = keyIdxT.indices.toArray
-    val matchedSet = new java.util.BitSet(srcRows.length)
-    locally {
-      val part = VortexInputPartition(file, footer.chunks.indices.toArray,
-        partCols, c.partValues, maskFile = maskFile)
-      val r = new VortexPartitionReader(part, conf, keySchema, evolution = true)
-      try while (r.next()) {
-        val k = keyOf(r.get(), probeIdx, keyTypes)
-        val hit = if (k == null) null else byKey.get(k)
-        if (hit != null) matchedSet.set(hit.intValue())
-      } finally r.close()
-    }
-    def ords: Array[Int] = {
-      val buf = scala.collection.mutable.ArrayBuffer[Int]()
-      var b = matchedSet.nextSetBit(0)
-      while (b >= 0) { buf += b; b = matchedSet.nextSetBit(b + 1) }
-      buf.toArray
-    }
-    // NOT MATCHED BY SOURCE clauses can fire on rows pass 1 never
-    // probed — only a file with neither key hits nor NMBS clauses is
-    // provably untouched here; otherwise pass 2 decides
-    if ((matchedSet.isEmpty || boundMatched.isEmpty) && boundNmbs.isEmpty)
-      return FileOutcome(file, Keep, matched = ords)
-
-    // column-splice fast path (r15, VERDICT r14 next #2/#3): when every
-    // clause is an UPDATE (no DELETE can fire → row count/order
-    // preserved) and the file carries no mask, re-encode only the
-    // assigned columns and pass the rest through byte-for-byte. The
-    // correlated-DML statements (s15d/s15e shapes) ride this: their
-    // single-column SETs rewrite 1 of N columns per file.
-    if (maskFile == null && boundMatched.forall(_._2.isDefined) &&
-        boundNmbs.forall(_._2.isDefined)) {
-      import org.apache.spark.sql.catalyst.expressions.BoundReference
-      val targetWidth = tSchema.length
-      // changed target ordinals: positions whose assignment is not the
-      // identity BoundReference(p) (fullUpdateProjection keeps the
-      // original attribute for unassigned columns)
-      def changedOf(assigns: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[Int] =
-        assigns.zipWithIndex.collect {
-          case (e, p) if !(e.isInstanceOf[BoundReference] &&
-            e.asInstanceOf[BoundReference].ordinal == p) => p
-        }
-      val changedPos: Set[Int] =
-        (boundMatched.flatMap(a => changedOf(a._2.get)) ++
-         boundNmbs.flatMap(a => changedOf(a._2.get))).toSet
-      def targetRefs(e: org.apache.spark.sql.catalyst.expressions.Expression): Seq[Int] =
-        e.collect { case b: BoundReference if b.ordinal < targetWidth => b.ordinal }
-      val needed: Set[Int] =
-        (keyIdxT.toSeq ++
-         boundMatched.flatMap(_._1.toSeq.flatMap(targetRefs)) ++
-         boundNmbs.flatMap(_._1.toSeq.flatMap(targetRefs)) ++
-         boundMatched.flatMap(_._2.get.zipWithIndex.collect {
-           case (e, p) if changedPos.contains(p) => e }.flatMap(targetRefs)) ++
-         boundNmbs.flatMap(_._2.get.zipWithIndex.collect {
-           case (e, p) if changedPos.contains(p) => e }.flatMap(targetRefs))).toSet
-      val changedNames = changedPos.map(tSchema.fields(_).name)
-      // a changed bucketing key needs pass 2's per-row value guard
-      val spliceOk = !(bucketIdx >= 0 && changedPos.contains(bucketIdx))
-      val planOpt =
-        if (spliceOk) ColumnSplice.plan(footer, maskFile, tSchema, changedNames, needed)
-        else None
-      planOpt.foreach { pl =>
-        val posOf: Array[Int] = pl.changedFileCols.map(pl.fileToTable(_))
-        val matchedProjs = boundMatched.map(a =>
-          UnsafeProjection.create(posOf.toSeq.map(a._2.get(_))))
-        val nmbsProjs2 = boundNmbs.map(a =>
-          UnsafeProjection.create(posOf.toSeq.map(a._2.get(_))))
-        val matchedPreds = boundMatched.map(_._1.map { e =>
-          val p = CatalystPredicate.create(e); p.initialize(0); p })
-        val nmbsPreds2 = boundNmbs.map(_._1.map { e =>
-          val p = CatalystPredicate.create(e); p.initialize(0); p })
-        val patcher = new ColumnSplice.RowPatch {
-          private val joined = new JoinedRow
-          override def patch(t: org.apache.spark.sql.catalyst.InternalRow)
-              : org.apache.spark.sql.catalyst.InternalRow = {
-            val k = VortexMergeSupport.keyOf(t, keyIdxT, keyTypes)
-            val hit = if (k == null) null else byKey.get(k)
-            if (hit == null) {
-              var j = 0
-              while (j < boundNmbs.length) {
-                if (nmbsPreds2(j).forall(_.eval(t))) return nmbsProjs2(j)(t)
-                j += 1
-              }
-              null
-            } else if (dupKeys.contains(k)) {
-              joined(t, srcRows(hit.intValue()))
-              if (matchedPreds.indices.exists(j => matchedPreds(j).forall(_.eval(joined))))
-                throw new IllegalStateException(
-                  "vortex merge: scalar subquery produced more than one row " +
-                  s"for key $k (ANSI cardinality)")
-              null // not targeted — the duplicate is harmless
-            } else {
-              joined(t, srcRows(hit.intValue()))
-              var j = 0
-              while (j < boundMatched.length) {
-                if (matchedPreds(j).forall(_.eval(joined))) return matchedProjs(j)(joined)
-                j += 1
-              }
-              null
-            }
-          }
-        }
-        return RowLevelStatement.withTmp(c, c.dstName, conf) { tmp =>
-          val r = ColumnSplice.rewrite(path, tmp, conf, footer, tSchema, pl,
-            patcher, c.bloomCols, c.sketchCols, c.stats, c.rel(c.dstName))
-          if (r.updated == 0L) { fs.delete(tmp, false); FileOutcome(file, Keep, matched = ords) }
-          else FileOutcome(file, Replace(Staged(tmp.toString, c.dstName, Some(r.entry),
-            r.schemaJson)), rowsUpdated = r.updated, matched = ords)
-        }
-      }
-    }
-
-    // pass 2: rewrite, clauses in order, first true condition wins
-    val fileFields = footer.schema.fields
-    val storedNames = fileFields.map(_.name).toSet
-    val partSet = partCols.toSet
-    tSchema.fields.foreach(f =>
-      if (!storedNames.contains(f.name) && !partSet.contains(f.name))
-        throw new IllegalArgumentException(
-          s"vortex merge: target file $file does not store column ${f.name} " +
-          "(schema-evolved file) — compact/rewrite the dataset to one schema first"))
-    val partIdx: Array[Int] = tSchema.fields.zipWithIndex.collect {
-      case (f, i) if partSet.contains(f.name) && !storedNames.contains(f.name) => i
-    }
-    def valEq(a: Any, b: Any): Boolean = (a, b) match {
-      case (null, null) => true
-      case (null, _) | (_, null) => false
-      case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.equals(x, y)
-      case (x, y) => x == y
-    }
-    val slot: Array[Int] = fileFields.map(f => tSchema.fieldIndex(f.name))
-    val preds = boundMatched.map(_._1.map { e =>
-      val p = CatalystPredicate.create(e); p.initialize(0); p })
-    val projs = boundMatched.map(_._2.map(es => UnsafeProjection.create(es)))
-    val nmbsPreds = boundNmbs.map(_._1.map { e =>
-      val p = CatalystPredicate.create(e); p.initialize(0); p })
-    val nmbsProjs = boundNmbs.map(_._2.map(es => UnsafeProjection.create(es)))
-    var updated = 0L
-    var deleted = 0L
-    var written = 0L
-    val joined = new JoinedRow
-    val (staged, _) = RowLevelStatement.write(c, c.dstName, footer.schema, conf) { writer =>
-      val part = VortexInputPartition(file, footer.chunks.indices.toArray,
-        partCols, c.partValues, maskFile = maskFile)
-      val r = new VortexPartitionReader(part, conf, tSchema, evolution = true)
-      val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(fileFields.length)
-      def emit(src: org.apache.spark.sql.catalyst.InternalRow): Unit = {
-        var i = 0
-        while (i < slot.length) {
-          out.update(i, src.get(slot(i), fileFields(i).dataType)); i += 1
-        }
-        writer.write(out)
-        written += 1
-      }
-      // partition/bucket movement guards, shared by the MATCHED and
-      // NOT MATCHED BY SOURCE update paths (ADVICE r11)
-      def guardMove(row: org.apache.spark.sql.catalyst.InternalRow,
-                    upd: org.apache.spark.sql.catalyst.InternalRow): Unit = {
-        var pi = 0
-        while (pi < partIdx.length) {
-          val ti = partIdx(pi)
-          val dt = tSchema.fields(ti).dataType
-          if (!valEq(row.get(ti, dt), upd.get(ti, dt)))
-            throw new IllegalArgumentException(
-              s"vortex merge: UPDATE clause changes partition column " +
-              s"${tSchema.fields(ti).name} — the in-place rewrite cannot " +
-              "move rows between partition directories")
-          pi += 1
-        }
-        if (bucketIdx >= 0) {
-          val dt = tSchema.fields(bucketIdx).dataType
-          if (!valEq(row.get(bucketIdx, dt), upd.get(bucketIdx, dt)))
-            throw new IllegalArgumentException(
-              s"vortex merge: UPDATE clause changes bucketing key " +
-              s"${tSchema.fields(bucketIdx).name} — the in-place rewrite " +
-              "cannot move rows between bucket directories")
-        }
-      }
-      try while (r.next()) {
-        val row = r.get()
-        val k = keyOf(row, keyIdxT, keyTypes)
-        val hit = if (k == null) null else byKey.get(k)
-        if (hit == null) {
-          // no source match: the NOT MATCHED BY SOURCE family applies
-          // (first true condition wins; none/empty → keep verbatim)
-          boundNmbs.indices.find(j => nmbsPreds(j).forall(_.eval(row))) match {
-            case Some(j) if nmbsProjs(j).isEmpty => deleted += 1 // DELETE: skip
-            case Some(j) =>
-              val upd = nmbsProjs(j).get(row)
-              guardMove(row, upd)
-              updated += 1
-              emit(upd)
-            case None => emit(row)
-          }
-        } else if (dupKeys.contains(k)) {
-          // >1 source row for this key: ANSI errors iff a clause would
-          // actually fire for this row (its cond is target-only in this
-          // mode — pair with an arbitrary duplicate for the eval)
-          joined(row, srcRows(hit.intValue()))
-          if (boundMatched.indices.exists(j => preds(j).forall(_.eval(joined))))
-            throw new IllegalStateException(
-              "vortex merge: scalar subquery produced more than one row " +
-              s"for key $k (ANSI cardinality)")
-          emit(row) // not targeted — the duplicate is harmless
-        } else {
-          joined(row, srcRows(hit.intValue()))
-          boundMatched.indices.find(j => preds(j).forall(_.eval(joined))) match {
-            case Some(j) if projs(j).isEmpty => deleted += 1 // DELETE: skip
-            case Some(j) =>
-              val upd = projs(j).get(joined)
-              guardMove(row, upd)
-              updated += 1
-              emit(upd)
-            case None => emit(row) // no clause fired: keep verbatim
-          }
-        }
-      } finally r.close()
-    }
-
-    if (updated == 0L && deleted == 0L || written == 0L)
-      RowLevelStatement.discard(staged, conf)
-    // key hits but no clause condition fired anywhere — untouched; every
-    // live row deleted — drop the file whole
-    if (updated == 0L && deleted == 0L) FileOutcome(file, Keep, matched = ords)
-    else if (written == 0L)
-      FileOutcome(file, Drop, rowsUpdated = updated, rowsDeleted = deleted, matched = ords)
-    else FileOutcome(file, Replace(staged), rowsUpdated = updated, rowsDeleted = deleted,
-      matched = ords)
   }
 }

@@ -10,7 +10,8 @@ import graft.plans.VortexMergeCommand
 import graft.sources.vortex.{RowLevelStatement, VortexDelete, VortexMerge, VortexUpdate}
 
 /** The shared row-level statement pipeline (RowLevelStatement): a task
-  * that fails after opening its tmp leaves no `.inprogress` litter,
+  * that fails after opening its tmp leaves no `.inprogress` litter and
+  * no open stream on it,
   * the MERGE replace half honours the same crash seam as DELETE and
   * UPDATE, and the whole-row `merge` is the SQL
   * `UPDATE SET * / INSERT *` clause statement — same rows, same
@@ -34,6 +35,15 @@ class RowLevelStatementSpec extends AnyFunSuite {
     val s = Files.walk(Paths.get(dir))
     try s.iterator().asScala.map(_.getFileName.toString)
       .filter(_.endsWith(".inprogress")).toList
+    finally s.close()
+  }
+
+  /** the `.inprogress` paths this JVM holds open (its /proc/self/fd links) */
+  private def openInprogress(): Seq[String] = {
+    val s = Files.list(Paths.get("/proc/self/fd"))
+    try s.iterator().asScala.flatMap(p =>
+      try Some(Files.readSymbolicLink(p).toString) catch { case _: Exception => None })
+      .filter(_.contains(".inprogress")).toList
     finally s.close()
   }
 
@@ -88,6 +98,7 @@ class RowLevelStatementSpec extends AnyFunSuite {
 
   test("a failing UPDATE leaves no tmp on the column-splice and row paths") {
     import spark.implicits._
+    assume(Files.isDirectory(Paths.get("/proc/self/fd")), "needs /proc/self/fd")
     val dir = tmp()
     (0L until 1000L).map(i => (i, i)).toDF("id", "v").coalesce(1)
       .write.format("vortex").mode("overwrite").save(dir)
@@ -100,6 +111,8 @@ class RowLevelStatementSpec extends AnyFunSuite {
     VortexDelete.delete(spark, dir, col("id") === 3L, deletionVectors = true)
     intercept[Exception](VortexUpdate.update(spark, dir, boom, col("id") % 7L === 0L))
     assert(inprogress(dir).isEmpty, inprogress(dir))
+    // the failed row-path writer closed its stream before the tmp went
+    assert(openInprogress().isEmpty, openInprogress())
     val after = spark.read.format("vortex").load(dir)
     assert(after.count() == 999L)
     assert(after.where(col("v") =!= col("id")).count() == 0L, "nothing committed")
