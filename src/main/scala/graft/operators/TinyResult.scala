@@ -16,6 +16,17 @@ import org.apache.spark.sql.{Column, DataFrame}
   * so the in-partition sort IS the global sort and the child runs
   * once.
   *
+  * Under adaptive execution with `GraftExtensions`,
+  * [[graft.plans.CoalesceSmallShuffles]] already does this on its own
+  * for a sort whose input is small: a materialized stage that adaptive
+  * coalescing reads as one partition (at most the minimum partition
+  * size, 1 MB by default, with parallelism-first coalescing), or a scan
+  * of one split, under single-child operators. This helper is still
+  * needed where the rule does not fire: results bounded by their domain
+  * but larger than that coalescing size, inputs behind a join, a union
+  * or a row-multiplying operator, and sessions without the extensions
+  * or with adaptive execution off.
+  *
   * Only for bounded results: every row lands on one task. The callers
   * in this library all sort outputs bounded by a group domain or an
   * explicit cap (the same bound that lets ExactPercentile collect its

@@ -180,6 +180,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // before CollapseCodegenStages on the non-adaptive and the adaptive
     // path alike: filter constants stop being inlined into generated code
     e.injectColumnar(_ => ParameterizeFilterLiterals.columnarRule)
+    // adaptive planning only: a shuffle over one partition's worth of
+    // rows becomes an in-task coalesce (no sampling job, no extra stage)
+    e.injectQueryStagePrepRule(s => CoalesceSmallShuffles(s))
+    // plans nothing: marks a write's query so the rule leaves it alone
+    e.injectPlannerStrategy(_ => MarkWriteQueries)
     // graft's custom expressions, for sessions that only speak SQL
     // (the register() helpers cover programmatic sessions)
     import org.apache.spark.sql.catalyst.FunctionIdentifier

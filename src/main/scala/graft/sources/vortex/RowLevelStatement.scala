@@ -10,7 +10,6 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSeq, BaseP
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
-import org.apache.spark.util.SerializableConfiguration
 
 /** The one pipeline every row-level maintenance statement runs through
   * — DELETE, UPDATE, MERGE, foldMasks and the commit of compact. As in
@@ -214,9 +213,9 @@ private[graft] object RowLevelStatement {
       val outcomes =
         if (cands.isEmpty) Seq.empty
         else {
-          val sconf = new SerializableConfiguration(hconf)
+          val bc = HadoopConfBroadcast(spark)
           spark.sparkContext.parallelize(cands, cands.length)
-            .map(c => RowLevelStatement.execute(c, shape, sconf.value)).collect().toSeq
+            .map(c => RowLevelStatement.execute(c, shape, bc.value.value)).collect().toSeq
         }
       lastOutcomes = outcomes
       outcomes

@@ -203,69 +203,105 @@ object StatsManifest {
     try out.write(mapper.writeValueAsBytes(top)) finally out.close()
   }
 
+  /** one manifest file's recorded schema and entries, in file order */
+  private final case class Parsed(schema: Option[StructType], entries: Seq[FileStats])
+
+  // per-JVM cache of parsed manifest files, keyed like the footer cache
+  // by (path, length, mtime): a manifest is written once and never
+  // edited, and a statement plans against the same manifests several
+  // times. Access-ordered, so the least recently read file drops first.
+  private val ParsedKept = 4096
+  private val parsedCache = new java.util.LinkedHashMap[String, Parsed](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Parsed]): Boolean =
+      size() > ParsedKept
+  }
+
+  /** manifest files parsed (not served from the cache) in this JVM */
+  val manifestParses = new java.util.concurrent.atomic.AtomicLong()
+
+  private def parsed(fs: org.apache.hadoop.fs.FileSystem, st: org.apache.hadoop.fs.FileStatus): Parsed = {
+    val key = s"${st.getPath}#${st.getLen}#${st.getModificationTime}"
+    val hit = parsedCache.synchronized(parsedCache.get(key))
+    if (hit != null) return hit
+    manifestParses.incrementAndGet()
+    val p = parse(fs, st.getPath)
+    parsedCache.synchronized(parsedCache.put(key, p))
+    p
+  }
+
+  /** A torn or foreign manifest keeps what parsed before the fault: it
+    * only loses the optimization. */
+  private def parse(fs: org.apache.hadoop.fs.FileSystem, path: Path): Parsed = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val out = scala.collection.mutable.ArrayBuffer[FileStats]()
+    var thisSchema: Option[StructType] = None
+    val in = fs.open(path)
+    try {
+      val node = mapper.readTree(in)
+      val files = if (node.isArray) node else node.get("files")
+      thisSchema =
+        if (node.isArray) None
+        else Option(node.get("schema")).flatMap(s =>
+          try Some(DataType.fromJson(s.asText()).asInstanceOf[StructType])
+          catch { case _: Exception => None })
+      val it = files.elements()
+      while (it.hasNext) {
+        val e = it.next()
+        def bin(n: com.fasterxml.jackson.databind.JsonNode, f: String): Option[Array[Byte]] =
+          Option(n.get(f)).map(x => java.util.Base64.getDecoder.decode(x.asText()))
+        val cit = e.get("cols").elements()
+        val cols = scala.collection.mutable.ArrayBuffer[ColStats]()
+        while (cit.hasNext) {
+          val c = cit.next()
+          cols += ColStats(c.get("name").asText(), c.get("nulls").asLong(),
+            bin(c, "min"), bin(c, "max"),
+            Option(c.get("sum")).map(_.asLong()),
+            bin(c, "bloom"),
+            bin(c, "sketch"))
+        }
+        val chunks = Option(e.get("chunks")).map { ca =>
+          val buf = scala.collection.mutable.ArrayBuffer[ChunkStats]()
+          val chit = ca.elements()
+          while (chit.hasNext) {
+            val ch = chit.next()
+            val ccols = scala.collection.mutable.ArrayBuffer[ChunkColStats]()
+            val ccit = ch.get("cols").elements()
+            while (ccit.hasNext) {
+              val c = ccit.next()
+              ccols += ChunkColStats(c.get("nulls").asInt(), bin(c, "min"), bin(c, "max"))
+            }
+            buf += ChunkStats(ch.get("rows").asInt(), ch.get("bytes").asLong(),
+              ccols.toIndexedSeq)
+          }
+          buf.toIndexedSeq
+        }
+        out += FileStats(e.get("path").asText(), e.get("len").asLong(),
+          e.get("rows").asLong(), cols.toSeq, chunks, thisSchema)
+      }
+    } catch {
+      case _: Exception =>
+    } finally in.close()
+    Parsed(thisSchema, out.toSeq)
+  }
+
   /** all manifest entries under `root` keyed by relative path — each
     * TAGGED with its own manifest's recorded schema (`manifestSchema`)
     * so consumers validate per entry, not per root — plus the first
     * recorded schema (schema-inference seed; entries whose own schema
     * drifts from the table's fall to the footer path, which throws).
     * Accepts both the round-4 object envelope and the round-3 bare
-    * array (whose entries then lack chunk stats → footer fallback). */
+    * array (whose entries then lack chunk stats → footer fallback).
+    * Each manifest file is parsed once per JVM (see `parsed`). */
   def readAll(root: Path, conf: Configuration): (Option[StructType], Map[String, FileStats]) = {
     val fs = root.getFileSystem(conf)
     val dir = new Path(root, DirName)
     if (!fs.exists(dir)) return (None, Map.empty)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val out = scala.collection.mutable.Map[String, FileStats]()
     var schema: Option[StructType] = None
     fs.listStatus(dir).filter(_.getPath.getName.endsWith(".json")).foreach { st =>
-      val in = fs.open(st.getPath)
-      try {
-        val node = mapper.readTree(in)
-        val files = if (node.isArray) node else node.get("files")
-        val thisSchema: Option[StructType] =
-          if (node.isArray) None
-          else Option(node.get("schema")).flatMap(s =>
-            try Some(DataType.fromJson(s.asText()).asInstanceOf[StructType])
-            catch { case _: Exception => None })
-        if (schema.isEmpty) schema = thisSchema
-        val it = files.elements()
-        while (it.hasNext) {
-          val e = it.next()
-          def bin(n: com.fasterxml.jackson.databind.JsonNode, f: String): Option[Array[Byte]] =
-            Option(n.get(f)).map(x => java.util.Base64.getDecoder.decode(x.asText()))
-          val cit = e.get("cols").elements()
-          val cols = scala.collection.mutable.ArrayBuffer[ColStats]()
-          while (cit.hasNext) {
-            val c = cit.next()
-            cols += ColStats(c.get("name").asText(), c.get("nulls").asLong(),
-              bin(c, "min"), bin(c, "max"),
-              Option(c.get("sum")).map(_.asLong()),
-              bin(c, "bloom"),
-              bin(c, "sketch"))
-          }
-          val chunks = Option(e.get("chunks")).map { ca =>
-            val buf = scala.collection.mutable.ArrayBuffer[ChunkStats]()
-            val chit = ca.elements()
-            while (chit.hasNext) {
-              val ch = chit.next()
-              val ccols = scala.collection.mutable.ArrayBuffer[ChunkColStats]()
-              val ccit = ch.get("cols").elements()
-              while (ccit.hasNext) {
-                val c = ccit.next()
-                ccols += ChunkColStats(c.get("nulls").asInt(), bin(c, "min"), bin(c, "max"))
-              }
-              buf += ChunkStats(ch.get("rows").asInt(), ch.get("bytes").asLong(),
-                ccols.toIndexedSeq)
-            }
-            buf.toIndexedSeq
-          }
-          val f = FileStats(e.get("path").asText(), e.get("len").asLong(),
-            e.get("rows").asLong(), cols.toSeq, chunks, thisSchema)
-          out(f.relPath) = f
-        }
-      } catch {
-        case _: Exception => // a torn/foreign manifest only loses the optimization
-      } finally in.close()
+      val p = parsed(fs, st)
+      if (schema.isEmpty) schema = p.schema
+      p.entries.foreach(f => out(f.relPath) = f)
     }
     (schema, out.toMap)
   }

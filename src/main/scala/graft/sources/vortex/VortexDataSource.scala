@@ -1056,12 +1056,12 @@ class VortexScan(fileSchema: StructType, required: StructType,
     out
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConfiguration(SparkSession.active.sessionState.newHadoopConf())
-    val bc: Broadcast[SerializableConfiguration] =
-      SparkSession.active.sparkContext.broadcast(conf)
-    new VortexReaderFactory(bc, required, evolution)
-  }
+  // every partition reads columnar (VortexReaderFactory), so planning
+  // need not build a reader factory to ask
+  override def columnarSupportMode(): Scan.ColumnarSupportMode = Scan.ColumnarSupportMode.SUPPORTED
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    new VortexReaderFactory(HadoopConfBroadcast(SparkSession.active), required, evolution)
 }
 
 object VortexScan {
@@ -1095,7 +1095,7 @@ object VortexScan {
   }
 }
 
-class VortexReaderFactory(conf: Broadcast[SerializableConfiguration], required: StructType,
+class VortexReaderFactory(val conf: Broadcast[SerializableConfiguration], required: StructType,
                           evolution: Boolean = false)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {

@@ -1,12 +1,10 @@
 package graft.sources.vortex
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
 
 /** Compacted streaming offset: instead of the full file set (which
   * grows without bound over a long-lived stream), the offset records a
@@ -126,9 +124,6 @@ class VortexMicroBatchStream(schema: StructType, paths: Seq[String],
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val bc: Broadcast[SerializableConfiguration] =
-      spark.sparkContext.broadcast(new SerializableConfiguration(conf))
-    new VortexReaderFactory(bc, schema)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    new VortexReaderFactory(HadoopConfBroadcast(spark), schema)
 }

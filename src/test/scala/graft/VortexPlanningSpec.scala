@@ -217,4 +217,49 @@ class VortexPlanningSpec extends AnyFunSuite {
       s"expected VortexSchemaDriftException, got $e")
     assert(root(e).getMessage.contains("schema drift"))
   }
+
+  test("reader factories share one Hadoop-conf broadcast per session configuration") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import graft.sources.vortex.VortexReaderFactory
+    val dir = Files.createTempDirectory("vortex_conf_bc_").toString
+    spark.range(0, 1000).write.format("vortex").mode("overwrite").save(dir)
+    def confBroadcastId(q: String): Long = {
+      val df = spark.read.format("vortex").load(dir).where(q)
+      assert(df.count() > 0)
+      df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }
+        .getOrElse(fail("no vortex scan")).readerFactory
+        .asInstanceOf[VortexReaderFactory].conf.id
+    }
+    val first = confBroadcastId("id < 10")
+    assert(confBroadcastId("id > 500") == first, "a second query must reuse the broadcast")
+    spark.conf.set("fs.graft.spec.marker", "1")
+    try assert(confBroadcastId("id < 10") != first, "a changed Hadoop setting needs its own")
+    finally spark.conf.unset("fs.graft.spec.marker")
+    assert(confBroadcastId("id < 10") == first)
+  }
+
+  test("planning an unchanged dataset a second time re-parses no manifest") {
+    import org.apache.spark.sql.functions.col
+    import graft.sources.vortex.StatsManifest
+    val dir = Files.createTempDirectory("vortex_manifest_parse_").toString
+    spark.range(0, 4000).repartitionByRange(4, col("id"))
+      .write.format("vortex").mode("append").save(dir)
+    spark.range(4000, 6000).write.format("vortex").mode("append").save(dir)
+    val manifests = new java.io.File(dir, StatsManifest.DirName).listFiles
+      .count(_.getName.endsWith(".json"))
+    assert(manifests >= 2)
+    def plan(): Int = spark.read.format("vortex").load(dir)
+      .filter(col("id") < 100).rdd.getNumPartitions
+    val p0 = StatsManifest.manifestParses.get()
+    plan()
+    assert(StatsManifest.manifestParses.get() - p0 <= manifests)
+    val p1 = StatsManifest.manifestParses.get()
+    plan()
+    assert(StatsManifest.manifestParses.get() == p1, "the second planning parsed a manifest")
+    // a new commit adds one manifest, and only that one is parsed
+    spark.range(6000, 7000).write.format("vortex").mode("append").save(dir)
+    val p2 = StatsManifest.manifestParses.get()
+    assert(spark.read.format("vortex").load(dir).filter(col("id") >= 6500).count() == 500)
+    assert(StatsManifest.manifestParses.get() - p2 == 1)
+  }
 }
