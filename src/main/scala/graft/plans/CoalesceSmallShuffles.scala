@@ -6,14 +6,13 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, CoalesceShufflePartitions,
-  ShufflePartitionsUtil, ShuffleQueryStageExec}
+  ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.command.{DataWritingCommand, DataWritingCommandExec}
 import org.apache.spark.sql.execution.datasources.WriteFilesExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.internal.SQLConf
 
 /** Replaces a planner-inserted shuffle whose input is already one
   * partition's worth of rows by an in-task `CoalesceExec(1)`.
@@ -34,11 +33,9 @@ import org.apache.spark.sql.internal.SQLConf
   * walks down through single-child operators and replaces a
   * `ShuffleExchangeExec` of origin `ENSURE_REQUIREMENTS` when its child
   * is a chain of row-non-increasing single-child operators over
-  *  - a materialized shuffle stage that adaptive coalescing would read
-  *    as one partition (the same `ShufflePartitionsUtil` call with the
-  *    session's advisory size, minimum partition size and
-  *    parallelism-first settings), so today's plan already ends in one
-  *    partition there; or
+  *  - a materialized shuffle stage that Spark's own
+  *    `CoalesceShufflePartitions` reads as one partition, so the plan
+  *    without this rule already ends in one partition there; or
   *  - a `BatchScanExec` with at most one input partition.
   *
   * Exchanges deeper down are handled first, so a one-split scan under
@@ -77,20 +74,15 @@ case class CoalesceSmallShuffles(session: SparkSession) extends Rule[SparkPlan] 
     case _ => false
   }
 
-  /** what `CoalesceShufflePartitions` would make of this stage alone */
-  private def readsAsOnePartition(s: ShuffleQueryStageExec): Boolean = {
-    val coalesce = CoalesceShufflePartitions(session)
-    conf.coalesceShufflePartitionsEnabled && coalesce.isSupported(s.shuffle) && {
-      val minPartitions = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM).getOrElse(
-        if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
-          session.sparkContext.defaultParallelism
-        else 1)
-      ShufflePartitionsUtil.coalescePartitions(Seq(s.mapStats), Seq(None),
-        s.advisoryPartitionSize.getOrElse(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)),
-        minPartitions,
-        conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)).forall(_.length <= 1)
+  /** Asks Spark's coalescing rule what it makes of this stage alone. A
+    * stage it leaves as is (coalescing off, an unsupported origin, or
+    * partitions each at or above the target size) keeps all its
+    * partitions. */
+  private def readsAsOnePartition(s: ShuffleQueryStageExec): Boolean =
+    CoalesceShufflePartitions(session)(s) match {
+      case r: AQEShuffleReadExec => r.partitionSpecs.length <= 1
+      case _ => s.shuffle.numPartitions <= 1
     }
-  }
 }
 
 /** Marks the logical root of every query a write consumes, when the

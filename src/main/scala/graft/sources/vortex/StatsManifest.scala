@@ -224,14 +224,15 @@ object StatsManifest {
     val hit = parsedCache.synchronized(parsedCache.get(key))
     if (hit != null) return hit
     manifestParses.incrementAndGet()
-    val p = parse(fs, st.getPath)
-    parsedCache.synchronized(parsedCache.put(key, p))
+    val (p, complete) = parse(fs, st.getPath)
+    // a failed read may be transient: only a complete parse is kept
+    if (complete) parsedCache.synchronized(parsedCache.put(key, p))
     p
   }
 
   /** A torn or foreign manifest keeps what parsed before the fault: it
-    * only loses the optimization. */
-  private def parse(fs: org.apache.hadoop.fs.FileSystem, path: Path): Parsed = {
+    * only loses the optimization. Also says whether the parse completed. */
+  private def parse(fs: org.apache.hadoop.fs.FileSystem, path: Path): (Parsed, Boolean) = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val out = scala.collection.mutable.ArrayBuffer[FileStats]()
     var thisSchema: Option[StructType] = None
@@ -278,10 +279,10 @@ object StatsManifest {
         out += FileStats(e.get("path").asText(), e.get("len").asLong(),
           e.get("rows").asLong(), cols.toSeq, chunks, thisSchema)
       }
+      (Parsed(thisSchema, out.toSeq), true)
     } catch {
-      case _: Exception =>
+      case _: Exception => (Parsed(thisSchema, out.toSeq), false)
     } finally in.close()
-    Parsed(thisSchema, out.toSeq)
   }
 
   /** all manifest entries under `root` keyed by relative path — each

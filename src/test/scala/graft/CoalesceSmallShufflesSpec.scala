@@ -119,6 +119,41 @@ class CoalesceSmallShufflesSpec extends AnyFunSuite {
     assert(shuffles(plan) == 1 && coalesces(plan) == 1, finalPlan(plan).treeString)
   }
 
+  /** the number of tasks in the result stage of the last job `df` runs */
+  private def finalTasksOf(df: DataFrame): Int = {
+    @volatile var last = 0
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        last = e.stageInfos.maxBy(_.stageId).numTasks
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      df.collect()
+      ListenerBusDrain(spark.sparkContext)
+      last
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("a grouped aggregate whose partitions adaptive coalescing keeps apart keeps its exchange") {
+    dir
+    // every shuffle partition is at or above the target size, so adaptive
+    // coalescing leaves all four of them: the input is not one partition's worth
+    withConf(
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1",
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false") {
+      val df = spark.sql("SELECT id % 200 AS b, count(*) FROM t GROUP BY id % 200 ORDER BY b")
+      val tasks = finalTasksOf(df)
+      val plan = df.queryExecution.executedPlan
+      assert(coalesces(plan) == 0 && shuffles(plan) == 2, finalPlan(plan).treeString)
+      assert(tasks > 1, s"$tasks final tasks")
+      val rows = df.collect()
+      assert(rows.map(_.getLong(0)).toSeq == (0L until 200L))
+      assert(rows.map(_.getLong(1)).sum == N)
+    }
+  }
+
   test("an ungrouped aggregate over a one-split scan runs one job") {
     dir
     val df = spark.sql(oneSplit)

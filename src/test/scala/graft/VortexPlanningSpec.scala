@@ -262,4 +262,22 @@ class VortexPlanningSpec extends AnyFunSuite {
     assert(spark.read.format("vortex").load(dir).filter(col("id") >= 6500).count() == 500)
     assert(StatsManifest.manifestParses.get() - p2 == 1)
   }
+
+  test("a manifest whose parse failed is parsed again on the next read") {
+    import org.apache.hadoop.fs.Path
+    import graft.sources.vortex.StatsManifest
+    val dir = Files.createTempDirectory("vortex_manifest_torn_").toString
+    spark.range(0, 100).write.format("vortex").mode("append").save(dir)
+    val mdir = new java.io.File(dir, StatsManifest.DirName)
+    val whole = Files.readAllBytes(mdir.listFiles.filter(_.getName.endsWith(".json")).head.toPath)
+    Files.write(new java.io.File(mdir, "manifest-torn.json").toPath, whole.take(whole.length / 2))
+    val root = new Path(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(StatsManifest.read(root, conf).nonEmpty)
+    val p0 = StatsManifest.manifestParses.get()
+    StatsManifest.read(root, conf)
+    StatsManifest.read(root, conf)
+    // the whole manifest comes from the cache; the torn one is read each time
+    assert(StatsManifest.manifestParses.get() - p0 == 2)
+  }
 }
