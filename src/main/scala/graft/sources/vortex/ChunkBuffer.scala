@@ -5,7 +5,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
 /** The ONE chunk-building kernel shared by every producer of vortex
-  * chunk data — the file writer (VortexFileWriter) and the IPC stream
+  * chunk data — the file writer (VortexFileWriter), the splice rewrite
+  * (Splice, through [[fillFromVecs]] and [[setAt]]) and the IPC stream
   * writer (VortexIpc.Writer). Owns the per-chunk column buffers
   * (storage-domain longs / byte arrays / null flags) and the
   * per-column append kernels, so the storage domain cannot drift
@@ -252,40 +253,60 @@ private[vortex] final class ChunkBuffer(fields: Array[StructField], chunkRows: I
 
   private lazy val batchFills: Array[BatchFill] = Array.tabulate(nCols)(batchFillFor)
 
-  /** Columnar survivor fill from DECODED page vectors (SurvivorSplice):
-    * copies the `keep`-indexed slots of every column and sets `count`
-    * to `k`. Domains mirror the row appenders exactly — decoded longs
-    * are already storage-domain (sign-extended float bits, unscaled
-    * decimals) except timestamps, which [[VortexFileReader.decodeColumn]]
+  /** Columnar fill from DECODED page vectors (the splice kernel):
+    * copies the `keep`-indexed slots of the columns `cols` into a
+    * freshly allocated buffer and sets `count` to `k`. Domains mirror
+    * the row appenders exactly — decoded longs are already
+    * storage-domain (sign-extended float bits, unscaled decimals)
+    * except timestamps, which [[VortexFileReader.decodeColumn]]
     * normalized to µs and re-scale here via the column's stored unit
     * (the same µs round trip the row path takes through the reader +
-    * appender). Caller gates to plain column layouts — no shredded
-    * structs, no nested blobs (SurvivorSplice.applicable). */
-  def fillFromVecs(vecs: Array[ColVec], keep: Array[Int], k: Int): Unit = {
-    var c = 0
-    while (c < nCols) {
+    * appender). Plain columns copy primitive slots; struct and nested
+    * columns go value by value through their appenders. */
+  def fillFromVecs(vecs: Array[ColVec], keep: Array[Int], k: Int, cols: Array[Int]): Unit = {
+    cols.foreach { c =>
       val vec = vecs(c)
       val vn = vec.nulls; val nl = nulls(c)
       var j = 0
-      while (j < k) { if (vn(keep(j))) nl(j) = true; j += 1 }
-      if (fixed(c)) {
-        val dst = longs(c); val src = vec.longs
-        val isTs = fields(c).dataType == TimestampType ||
-          fields(c).dataType == TimestampNTZType
-        if (isTs && tsUnits(c) != "us") {
-          val u = tsUnits(c); j = 0
-          while (j < k) {
-            if (!vn(keep(j))) dst(j) = VortexFormat.storedFromMicros(src(keep(j)), u)
-            j += 1
-          }
-        } else { j = 0; while (j < k) { dst(j) = src(keep(j)); j += 1 } }
+      if (NestedCodec.isNested(fields(c).dataType)) {
+        val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(nCols)
+        val one = Array(c)
+        while (j < k) {
+          row.update(c, VortexFileReader.value(vec, keep(j), fields(c).dataType))
+          setAt(row, one, j)
+          j += 1
+        }
       } else {
-        val dst = bins(c); val src = vec.bins
-        j = 0; while (j < k) { dst(j) = src(keep(j)); j += 1 }
+        while (j < k) { if (vn(keep(j))) nl(j) = true; j += 1 }
+        if (fixed(c)) {
+          val dst = longs(c); val src = vec.longs
+          val isTs = fields(c).dataType == TimestampType ||
+            fields(c).dataType == TimestampNTZType
+          if (isTs && tsUnits(c) != "us") {
+            val u = tsUnits(c); j = 0
+            while (j < k) {
+              if (!vn(keep(j))) dst(j) = VortexFormat.storedFromMicros(src(keep(j)), u)
+              j += 1
+            }
+          } else { j = 0; while (j < k) { dst(j) = src(keep(j)); j += 1 } }
+        } else {
+          val dst = bins(c); val src = vec.bins
+          j = 0; while (j < k) { dst(j) = src(keep(j)); j += 1 }
+        }
       }
-      c += 1
     }
     count = k
+  }
+
+  /** Overwrite slot i of the columns `cols` with `row`'s values (a
+    * buffer-wide row) — the splice kernel's patched rows. */
+  def setAt(row: InternalRow, cols: Array[Int], i: Int): Unit = cols.foreach { c =>
+    nulls(c)(i) = false
+    if (shredded(c)) { val sub = subBufs(c); var s = 0; while (s < sub.nCols) { sub.nulls(s)(i) = false; s += 1 } }
+    if (row.isNullAt(c)) {
+      nulls(c)(i) = true
+      if (shredded(c)) subBufs(c).writeNullAt(i)
+    } else appenders(c).append(row, i)
   }
 
   /** Bulk-fill a segment of every column from a ColumnarBatch into the

@@ -4,10 +4,10 @@ import org.apache.spark.sql.types._
 
 /** The per-chunk stats passes over a [[ChunkBuffer]]'s storage-domain
   * values — exact sums, SBBF blooms, distribution sketches — shared by
-  * [[VortexFileWriter]] (full-column writes) and [[ColumnSplice]] (the
-  * assigned-column subset), so the two write paths can never diverge
-  * on stats discipline (r15 review). The parallel arrays are indexed
-  * by the BUFFER's columns, whatever subset of the file those are. */
+  * by [[VortexFileWriter]]'s row, batch and chunk entries (the last
+  * one fed by the [[Splice]] kernel), so no write path can diverge on
+  * stats discipline. The parallel arrays are indexed by the BUFFER's
+  * columns; a column whose flag is off is skipped. */
 private[vortex] object ChunkStats {
 
   def sumable(f: StructField): Boolean = f.dataType match {

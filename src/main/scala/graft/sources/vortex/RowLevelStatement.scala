@@ -44,15 +44,14 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *
   * The kernel table — [[execute]] takes the first row that applies:
   *
-  *  | kernel          | when                                              |
-  *  |-----------------|---------------------------------------------------|
-  *  | Keep            | classification: no live row of the planned chunks is acted on |
-  *  | Drop            | every live row is deleted                          |
-  *  | Mask            | deletion vectors on, delete-only                   |
-  *  | AppendMask      | deletion vectors on, update-only, not every live row matches |
-  *  | SurvivorSplice  | delete-only, no keyed source, plain layout, every referenced column stored (foldMasks) |
-  *  | ColumnSplice    | update-only, no mask, every changed and referenced column stored, bucket key unchanged |
-  *  | Row             | anything else: the one row loop, with the partition/bucket move guard and the schema-evolution guard |
+  *  | kernel     | when                                                    |
+  *  |------------|---------------------------------------------------------|
+  *  | Keep       | classification: no live row of the planned chunks is acted on |
+  *  | Drop       | every live row is deleted                                |
+  *  | Mask       | deletion vectors on, delete-only                         |
+  *  | AppendMask | deletion vectors on, update-only, not every live row matches |
+  *  | Splice     | every referenced and assigned column stored, bucket key unchanged, plain layout if the file loses rows (a mask or a DELETE clause) — [[Splice]] |
+  *  | Row        | anything else: the one row loop, with the partition/bucket move guard and the schema-evolution guard |
   *
   * Classification reads only the columns the conditions and keys
   * reference, over the planned chunks, mask-aware; it counts every row
@@ -103,8 +102,8 @@ private[graft] object RowLevelStatement {
   /** One candidate file of a statement. `plannedChunks` are the chunks
     * the pushed scan kept (pruned chunks cannot match); `stats` are the
     * file's pre-statement manifest column stats — the bloom/sketch
-    * opt-ins a rewrite keeps, and what the column-splice rewrite's
-    * pass-through columns inherit. */
+    * opt-ins a rewrite keeps, and what the splice kernel's blind
+    * columns inherit. */
   final case class Candidate(file: String, partCols: Array[String],
                              partValues: Array[String], plannedChunks: Array[Int],
                              maskFile: String, nextMaskSeq: Int,
@@ -288,11 +287,14 @@ private[graft] object RowLevelStatement {
     }
   }
 
-  /** Write a data file named `dstName` beside the candidate through the
-    * row writer (`schema` = the file's own stored schema), and build
-    * its manifest entry from the new footer plus the writer's exact
-    * sums, blooms and sketches. Returns the staged file and `fill`'s
-    * result. */
+  /** Write a data file named `dstName` beside the candidate through
+    * `fill`'s writer (`schema` = the file's own stored schema), and
+    * build its manifest entry from the new footer plus the writer's
+    * exact sums, blooms and sketches. A column the writer saw only as
+    * verbatim pages ([[VortexFileWriter.blind]]) keeps the candidate's
+    * pre-statement stats: `fill` copies a column blind only when the
+    * file keeps every row and that column's values. Returns the staged
+    * file and `fill`'s result. */
   def write[T](c: Candidate, dstName: String, schema: StructType, conf: Configuration)
               (fill: VortexFileWriter => T): (Staged, T) =
     withTmp(c, dstName, conf) { tmp =>
@@ -302,16 +304,18 @@ private[graft] object RowLevelStatement {
       val t = try fill(writer) catch { case e: Throwable => writer.abort(); throw e }
       writer.close()
       val footer = VortexFileReader.readFooter(tmp, conf)
-      def named[V](xs: IndexedSeq[Option[V]]): Map[String, V] =
-        schema.fieldNames.zip(xs).collect { case (n, Some(v)) => n -> v }.toMap
-      val sums = named(writer.columnSums)
-      val blooms = named(writer.columnBlooms)
-      val sketches = named(writer.columnSketches)
+      val (sums, blooms, sketches) = (writer.columnSums, writer.columnBlooms, writer.columnSketches)
       val base = StatsManifest.fromFooter(c.rel(dstName),
         tmp.getFileSystem(conf).getFileStatus(tmp).getLen, footer)
-      val entry = base.copy(cols = base.cols.map(col => col.copy(
-        sum = sums.get(col.name), bloom = blooms.get(col.name),
-        sketch = sketches.get(col.name))))
+      val entry = base.copy(cols = base.cols.map { col =>
+        val i = schema.fieldIndex(col.name)
+        if (!writer.blind(i)) col.copy(sum = sums(i), bloom = blooms(i), sketch = sketches(i))
+        else {
+          val old = c.stats.get(col.name)
+          col.copy(sum = old.flatMap(_.sum), bloom = old.flatMap(_.bloom),
+            sketch = old.flatMap(_.sketch))
+        }
+      })
       (Staged(tmp.toString, dstName, Some(entry), footer.schema.json), t)
     }
 
@@ -364,8 +368,12 @@ private[graft] object RowLevelStatement {
 
   /** The kernel a file task ran — see the table in the header. */
   object Kernel extends Enumeration {
-    val Keep, Drop, Mask, AppendMask, SurvivorSplice, ColumnSplice, Row = Value
+    val Keep, Drop, Mask, AppendMask, Splice, Row = Value
   }
+
+  /** files per kernel name — the `kernels` field of every statement's result */
+  def kernels(outcomes: Seq[FileOutcome]): Map[String, Int] =
+    outcomes.groupBy(_.kernel.toString).map { case (k, os) => k -> os.length }
 
   /** TEST SEAM: the outcomes of the last statement [[Statement.execute]]
     * ran in this JVM. */
@@ -453,8 +461,6 @@ private[graft] object RowLevelStatement {
     val ev = new Eval(s, schema.length)
     def outcome(change: Change, k: Kernel.Value, updated: Long, deleted: Long) =
       FileOutcome(c.file, change, k, updated, deleted, ev.matchedOrdinals)
-    def staged(tmp: Path, entry: StatsManifest.FileStats, schemaJson: String) =
-      Replace(Staged(tmp.toString, c.dstName, Some(entry), schemaJson))
     val fold = s.clauses.isEmpty && s.keyed.isEmpty
     // foldMasks rewrites every candidate; the rows it drops are the masked ones
     val (acted, deleted, positions) =
@@ -462,8 +468,8 @@ private[graft] object RowLevelStatement {
     if (acted == 0L) return outcome(Keep, Kernel.Keep, 0L, 0L)
     if (!fold && deleted == live) return outcome(Drop, Kernel.Drop, 0L, live)
     val bucketMoves = s.bucketIdx >= 0 && ev.changed.contains(s.bucketIdx)
-    lazy val splice = ColumnSplice.plan(footer, c.maskFile, schema,
-      ev.changed.map(schema(_).name).toSet, ev.spliceRefs.toSet)
+    // rows leave the file: masked ones fold away, DELETE clauses drop
+    val loses = live < total || deleted > 0
     // the file's next mask: the acted rows on top of the existing one
     def nextMask = {
       val added = DeletionVector.fromPositions(positions)
@@ -477,29 +483,11 @@ private[graft] object RowLevelStatement {
       val m = try writeMask(c, nextMask, conf)
         catch { case e: Throwable => discard(append, conf); throw e }
       outcome(AppendMask(append, m), Kernel.AppendMask, updated, 0L)
-    } else if (s.deleteOnly && s.keyed.isEmpty &&
-        SurvivorSplice.applicable(footer, ev.refs.toSeq.map(schema(_).name))) {
-      withTmp(c, c.dstName, conf) { tmp =>
-        val r = SurvivorSplice.rewrite(c.path, tmp, conf, footer, schema, ev.refs,
-          if (fold) null else (row: InternalRow) => ev.decide(row) >= 0, planned, mask,
-          c.bloomCols, c.sketchCols, c.rel(c.dstName))
-        outcome(staged(tmp, r.entry, r.schemaJson), Kernel.SurvivorSplice, 0L,
-          if (fold) deleted else r.droppedPred)
-      }
-    } else if (s.updateOnly && mask == null && !bucketMoves && splice.isDefined) {
-      val pl = splice.get
-      val projs = ev.projections(pl.changedFileCols.map(pl.fileToTable(_)))
-      val patcher = new ColumnSplice.RowPatch {
-        override def patch(t: InternalRow): InternalRow = {
-          val j = ev.decide(t)
-          if (j < 0) null else projs(j)(ev.input)
-        }
-      }
-      withTmp(c, c.dstName, conf) { tmp =>
-        val r = ColumnSplice.rewrite(c.path, tmp, conf, footer, schema, pl, patcher,
-          c.bloomCols, c.sketchCols, c.stats, c.rel(c.dstName))
-        outcome(staged(tmp, r.entry, r.schemaJson), Kernel.ColumnSplice, r.updated, 0L)
-      }
+    } else if (!bucketMoves &&
+        Splice.applicable(footer, (ev.spliceRefs ++ ev.changed).map(schema(_).name), loses)) {
+      val (data, (updated, dropped)) = write(c, c.dstName, footer.schema, conf)(w =>
+        Splice.rewrite(w, c.path, conf, footer, schema, ev, mask, planned, loses))
+      outcome(Replace(data), Kernel.Splice, updated, if (fold) deleted else dropped)
     } else {
       val (data, updated, dropped) = rowPass(c, s, ev, schema, footer, mask,
         footer.chunks.indices.toArray, c.dstName, appendOnly = false, conf)
@@ -607,7 +595,7 @@ private[graft] object RowLevelStatement {
   private def liveRows(c: Candidate, schema: StructType, footer: VortexFormat.Footer,
                        mask: DeletionVector.Mask, chunks: Array[Int], conf: Configuration)
                       (f: (Long, InternalRow) => Boolean): Unit = {
-    val base = footer.chunks.scanLeft(0L)(_ + _.rowCount)
+    val base = footer.chunkBase
     val r = new VortexPartitionReader(
       VortexInputPartition(c.file, chunks, c.partCols, c.partValues), conf, schema, evolution = true)
     var k = -1
@@ -626,7 +614,7 @@ private[graft] object RowLevelStatement {
     * clause a target row takes — the first whose condition holds
     * (ANSI); [[input]] is then the row its projection reads: the
     * target row, or target ++ source on a key match. */
-  private final class Eval(s: Shape, width: Int) {
+  private[vortex] final class Eval(s: Shape, width: Int) {
     private val keyed = s.keyed.orNull
     private val all: Array[Clause] = s.all.toArray
     private val nMatched = if (keyed == null) 0 else keyed.matched.length
@@ -653,7 +641,7 @@ private[graft] object RowLevelStatement {
       all.flatMap(_.cond.toSeq.flatMap(targetRefs))).distinct.sorted.toArray
     /** table ordinals some UPDATE clause assigns */
     val changed: Array[Int] = all.flatMap(_.assigns.toSeq.flatMap(changedOf)).distinct.sorted
-    /** what the column splice decodes: [[refs]] plus the changed values' inputs */
+    /** what the splice kernel decodes: [[refs]] plus the changed values' inputs */
     def spliceRefs: Seq[Int] = refs.toSeq ++ all.flatMap(_.assigns.toSeq.flatMap(a =>
       changed.toSeq.flatMap(p => targetRefs(a(p)))))
 

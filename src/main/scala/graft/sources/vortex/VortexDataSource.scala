@@ -267,6 +267,30 @@ object VortexDataSource {
         s"vortex: column ${required.name} of $path is " +
         s"${fileField.dataType.simpleString}, read expects ${required.dataType.simpleString}")
 
+  /** Where each `required` field of a partition's file comes from, for
+    * both readers: Right(file column, type-checked) or Left(constant) —
+    * the partition value, or null for a column a schema-evolved file
+    * lacks when `evolution` allows it (a strict read fails instead: the
+    * file was swapped after planning — never silent nulls). */
+  def readSlots(part: VortexInputPartition, footer: VortexFormat.Footer, required: StructType,
+                evolution: Boolean): Array[Either[Any, Int]] = {
+    val path = new Path(part.file)
+    val partMap = part.partCols.zip(part.partValues).toMap
+    required.fields.map { f =>
+      footer.schema.fieldNames.indexOf(f.name) match {
+        case -1 if partMap.contains(f.name) =>
+          Left(PartitionedLayout.toInternal(partMap(f.name), f.dataType))
+        case -1 if evolution => Left(null)
+        case -1 =>
+          throw new VortexSchemaDriftException(
+            s"vortex: column ${f.name} absent from $path (strict read)")
+        case i =>
+          checkReadType(path, footer.schema.fields(i), f)
+          Right(i)
+      }
+    }
+  }
+
   /** Schema-evolution ("mergeSchema") inference: the by-NAME union of
     * every schema present in the dataset — manifest-recorded schemas
     * first (zero footer I/O for covered files), footers only for
@@ -1129,25 +1153,7 @@ class VortexColumnarReader(part: VortexInputPartition,
 
   private val path = new Path(part.file)
   private val footer = VortexFileReader.readFooter(path, conf)
-  private val partMap = part.partCols.zip(part.partValues).toMap
-  // required field → Right(file col, type-checked) | Left(partition
-  // constant) | Left(null) = column absent from this file (schema
-  // evolution: older files read the added column as all-null)
-  private val slots: Array[Either[Any, Int]] = required.fields.map { f =>
-    footer.schema.fieldNames.indexOf(f.name) match {
-      case -1 if partMap.contains(f.name) =>
-        Left(PartitionedLayout.toInternal(partMap(f.name), f.dataType))
-      case -1 if evolution => Left(null) // schema evolution: read as all-null
-      case -1 =>
-        // strict read: a column the file does not carry is drift (file
-        // swapped after planning) — fail loudly, never silent nulls
-        throw new VortexSchemaDriftException(
-          s"vortex: column ${f.name} absent from $path (strict read)")
-      case i =>
-        VortexDataSource.checkReadType(path, footer.schema.fields(i), f)
-        Right(i)
-    }
-  }
+  private val slots = VortexDataSource.readSlots(part, footer, required, evolution)
   private val dts = required.fields.map(_.dataType)
   private val fs = path.getFileSystem(conf)
   private val in = fs.open(path)
@@ -1182,7 +1188,7 @@ class VortexColumnarReader(part: VortexInputPartition,
     else DeletionVector.read(new Path(part.maskFile), conf)
   private val chunkBase: Array[Long] =
     if (mask == null) null
-    else footer.chunks.scanLeft(0L)(_ + _.rowCount).toArray
+    else footer.chunkBase
 
   override def next(): Boolean = {
     if (batch != null) { batch.close(); batch = null }
@@ -1240,24 +1246,7 @@ class VortexPartitionReader(part: VortexInputPartition,
                             evolution: Boolean = false) extends PartitionReader[InternalRow] {
   private val path = new Path(part.file)
   private val footer = VortexFileReader.readFooter(path, conf)
-  private val partMap = part.partCols.zip(part.partValues).toMap
-  // required field → Right(file col index) or Left(partition constant);
-  // Left(null) = column absent from this file (schema evolution)
-  private val slots: Array[Either[Any, Int]] = required.fields.map { f =>
-    footer.schema.fieldNames.indexOf(f.name) match {
-      case -1 if partMap.contains(f.name) =>
-        Left(PartitionedLayout.toInternal(partMap(f.name), f.dataType))
-      case -1 if evolution => Left(null) // schema evolution: read as all-null
-      case -1 =>
-        // strict read: a column the file does not carry is drift (file
-        // swapped after planning) — fail loudly, never silent nulls
-        throw new VortexSchemaDriftException(
-          s"vortex: column ${f.name} absent from $path (strict read)")
-      case i =>
-        VortexDataSource.checkReadType(path, footer.schema.fields(i), f)
-        Right(i)
-    }
-  }
+  private val slots = VortexDataSource.readSlots(part, footer, required, evolution)
   private val dts = required.fields.map(_.dataType)
   private val fs = path.getFileSystem(conf)
   private val in = fs.open(path)
@@ -1279,7 +1268,7 @@ class VortexPartitionReader(part: VortexInputPartition,
     else DeletionVector.read(new Path(part.maskFile), conf)
   private val chunkBase: Array[Long] =
     if (mask == null) null
-    else footer.chunks.scanLeft(0L)(_ + _.rowCount).toArray
+    else footer.chunkBase
   private var base = 0L
 
   private def loadNextChunk(): Boolean = {

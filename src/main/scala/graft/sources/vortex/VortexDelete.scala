@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   * shared row-level pipeline: RowLevelStatement plans the candidates
   * (exactly the files the pushed-down scan of `load(dir).filter(pred)`
   * reads), runs one non-destructive task per candidate — whose kernel
-  * (untouched, drop-whole, mask, SurvivorSplice or the row path) comes
+  * (untouched, drop-whole, mask, the splice kernel or the row path) comes
   * from RowLevelStatement's kernel table — and commits under a
   * replacement name derived DETERMINISTICALLY from the source file
   * (md5 of the source basename). Survivors are the rows where the
@@ -50,7 +50,8 @@ object VortexDelete {
 
   final case class DeleteResult(candidateFiles: Int, untouchedFiles: Int,
                                 droppedFiles: Int, rewrittenFiles: Int,
-                                rowsDeleted: Long, maskedFiles: Int = 0)
+                                rowsDeleted: Long, maskedFiles: Int = 0,
+                                kernels: Map[String, Int] = Map.empty)
 
   /** Replacement basename derived from the SOURCE basename: a re-run
     * after a crash mid-commit regenerates the same name, so the stale
@@ -99,7 +100,8 @@ object VortexDelete {
           outcomes.count(_.change == Drop),
           outcomes.count(_.change.isInstanceOf[Replace]),
           outcomes.map(_.rowsDeleted).sum,
-          outcomes.count(_.change.isInstanceOf[Mask]))
+          outcomes.count(_.change.isInstanceOf[Mask]),
+          RowLevelStatement.kernels(outcomes))
       }
     }
 

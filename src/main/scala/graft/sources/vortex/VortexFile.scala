@@ -62,9 +62,6 @@ final class VortexFileWriter(path: Path, conf: Configuration, schema: StructType
   def columnBlooms: IndexedSeq[Option[Array[Byte]]] =
     if (bloomResults != null) bloomResults else fields.indices.map(_ => None)
 
-  private def bloomPass(): Unit =
-    ChunkStats.bloomPass(buf, fields, bloomOn, bloomBuilders)
-
   // opt-in per-file distribution sketches (writer option
   // "distributionSketches"): exact-count log-bucketed histograms (the
   // reference layout tier's ddsketch role — QuantileSketch.scala)
@@ -81,22 +78,28 @@ final class VortexFileWriter(path: Path, conf: Configuration, schema: StructType
   def columnSketches: IndexedSeq[Option[Array[Byte]]] =
     fields.indices.map(c => if (sketchOn(c)) Some(sketches(c).toBytes) else None)
 
-  private def sketchPass(): Unit =
-    ChunkStats.sketchPass(buf, fields, sketchOn, sketches)
-
   // chunk buffers + per-column append/fill kernels live in the shared
   // ChunkBuffer (also used by the IPC stream writer — one storage
-  // domain, one kernel)
-  private val buf = new ChunkBuffer(fields, chunkRows, tsUnits, shredStructs = true)
+  // domain, one kernel); allocated on first row or batch, since a
+  // writer fed only whole chunks ([[writeChunk]]) never needs it
+  private var buf: ChunkBuffer = _
+  private def rowBuf(): ChunkBuffer = {
+    if (buf == null) buf = new ChunkBuffer(fields, chunkRows, tsUnits, shredStructs = true)
+    buf
+  }
 
-  /** exact sums over the buffered chunk, accumulated at flush: the
-    * same per-column value sequence (rows in order) as the former
-    * per-row accumulation, so results — including the overflow
-    * point that permanently disables a column — are identical */
-  private def sumPass(): Unit = ChunkStats.sumPass(buf, sums, sumOk)
+  /** exact sums, blooms and sketches over one chunk's buffered values,
+    * accumulated at flush: the same per-column value sequence (rows in
+    * order) as a per-row accumulation, so results — including the
+    * overflow point that permanently disables a sum — are identical */
+  private def statsPass(b: ChunkBuffer): Unit = {
+    ChunkStats.sumPass(b, sums, sumOk)
+    ChunkStats.bloomPass(b, fields, bloomOn, bloomBuilders)
+    ChunkStats.sketchPass(b, fields, sketchOn, sketches)
+  }
 
   def write(row: InternalRow): Unit = {
-    if (buf.write(row)) flushChunk()
+    if (rowBuf().write(row)) flushChunk()
   }
 
   /** Bulk-copy entry: append a whole ColumnarBatch (e.g. straight from
@@ -104,43 +107,84 @@ final class VortexFileWriter(path: Path, conf: Configuration, schema: StructType
     * materializing rows. Produces byte-identical files to the row path:
     * same chunking, encodings, footer, and exact column sums. */
   def writeBatch(batch: org.apache.spark.sql.vectorized.ColumnarBatch): Unit = {
+    val b = rowBuf()
     val total = batch.numRows()
     var src = 0
     while (src < total) {
-      val len = math.min(chunkRows - buf.count, total - src)
-      val full = buf.fillSegment(batch, src, len)
+      val len = math.min(chunkRows - b.count, total - src)
+      val full = b.fillSegment(batch, src, len)
       src += len
       if (full) flushChunk()
     }
   }
 
   private def flushChunk(): Unit = {
-    if (buf.count == 0) return
-    sumPass()
-    bloomPass()
-    sketchPass()
-    val count = buf.count
+    if (buf == null || buf.count == 0) return
+    statsPass(buf)
+    emitChunk(buf.count, null, null, buf)
+    buf.alloc()
+  }
+
+  // columns some chunk carried verbatim without their values
+  private val blindCols = new Array[Boolean](nCols)
+
+  /** Whether column c was [[writeChunk]]-copied without its values at
+    * least once: the writer then reports no sum, bloom or sketch for
+    * it — stats over part of a column's values would be wrong. */
+  def blind(c: Int): Boolean = blindCols(c)
+
+  /** Chunk-level entry (the splice rewrite, compaction): append one
+    * chunk of `rows` rows. Column c is the source page `raw(c)` copied
+    * verbatim — its meta `src(c)` moved to the new offset — when
+    * `raw(c)` is non-null, and is encoded from `vals` otherwise. `vals`
+    * (null = none) holds the chunk's values of the columns `fed`
+    * marks; the stats passes run over those. A column appended without
+    * its values turns [[blind]]. */
+  def writeChunk(rows: Int, raw: Array[Array[Byte]], src: Array[ColumnChunkMeta],
+                 vals: ChunkBuffer, fed: Array[Boolean]): Unit = {
+    flushChunk()
+    var c = 0
+    while (c < nCols) {
+      if (vals == null || !fed(c)) {
+        require(raw(c) != null, s"vortex: column ${fields(c).name} has neither page nor values")
+        blindCols(c) = true; sumOk(c) = false; bloomOn(c) = false; sketchOn(c) = false
+      }
+      c += 1
+    }
+    if (vals != null) statsPass(vals)
+    emitChunk(rows, raw, src, vals)
+  }
+
+  /** Write one chunk's pages in column order: `raw(c)` verbatim when
+    * given, else column c of `b` encoded. */
+  private def emitChunk(count: Int, raw: Array[Array[Byte]], src: Array[ColumnChunkMeta],
+                        b: ChunkBuffer): Unit = {
     val metas = new Array[ColumnChunkMeta](nCols)
     var c = 0
     while (c < nCols) {
-      val enc =
-        if (buf.shredded(c))
-          StructCodec.encode(count, buf.nulls(c), buf.subBufs(c),
-            fields(c).dataType.asInstanceOf[StructType])
-        else {
-          val vec =
-            if (fixed(c)) new ColVec(count, buf.nulls(c), buf.longs(c), null)
-            else new ColVec(count, buf.nulls(c), null, buf.bins(c))
-          PageCodec.encode(vec, fields(c).dataType)
-        }
-      out.write(enc.bytes)
-      metas(c) = ColumnChunkMeta(pos, enc.bytes.length, enc.encoding, enc.compressed,
-        enc.nullCount, enc.min, enc.max)
-      pos += enc.bytes.length
+      if (raw != null && raw(c) != null) {
+        out.write(raw(c))
+        metas(c) = src(c).copy(offset = pos)
+        pos += raw(c).length
+      } else {
+        val enc =
+          if (b.shredded(c))
+            StructCodec.encode(count, b.nulls(c), b.subBufs(c),
+              fields(c).dataType.asInstanceOf[StructType])
+          else {
+            val vec =
+              if (fixed(c)) new ColVec(count, b.nulls(c), b.longs(c), null)
+              else new ColVec(count, b.nulls(c), null, b.bins(c))
+            PageCodec.encode(vec, fields(c).dataType)
+          }
+        out.write(enc.bytes)
+        metas(c) = ColumnChunkMeta(pos, enc.bytes.length, enc.encoding, enc.compressed,
+          enc.nullCount, enc.min, enc.max)
+        pos += enc.bytes.length
+      }
       c += 1
     }
     chunks += ChunkMeta(count, metas)
-    buf.alloc()
   }
 
   def close(): Unit = {

@@ -125,6 +125,8 @@ object VortexFormat {
 
   final case class Footer(schema: StructType, chunks: Array[ChunkMeta]) {
     def rowCount: Long = chunks.map(_.rowCount.toLong).sum
+    /** each chunk's first stored row ordinal, then the row count */
+    def chunkBase: Array[Long] = chunks.scanLeft(0L)(_ + _.rowCount)
   }
 
   def writeFooter(out: DataOutputStream, footer: Footer): Unit = {

@@ -1,10 +1,8 @@
 package graft.sources.vortex
 
-import java.io.{BufferedOutputStream, DataOutputStream}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
-import VortexFormat._
 
 /** Offline small-file compaction for vortex datasets — the maintenance
   * half of a streaming/appending table's lifecycle: per-epoch sink
@@ -35,8 +33,10 @@ import VortexFormat._
   */
 object VortexMaintenance {
 
+  /** `kernels`: the per-file kernels of the mask fold that runs first */
   final case class CompactResult(dirs: Int, batches: Int,
-                                 filesAbsorbed: Int, bytesRewritten: Long)
+                                 filesAbsorbed: Int, bytesRewritten: Long,
+                                 kernels: Map[String, Int] = Map.empty)
 
   val DefaultVacuumTtlMs: Long = 24L * 3600 * 1000
 
@@ -66,7 +66,8 @@ object VortexMaintenance {
     stale.count(s => try fs.delete(s.getPath, false) catch { case _: Exception => false })
   }
 
-  final case class FoldResult(foldedFiles: Int, rowsDropped: Long)
+  final case class FoldResult(foldedFiles: Int, rowsDropped: Long,
+                              kernels: Map[String, Int] = Map.empty)
 
   /** Fold deletion-vector masks into real rewrites: every masked data
     * file is rewritten without its dead rows (one distributed task per
@@ -93,7 +94,8 @@ object VortexMaintenance {
       // no clauses: only the mask drops rows
       val outcomes = st.execute(cands, RowLevelStatement.Shape("foldMasks", null, Nil))
       st.commit(outcomes)
-      FoldResult(outcomes.length, outcomes.map(_.rowsDeleted).sum)
+      FoldResult(outcomes.length, outcomes.map(_.rowsDeleted).sum,
+        RowLevelStatement.kernels(outcomes))
     }
   }
 
@@ -121,7 +123,7 @@ object VortexMaintenance {
     // masked file (its sidecar names the OLD file — dead rows would
     // resurrect)
     MaintenanceLock.withLock(fs, root, "compact") {
-    RowLevelStatement.runLocked(spark, dir, "foldMasks")(fold)
+    val folded = RowLevelStatement.runLocked(spark, dir, "foldMasks")(fold)
     RowLevelStatement.runLocked(spark, dir, "compact") { stmt =>
     // group data files by their layout directory (partition/bucket);
     // defensive re-check: any file still masked (e.g. written by a
@@ -190,7 +192,7 @@ object VortexMaintenance {
           out.toSeq
         }
     }
-    if (batches.isEmpty) CompactResult(byDir.size, 0, 0, 0L)
+    if (batches.isEmpty) CompactResult(byDir.size, 0, 0, 0L, folded.kernels)
     else {
     stmt.begin()
     val remover = stmt.remover
@@ -298,7 +300,7 @@ object VortexMaintenance {
     }
 
     CompactResult(byDir.size, batches.length,
-      batches.map(_._1.length).sum, results.map(_._3).sum)
+      batches.map(_._1.length).sum, results.map(_._3).sum, folded.kernels)
     } // batches.nonEmpty
     } // RowLevelStatement.runLocked
     } // MaintenanceLock.withLock
@@ -341,36 +343,21 @@ object VortexMaintenance {
         s"vortex compact: schema mismatch between ${batch.head} and $p")
     }
 
-    val stream = fs.create(tmp, true)
-    val out = new BufferedOutputStream(stream, 1 << 20)
-    var pos: Long = 0
+    val w = new VortexFileWriter(tmp, conf, footers.head._2.schema)
     var copied: Long = 0
-    out.write(Magic); pos += Magic.length
-    val chunks = scala.collection.mutable.ArrayBuffer[ChunkMeta]()
     footers.foreach { case (p, footer) =>
       val in = fs.open(p)
       try footer.chunks.foreach { chunk =>
-        val metas = chunk.columns.map { m =>
+        val raw = chunk.columns.map { m =>
           val buf = new Array[Byte](m.length)
           in.readFully(m.offset, buf)
-          out.write(buf)
-          val nm = m.copy(offset = pos)
-          pos += m.length; copied += m.length
-          nm
+          copied += m.length
+          buf
         }
-        chunks += ChunkMeta(chunk.rowCount, metas)
+        w.writeChunk(chunk.rowCount, raw, chunk.columns, null, null)
       } finally in.close()
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    val dos = new DataOutputStream(bos)
-    writeFooter(dos, Footer(footers.head._2.schema, chunks.toArray))
-    dos.flush()
-    val fb = bos.toByteArray
-    out.write(fb)
-    val tail = java.nio.ByteBuffer.allocate(12)
-    tail.putLong(fb.length.toLong); tail.put(Magic)
-    out.write(tail.array())
-    out.flush(); out.close()
+    w.close()
 
     // no rename here: the driver commits batch-by-batch under the
     // crash-marker protocol (see MaintenanceCommit.repairStaleCompactions)

@@ -66,7 +66,8 @@ object VortexMerge {
   final case class MergeResult(candidateFiles: Int, untouchedFiles: Int,
                                rewrittenFiles: Int, rowsUpdated: Long,
                                rowsInserted: Long, rowsDeleted: Long = 0L,
-                               droppedFiles: Int = 0)
+                               droppedFiles: Int = 0,
+                               kernels: Map[String, Int] = Map.empty)
 
   private[graft] def replacementName(srcName: String): String =
     "part-merge-" + VortexDelete.replacementName(srcName).stripPrefix("part-delete-")
@@ -320,7 +321,8 @@ object VortexMerge {
       outcomes.map(_.rowsUpdated).sum,
       inserted,
       outcomes.map(_.rowsDeleted).sum,
-      outcomes.count(_.change == Drop))
+      outcomes.count(_.change == Drop),
+      RowLevelStatement.kernels(outcomes))
     } // RowLevelStatement.run
   }
 

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions.col
   * SET projection covers the full table row (each assignment cast to
   * its column's exact type, unassigned columns carried as they are),
   * and each candidate's kernel — untouched, merge-on-read append +
-  * mask, ColumnSplice or the row path — comes from
+  * mask, the splice kernel or the row path — comes from
   * RowLevelStatement's kernel table. A rewrite folds existing
   * deletion-vector masks in and commits as
   * `part-update-<md5(src)>.vortex`.
@@ -35,7 +35,8 @@ object VortexUpdate {
 
   final case class UpdateResult(candidateFiles: Int, untouchedFiles: Int,
                                 rewrittenFiles: Int, rowsUpdated: Long,
-                                maskedFiles: Int = 0)
+                                maskedFiles: Int = 0,
+                                kernels: Map[String, Int] = Map.empty)
 
   private[graft] def replacementName(srcName: String): String =
     "part-update-" + VortexDelete.replacementName(srcName).stripPrefix("part-delete-")
@@ -143,7 +144,8 @@ object VortexUpdate {
           outcomes.count(_.change == Keep),
           outcomes.count(_.change.isInstanceOf[Replace]),
           outcomes.map(_.rowsUpdated).sum,
-          outcomes.count(_.change.isInstanceOf[AppendMask]))
+          outcomes.count(_.change.isInstanceOf[AppendMask]),
+          RowLevelStatement.kernels(outcomes))
       }
     }
   }

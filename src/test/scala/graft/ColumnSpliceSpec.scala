@@ -4,13 +4,13 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.vortex.{StatsManifest, VortexFileReader, VortexUpdate}
+import graft.sources.vortex.{RowLevelStatement, StatsManifest, VortexFileReader, VortexUpdate}
 
-/** r15 column-splice rewrite (ColumnSplice, VERDICT r14 next #2/#3):
-  * an UPDATE that assigns a SUBSET of columns re-encodes only those
-  * columns — every other column's encoded pages pass through
-  * byte-for-byte — and the manifest keeps exact stats on both sides
-  * of the split. */
+/** The splice kernel's patch-only rewrites (graft.sources.vortex.Splice):
+  * an UPDATE that assigns a SUBSET of columns of a file that loses no
+  * row re-encodes only those columns — every other column's encoded
+  * pages pass through byte-for-byte — and the manifest keeps exact
+  * stats on both sides of the split. */
 class ColumnSpliceSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -152,7 +152,7 @@ class ColumnSpliceSpec extends AnyFunSuite {
     assert(df.where(col("id") >= 100L && col("w") === 99.5).count() == 0L)
   }
 
-  test("no splice with a mask sidecar: DV-deleted rows stay deleted through an update") {
+  test("splice with a mask sidecar: masked rows fold away and stay deleted through an update") {
     import spark.implicits._
     val dir = tmp()
     (0L until 5000L).map(i => (i, s"g${i % 4}", 1.0))
@@ -161,6 +161,10 @@ class ColumnSpliceSpec extends AnyFunSuite {
     graft.sources.vortex.VortexDelete.delete(spark, dir, col("g") === "g0",
       deletionVectors = true)
     VortexUpdate.update(spark, dir, Map("w" -> lit(2.0)), col("g") === "g1")
+    assert(RowLevelStatement.lastOutcomes.map(_.kernel).toSet == Set(RowLevelStatement.Kernel.Splice))
+    val root = new Path(dir)
+    assert(!root.getFileSystem(conf).listStatus(root).exists(_.getPath.getName.contains(".dv-")),
+      "the update folds the masks into its rewrite")
     val df = spark.read.format("vortex").load(dir)
     assert(df.count() == 3750L, "masked rows stay deleted")
     assert(df.where(col("g") === "g1" && col("w") =!= 2.0).count() == 0L)

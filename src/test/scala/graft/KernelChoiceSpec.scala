@@ -71,7 +71,7 @@ class KernelChoiceSpec extends AnyFunSuite {
     Seq(
       ("DELETE on a plain file", () => plain(),
         d => VortexDelete.delete(spark, d, col("id") % 10L === 0L),
-        Kernel.SurvivorSplice, all.filter(_._1 % 10 != 0)),
+        Kernel.Splice, all.filter(_._1 % 10 != 0)),
       ("DELETE matching every row", () => plain(),
         d => VortexDelete.delete(spark, d, col("v") >= 0L),
         Kernel.Drop, Nil),
@@ -83,10 +83,10 @@ class KernelChoiceSpec extends AnyFunSuite {
         Kernel.Mask, all.filter(_._1 >= 5)),
       ("UPDATE of a column subset", () => plain(),
         d => VortexUpdate.update(spark, d, Map("v" -> lit(-1L)), col("id") < 5L),
-        Kernel.ColumnSplice, all.map { case (i, v) => (i, if (i < 5) -1L else v) }),
+        Kernel.Splice, all.map { case (i, v) => (i, if (i < 5) -1L else v) }),
       ("UPDATE of a masked file", () => masked(),
         d => VortexUpdate.update(spark, d, Map("v" -> lit(-1L)), col("id") < 5L),
-        Kernel.Row, all.filter(_._1 != 3).map { case (i, v) => (i, if (i < 5) -1L else v) }),
+        Kernel.Splice, all.filter(_._1 != 3).map { case (i, v) => (i, if (i < 5) -1L else v) }),
       ("UPDATE with deletion vectors", () => plain(),
         d => VortexUpdate.update(spark, d, Map("v" -> lit(-1L)), col("id") < 5L,
           deletionVectors = true),
@@ -94,23 +94,38 @@ class KernelChoiceSpec extends AnyFunSuite {
       ("UPDATE with deletion vectors matching every live row", () => plain(),
         d => VortexUpdate.update(spark, d, Map("v" -> lit(-1L)), col("id") >= 0L,
           deletionVectors = true),
-        Kernel.ColumnSplice, all.map { case (i, _) => (i, -1L) }),
+        Kernel.Splice, all.map { case (i, _) => (i, -1L) }),
       ("upsert MERGE", () => plain(),
         d => VortexMerge.merge(spark, d, source(Seq((4L, -4L), (5000L, 1L))), Seq("id")),
-        Kernel.ColumnSplice, all.map { case (i, v) => (i, if (i == 4) -4L else v) } :+ ((5000L, 1L))),
+        Kernel.Splice, all.map { case (i, v) => (i, if (i == 4) -4L else v) } :+ ((5000L, 1L))),
       ("MERGE with a DELETE clause", () => plain(),
         d => {
           source(Seq((4L, 0L), (6L, 0L))).createOrReplaceTempView("kernel_src")
           spark.sql(s"MERGE INTO vtx.`$d` t USING kernel_src s ON t.id = s.id " +
             "WHEN MATCHED THEN DELETE")
         },
-        Kernel.Row, all.filterNot(r => r._1 == 4 || r._1 == 6)),
+        Kernel.Splice, all.filterNot(r => r._1 == 4 || r._1 == 6)),
+      ("MERGE with UPDATE and DELETE clauses on a masked file", () => masked(),
+        d => {
+          source(Seq((4L, -1L), (6L, 60L))).createOrReplaceTempView("kernel_src")
+          spark.sql(s"MERGE INTO vtx.`$d` t USING kernel_src s ON t.id = s.id " +
+            "WHEN MATCHED AND s.v < 0 THEN DELETE WHEN MATCHED THEN UPDATE SET v = s.v")
+        },
+        Kernel.Splice, all.filterNot(r => r._1 == 3 || r._1 == 4)
+          .map { case (i, v) => (i, if (i == 6) 60L else v) }),
       ("foldMasks", () => masked(),
         d => VortexMaintenance.foldMasks(spark, d),
-        Kernel.SurvivorSplice, all.filter(_._1 != 3)),
+        Kernel.Splice, all.filter(_._1 != 3)),
       ("DELETE on a struct layout", () => nested(),
         d => VortexDelete.delete(spark, d, col("id") % 10L === 0L),
         Kernel.Row, all.filter(_._1 % 10 != 0)),
+      ("UPDATE on a masked struct-layout file", () => {
+          val d = nested()
+          VortexDelete.delete(spark, d, col("id") === 3L, deletionVectors = true)
+          d
+        },
+        d => VortexUpdate.update(spark, d, Map("v" -> lit(-1L)), col("id") < 5L),
+        Kernel.Row, all.filter(_._1 != 3).map { case (i, v) => (i, if (i < 5) -1L else v) }),
       ("DELETE with a partition-column predicate", () => partitioned(),
         d => VortexDelete.delete(spark, d, (col("p") === "p1" && col("id") < 10L) || col("id") < 4L),
         Kernel.Row, all.filterNot(r => (r._1 % 2 == 1 && r._1 < 10) || r._1 < 4)))

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.vortex.{StatsManifest, VortexDelete, VortexFileReader, VortexMaintenance}
 
-/** r15-optimization columnar survivor rewrite (SurvivorSplice): the
-  * rewrite-tier DELETE and foldMasks compact survivors chunk-at-a-time
-  * on decoded vectors. These tests pin EQUIVALENCE with the row path's
+/** The splice kernel's survivor rewrites (graft.sources.vortex.Splice):
+  * the rewrite-tier DELETE and foldMasks compact survivors
+  * chunk-at-a-time on decoded vectors. These tests pin EQUIVALENCE with the row path's
   * observable contract — survivors, exact manifest stats, clustered
   * chunk pass-through, ts-unit round trip, and fold-after-mask. */
 class SurvivorSpliceSpec extends AnyFunSuite {

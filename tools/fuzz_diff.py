@@ -612,7 +612,9 @@ def q_maint():
                        # round 14 surfaces
                        'sqlupdate_corragg', 'txn_append', 'txn_sql',
                        # round 15 surfaces
-                       'txn_sql_race'])
+                       'txn_sql_race',
+                       # MERGE over a masked file (the splice kernel)
+                       'dvdel_sqlmerge', 'dvdel_sqlmerge_cond'])
     ops_spark, ops_duck = [], []
     # ~1/3 of queries stage the copy Hive-PARTITIONED: same twin, but
     # the Spark side now runs dir pruning, partition guards, the
@@ -753,6 +755,10 @@ def q_maint():
     elif kind == 'sqlupdate': add_sql_update()
     elif kind == 'sqlmerge': maint_merge(t, ops_spark, ops_duck, False, partby)
     elif kind == 'sqlmerge_cond': maint_merge(t, ops_spark, ops_duck, True, partby)
+    elif kind == 'dvdel_sqlmerge':
+        add_del('dvdel'); maint_merge(t, ops_spark, ops_duck, False, partby)
+    elif kind == 'dvdel_sqlmerge_cond':
+        add_del('dvdel'); maint_merge(t, ops_spark, ops_duck, True, partby)
     elif kind == 'sqlupdate_subq':
         # sometimes run a mutation first so the subquery's statement-
         # start snapshot is itself a maintained state
