@@ -37,15 +37,20 @@ class ConcurrentMaintenanceException(msg: String)
   *
   *  1. Acquire = a JVM-wide tryLock on the qualified lease path FIRST
   *     (two statements in one driver — the common local-mode shape, and
-  *     what the race fuzz exercises — serialize deterministically;
-  *     RawLocalFileSystem's `create(overwrite=false)` is exists-check +
-  *     TRUNCATING create, so the file protocol alone has a window where
-  *     racer B truncates A's already-verified lease — fuzz-found r12),
-  *     then `create(overwrite = false)` + write a unique holder id +
-  *     read-back verify + a 25 ms settle re-verify. The no-overwrite
-  *     create is atomic on HDFS and object stores with conditional
-  *     writes; on local filesystems the settle re-verify shrinks the
-  *     cross-PROCESS window (same-process is exact via the JVM lock).
+  *     what the race fuzz exercises — serialize deterministically
+  *     without touching the file), then one exclusive create of the
+  *     lease holding a unique holder id. On the local (`file`) scheme
+  *     the create is NIO's `CREATE_NEW` (O_EXCL): atomic across
+  *     processes, so the create alone decides the race. Every other
+  *     scheme goes through Hadoop's `create(overwrite = false)`, which
+  *     is not atomic everywhere (S3aLiteFileSystem's is exists-check +
+  *     PUT; RawLocalFileSystem's is exists-check + truncating create —
+  *     fuzz-found r12), so there the winner reads its id back, waits a
+  *     25 ms settle and reads it again: a racer whose create slipped
+  *     through the exists-check overwrote the lease and the loser sees
+  *     it. The settle re-verify also runs on the local scheme after the
+  *     acquirer broke a stale lease, where the delete of the stale file
+  *     can race another breaker's fresh create.
   *  2. The holder heartbeats (rewrites the lease every ttl/5 from a
   *     daemon thread), so a long-running rewrite job keeps its lease
   *     while a CRASHED writer's lease goes stale and is broken by the
@@ -54,6 +59,12 @@ class ConcurrentMaintenanceException(msg: String)
   *  3. Release deletes the lease iff the holder id still matches
   *     (a broken-and-reacquired lease is never deleted by the old
   *     holder).
+  *
+  * On the local scheme every lease read, rewrite and delete goes
+  * through NIO too, never through Hadoop's checksummed LocalFileSystem:
+  * a lease NIO wrote has no `.crc`, and a stale `.vortex-maint.lock.crc`
+  * beside it would fail LocalFileSystem's checksum, so the holder check
+  * would read nothing and release would leave the lease to its TTL.
   *
   * Granularity is the DATASET ROOT — coarse by design: maintenance
   * statements are rare, whole-dataset operations; per-file locking
@@ -99,8 +110,7 @@ private[graft] object MaintenanceLock {
     ()
   }
 
-  final class Lease private[MaintenanceLock] (fs: FileSystem, lock: Path,
-                                              val id: String, ttlMs: Long,
+  final class Lease private[MaintenanceLock] (file: LeaseFile, val id: String, ttlMs: Long,
                                               gateKey: String, gate: Gate) {
     // CAS, not a volatile check-then-act: release() may legitimately be
     // called from a DIFFERENT thread than acquired the lease (cleanup
@@ -123,11 +133,11 @@ private[graft] object MaintenanceLock {
         // the loss is loudly logged for the operator, and release()
         // still frees the JVM gate.
         if (!released) {
-          if (readHolder(fs, lock).contains(id)) writeLease(fs, lock, id)
+          if (file.holder.contains(id)) file.rewrite(id)
           else {
             lost = true
             org.slf4j.LoggerFactory.getLogger(getClass).error(
-              s"vortex maintenance: lease $lock lost by holder $id " +
+              s"vortex maintenance: lease ${file.path} lost by holder $id " +
               "(stalled past TTL and broken by another writer) — " +
               "heartbeat stopped; results of this statement may interleave")
           }
@@ -140,104 +150,132 @@ private[graft] object MaintenanceLock {
     def release(): Unit = if (releasedFlag.compareAndSet(false, true)) {
       beat.interrupt()
       // a lost lease belongs to another writer now — never delete it
-      try if (!lost && readHolder(fs, lock).contains(id)) fs.delete(lock, false)
+      try if (!lost && file.holder.contains(id)) file.delete()
       catch { case _: Exception => () } // breaker's TTL reclaims it
       gateRelease(gateKey, gate, held = true)
     }
   }
 
-  private def writeLease(fs: FileSystem, lock: Path, id: String): Unit = {
-    val out = fs.create(lock, true)
-    try out.write(
-      s"""{"id":"$id","ts":${System.currentTimeMillis()}}""".getBytes("UTF-8"))
-    finally out.close()
-  }
+  /** The lease file's reads and writes. On the local scheme each goes
+    * through NIO, so the create is one O_EXCL create and no call ever
+    * meets a checksum file (see the mechanism above); on every other
+    * scheme each goes through `fs`. */
+  private[MaintenanceLock] final class LeaseFile(fs: FileSystem, val path: Path) {
+    import java.nio.file.{Files, StandardOpenOption}
+    private val local: java.nio.file.Path =
+      if (fs.getUri.getScheme == "file") java.nio.file.Paths.get(fs.makeQualified(path).toUri)
+      else null
 
-  private def readHolder(fs: FileSystem, lock: Path): Option[String] =
-    try {
-      val in = fs.open(lock)
-      val bytes = try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-                  finally in.close()
-      "\"id\"\\s*:\\s*\"([^\"]+)\"".r
-        .findFirstMatchIn(new String(bytes, "UTF-8")).map(_.group(1))
-    } catch { case _: Exception => None }
+    /** whether [[create]] alone decides a cross-process race */
+    def atomicCreate: Boolean = local != null
+
+    private def body(id: String): Array[Byte] =
+      s"""{"id":"$id","ts":${System.currentTimeMillis()}}""".getBytes("UTF-8")
+
+    /** create the lease holding `id`; throws an IOException when one exists */
+    def create(id: String): Unit =
+      if (local != null) Files.write(local, body(id), StandardOpenOption.CREATE_NEW,
+        StandardOpenOption.WRITE)
+      else write(fs.create(path, false), id)
+
+    /** rewrite the lease with `id` (the heartbeat) */
+    def rewrite(id: String): Unit =
+      if (local != null) Files.write(local, body(id))
+      else write(fs.create(path, true), id)
+
+    private def write(out: java.io.OutputStream, id: String): Unit =
+      try out.write(body(id)) finally out.close()
+
+    /** the holder id the lease names, None when there is none */
+    def holder: Option[String] =
+      try {
+        val bytes =
+          if (local != null) Files.readAllBytes(local)
+          else {
+            val in = fs.open(path)
+            try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in) finally in.close()
+          }
+        "\"id\"\\s*:\\s*\"([^\"]+)\"".r
+          .findFirstMatchIn(new String(bytes, "UTF-8")).map(_.group(1))
+      } catch { case _: Exception => None }
+
+    /** the lease's modification time, None when there is none */
+    def mtime: Option[Long] =
+      try Some(
+        if (local != null) Files.getLastModifiedTime(local).toMillis
+        else fs.getFileStatus(path).getModificationTime)
+      catch { case _: Exception => None }
+
+    /** delete the lease — on the local scheme with any checksum file a
+      * Hadoop-written lease left beside it */
+    def delete(): Unit =
+      if (local != null) {
+        Files.deleteIfExists(local)
+        Files.deleteIfExists(local.resolveSibling(s".${local.getFileName}.crc"))
+      } else fs.delete(path, false)
+  }
 
   /** Take the dataset's maintenance lock or throw
     * [[ConcurrentMaintenanceException]]. `op` names the statement in
     * the error message. */
   def acquire(fs: FileSystem, root: Path, op: String,
               ttlMs: Long = DefaultTtlMs): Lease = {
-    val lock = new Path(root, LockName)
+    val file = new LeaseFile(fs, new Path(root, LockName))
+    val lock = file.path
     val id = java.util.UUID.randomUUID().toString
-    // same-process gate first: RawLocalFileSystem's no-overwrite create
-    // is exists-check + TRUNCATING create, so two threads of one driver
-    // could each pass the file protocol's read-back verify (fuzz-found
-    // r12 by the op=race kind) — the JVM gate makes same-process racing
-    // exact; the file lease below remains the cross-process protocol
+    // same-process gate first: two threads of one driver serialize here
+    // without touching the file (the race fuzz's op=race kind found the
+    // file protocol alone inexact in-process on RawLocalFileSystem, r12);
+    // the file lease below is the cross-process protocol
     val gateKey = fs.makeQualified(lock).toString
     val gate = gateAcquire(gateKey).getOrElse(
       throw new ConcurrentMaintenanceException(
         s"vortex $op: another maintenance statement in this process holds " +
         s"$lock — maintenance writers are serialized per dataset; retry " +
         "after it finishes"))
+    def lostRace() = new ConcurrentMaintenanceException(
+      s"vortex $op: lost the maintenance-lock race on $lock — " +
+      "another statement acquired it; retry after it finishes")
     try {
     var brokeStale = false
     while (true) {
-      val existing = try Some(fs.getFileStatus(lock)) catch { case _: Exception => None }
-      existing match {
-        case Some(st) =>
-          val age = System.currentTimeMillis() - st.getModificationTime
+      file.mtime match {
+        case Some(mtime) =>
+          val age = System.currentTimeMillis() - mtime
           if (age > ttlMs && !brokeStale) {
             // a crashed writer's lease: break it ONCE, then re-race —
             // but only the exact lease observed. Re-stat immediately
-            // before the delete: if the holder or mtime changed, a
-            // competitor already broke it and created its own VALID
-            // lease, which must not be deleted (review-found r12; the
-            // remaining stat→delete window is the same one the settle
-            // re-verify below closes for the create race).
+            // before the delete: if the mtime changed, a competitor
+            // already broke it and created its own VALID lease, which
+            // must not be deleted (review-found r12; the remaining
+            // stat→delete window is what the settle re-verify below
+            // closes for a breaker).
             brokeStale = true
-            val unchanged =
-              try {
-                val now = fs.getFileStatus(lock)
-                now.getModificationTime == st.getModificationTime
-              } catch { case _: Exception => false }
-            if (unchanged) {
-              try fs.delete(lock, false) catch { case _: Exception => () }
+            if (file.mtime.contains(mtime)) {
+              try file.delete() catch { case _: Exception => () }
               org.slf4j.LoggerFactory.getLogger(getClass).warn(
                 s"vortex $op: broke stale maintenance lease $lock " +
                 s"(age ${age / 1000}s > ttl ${ttlMs / 1000}s — holder crashed)")
             }
           } else throw new ConcurrentMaintenanceException(
             s"vortex $op: another maintenance statement holds $lock " +
-            s"(holder ${readHolder(fs, lock).getOrElse("?")}, " +
+            s"(holder ${file.holder.getOrElse("?")}, " +
             s"age ${age / 1000}s) — maintenance writers are serialized " +
             "per dataset; retry after it finishes")
         case None =>
-          try {
-            val out = fs.create(lock, false) // atomic no-overwrite create
-            try out.write(
-              s"""{"id":"$id","ts":${System.currentTimeMillis()}}""".getBytes("UTF-8"))
-            finally out.close()
-          } catch {
-            case _: java.io.IOException | _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-              throw new ConcurrentMaintenanceException(
-                s"vortex $op: lost the maintenance-lock race on $lock — " +
-                "another statement acquired it; retry after it finishes")
+          try file.create(id)
+          catch { case _: java.io.IOException => throw lostRace() }
+          // read-back verify + settle re-verify where the create alone
+          // does not decide the race (see the mechanism above): both
+          // racers may reach here, and the double read catches the
+          // loser even when its first read preceded the winner's write
+          if (!file.atomicCreate || brokeStale) {
+            def verify(): Unit = if (!file.holder.contains(id)) throw lostRace()
+            verify()
+            Thread.sleep(25)
+            verify()
           }
-          // read-back verify + settle re-verify: on filesystems where
-          // create's exists-check races (cross-PROCESS on local FS —
-          // same-process is exact via the JVM gate above), both racers
-          // may reach here; the double read catches the loser even when
-          // its first read preceded the winner's truncating write
-          def verify(): Unit =
-            if (!readHolder(fs, lock).contains(id))
-              throw new ConcurrentMaintenanceException(
-                s"vortex $op: lost the maintenance-lock race on $lock — " +
-                "another statement acquired it; retry after it finishes")
-          verify()
-          Thread.sleep(25)
-          verify()
-          return new Lease(fs, lock, id, ttlMs, gateKey, gate)
+          return new Lease(file, id, ttlMs, gateKey, gate)
       }
     }
     throw new IllegalStateException("unreachable")

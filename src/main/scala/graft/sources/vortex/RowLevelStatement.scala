@@ -59,6 +59,10 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * stops at the first hit otherwise. foldMasks skips it: the mask is
   * what it drops.
   *
+  * Every statement's result carries its driver time by phase
+  * (`phaseMs`, from [[Phases]]): taking the lease, planning, the file
+  * tasks, the commit, and MERGE's inserts.
+  *
   * Crash contract: per-file commit order is rename-in THEN remove
   * source, so no committed state ever loses a row; replacement names
   * are deterministic in the source name, so re-running the same
@@ -72,15 +76,28 @@ private[graft] object RowLevelStatement {
   type MaskBind = Map[String, (String, Seq[String])]
 
   /** Take the dataset's maintenance lease, then [[runLocked]]. */
-  def run[R](spark: SparkSession, dir: String, op: String)(body: Statement => R): R = {
+  def run[R](spark: SparkSession, dir: String, op: String)(body: Statement => R): R =
+    locked(spark, dir, op)(ph => runLocked(spark, dir, op, ph)(body))
+
+  /** Run `body` under the dataset's maintenance lease, with the clock of
+    * the statement's [[Phases]] started before the lease and the lease
+    * taken as its `lock` phase. */
+  def locked[R](spark: SparkSession, dir: String, op: String)(body: Phases => R): R = {
+    val ph = new Phases
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    MaintenanceLock.withLock(fs, root, op)(runLocked(spark, dir, op)(body))
+    val t0 = System.nanoTime()
+    MaintenanceLock.withLock(fs, root, op) {
+      ph.add("lock", System.nanoTime() - t0)
+      body(ph)
+    }
   }
 
-  /** The prologue without the lease — the caller MUST hold it (compact
-    * runs foldMasks and its own commit under one lease). */
-  def runLocked[R](spark: SparkSession, dir: String, op: String)(body: Statement => R): R = {
+  /** The prologue without the lease — the caller MUST hold it, through
+    * [[locked]] (compact runs foldMasks and its own commit under one
+    * lease, and both charge `ph`). */
+  def runLocked[R](spark: SparkSession, dir: String, op: String, ph: Phases)
+                  (body: Statement => R): R = {
     val hconf = spark.sessionState.newHadoopConf()
     val root = new Path(dir)
     val fs = root.getFileSystem(hconf)
@@ -93,10 +110,37 @@ private[graft] object RowLevelStatement {
       MaintenanceCommit.repairStaleUpdvAppends(fs, listed0.map(_._1), maskBind0)
     // planning must never see a replacement the repair just dropped
     val (listed, maskBind) = if (repaired == 0) (listed0, maskBind0) else list()
-    val st = new Statement(spark, op, root, fs, hconf, listed, maskBind)
+    val st = new Statement(spark, op, root, fs, hconf, listed, maskBind, ph)
     val result = body(st)
     st.finish()
     result
+  }
+
+  /** A statement's driver time by phase, from its start (before the
+    * lease) until [[ms]] is read: `lock` (taking the lease), `tasks`
+    * (the file-task job), `commit` (renames, removals, the manifest
+    * write), any phase the statement times itself ([[timed]]; MERGE's
+    * `inserts`), and `plan`, the rest — the prologue, binding and
+    * candidate planning. Phases never nest, so they sum to the elapsed
+    * time. */
+  final class Phases private[RowLevelStatement] {
+    private val start = System.nanoTime()
+    private val ns = scala.collection.mutable.LinkedHashMap(
+      "lock" -> 0L, "plan" -> 0L, "tasks" -> 0L, "commit" -> 0L)
+
+    private[RowLevelStatement] def add(phase: String, nanos: Long): Unit =
+      ns(phase) = ns.getOrElse(phase, 0L) + nanos
+
+    def timed[T](phase: String)(body: => T): T = {
+      val t0 = System.nanoTime()
+      try body finally add(phase, System.nanoTime() - t0)
+    }
+
+    /** milliseconds per phase, every phase above present */
+    def ms: Map[String, Long] = {
+      val plan = System.nanoTime() - start - ns.iterator.filter(_._1 != "plan").map(_._2).sum
+      ns.iterator.map { case (k, v) => k -> (if (k == "plan") plan else v) / 1000000L }.toMap
+    }
   }
 
   /** One candidate file of a statement. `plannedChunks` are the chunks
@@ -147,7 +191,8 @@ private[graft] object RowLevelStatement {
   /** A statement's state after the prologue. */
   final class Statement private[RowLevelStatement] (
       val spark: SparkSession, val op: String, val root: Path, val fs: FileSystem,
-      val hconf: Configuration, val listed: Listing, val maskBind: MaskBind) {
+      val hconf: Configuration, val listed: Listing, val maskBind: MaskBind,
+      phases: Phases) {
     private var log: Option[VortexCommitLog.Ctx] = None
     private var begun = false
     private lazy val rootQ = fs.makeQualified(root).toString
@@ -161,6 +206,12 @@ private[graft] object RowLevelStatement {
       log = VortexCommitLog.begin(spark, fs, root, hconf, op, Some((listed, maskBind)))
       begun = true
     }
+
+    /** time `body` as the statement's phase `phase` */
+    def timed[T](phase: String)(body: => T): T = phases.timed(phase)(body)
+
+    /** the driver time so far by phase — the `phaseMs` of every result */
+    def phaseMs: Map[String, Long] = phases.ms
 
     /** the statement's commit-log generation (after [[begin]]) */
     def generation: Option[Int] = log.map(_.gen)
@@ -208,7 +259,7 @@ private[graft] object RowLevelStatement {
 
     /** one distributed job, one task per candidate, each running
       * [[RowLevelStatement.execute]] */
-    def execute(cands: Seq[Candidate], shape: Shape): Seq[FileOutcome] = {
+    def execute(cands: Seq[Candidate], shape: Shape): Seq[FileOutcome] = timed("tasks") {
       val outcomes =
         if (cands.isEmpty) Seq.empty
         else {
@@ -224,7 +275,7 @@ private[graft] object RowLevelStatement {
       * write the new files' manifest entries. `failAfterCommits` is a
       * TEST SEAM: ≥0 commits sequentially and throws after that many
       * per-file commits, simulating a crash mid-commit. */
-    def commit(outcomes: Seq[FileOutcome], failAfterCommits: Int = -1): Unit = {
+    def commit(outcomes: Seq[FileOutcome], failAfterCommits: Int = -1): Unit = timed("commit") {
       val rm = remover
       val changed = outcomes.filter(_.change != Keep)
       val committed = new AtomicInteger(0)

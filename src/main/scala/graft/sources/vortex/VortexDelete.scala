@@ -51,14 +51,15 @@ object VortexDelete {
   final case class DeleteResult(candidateFiles: Int, untouchedFiles: Int,
                                 droppedFiles: Int, rewrittenFiles: Int,
                                 rowsDeleted: Long, maskedFiles: Int = 0,
-                                kernels: Map[String, Int] = Map.empty)
+                                kernels: Map[String, Int] = Map.empty,
+                                phaseMs: Map[String, Long] = Map.empty)
 
   /** Replacement basename derived from the SOURCE basename: a re-run
     * after a crash mid-commit regenerates the same name, so the stale
     * replacement is overwritten instead of duplicated. */
   private[graft] def replacementName(srcName: String): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(srcName.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
+    val h = java.util.HexFormat.of().formatHex(java.security.MessageDigest.getInstance("MD5")
+      .digest(srcName.getBytes("UTF-8"))).take(16)
     s"part-delete-$h.vortex"
   }
 
@@ -86,7 +87,7 @@ object VortexDelete {
     RowLevelStatement.run(spark, dir, "delete") { st =>
       // a dataset a prior delete emptied has no schema to infer — the
       // delete is a no-op, not an error (matches DELETE on an empty table)
-      if (st.listed.isEmpty) DeleteResult(0, 0, 0, 0, 0L)
+      if (st.listed.isEmpty) DeleteResult(0, 0, 0, 0, 0L, phaseMs = st.phaseMs)
       else {
         st.begin()
         val filtered = spark.read.format("vortex").load(dir).filter(predicate)
@@ -101,7 +102,8 @@ object VortexDelete {
           outcomes.count(_.change.isInstanceOf[Replace]),
           outcomes.map(_.rowsDeleted).sum,
           outcomes.count(_.change.isInstanceOf[Mask]),
-          RowLevelStatement.kernels(outcomes))
+          RowLevelStatement.kernels(outcomes),
+          st.phaseMs)
       }
     }
 

@@ -36,7 +36,8 @@ object VortexMaintenance {
   /** `kernels`: the per-file kernels of the mask fold that runs first */
   final case class CompactResult(dirs: Int, batches: Int,
                                  filesAbsorbed: Int, bytesRewritten: Long,
-                                 kernels: Map[String, Int] = Map.empty)
+                                 kernels: Map[String, Int] = Map.empty,
+                                 phaseMs: Map[String, Long] = Map.empty)
 
   val DefaultVacuumTtlMs: Long = 24L * 3600 * 1000
 
@@ -122,9 +123,9 @@ object VortexMaintenance {
     // byte-copy below moves pages verbatim and must never absorb a
     // masked file (its sidecar names the OLD file — dead rows would
     // resurrect)
-    MaintenanceLock.withLock(fs, root, "compact") {
-    val folded = RowLevelStatement.runLocked(spark, dir, "foldMasks")(fold)
-    RowLevelStatement.runLocked(spark, dir, "compact") { stmt =>
+    RowLevelStatement.locked(spark, dir, "compact") { ph =>
+    val folded = RowLevelStatement.runLocked(spark, dir, "foldMasks", ph)(fold)
+    RowLevelStatement.runLocked(spark, dir, "compact", ph) { stmt =>
     // group data files by their layout directory (partition/bucket);
     // defensive re-check: any file still masked (e.g. written by a
     // racing delete) is excluded from byte-copy batches
@@ -192,7 +193,7 @@ object VortexMaintenance {
           out.toSeq
         }
     }
-    if (batches.isEmpty) CompactResult(byDir.size, 0, 0, 0L, folded.kernels)
+    if (batches.isEmpty) CompactResult(byDir.size, 0, 0, 0L, folded.kernels, stmt.phaseMs)
     else {
     stmt.begin()
     val remover = stmt.remover
@@ -202,11 +203,14 @@ object VortexMaintenance {
     // merged file as a dot-hidden tmp and returns (tmp, dstName, bytes)
     // — nothing renames in until the whole job succeeded, so a partial
     // job failure commits nothing (tmps are vacuum litter)
-    val results: Array[(String, String, Long)] = spark.sparkContext
-      .parallelize(batches.map(_._1), batches.length)
-      .map(batch => compactBatch(batch, sconf.value))
-      .collect()
+    val results: Array[(String, String, Long)] = stmt.timed("tasks") {
+      spark.sparkContext
+        .parallelize(batches.map(_._1), batches.length)
+        .map(batch => compactBatch(batch, sconf.value))
+        .collect()
+    }
 
+    stmt.timed("commit") {
     // driver commit, PER BATCH under a crash marker (the random
     // part-compact names have no source pairing the deterministic-name
     // repair could use — see MaintenanceCommit.repairStaleCompactions):
@@ -298,12 +302,13 @@ object VortexMaintenance {
         catch { case _: Exception => None }
       StatsManifest.write(root, hconf, s"compact-$jobId-$i", group.map(_._2).toIndexedSeq, schema)
     }
+    } // commit
 
     CompactResult(byDir.size, batches.length,
-      batches.map(_._1.length).sum, results.map(_._3).sum, folded.kernels)
+      batches.map(_._1.length).sum, results.map(_._3).sum, folded.kernels, stmt.phaseMs)
     } // batches.nonEmpty
     } // RowLevelStatement.runLocked
-    } // MaintenanceLock.withLock
+    } // RowLevelStatement.locked
   }
 
   /** Reclaim time-travel storage: drop commit-log generations (and

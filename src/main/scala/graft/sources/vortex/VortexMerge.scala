@@ -3,7 +3,8 @@ package graft.sources.vortex
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, UnsafeProjection, Predicate => CatalystPredicate}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, InSet, UnsafeProjection, Predicate => CatalystPredicate}
+import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -29,6 +30,10 @@ import org.apache.spark.sql.types.StructType
   *    (≤ 10k rows, single-column keys — manifest min/max, blooms and
   *    partition pruning then skip untouched files with zero I/O);
   *    otherwise every file is a candidate and classification decides.
+  *    The filter is one `InSet` of the source's Catalyst key values,
+  *    which already carry the key's type: the analyzer has nothing to
+  *    coerce, and the scan is pushed the same `sources.In` as an `IN`
+  *    of literals.
   *  - one NON-DESTRUCTIVE task per candidate file runs the statement
   *    as a keyed source (the broadcast rows, keys and WHEN MATCHED
   *    clauses) plus its NOT MATCHED BY SOURCE clauses; its kernel comes
@@ -38,8 +43,10 @@ import org.apache.spark.sql.types.StructType
   *    `part-merge-<md5(src)>.vortex` names — the same crash-convergence
   *    contract, and the same `failAfterCommits` crash seam, as
   *    DELETE/UPDATE.
-  *  - APPEND: source rows no task matched are staged through the
-  *    normal vortex writer and renamed in under
+  *  - APPEND: source rows no task matched are staged — by one
+  *    driver-side file write whose manifest entry stays in memory for
+  *    an unpartitioned, unbucketed dataset, through the distributed
+  *    vortex writer otherwise — and renamed in under
   *    `part-merge-ins-<md5(source content + key + clauses)>.vortex`,
   *    one per layout directory — a directory already holding this
   *    statement's insert file (or its deterministic maintenance
@@ -67,7 +74,8 @@ object VortexMerge {
                                rewrittenFiles: Int, rowsUpdated: Long,
                                rowsInserted: Long, rowsDeleted: Long = 0L,
                                droppedFiles: Int = 0,
-                               kernels: Map[String, Int] = Map.empty)
+                               kernels: Map[String, Int] = Map.empty,
+                               phaseMs: Map[String, Long] = Map.empty)
 
   private[graft] def replacementName(srcName: String): String =
     "part-merge-" + VortexDelete.replacementName(srcName).stripPrefix("part-delete-")
@@ -262,13 +270,14 @@ object VortexMerge {
     // never matches. A NOT MATCHED BY SOURCE clause defeats the push
     // entirely — any target row ANYWHERE may be acted on, so every file
     // is a candidate (the disclosed full-scan shape; see mergeClauses).
+    // One `InSet` of Catalyst key values: nothing to coerce (see above).
     val filtered =
       if (notMatchedBySourceActions.isEmpty &&
           keyIdxTarget.length == 1 && srcRows.length <= PushKeyLimit &&
           VortexMergeSupport.pushableKeyType(keyTypes(0))) {
-        val vs = srcRows.toSeq.map(_.get(keyIdxSource(0), keyTypes(0)))
-          .filter(_ != null).map(VortexMergeSupport.toExternal(_, keyTypes(0)))
-        if (vs.nonEmpty) target.filter(col(s"`${keyCols.head}`").isInCollection(vs))
+        val vs = srcRows.iterator.map(_.get(keyIdxSource(0), keyTypes(0))).filter(_ != null).toSet
+        val keyAttr = target.queryExecution.analyzed.output(keyIdxTarget(0))
+        if (vs.nonEmpty) target.filter(GraftSqlBridge.column(InSet(keyAttr, vs)))
         else target
       } else target
     val cands = st.candidates(filtered, replacementName)
@@ -313,7 +322,8 @@ object VortexMerge {
     st.commit(outcomes, failAfterCommits)
     val srcHash = VortexMergeSupport.sourceHash(srcRows,
       keyCols :+ s"clauses:$clauseFingerprint")
-    val inserted = appendInserts(st, tSchema, insertRows, srcHash, failAfterInserts)
+    val inserted = st.timed("inserts")(
+      appendInserts(st, tSchema, insertRows, srcHash, failAfterInserts))
 
     MergeResult(cands.length,
       outcomes.count(_.change == Keep),
@@ -322,7 +332,8 @@ object VortexMerge {
       inserted,
       outcomes.map(_.rowsDeleted).sum,
       outcomes.count(_.change == Drop),
-      RowLevelStatement.kernels(outcomes))
+      RowLevelStatement.kernels(outcomes),
+      st.phaseMs)
     } // RowLevelStatement.run
   }
 
@@ -349,14 +360,18 @@ object VortexMerge {
       .filterNot(_ == BucketSpecFile.BucketCol)
     val bucketSpec =
       try BucketSpecFile.read(root, hconf) catch { case _: Exception => None }
+    // the staged files (path, stage-relative path, manifest entry) and
+    // their schema
+    val (staged, stagedSchema): (Seq[(Path, String, Option[StatsManifest.FileStats])],
+                                 Option[String]) =
     if (layoutPartCols.isEmpty && bucketSpec.isEmpty) {
       // driver-direct staging (r15): the insert set
       // is bounded driver state by merge's contract, and routing it
       // through a Spark write job costs a whole job launch (~0.12-0.19 s
       // at sf1) to move a few thousand rows. One VortexFileWriter call
-      // produces the identical file + manifest segment. Partitioned /
-      // bucketed layouts keep the distributed writer (their routing
-      // lives in the DSv2 path).
+      // produces the identical file, and its entry and schema go to the
+      // rename step in memory. Partitioned / bucketed layouts keep the
+      // distributed writer (their routing lives in the DSv2 path).
       fs.mkdirs(stage)
       val f = new Path(stage, "part-d00000.vortex")
       val w = new VortexFileWriter(f, hconf, tSchema)
@@ -368,8 +383,7 @@ object VortexMerge {
       val sums = tSchema.fieldNames.zip(w.columnSums).toMap
       val entry = base.copy(cols = base.cols.map(c =>
         c.copy(sum = sums.getOrElse(c.name, None))))
-      MaintenanceCommit.writeManifests(stage, hconf, "merge-ins",
-        Seq((footer.schema.json, entry)))
+      (Seq((f, f.getName, Some(entry))), Some(footer.schema.json))
     } else {
       val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
         .createToScalaConverter(tSchema)
@@ -383,6 +397,13 @@ object VortexMerge {
       bucketSpec.foreach { case (k, n) =>
         w = w.option("bucketBy", k).option("buckets", n.toString) }
       w.save(stage.toString)
+      // the writer's manifest segment holds the staged files' entries
+      val stageQ = fs.makeQualified(stage).toString
+      val (stSchema, stEntries) = StatsManifest.readAll(stage, hconf)
+      (VortexDataSource.listAll(Seq(stage.toString), hconf).map { case (st, _) =>
+        val rel = fs.makeQualified(st.getPath).toString.stripPrefix(stageQ).stripPrefix("/")
+        (st.getPath, rel, stEntries.get(rel))
+      }, stSchema.map(_.json))
     }
     // scratch cleanup rides a finally: a crash mid-rename must not
     // strand a full staged copy of the insert set inside the dataset
@@ -390,16 +411,12 @@ object VortexMerge {
     // ever clean it; renamed files are already out of the scratch dir,
     // so deleting it is always safe) — review-found r11
     try {
-    val stageQ = fs.makeQualified(stage).toString
-    val (stSchema, stEntries) = StatsManifest.readAll(stage, hconf)
     val renamedEntries = scala.collection.mutable.ArrayBuffer[StatsManifest.FileStats]()
     // manifest state before this run, read lazily — only the crash-
     // repair skip branch below consults it
     lazy val preManifest = StatsManifest.read(root, hconf)
     val backfillEntries = scala.collection.mutable.ArrayBuffer[(String, StatsManifest.FileStats)]()
-    VortexDataSource.listAll(Seq(stage.toString), hconf).foreach { case (st, _) =>
-      val rel = fs.makeQualified(st.getPath).toString
-        .stripPrefix(stageQ).stripPrefix("/")
+    staged.foreach { case (file, rel, stEntry) =>
       val relDir = rel.lastIndexOf('/') match {
         case -1 => ""; case i => rel.substring(0, i)
       }
@@ -411,10 +428,10 @@ object VortexMerge {
           throw new RuntimeException(
             s"vortex merge: injected crash after $failAfterInserts insert renames (test seam)")
         fs.mkdirs(finalDir)
-        if (!fs.rename(st.getPath, new Path(finalDir, insBase)))
+        if (!fs.rename(file, new Path(finalDir, insBase)))
           throw new java.io.IOException(
             s"vortex merge: insert rename failed for $finalDir/$insBase")
-        stEntries.get(rel).foreach { e =>
+        stEntry.foreach { e =>
           renamedEntries += e.copy(relPath = dstRel)
           inserted += e.rows
         }
@@ -441,7 +458,7 @@ object VortexMerge {
         }
       }
     }
-    stSchema.map(_.json).foreach { sj =>
+    stagedSchema.foreach { sj =>
       MaintenanceCommit.writeManifests(root, hconf, "merge-ins",
         renamedEntries.toSeq.map(e => (sj, e)))
     }
@@ -456,7 +473,7 @@ object VortexMerge {
 /** [[VortexMerge]]'s key and statement-identity helpers, shared with
   * the file tasks (kept out of the closure-heavy driver object so tasks
   * serialize only what they need) */
-private[vortex] object VortexMergeSupport {
+private[graft] object VortexMergeSupport {
 
   /** Statement identity for the insert half: md5 over the key columns
     * and the SORTED per-row digests of the full source content —
@@ -464,9 +481,10 @@ private[vortex] object VortexMergeSupport {
     * across re-runs of the same statement. */
   def sourceHash(rows: Array[org.apache.spark.sql.catalyst.InternalRow],
                  keyCols: Seq[String]): String = {
-    def hex(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
-    def md5(b: Array[Byte]): Array[Byte] =
-      java.security.MessageDigest.getInstance("MD5").digest(b)
+    val hexf = java.util.HexFormat.of()
+    def hex(b: Array[Byte]): String = hexf.formatHex(b)
+    val digest = java.security.MessageDigest.getInstance("MD5")
+    def md5(b: Array[Byte]): Array[Byte] = digest.digest(b)
     val rowDigests = rows.map {
       case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow => hex(md5(u.getBytes))
       case other => hex(md5(other.toString.getBytes("UTF-8")))
@@ -475,16 +493,8 @@ private[vortex] object VortexMergeSupport {
       .getBytes("UTF-8"))).take(16)
   }
 
-  /** Catalyst storage value → external literal (for isInCollection) */
-  def toExternal(v: Any, dt: org.apache.spark.sql.types.DataType): Any = v match {
-    case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-    case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal
-    case other => other
-  }
-
-  /** key types whose storage value converts to a pushable literal via
-    * [[toExternal]] — timestamp/date (micros/days longs would build
-    * a type-mismatched IN) and binary are excluded */
+  /** key types whose `IN` the scan prunes by — timestamp/date and
+    * binary keys plan every file */
   def pushableKeyType(dt: org.apache.spark.sql.types.DataType): Boolean = {
     import org.apache.spark.sql.types._
     dt match {

@@ -36,7 +36,8 @@ object VortexUpdate {
   final case class UpdateResult(candidateFiles: Int, untouchedFiles: Int,
                                 rewrittenFiles: Int, rowsUpdated: Long,
                                 maskedFiles: Int = 0,
-                                kernels: Map[String, Int] = Map.empty)
+                                kernels: Map[String, Int] = Map.empty,
+                                phaseMs: Map[String, Long] = Map.empty)
 
   private[graft] def replacementName(srcName: String): String =
     "part-update-" + VortexDelete.replacementName(srcName).stripPrefix("part-delete-")
@@ -88,7 +89,7 @@ object VortexUpdate {
     require(assignments.nonEmpty, "vortex update: no SET assignments")
     RowLevelStatement.run(spark, dir, "update") { st =>
       // UPDATE over a dataset a delete emptied is a no-op, not an error
-      if (st.listed.isEmpty) UpdateResult(0, 0, 0, 0L)
+      if (st.listed.isEmpty) UpdateResult(0, 0, 0, 0L, phaseMs = st.phaseMs)
       else {
         st.begin()
         val df = spark.read.format("vortex").load(dir)
@@ -145,7 +146,8 @@ object VortexUpdate {
           outcomes.count(_.change.isInstanceOf[Replace]),
           outcomes.map(_.rowsUpdated).sum,
           outcomes.count(_.change.isInstanceOf[AppendMask]),
-          RowLevelStatement.kernels(outcomes))
+          RowLevelStatement.kernels(outcomes),
+          st.phaseMs)
       }
     }
   }

@@ -161,7 +161,8 @@ class RowLevelStatementSpec extends AnyFunSuite {
       s"""MERGE INTO vtx.`$b` t USING rls_src_masked s ON t.id = s.id
          |WHEN MATCHED THEN UPDATE SET *
          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    assert(viaApi == viaSql)
+    // every field but the phase times, which vary run to run
+    assert(viaApi.copy(phaseMs = Map.empty) == viaSql.copy(phaseMs = Map.empty))
     assert(viaApi.rowsUpdated == 2L && viaApi.rowsInserted == 2L, viaApi)
     assert(rows(spark.read.format("vortex").load(a)) ==
       rows(spark.read.format("vortex").load(b)))
@@ -183,7 +184,8 @@ class RowLevelStatementSpec extends AnyFunSuite {
       s"""MERGE INTO vtx.`$b` t USING rls_src_part s ON t.id = s.id
          |WHEN MATCHED THEN UPDATE SET *
          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    assert(viaApi == viaSql)
+    // every field but the phase times, which vary run to run
+    assert(viaApi.copy(phaseMs = Map.empty) == viaSql.copy(phaseMs = Map.empty))
     assert(viaApi.rowsUpdated == 2L && viaApi.rowsInserted == 2L, viaApi)
     assert(rows(spark.read.format("vortex").load(a)) ==
       rows(spark.read.format("vortex").load(b)))

@@ -303,7 +303,8 @@ class VortexDeleteSpec extends AnyFunSuite {
     val r1 = VortexDelete.delete(spark, dir, lit(true))
     assert(r1.droppedFiles == 1 && r1.rowsDeleted == 100L, r1)
     val r2 = VortexDelete.delete(spark, dir, col("id") < 10L)
-    assert(r2 == VortexDelete.DeleteResult(0, 0, 0, 0, 0L))
+    // phase times vary run to run; every other field is the no-op's
+    assert(r2.copy(phaseMs = Map.empty) == VortexDelete.DeleteResult(0, 0, 0, 0, 0L))
     val r3 = graft.sources.vortex.VortexUpdate.update(spark, dir,
       Map("v" -> lit(0L)), col("id") < 10L)
     assert(r3.rewrittenFiles == 0 && r3.rowsUpdated == 0L, r3)
