@@ -558,13 +558,14 @@ private[graft] object RowLevelStatement {
     val full = s.keyed.isDefined || !s.updateOnly || s.deletionVectors
     val narrow = StructType(ev.refs.map(schema(_)))
     val wide = new GenericInternalRow(schema.length)
+    val get = narrow.fields.map(f => InternalRow.getAccessor(f.dataType, nullable = true))
     val positions = scala.collection.mutable.ArrayBuilder.make[Long]
     var acted = 0L
     var deleted = 0L
     liveRows(c, narrow, footer, mask, planned, conf) { (pos, row) =>
       var i = 0
       while (i < ev.refs.length) {
-        wide.update(ev.refs(i), row.get(i, narrow(i).dataType)); i += 1
+        wide.update(ev.refs(i), get(i)(row, i)); i += 1
       }
       val j = ev.decide(wide)
       if (j >= 0) {
@@ -608,6 +609,7 @@ private[graft] object RowLevelStatement {
       case _ => a == b
     }
     val slot = fileFields.map(f => schema.fieldIndex(f.name))
+    val get = schema.fields.map(f => InternalRow.getAccessor(f.dataType, nullable = true))
     val projs = ev.projections(schema.indices.toArray)
     var updated = 0L
     var deleted = 0L
@@ -615,7 +617,7 @@ private[graft] object RowLevelStatement {
       val out = new GenericInternalRow(fileFields.length)
       def emit(r: InternalRow): Unit = {
         var i = 0
-        while (i < slot.length) { out.update(i, r.get(slot(i), fileFields(i).dataType)); i += 1 }
+        while (i < slot.length) { out.update(i, get(slot(i))(r, slot(i))); i += 1 }
         w.write(out)
       }
       liveRows(c, schema, footer, mask, chunks, conf) { (_, row) =>
@@ -625,8 +627,7 @@ private[graft] object RowLevelStatement {
         else {
           val upd = projs(j)(ev.input)
           moveGuarded.foreach { case (ti, what, dir) =>
-            val dt = schema(ti).dataType
-            if (!valEq(row.get(ti, dt), upd.get(ti, dt)))
+            if (!valEq(get(ti)(row, ti), get(ti)(upd, ti)))
               throw new IllegalArgumentException(
                 s"vortex ${s.op}: UPDATE clause changes $what ${schema(ti).name} — the " +
                 s"in-place rewrite cannot move rows between $dir directories")
@@ -641,23 +642,35 @@ private[graft] object RowLevelStatement {
   }
 
   /** Visit the live rows of `chunks` (ascending) read as `schema`:
-    * `f(stored ordinal, row)` until it returns false. The mask applies
-    * here rather than in the reader, so every ordinal stays exact. */
+    * `f(stored ordinal, row)` until it returns false. The rows are the
+    * scan's own columnar batches (one per chunk, in `chunks` order; the
+    * row is a view, valid until `f` returns). The mask applies here
+    * rather than in the reader, so every ordinal stays exact. A
+    * batch-backed row's `get` does not check nulls for primitive types
+    * (a NULL long reads 0L), so callers copy values through
+    * `InternalRow.getAccessor(dt, nullable = true)`, which checks
+    * `isNullAt` first. */
   private def liveRows(c: Candidate, schema: StructType, footer: VortexFormat.Footer,
                        mask: DeletionVector.Mask, chunks: Array[Int], conf: Configuration)
                       (f: (Long, InternalRow) => Boolean): Unit = {
-    val base = footer.chunkBase
-    val r = new VortexPartitionReader(
+    val r = new VortexColumnarReader(
       VortexInputPartition(c.file, chunks, c.partCols, c.partValues), conf, schema, evolution = true)
-    var k = -1
-    var left = 0L
-    var pos = 0L
+    val bases = footer.chunkBase
+    var k = 0
     var go = true
     try while (go && r.next()) {
-      while (left == 0L) { k += 1; left = footer.chunks(chunks(k)).rowCount; pos = base(chunks(k)) }
-      if (mask == null || !mask.isDeleted(pos)) go = f(pos, r.get())
-      pos += 1
-      left -= 1
+      val batch = r.get()
+      val n = footer.chunks(chunks(k)).rowCount
+      require(batch.numRows == n,
+        s"vortex: chunk ${chunks(k)} of ${c.file} read ${batch.numRows} rows, footer says $n")
+      val base = bases(chunks(k))
+      var i = 0
+      while (go && i < n) {
+        val pos = base + i
+        if (mask == null || !mask.isDeleted(pos)) go = f(pos, batch.getRow(i))
+        i += 1
+      }
+      k += 1
     } finally r.close()
   }
 

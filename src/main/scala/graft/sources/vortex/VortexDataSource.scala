@@ -267,8 +267,8 @@ object VortexDataSource {
         s"vortex: column ${required.name} of $path is " +
         s"${fileField.dataType.simpleString}, read expects ${required.dataType.simpleString}")
 
-  /** Where each `required` field of a partition's file comes from, for
-    * both readers: Right(file column, type-checked) or Left(constant) —
+  /** Where each `required` field of a partition's file comes from:
+    * Right(file column, type-checked) or Left(constant) —
     * the partition value, or null for a column a schema-evolved file
     * lacks when `evolution` allows it (a strict read fails instead: the
     * file was swapped after planning — never silent nulls). */
@@ -1122,18 +1122,17 @@ object VortexScan {
 class VortexReaderFactory(val conf: Broadcast[SerializableConfiguration], required: StructType,
                           evolution: Boolean = false)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[VortexInputPartition]
-    new VortexPartitionReader(p, conf.value.value, required, evolution)
-  }
-
-  // Columnar scan path: decoded pages land directly in ColumnVectors,
+  // The one read path: decoded pages land directly in ColumnVectors
+  // (ColVec -> ColVecFill -> OnHeapColumnVector -> ColumnarBatch), and
   // Spark's ColumnarToRow + WholeStageCodegen consume them batch-wise
   // (the vectorized-execution role of SURVEY.md §4). Nested types ride
-  // the same path since round 4 (recursive child-vector fill), so a
-  // wide scan mixing flat and nested columns keeps its flat columns
-  // primitive instead of falling back to the row reader wholesale.
+  // it too (recursive child-vector fill). Every partition is columnar
+  // and the scan reports ColumnarSupportMode.SUPPORTED, so Spark never
+  // asks for a row reader.
   override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("vortex: the scan is columnar-only")
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -1238,74 +1237,6 @@ class VortexColumnarReader(part: VortexInputPartition,
     if (batch != null) batch.close()
     prefetchQ.close()
   }
-}
-
-class VortexPartitionReader(part: VortexInputPartition,
-                            conf: org.apache.hadoop.conf.Configuration,
-                            required: StructType,
-                            evolution: Boolean = false) extends PartitionReader[InternalRow] {
-  private val path = new Path(part.file)
-  private val footer = VortexFileReader.readFooter(path, conf)
-  private val slots = VortexDataSource.readSlots(part, footer, required, evolution)
-  private val dts = required.fields.map(_.dataType)
-  private val fs = path.getFileSystem(conf)
-  private val in = fs.open(path)
-  private val row = new GenericInternalRow(required.length)
-  slots.zipWithIndex.foreach { case (Left(const), c) => row.update(c, const); case _ => }
-
-  // async single-slot prefetch: chunk i+1's pages stream in while
-  // chunk i decodes (I/O ∥ decode)
-  private val prefetch = new ChunkPrefetcher(in, footer, part.chunkIdxs,
-    slots.map { case Right(c) => c; case Left(_) => -1 })
-  private var vecs: Array[ColVec] = _   // aligned with required; null for partition slots
-  private var rowsInChunk = 0
-  private var i = 0
-
-  // deletion-vector mask (stored row ordinals); base = current chunk's
-  // first stored ordinal
-  private val mask: DeletionVector.Mask =
-    if (part.maskFile == null) null
-    else DeletionVector.read(new Path(part.maskFile), conf)
-  private val chunkBase: Array[Long] =
-    if (mask == null) null
-    else footer.chunkBase
-  private var base = 0L
-
-  private def loadNextChunk(): Boolean = {
-    val nx = prefetch.next()
-    if (nx == null) return false
-    val (ci, raw) = nx
-    val chunk = footer.chunks(ci)
-    vecs = slots.zipWithIndex.map {
-      case (Right(c), k) =>
-        VortexFileReader.decodeColumn(raw(k), chunk.columns(c), chunk.rowCount,
-          footer.schema.fields(c), required.fields(k))
-      case (Left(_), _) => null
-    }
-    rowsInChunk = chunk.rowCount
-    if (mask != null) base = chunkBase(ci)
-    i = 0
-    true
-  }
-
-  override def next(): Boolean = {
-    while (true) {
-      while (i >= rowsInChunk) if (!loadNextChunk()) return false
-      if (mask != null && mask.isDeleted(base + i)) { i += 1 }
-      else {
-        var c = 0
-        while (c < dts.length) {
-          if (vecs(c) != null) row.update(c, VortexFileReader.value(vecs(c), i, dts(c)))
-          c += 1
-        }
-        i += 1
-        return true
-      }
-    }
-    false
-  }
-  override def get(): InternalRow = row
-  override def close(): Unit = prefetch.close()
 }
 
 // ---------------------------- write path ----------------------------------

@@ -1,8 +1,8 @@
 package graft.sources.vortex
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, InputStream, OutputStream}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
 /** SURVEY.md §2.1 S8: the vortex streaming IPC byte format — a
@@ -185,8 +185,8 @@ object VortexIpc {
     bos.toByteArray
   }
 
-  /** Decode a payload straight to INTERNAL rows — the [[deserialize]]
-    * fast path, COLUMNAR like the file scan: each chunk frame fills
+  /** Decode a payload straight to INTERNAL rows — the decoder [[deserialize]]
+    * runs, COLUMNAR like the file scan: each chunk frame fills
     * Spark writable column vectors through the shared [[ColVecFill]]
     * and rows surface as ColumnarBatch row VIEWS — zero per-row
     * allocation, zero per-value boxing (the prior GenericInternalRow
@@ -210,26 +210,6 @@ object VortexIpc {
         c += 1
       }
       new ColumnarBatch(vectors, n).rowIterator().asScala
-    }
-  }
-
-  /** Decode a payload to external Rows (createDataFrame domain; rows
-    * carry the payload schema so `getAs[T](name)` works). */
-  def readRows(bytes: Array[Byte]): Iterator[Row] = {
-    val (schema, chunks) = readChunks(new ByteArrayInputStream(bytes))
-    val fields = schema.fields
-    val converters = fields.map(f =>
-      CatalystTypeConverters.createToScalaConverter(f.dataType))
-    chunks.flatMap { case (n, vecs) =>
-      (0 until n).iterator.map { i =>
-        val vals = new Array[Any](fields.length)
-        var c = 0
-        while (c < fields.length) {
-          vals(c) = converters(c)(VortexFileReader.value(vecs(c), i, fields(c).dataType))
-          c += 1
-        }
-        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(vals, schema)
-      }
     }
   }
 

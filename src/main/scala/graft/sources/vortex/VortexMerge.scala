@@ -506,17 +506,18 @@ private[graft] object VortexMergeSupport {
   }
 
   /** normalized key of a row, or null when ANY component is NULL
-    * (ANSI MERGE: NULL matches nothing). Array[Byte] components wrap
-    * to Seqs so binary keys get value equality. */
+    * (ANSI MERGE: NULL matches nothing). Nulls are tested with
+    * `isNullAt`: a batch-backed row's `get` reads a NULL primitive as
+    * 0. Array[Byte] components wrap to Seqs so binary keys get value
+    * equality. */
   def keyOf(r: org.apache.spark.sql.catalyst.InternalRow,
             keyIdx: Array[Int],
             keyTypes: Array[org.apache.spark.sql.types.DataType]): Seq[Any] = {
     val out = new Array[Any](keyIdx.length)
     var j = 0
     while (j < keyIdx.length) {
-      val v = r.get(keyIdx(j), keyTypes(j))
-      if (v == null) return null
-      out(j) = v match {
+      if (r.isNullAt(keyIdx(j))) return null
+      out(j) = r.get(keyIdx(j), keyTypes(j)) match {
         case a: Array[Byte] => a.toSeq
         case o => o
       }

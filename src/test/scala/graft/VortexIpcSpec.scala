@@ -2,6 +2,7 @@ package graft
 
 import java.io.ByteArrayOutputStream
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -42,6 +43,14 @@ class VortexIpcSpec extends AnyFunSuite {
     "IF(id % 5 = 0, NULL, CAST(id AS DOUBLE)) AS c_nullable",
     "CAST(id AS STRING) AS c_key")
 
+  /** a payload's rows through the production decoder
+    * ([[VortexIpc.readInternalRows]], the one `deserialize` runs), each
+    * batch-row view copied out to an external Row with its schema */
+  private def readBack(bytes: Array[Byte]): Array[Row] = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(VortexIpc.readSchema(bytes))
+    VortexIpc.readInternalRows(bytes).map(r => toRow(r).asInstanceOf[Row]).toArray
+  }
+
   private def dump(rows: Array[Row]): Seq[Seq[Any]] =
     rows.toSeq.map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case x => x })
 
@@ -51,7 +60,7 @@ class VortexIpcSpec extends AnyFunSuite {
     assert(bytes.length == 1)
     assert(VortexIpc.sameStructure(VortexIpc.readSchema(bytes(0)), df.schema),
       "payload header must carry the producing schema")
-    val back = VortexIpc.readRows(bytes(0)).toArray
+    val back = readBack(bytes(0))
     assert(dump(back.sortBy(_.getAs[String]("c_key"))) ==
       dump(df.orderBy("c_key").collect()))
   }
@@ -62,8 +71,8 @@ class VortexIpcSpec extends AnyFunSuite {
     val big = VortexIpc.serialize(df.coalesce(1), chunkRows = 100000).collect()(0)
     assert(one.length != big.length || one.toSeq != big.toSeq,
       "64-row chunking must change the framing")
-    val a = VortexIpc.readRows(one).toArray.sortBy(_.getAs[String]("c_key"))
-    val b = VortexIpc.readRows(big).toArray.sortBy(_.getAs[String]("c_key"))
+    val a = readBack(one).sortBy(_.getAs[String]("c_key"))
+    val b = readBack(big).sortBy(_.getAs[String]("c_key"))
     assert(dump(a) == dump(b))
   }
 
@@ -73,7 +82,7 @@ class VortexIpcSpec extends AnyFunSuite {
     val p2 = VortexIpc.serialize(df.filter(col("c_int") >= 3000000).coalesce(1)).collect()(0)
     val bos = new ByteArrayOutputStream()
     bos.write(p1); bos.write(p2)
-    val all = VortexIpc.readRows(bos.toByteArray).toArray
+    val all = readBack(bos.toByteArray)
     assert(all.length == 60)
     assert(dump(all.sortBy(_.getAs[String]("c_key"))) ==
       dump(df.orderBy("c_key").collect()))
@@ -84,7 +93,7 @@ class VortexIpcSpec extends AnyFunSuite {
     val p2 = VortexIpc.serialize(spark.range(5).selectExpr("CAST(id AS STRING) AS a").coalesce(1)).collect()(0)
     val bos = new ByteArrayOutputStream()
     bos.write(p1); bos.write(p2)
-    val ex = intercept[Exception] { VortexIpc.readRows(bos.toByteArray).length }
+    val ex = intercept[Exception] { readBack(bos.toByteArray).length }
     assert(ex.getMessage.contains("schema mismatch"))
   }
 
@@ -93,7 +102,7 @@ class VortexIpcSpec extends AnyFunSuite {
       "id", "array(CAST(id AS FLOAT), CAST(id+1 AS FLOAT)) AS emb",
       "IF(id % 3 = 0, NULL, array(id, id*2)) AS longs")
     val bytes = VortexIpc.serialize(df.coalesce(1)).collect()(0)
-    val back = VortexIpc.readRows(bytes).toArray.sortBy(_.getAs[Long]("id"))
+    val back = readBack(bytes).sortBy(_.getAs[Long]("id"))
     val exp = df.orderBy("id").collect()
     assert(back.toSeq.map(_.toSeq) == exp.toSeq.map(_.toSeq))
   }
@@ -102,7 +111,7 @@ class VortexIpcSpec extends AnyFunSuite {
     val df = typed(997).repartition(5)
     val payloads = VortexIpc.serialize(df)
     assert(payloads.rdd.getNumPartitions == 5)
-    val counts = payloads.collect().map(b => VortexIpc.readRows(b).length)
+    val counts = payloads.collect().map(b => VortexIpc.readInternalRows(b).length)
     assert(counts.sum == 997, "every partition's rows must land in its payload")
     val back = VortexIpc.deserialize(spark, payloads, df.schema)
     assert(back.count() == 997)
@@ -128,7 +137,7 @@ class VortexIpcSpec extends AnyFunSuite {
   test("payloadRows bounds payload size; values survive the split") {
     val df = typed(997).repartition(5)
     val payloads = VortexIpc.serialize(df, payloadRows = 100)
-    val sizes = payloads.collect().map(b => VortexIpc.readRows(b).length)
+    val sizes = payloads.collect().map(b => VortexIpc.readInternalRows(b).length)
     assert(sizes.forall(_ <= 100), "no payload may exceed the row cap")
     assert(sizes.sum == 997)
     assert(sizes.length >= 10, "5 partitions of ~200 rows must split at cap 100")
