@@ -8,8 +8,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSeq, BasePredicate, BindReferences, BoundReference, CommonExpressionRef, EmptyRow, Expression, GenericInternalRow, In, InSet, JoinedRow, Literal, Projection, RuntimeReplaceable, UnsafeProjection, With, Predicate => CatalystPredicate}
 import org.apache.spark.sql.catalyst.plans.logical
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
+import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** The one pipeline every row-level maintenance statement runs through
   * — DELETE, UPDATE, MERGE, foldMasks and the commit of compact. As in
@@ -26,12 +28,17 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *     statement knows it has work ([[Statement.begin]]), the commit
   *     log's pre-statement generation and the remover that retires
   *     superseded files into it.
-  *  2. BIND ([[bind]], [[where]]): predicates and projections are
-  *     prepared ([[prepare]]) and bound to ordinals in one place.
-  *  3. PLAN ([[Statement.candidates]]): the candidate files are exactly
-  *     the files the pushed-down scan of a filtered DataFrame would
-  *     read — partition, manifest min/max, bloom and chunk pruning all
-  *     apply; a file no input partition mentions is never opened.
+  *  2. BIND ([[bind]], [[where]]): the table schema comes from the
+  *     prologue's listing by inferSchema's rules ([[Statement.schema]]);
+  *     predicates and projections over [[Statement.table]] — that
+  *     schema as a relation, with no listing behind it — are prepared
+  *     ([[prepare]]) and bound to ordinals in one place.
+  *  3. PLAN ([[Statement.candidates]]): the candidates are the files,
+  *     each with its chunks, that the scan's own chunk selection
+  *     ([[ChunkSelection]]) keeps from the prologue's listing for the
+  *     filters the optimizer pushes into the scan — partition, bucket,
+  *     manifest min/max, bloom and chunk pruning all apply; a file it
+  *     drops is never opened.
   *  4. FILE TASKS ([[Statement.execute]]): one task per candidate runs
   *     [[execute]]. A task never mutates the dataset: it writes only
   *     attempt-unique dot-hidden tmps ([[withTmp]] deletes them when
@@ -60,8 +67,9 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * what it drops.
   *
   * Every statement's result carries its driver time by phase
-  * (`phaseMs`, from [[Phases]]): taking the lease, planning, the file
-  * tasks, the commit, and MERGE's inserts.
+  * (`phaseMs`, from [[Phases]]): taking the lease, the prologue and
+  * binding, choosing the candidates, the file tasks, the commit, and
+  * MERGE's inserts.
   *
   * Crash contract: per-file commit order is rename-in THEN remove
   * source, so no committed state ever loses a row; replacement names
@@ -117,16 +125,16 @@ private[graft] object RowLevelStatement {
   }
 
   /** A statement's driver time by phase, from its start (before the
-    * lease) until [[ms]] is read: `lock` (taking the lease), `tasks`
-    * (the file-task job), `commit` (renames, removals, the manifest
-    * write), any phase the statement times itself ([[timed]]; MERGE's
-    * `inserts`), and `plan`, the rest — the prologue, binding and
-    * candidate planning. Phases never nest, so they sum to the elapsed
-    * time. */
+    * lease) until [[ms]] is read: `lock` (taking the lease),
+    * `candidates` ([[Statement.candidates]]), `tasks` (the file-task
+    * job), `commit` (renames, removals, the manifest write), any phase
+    * the statement times itself ([[timed]]; MERGE's `inserts`), and
+    * `plan`, the rest — the prologue and binding. Phases never nest, so
+    * they sum to the elapsed time. */
   final class Phases private[RowLevelStatement] {
     private val start = System.nanoTime()
     private val ns = scala.collection.mutable.LinkedHashMap(
-      "lock" -> 0L, "plan" -> 0L, "tasks" -> 0L, "commit" -> 0L)
+      "lock" -> 0L, "plan" -> 0L, "candidates" -> 0L, "tasks" -> 0L, "commit" -> 0L)
 
     private[RowLevelStatement] def add(phase: String, nanos: Long): Unit =
       ns(phase) = ns.getOrElse(phase, 0L) + nanos
@@ -144,7 +152,7 @@ private[graft] object RowLevelStatement {
   }
 
   /** One candidate file of a statement. `plannedChunks` are the chunks
-    * the pushed scan kept (pruned chunks cannot match); `stats` are the
+    * the chunk selection kept (pruned chunks cannot match); `stats` are the
     * file's pre-statement manifest column stats — the bloom/sketch
     * opt-ins a rewrite keeps, and what the splice kernel's blind
     * columns inherit. */
@@ -196,7 +204,22 @@ private[graft] object RowLevelStatement {
     private var log: Option[VortexCommitLog.Ctx] = None
     private var begun = false
     private lazy val rootQ = fs.makeQualified(root).toString
-    private lazy val manifest = StatsManifest.read(root, hconf)
+    /** the root's manifest entries, by qualified file path */
+    private lazy val entries = ChunkSelection.manifestEntries(Seq(root.toString), hconf)
+
+    /** The table as the statement plans it, by inferSchema's rules over
+      * the prologue's listing: its schema and its partition columns. */
+    lazy val (schema: StructType, partCols: Seq[String]) =
+      VortexDataSource.tableSchema(Seq(root.toString), listed, hconf, mergeSchema = false)
+
+    /** the dataset's bucket layout (key, buckets), read once */
+    lazy val bucket: Option[(String, Int)] =
+      try BucketSpecFile.read(root, hconf) catch { case _: Exception => None }
+
+    /** [[schema]] as a relation over the dataset: filtering it costs
+      * analysis and optimization only — no listing, no schema inference */
+    lazy val table: DataFrame = GraftSqlBridge.ofRows(spark, DataSourceV2Relation.create(
+      new VortexTable(schema, Seq(root.toString)), None, None, CaseInsensitiveStringMap.empty()))
 
     /** Open the statement in the commit log (a no-op without one):
       * the log's latest generation becomes the pre-statement state,
@@ -238,24 +261,28 @@ private[graft] object RowLevelStatement {
       }
       val nextSeq = maskBind.get(file).map(_._2.flatMap(m =>
         DeletionVector.parseName(new Path(m).getName).map(_._2)).max + 1).getOrElse(1)
-      Candidate(file, partCols, partValues, plannedChunks, maskFile, nextSeq, dstName,
-        relDir, manifest.get(rel).map(_.cols.map(c => c.name -> c).toMap).getOrElse(Map.empty))
+      Candidate(file, partCols, partValues, plannedChunks, maskFile, nextSeq, dstName, relDir,
+        entries.get(s"$rootQ/$rel").map(_.cols.map(c => c.name -> c).toMap).getOrElse(Map.empty))
     }
 
-    /** the files the pushed-down scan of `filtered` reads, in path
-      * order; `dstName` names each file's replacement */
+    /** The files of the prologue's listing whose chunks can match
+      * `filtered` (a filter over [[table]]), each with its planned
+      * chunks, in path order; `dstName` names each file's replacement.
+      * The selection is the one `filtered`'s scan would plan
+      * ([[scanOf]]: its pushed filters, table schema and evolution
+      * mode), run on the listing the statement holds; a predicate the
+      * optimizer proves false leaves no scan and no candidate. */
     def candidates(filtered: DataFrame, dstName: String => String): Seq[Candidate] =
-      filtered.queryExecution.sparkPlan.collect { case b: BatchScanExec => b }
-        .flatMap(_.inputPartitions).collect { case v: VortexInputPartition => v }
-        .groupBy(_.file).toSeq.sortBy(_._1).map { case (file, ps) =>
-          candidate(file, dstName(new Path(file).getName), ps.head.partCols,
-            ps.head.partValues, ps.flatMap(_.chunkIdxs).distinct.sorted.toArray,
-            ps.head.maskFile)
+      timed("candidates") {
+        scanOf(filtered).toSeq.flatMap(s => ChunkSelection.select(listed, maskBind, entries,
+          s.pushed.toSeq, s.fileSchema, bucket, s.evolution, hconf)).map { f =>
+          candidate(f.file, dstName(f.status.getPath.getName), f.partCols, f.partValues,
+            f.chunks, f.maskFile)
         }
+      }
 
     /** the dataset's bucketing key, if it is bucketed */
-    def bucketKey: Option[String] =
-      (try BucketSpecFile.read(root, hconf) catch { case _: Exception => None }).map(_._1)
+    def bucketKey: Option[String] = bucket.map(_._1)
 
     /** one distributed job, one task per candidate, each running
       * [[RowLevelStatement.execute]] */
@@ -485,6 +512,17 @@ private[graft] object RowLevelStatement {
     require(p.deterministic, s"vortex $op: $what must be deterministic")
     BindReferences.bindReference(p, AttributeSeq(ctx))
   }
+
+  /** The vortex scan of `filtered`'s optimized plan, or None when the
+    * optimizer proves the predicate false and leaves no scan. Its
+    * pushed filters are the OPTIMIZED predicate's (`LIKE 'x%'` pushes
+    * as a `StringStartsWith`, inferred constraints add `IsNotNull`),
+    * not a translation of the analyzed one. Optimization builds the
+    * scan but never plans it. */
+  def scanOf(filtered: DataFrame): Option[VortexScan] =
+    filtered.queryExecution.optimizedPlan.collectFirst {
+      case DataSourceV2ScanRelation(_, s: VortexScan, _, _, _) => s
+    }
 
   /** The WHERE of `filtered` (a table scan under one Filter) bound over
     * the table row, and that row's schema. */

@@ -73,19 +73,17 @@ class VortexCatalog extends TableCatalog with FunctionCatalog {
     // DataFrame versionAsOf path — schema from the stats manifests,
     // exactly like loadTable's emptied-dataset sibling (review-found r12)
     val schema =
-      if (files.nonEmpty) {
-        val fileSchema = VortexFileReader.readFooter(files.head._1.getPath, conf).schema
-        val partSchema = PartitionedLayout.inferPartitionSchema(files)
-        StructType(fileSchema.fields ++ partSchema.fields.filterNot(f =>
-          fileSchema.fieldNames.contains(f.name) || f.name == BucketSpecFile.BucketCol))
-      } else
+      if (files.nonEmpty)
+        VortexDataSource.withPartitions(
+          VortexFileReader.readFooter(files.head._1.getPath, conf).schema, files)._1
+      else
         // manifest file schema PLUS partition columns reconstructed from
         // the entries' rel paths — same recovery as inferSchema's
         // emptied-dataset branch (review-found r13: the manifest-only
         // form dropped partition columns, failing analysis of any
         // reference to one on a partitioned dataset pinned to an empty
         // generation)
-        VortexDataSource.manifestRecoveredSchema(Seq(p), conf)
+        VortexDataSource.manifestRecoveredSchema(Seq(p), conf).map(_._1)
           .getOrElse(throw new IllegalArgumentException(
             s"vortex: generation $gen of $p is empty and the dataset has " +
             "no stats manifest to recover a schema from"))

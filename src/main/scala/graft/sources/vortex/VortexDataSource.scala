@@ -46,43 +46,8 @@ class VortexDataSource extends TableProvider with DataSourceRegister {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val conf = SparkSession.active.sessionState.newHadoopConf()
-    val listed = VortexDataSource.listAll(paths(options), conf)
-    // manifest-held schema (round-4 format): a covered dataset infers
-    // with zero footer I/O; planning's drift guard still validates any
-    // file the manifest doesn't cover. One lookup serves both the
-    // normal fast path and the emptied-dataset fallback below.
-    lazy val manifestSchema: Option[StructType] =
-      paths(options).iterator.flatMap { raw =>
-        try StatsManifest.rootOf(raw, conf).flatMap(p => StatsManifest.readAll(p, conf)._1)
-        catch { case _: Exception => None }
-      }.nextOption()
-    if (listed.isEmpty) {
-      // a DELETE can legitimately empty the dataset (every file dropped
-      // whole) while the directory and its commit manifests remain — the
-      // TABLE still exists with zero rows, and a later statement
-      // referencing it (e.g. a subquery over the purged corpus) must
-      // resolve, not fail analysis (fuzz-found r12). The manifests
-      // recorded the file schema; PARTITION columns live only in
-      // directory paths, so reconstruct them from the manifest entries'
-      // relative paths (review-found r12 — dropping them would fail any
-      // later reference to a partition column of the purged dataset).
-      // Only a dataset with neither files nor a manifest is truly
-      // "no files found". (Reconstruction shared with the VERSION AS OF
-      // empty-generation path — VortexDataSource.manifestRecoveredSchema.)
-      return VortexDataSource.manifestRecoveredSchema(paths(options), conf)
-        .getOrElse(throw new IllegalArgumentException(
-          s"vortex: no files found for ${paths(options).mkString(",")}"))
-    }
-    val fileSchema =
-      if (Option(options.get("mergeschema")).exists(_.toBoolean))
-        VortexDataSource.mergedSchema(paths(options), listed, conf)
-      else
-        manifestSchema.getOrElse(
-          VortexFileReader.readFooter(listed.head._1.getPath, conf).schema)
-    val partSchema = PartitionedLayout.inferPartitionSchema(listed)
-    // __bucket is layout, not data: never surfaces as a column
-    StructType(fileSchema.fields ++ partSchema.fields.filterNot(f =>
-      fileSchema.fieldNames.contains(f.name) || f.name == BucketSpecFile.BucketCol))
+    VortexDataSource.tableSchema(paths(options), VortexDataSource.listAll(paths(options), conf),
+      conf, Option(options.get("mergeschema")).exists(_.toBoolean))._1
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -209,38 +174,78 @@ object VortexDataSource {
   def expand(raw: Seq[String], conf: org.apache.hadoop.conf.Configuration): Seq[Path] =
     listAll(raw, conf).map(_._1.getPath)
 
-  /** Emptied-dataset schema recovery, shared by inferSchema's
-    * zero-files branch and the catalog's empty-generation VERSION AS OF
-    * path: file schema from the stats manifests, plus PARTITION columns
-    * reconstructed from the manifest entries' relative directory
-    * segments — partition columns live only in paths, so dropping them
-    * would fail any later reference to a partition column of the
-    * purged dataset (review-found r12; the time-travel sibling dropped
-    * them, review-found r13). */
-  def manifestRecoveredSchema(raws: Seq[String],
-                              conf: org.apache.hadoop.conf.Configuration): Option[StructType] = {
-    val fileSchema = raws.iterator.flatMap { raw =>
+  /** The table schema of `listed`, the files under `raws`, and the
+    * names of its partition columns — inferSchema's rules, which a
+    * row-level statement applies to the listing it already holds:
+    *  - the file schema is the manifest-held one (zero footer I/O;
+    *    planning's drift guard still validates any file the manifest
+    *    does not cover), else the first file's footer, or under
+    *    `mergeSchema` the by-name union of every file's
+    *    ([[mergedSchema]]);
+    *  - then come the partition columns the paths carry
+    *    ([[withPartitions]]);
+    *  - a DELETE can legitimately empty the dataset (every file dropped
+    *    whole) while the directory and its manifests remain: the table
+    *    still exists with zero rows, and a later statement referencing
+    *    it must resolve (fuzz-found r12) — [[manifestRecoveredSchema]].
+    *    Only a dataset with neither files nor a manifest is "no files
+    *    found". */
+  def tableSchema(raws: Seq[String],
+                  listed: Seq[(org.apache.hadoop.fs.FileStatus, Seq[(String, String)])],
+                  conf: org.apache.hadoop.conf.Configuration,
+                  mergeSchema: Boolean): (StructType, Seq[String]) =
+    if (listed.isEmpty)
+      manifestRecoveredSchema(raws, conf).getOrElse(throw new IllegalArgumentException(
+        s"vortex: no files found for ${raws.mkString(",")}"))
+    else withPartitions(
+      if (mergeSchema) mergedSchema(raws, listed, conf)
+      else manifestSchema(raws, conf).getOrElse(
+        VortexFileReader.readFooter(listed.head._1.getPath, conf).schema),
+      listed)
+
+  /** the schema the first readable stats manifest of `raws` recorded */
+  private def manifestSchema(raws: Seq[String],
+                             conf: org.apache.hadoop.conf.Configuration): Option[StructType] =
+    raws.iterator.flatMap { raw =>
       try StatsManifest.rootOf(raw, conf).flatMap(p => StatsManifest.readAll(p, conf)._1)
       catch { case _: Exception => None }
     }.nextOption()
-    fileSchema.map { fsch =>
+
+  /** `fileSchema` plus the partition columns whose `col=value` segments
+    * `files`' paths carry and that it does not store, and the names of
+    * every such partition column (`__bucket` is layout, never a column) */
+  def withPartitions(fileSchema: StructType,
+                     files: Seq[(org.apache.hadoop.fs.FileStatus, Seq[(String, String)])])
+      : (StructType, Seq[String]) = {
+    val part = PartitionedLayout.inferPartitionSchema(files).fields
+      .filter(_.name != BucketSpecFile.BucketCol)
+    (StructType(fileSchema.fields ++ part.filterNot(f => fileSchema.fieldNames.contains(f.name))),
+      part.map(_.name).toSeq)
+  }
+
+  /** Emptied-dataset schema recovery, shared by [[tableSchema]] and the
+    * catalog's empty-generation VERSION AS OF path: file schema from the
+    * stats manifests, plus PARTITION columns reconstructed from the
+    * manifest entries' relative directory segments — partition columns
+    * live only in paths, so dropping them would fail any later
+    * reference to a partition column of the purged dataset
+    * (review-found r12; the time-travel sibling dropped them,
+    * review-found r13). Returns the schema and its partition columns. */
+  def manifestRecoveredSchema(raws: Seq[String], conf: org.apache.hadoop.conf.Configuration)
+      : Option[(StructType, Seq[String])] =
+    manifestSchema(raws, conf).map { fsch =>
       val entryRels = raws.iterator.flatMap { raw =>
         try StatsManifest.rootOf(raw, conf).map(p =>
           StatsManifest.readAll(p, conf)._2.keys.toSeq).getOrElse(Seq.empty)
         catch { case _: Exception => Seq.empty }
       }.toSeq
-      val segs: Seq[(org.apache.hadoop.fs.FileStatus, Seq[(String, String)])] =
-        entryRels.map { rel =>
-          (null, rel.split('/').dropRight(1).toSeq.filter(_.contains("=")).map { s =>
-            val Array(k, v) = s.split("=", 2)
-            k -> PartitionedLayout.unescape(v)
-          })
-        }
-      val partSchema = PartitionedLayout.inferPartitionSchema(segs)
-      StructType(fsch.fields ++ partSchema.fields.filterNot(f =>
-        fsch.fieldNames.contains(f.name) || f.name == BucketSpecFile.BucketCol))
+      withPartitions(fsch, entryRels.map { rel =>
+        (null, rel.split('/').dropRight(1).toSeq.filter(_.contains("=")).map { s =>
+          val Array(k, v) = s.split("=", 2)
+          k -> PartitionedLayout.unescape(v)
+        })
+      })
     }
-  }
 
   /** Reader-side type guard: a name matched between the read schema
     * and a file's footer must keep its exact type — defense in depth
@@ -703,15 +708,17 @@ case class VortexInputPartition(file: String, chunkIdxs: Array[Int],
   override def partitionKey(): org.apache.spark.sql.catalyst.InternalRow = partKey
 }
 
-class VortexScan(fileSchema: StructType, required: StructType,
+class VortexScan(private[vortex] val fileSchema: StructType, required: StructType,
                  initialFilters: Array[Filter], paths: Seq[String],
                  pushedLimit: Option[Int] = None,
-                 evolution: Boolean = false,
+                 private[vortex] val evolution: Boolean = false,
                  versionAsOf: Option[Int] = None)
     extends Scan with Batch
     with SupportsReportStatistics with SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
   private var filters: Array[Filter] = initialFilters
+  /** the filters planning prunes by: the pushed ones, then any runtime ones */
+  private[vortex] def pushed: Array[Filter] = filters
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String)
@@ -766,14 +773,17 @@ class VortexScan(fileSchema: StructType, required: StructType,
     *    storage-partitioned execution on a non-partition column.
     *  - Hive-partitioned datasets → KeyGroupedPartitioning(identity…):
     *    same elision, keyed on the partition columns.
-    * Everything else reports UnknownPartitioning. */
+    * Everything else reports UnknownPartitioning, whose partition count
+    * Spark never reads — so with SPJ off the optimizer's partitioning
+    * pass does not plan the scan. */
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning = {
     import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, UnknownPartitioning}
     import org.apache.spark.sql.connector.expressions.Expressions
-    val parts = planInputPartitions().map(_.asInstanceOf[VortexInputPartition])
     val spjOn =
       SparkSession.active.conf.get("spark.sql.sources.v2.bucketing.enabled", "false") == "true"
-    val bucketGrouped = datasetBucket.isDefined && spjOn && parts.nonEmpty &&
+    if (!spjOn) return new UnknownPartitioning(0)
+    val parts = planInputPartitions().map(_.asInstanceOf[VortexInputPartition])
+    val bucketGrouped = datasetBucket.isDefined && parts.nonEmpty &&
       parts.forall(p => p.bucketId >= 0 && p.partKey != null) &&
       required.fieldNames.contains(datasetBucket.get._1)
     val identityGrouped = !bucketGrouped && datasetBucket.isEmpty && spjOn &&
@@ -817,220 +827,14 @@ class VortexScan(fileSchema: StructType, required: StructType,
         VortexCommitLog.resolve(new Path(paths.head), conf, g)
       case None => VortexDataSource.listAllWithMasks(paths, conf)
     }
-    val partSchema = StructType(fileSchema.fields.filter(f =>
-      listed.exists(_._2.exists(_._1 == f.name))))
+    // a pushed LIMIT (filter-free by construction) plans a chunk prefix:
+    // a LIMIT 10 over a 100 TB dataset plans one split of one file
+    val files = ChunkSelection.select(listed, maskBind, ChunkSelection.manifestEntries(paths, conf),
+      filters.toSeq, fileSchema, datasetBucket, evolution, conf,
+      limit = if (filters.isEmpty) pushedLimit.fold(Long.MaxValue)(_.toLong) else Long.MaxValue)
+    val totRows = files.map(_.metas.map(_.rowCount.toLong).sum).sum
+    val totBytes = files.map(_.bytes.sum).sum
     val parts = scala.collection.mutable.ArrayBuffer[InputPartition]()
-    // tier 1 first (no I/O): partition-directory pruning
-    val surviving0 = listed.filter { case (_, kvs) =>
-      filters.forall(fl => PartitionedLayout.survives(fl, kvs.toMap, partSchema))
-    }
-    // pruning tier 0.5: bucket pruning — an equality/IN filter on the
-    // bucket key hashes its literals to the only buckets that can hold
-    // them; every other `__bucket=k` directory drops with zero I/O
-    // (point lookups on a bucketed 100 TB dataset touch 1/n of files)
-    val surviving = (if (filters.isEmpty) None
-                     else paths.flatMap { raw =>
-                       try BucketSpecFile.read(new Path(raw), conf) catch { case _: Exception => None }
-                     }.headOption) match {
-      case Some((bkey, n)) if fileSchema.fieldNames.contains(bkey) =>
-        val dt = fileSchema(bkey).dataType
-        BucketSpecFile.allowedBuckets(filters, bkey, dt, n) match {
-          case Some(allowed) =>
-            surviving0.filter { case (_, kvs) =>
-              kvs.collectFirst { case (BucketSpecFile.BucketCol, v) => v } match {
-                case Some(b) => scala.util.Try(b.toInt).toOption.forall(allowed.contains)
-                case None => true // unbucketed stray file: keep
-              }
-            }
-          case None => surviving0
-        }
-      case _ => surviving0
-    }
-    // chunk metas hold DATA columns only (partition values live in the
-    // path): every canSkip call below must index with the data schema,
-    // not fileSchema (which appends partition fields)
-    val dataSchema = StructType(
-      fileSchema.fields.filterNot(f => partSchema.fieldNames.contains(f.name)))
-    val expectedData: Seq[(String, DataType)] =
-      dataSchema.fields.toSeq.map(f => (f.name, f.dataType))
-    // manifest-trust key: (name, type, ts-unit) — a unit mismatch must
-    // fall to the footer path, whose pruning/decode use the file's own
-    // schema (see StatsManifest.schemaRecordedAndMatches)
-    val expectedUnits: Seq[(String, DataType, String)] =
-      dataSchema.fields.toSeq.map(f => (f.name, f.dataType, VortexFormat.tsUnit(f)))
-    // commit manifests: tier-1.5 file pruning AND — since the round-4
-    // format carries per-chunk stats + the file schema — the primary
-    // chunk-meta source, so planning a manifest-covered dataset does
-    // ZERO per-file footer I/O. Chunk stats are trusted only when the
-    // entry's OWN manifest recorded a schema matching the table's (a
-    // root can hold manifests with different schemas — merged datasets,
-    // racing first writers — so one shared verdict would let drifted
-    // files skip the footer drift guard and decode garbage); stripped
-    // entries fall to the footer path, which throws the drift error.
-    // Entries are validated by (path, length).
-    val manifestEntries: Map[String, StatsManifest.FileStats] =
-      paths.flatMap { raw =>
-        try {
-          StatsManifest.rootOf(raw, conf).toSeq.flatMap { p =>
-            val fs = p.getFileSystem(conf)
-            val rootQ = fs.makeQualified(p).toString
-            val (_, entries) = StatsManifest.readAll(p, conf)
-            entries.values.map { e =>
-              s"$rootQ/${e.relPath}" ->
-                (if (e.schemaRecordedAndMatches(expectedUnits)) e else e.copy(chunks = None))
-            }
-          }
-        } catch { case _: Exception => Nil }
-      }.toMap
-    val (chunkSources, needFooterFiles) = {
-      val covered = scala.collection.mutable.Map[String, IndexedSeq[StatsManifest.ChunkStats]]()
-      val fallback = scala.collection.mutable.ArrayBuffer[Path]()
-      surviving.foreach { case (st, _) =>
-        manifestEntries.get(st.getPath.toString) match {
-          case Some(m) if m.len == st.getLen && m.chunks.isDefined =>
-            covered(st.getPath.toString) = m.chunks.get
-          case _ => fallback += st.getPath
-        }
-      }
-      (covered, fallback.toSet)
-    }
-    // tier 1.5: whole-file pruning from manifest-held stats — drops a
-    // file whose entire range a filter excludes before any chunk walk.
-    // Fallback files with a recorded, matching schema (round-4+
-    // manifests whose chunk stats were dropped) still prune at FILE
-    // level before their footer fetch; schema-LESS (round-3) entries
-    // never prune — see the strict-schema note below.
-    val pruners = scala.collection.mutable.Map[StructType, VortexFormat.ChunkMeta => Boolean]()
-    def prunerFor(schema: StructType) =
-      pruners.getOrElseUpdate(schema, FilterPruning.pruner(filters.toSeq, schema))
-    val skipData = prunerFor(dataSchema)
-    val survivingPruned = surviving.filter { case (st, _) =>
-      if (filters.isEmpty) true
-      else {
-        // manifest-held file blooms: an `=`/`IN` probe that misses the
-        // bloom drops the file outright — the lookup path where ranges
-        // never prune (high-cardinality unsorted ids)
-        val bloomDrop = manifestEntries.get(st.getPath.toString).exists(m =>
-          m.len == st.getLen && m.schemaRecordedAndMatches(expectedUnits) &&
-          m.cols.exists(_.bloom.isDefined) && {
-            val blooms = m.cols.collect {
-              case c if c.bloom.isDefined => c.name -> c.bloom.get
-            }.toMap
-            filters.exists(fl => FilterPruning.bloomSkip(fl,
-              n => blooms.get(n).flatMap(Sbbf.fromBytes), dataSchema))
-          })
-        if (bloomDrop) false
-        else chunkSources.get(st.getPath.toString) match {
-          case Some(chunks) => !chunks.forall(ch => skipData(ch.toChunkMeta))
-          case None =>
-            // strict schema check even for file-level stats: min/max
-            // are raw storage bytes decoded under the EXPECTED type,
-            // so a schema-less (round-3) entry over a drifted file
-            // would compare garbage (or crash planning) where the
-            // footer path throws the loud drift error. Schema-less
-            // entries therefore get no pruning — their files pay one
-            // footer fetch and keep the drift guard.
-            manifestEntries.get(st.getPath.toString) match {
-              case Some(m) if m.len == st.getLen && m.schemaRecordedAndMatches(expectedUnits) =>
-                !skipData(m.toChunkMeta(dataSchema))
-              case _ => true
-            }
-        }
-      }
-    }
-    // prefetch ONLY the fallback footers, in parallel: at large file
-    // counts against an object store serial footer round-trips would
-    // dominate planning latency; fetches land in the per-JVM cache
-    val prefetch = survivingPruned.map(_._1.getPath).filter(needFooterFiles.contains)
-    if (prefetch.length > 1)
-      java.util.Arrays.stream(prefetch.toArray).parallel()
-        .forEach(p => { VortexFileReader.readFooter(p, conf); () })
-    // pushed LIMIT (filter-free by construction): keep only a chunk
-    // prefix covering >= limit rows — a LIMIT 10 over a 100 TB dataset
-    // plans one split of one file instead of ~800k
-    var limitRemaining: Long =
-      if (filters.isEmpty) pushedLimit.map(_.toLong).getOrElse(Long.MaxValue)
-      else Long.MaxValue
-    var totRows = 0L
-    var totBytes = 0L
-    // (file, kept (chunkIdx, rows, bytes), partCols, partVals, partKey, bucket, mask)
-    val pendingFiles = scala.collection.mutable.ArrayBuffer[
-      (String, Array[(Int, Long, Long)], Array[String], Array[String],
-       org.apache.spark.sql.catalyst.expressions.GenericInternalRow, Int, String)]()
-    survivingPruned.foreach { case (st, kvs0) =>
-      if (limitRemaining > 0L) {
-        val f = st.getPath
-        // chunk metas: manifest-held stats, else the file footer (with
-        // the schema-drift guard — inferSchema trusts the first footer;
-        // a directory mixing drifted files would otherwise decode
-        // garbage, since readers map columns by index). `pruneSchema`
-        // is the schema the metas are POSITIONALLY aligned with: the
-        // table schema for manifest stats (recorded-and-matching by
-        // construction), the file's own footer schema otherwise — under
-        // evolution a file may carry a name-compatible subset, and
-        // pruning its chunks against table positions would skip wrong.
-        val (chunkMetas, pruneSchema): (IndexedSeq[(VortexFormat.ChunkMeta, Long)], StructType) =
-          chunkSources.get(f.toString) match {
-            case Some(chunks) => (chunks.map(ch => (ch.toChunkMeta, ch.bytes)), dataSchema)
-            case None =>
-              val footer = VortexFileReader.readFooter(f, conf)
-              val got = footer.schema.fields.toSeq.map(fl => (fl.name, fl.dataType))
-              if (got != expectedData) {
-                // evolution mode tolerates added/dropped columns; a
-                // shared NAME must keep its type — silent retyping is
-                // the drift case that decodes garbage
-                val tableTypes = expectedData.toMap
-                val compatible = evolution &&
-                  got.forall { case (n, dt) => tableTypes.get(n).forall(_ == dt) }
-                if (!compatible)
-                  throw new VortexSchemaDriftException(
-                    s"vortex: schema drift in $f: file columns ${got.mkString("[", ", ", "]")} " +
-                    s"do not match the table's data columns ${expectedData.mkString("[", ", ", "]")}")
-              }
-              (footer.chunks.toIndexedSeq.map(ch =>
-                (ch, ch.columns.map(_.length.toLong).sum)), footer.schema)
-          }
-        // __bucket is a layout segment, not a partition column
-        val kvs = kvs0.filter { case (k, _) => partSchema.fieldNames.contains(k) }
-        val pc = kvs.map(_._1).toArray
-        val pv = kvs.map(_._2).toArray
-        val bucketId = kvs0.collectFirst { case (BucketSpecFile.BucketCol, v) => v }
-          .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(-1)
-        // bucketed datasets group by bucket id (see outputPartitioning);
-        // otherwise the typed Hive-partition values are the group key
-        val pk =
-          if (datasetBucket.isDefined && bucketId >= 0)
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              Array[Any](bucketId))
-          else if (kvs.isEmpty) null
-          else new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            kvs.map { case (k, v) =>
-              PartitionedLayout.toInternal(v, partSchema(k).dataType)
-            }.toArray[Any])
-        val mask = maskBind.get(f.toString).map(_._1).orNull
-        val kept = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
-        val skip = prunerFor(pruneSchema)
-        chunkMetas.zipWithIndex.foreach { case ((chunk, chunkBytes), ci) =>
-          // tier 2: per-chunk stats pruning (manifest metas carry the
-          // same nullCount/min/max the footer would). Sound over a
-          // masked file too: a mask only REMOVES rows, so min/max can
-          // only over-approximate.
-          val keep = limitRemaining > 0L && !skip(chunk)
-          if (keep) {
-            // pushed-LIMIT trim accounting trusts rowCount; a masked
-            // chunk delivers FEWER rows, so decrementing by rowCount
-            // could under-plan — masked files never decrement
-            // (conservative: the limit above still trims the output)
-            if (limitRemaining != Long.MaxValue && mask == null)
-              limitRemaining = math.max(0L, limitRemaining - chunk.rowCount)
-            totRows += chunk.rowCount
-            totBytes += chunkBytes
-            kept += ((ci, chunk.rowCount.toLong, chunkBytes))
-          }
-        }
-        if (kept.nonEmpty) pendingFiles += ((f.toString, kept.toArray, pc, pv, pk, bucketId, mask))
-      }
-    }
     // Split planning AFTER the walk, when the kept rows are known. A
     // file holding the share r of the scan's kept rows splits into
     // ceil(r × P) contiguous chunk groups of similar row counts
@@ -1050,7 +854,17 @@ class VortexScan(fileSchema: StructType, required: StructType,
     val parallelism = math.max(spark.sparkContext.defaultParallelism, 1).toLong
     val spjOn =
       spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false") == "true"
-    pendingFiles.foreach { case (f, kept, pc, pv, pk, bucketId, mask) =>
+    files.foreach { sel =>
+      import sel.{bucketId, file => f, partCols => pc, partValues => pv, maskFile => mask}
+      // bucketed datasets group by bucket id (see outputPartitioning);
+      // otherwise the typed Hive-partition values are the group key
+      val pk =
+        if (datasetBucket.isDefined && bucketId >= 0) new GenericInternalRow(Array[Any](bucketId))
+        else if (pc.isEmpty) null
+        else new GenericInternalRow(pc.indices.map(i =>
+          PartitionedLayout.toInternal(pv(i), fileSchema(pc(i)).dataType)).toArray[Any])
+      val kept = sel.chunks.indices.map(i =>
+        (sel.chunks(i), sel.metas(i).rowCount.toLong, sel.bytes(i)))
       val fileRows = kept.map(_._2).sum
       val groups =
         if ((pk != null && spjOn) || fileRows == 0L) 1L

@@ -13,8 +13,9 @@ import org.apache.spark.sql.types.StructType
   *
   * The statement is the single clause `[(predicate, DELETE)]` of the
   * shared row-level pipeline: RowLevelStatement plans the candidates
-  * (exactly the files the pushed-down scan of `load(dir).filter(pred)`
-  * reads), runs one non-destructive task per candidate — whose kernel
+  * (the files, and their chunks, that the scan's own chunk selection
+  * keeps from the statement's listing for the filters the predicate
+  * pushes down), runs one non-destructive task per candidate — whose kernel
   * (untouched, drop-whole, mask, the splice kernel or the row path) comes
   * from RowLevelStatement's kernel table — and commits under a
   * replacement name derived DETERMINISTICALLY from the source file
@@ -90,7 +91,7 @@ object VortexDelete {
       if (st.listed.isEmpty) DeleteResult(0, 0, 0, 0, 0L, phaseMs = st.phaseMs)
       else {
         st.begin()
-        val filtered = spark.read.format("vortex").load(dir).filter(predicate)
+        val filtered = st.table.filter(predicate)
         val (schema, cond) = RowLevelStatement.where(filtered, "delete")
         val cands = st.candidates(filtered, replacementName)
         val outcomes = st.execute(cands, Shape("delete", schema, Seq(Clause(Some(cond), None)),

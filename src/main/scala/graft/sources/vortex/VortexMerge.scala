@@ -25,13 +25,14 @@ import org.apache.spark.sql.types.StructType
   * bounded-driver-state discipline as UnigramLM's cap), because every
   * candidate file task needs random-access lookup by key. The TARGET
   * side stays fully distributed and file-granular:
-  *  - candidates = the pushed scan's own partitions for
-  *    `key IN (source keys)` when the key set is small enough to push
-  *    (≤ 10k rows, single-column keys — manifest min/max, blooms and
-  *    partition pruning then skip untouched files with zero I/O);
-  *    otherwise every file is a candidate and classification decides.
-  *    The filter is one `InSet` of the source's Catalyst key values,
-  *    which already carry the key's type: the analyzer has nothing to
+  *  - candidates = the files and chunks the scan's chunk selection
+  *    keeps, from the statement's listing, for `key IN (source keys)`
+  *    when the key set is small enough to push (≤ 10k rows,
+  *    single-column keys — manifest min/max, blooms and partition
+  *    pruning then skip untouched files with zero I/O); otherwise
+  *    every file is a candidate and classification decides. The
+  *    filter is one `InSet` of the source's Catalyst key values, which
+  *    already carry the key's type: the analyzer has nothing to
   *    coerce, and the scan is pushed the same `sources.In` as an `IN`
   *    of literals.
   *  - one NON-DESTRUCTIVE task per candidate file runs the statement
@@ -100,18 +101,19 @@ object VortexMerge {
                             failAfterCommits: Int = -1,
                             failAfterInserts: Int = -1): MergeResult = {
     require(keyCols.nonEmpty, "vortex merge: no key columns")
-    val target = spark.read.format("vortex").load(dir)
-    val tSchema = target.schema
-    keyCols.foreach(k => require(tSchema.fieldNames.contains(k),
-      s"vortex merge: key column $k is not a column of the target"))
-    val aligned = source.select(tSchema.fields.map(f =>
-      col(s"`${f.name}`").cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-    val srcAttrs = aligned.queryExecution.analyzed.output
-    val keyIdx = keyCols.map(tSchema.fieldIndex).toArray
-    statement(spark, dir, aligned, target.queryExecution.analyzed.output, srcAttrs,
-      keyIdx, keyIdx, Seq(MatchedAction(None, Some(srcAttrs))),
-      Seq(NotMatchedAction(None, srcAttrs)), Nil, "upsert", maxSourceRows,
-      failAfterCommits, failAfterInserts, ansiScalarDups = false, wholeRow = true)
+    RowLevelStatement.run(spark, dir, "merge") { st =>
+      val tSchema = st.schema
+      keyCols.foreach(k => require(tSchema.fieldNames.contains(k),
+        s"vortex merge: key column $k is not a column of the target"))
+      val aligned = source.select(tSchema.fields.map(f =>
+        col(s"`${f.name}`").cast(f.dataType).as(f.name)).toIndexedSeq: _*)
+      val srcAttrs = aligned.queryExecution.analyzed.output
+      val keyIdx = keyCols.map(tSchema.fieldIndex).toArray
+      statement(st, aligned, st.table.queryExecution.analyzed.output, srcAttrs,
+        keyIdx, keyIdx, Seq(MatchedAction(None, Some(srcAttrs))),
+        Seq(NotMatchedAction(None, srcAttrs)), Nil, "upsert", maxSourceRows,
+        failAfterCommits, failAfterInserts, ansiScalarDups = false, wholeRow = true)
+    }
   }
 
   /** One `WHEN MATCHED [AND cond] THEN UPDATE/DELETE` clause. `cond`
@@ -165,17 +167,24 @@ object VortexMerge {
                    // key actually MATCHES a targeted row — defer the
                    // duplicate check to match time instead of the
                    // statement-global broadcast-time require
-                   ansiScalarDups: Boolean = false): MergeResult =
-    statement(spark, dir, source, targetAttrs, sourceAttrs, keyIdxTarget, keyIdxSource,
-      matchedActions, notMatchedActions, notMatchedBySourceActions, clauseFingerprint,
-      maxSourceRows, failAfterCommits = -1, failAfterInserts, ansiScalarDups,
-      wholeRow = false)
+                   ansiScalarDups: Boolean = false): MergeResult = {
+    require(keyIdxTarget.nonEmpty && keyIdxTarget.length == keyIdxSource.length,
+      "vortex merge: ON must be a conjunction of target-key = source-key equalities")
+    require(matchedActions.nonEmpty || notMatchedActions.nonEmpty ||
+        notMatchedBySourceActions.nonEmpty,
+      "vortex merge: no WHEN clauses")
+    RowLevelStatement.run(spark, dir, "merge")(statement(_, source, targetAttrs, sourceAttrs,
+      keyIdxTarget, keyIdxSource, matchedActions, notMatchedActions, notMatchedBySourceActions,
+      clauseFingerprint, maxSourceRows, failAfterCommits = -1, failAfterInserts, ansiScalarDups,
+      wholeRow = false))
+  }
 
-  /** The MERGE statement behind [[merge]] and [[mergeClauses]].
+  /** The MERGE statement behind [[merge]] and [[mergeClauses]], run on
+    * the statement `st` over its table ([[RowLevelStatement.Statement.table]]).
     * `wholeRow` adds the upsert's up-front source check: every source
     * value lands in the target verbatim, so a NULL for a non-nullable
     * target column fails before anything runs. */
-  private def statement(spark: SparkSession, dir: String, source: DataFrame,
+  private def statement(st: RowLevelStatement.Statement, source: DataFrame,
                         targetAttrs: Seq[Attribute], sourceAttrs: Seq[Attribute],
                         keyIdxTarget: Array[Int], keyIdxSource: Array[Int],
                         matchedActions: Seq[MatchedAction],
@@ -184,15 +193,10 @@ object VortexMerge {
                         clauseFingerprint: String, maxSourceRows: Int,
                         failAfterCommits: Int, failAfterInserts: Int,
                         ansiScalarDups: Boolean, wholeRow: Boolean): MergeResult = {
-    require(keyIdxTarget.nonEmpty && keyIdxTarget.length == keyIdxSource.length,
-      "vortex merge: ON must be a conjunction of target-key = source-key equalities")
-    require(matchedActions.nonEmpty || notMatchedActions.nonEmpty ||
-        notMatchedBySourceActions.nonEmpty,
-      "vortex merge: no WHEN clauses")
-    RowLevelStatement.run(spark, dir, "merge") { st =>
+    val spark = st.spark
     st.begin()
-    val target = spark.read.format("vortex").load(dir)
-    val tSchema = target.schema
+    val target = st.table
+    val tSchema = st.schema
     require(targetAttrs.length == tSchema.length &&
       targetAttrs.zip(tSchema.fields).forall { case (a, f) =>
         a.name == f.name && a.dataType == f.dataType },
@@ -334,7 +338,6 @@ object VortexMerge {
       outcomes.count(_.change == Drop),
       RowLevelStatement.kernels(outcomes),
       st.phaseMs)
-    } // RowLevelStatement.run
   }
 
   /** The shared insert half: stage `rows` (target-schema Catalyst rows)
@@ -356,10 +359,11 @@ object VortexMerge {
     val stage = new Path(root, s".merge-stage-$srcHash")
     fs.delete(stage, true) // leftover scratch of a crashed run
     import scala.jdk.CollectionConverters._
-    val layoutPartCols = st.listed.flatMap(_._2.map(_._1)).distinct
-      .filterNot(_ == BucketSpecFile.BucketCol)
-    val bucketSpec =
-      try BucketSpecFile.read(root, hconf) catch { case _: Exception => None }
+    // the layout the statement planned with: an emptied dataset keeps
+    // its partition columns (recovered from the manifest), so inserts
+    // still land under their `col=value` directories
+    val layoutPartCols = st.partCols
+    val bucketSpec = st.bucket
     // the staged files (path, stage-relative path, manifest entry) and
     // their schema
     val (staged, stagedSchema): (Seq[(Path, String, Option[StatsManifest.FileStats])],

@@ -1,7 +1,6 @@
 package graft.sources.vortex
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.expressions.NamedReference
@@ -29,8 +28,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * there), min/max over partition-path columns, or schema drift.
   */
 object VortexStatsPushdown {
-  import VortexFormat.{ChunkMeta, Footer}
-
   private sealed trait Spec
   private case object CountStarSpec extends Spec
   private case class CountColSpec(col: String) extends Spec
@@ -111,30 +108,20 @@ object VortexStatsPushdown {
       case CountStarSpec =>
     }
 
-    // manifest entries first (round-4 manifests carry per-chunk stats
-    // AND writer-exact column sums, so a covered dataset aggregates
-    // with zero footer I/O); count/min/max fall back to footers for
-    // uncovered files — SUM cannot (footers carry no sums) and bails.
-    // rootOf resolves glob/file paths to their dataset directory.
+    // the scan's own chunk selection with no filters: manifest chunk
+    // stats where an entry is trusted (zero footer I/O), footers
+    // otherwise; where the scan would throw (drift), the pushdown bails.
+    // Stats values are STORAGE-domain and the fold converts them through
+    // the TABLE's timestamp units, so a footer whose units differ bails
+    // too; SUM reads the trusted entries' writer-exact sums (footers
+    // carry none).
     val expected = dataFields.toSeq.map(f => (f.name, f.dataType, VortexFormat.tsUnit(f)))
-    // per-ENTRY schema acceptance (not per-root: a root can hold
-    // manifests recorded against different schemas; only entries whose
-    // own manifest matches may serve positional chunk stats / sums)
-    val manifestEntries: Map[String, StatsManifest.FileStats] =
-      paths.flatMap { raw =>
-        try {
-          StatsManifest.rootOf(raw, conf).toSeq.flatMap { p =>
-            val fs = p.getFileSystem(conf)
-            val rootQ = fs.makeQualified(p).toString
-            val (_, entries) = StatsManifest.readAll(p, conf)
-            entries.values.collect {
-              case e if e.schemaRecordedAndMatches(expected) => s"$rootQ/${e.relPath}" -> e
-            }
-          }
-        } catch { case _: Exception => Nil }
-      }.toMap
-    def entryFor(st: org.apache.hadoop.fs.FileStatus): Option[StatsManifest.FileStats] =
-      manifestEntries.get(st.getPath.toString).filter(_.len == st.getLen)
+    val selected =
+      try ChunkSelection.select(listed, maskBind, ChunkSelection.manifestEntries(paths, conf), Nil,
+        fileSchema, None, evolution = false, conf)
+      catch { case _: Exception => return None }
+    if (selected.exists(_.schema.fields.toSeq.map(x =>
+          (x.name, x.dataType, VortexFormat.tsUnit(x))) != expected)) return None
 
     def binLess(a: Array[Byte], b: Array[Byte]): Boolean = {
       var i = 0
@@ -159,23 +146,7 @@ object VortexStatsPushdown {
     }
 
     /** aggregate one file subset (= one group) from metadata alone */
-    def aggregateFiles(files: Seq[(org.apache.hadoop.fs.FileStatus, Seq[(String, String)])])
-        : Option[Array[Any]] = {
-      val chunkLists: Seq[Seq[ChunkMeta]] =
-        try files.map { case (st, _) =>
-          entryFor(st).flatMap(_.chunks) match {
-            case Some(chunks) => chunks.map(_.toChunkMeta)
-            case None =>
-              val f = VortexFileReader.readFooter(st.getPath, conf)
-              // units included: stats values are STORAGE-domain and the
-              // fold converts via the TABLE's ts units — a unit
-              // mismatch must bail to the normal scan
-              if (f.schema.fields.toSeq.map(x =>
-                    (x.name, x.dataType, VortexFormat.tsUnit(x))) != expected) return None
-              f.chunks.toSeq
-          }
-        } catch { case _: Exception => return None }
-
+    def aggregateFiles(files: Seq[ChunkSelection.Selected]): Option[Array[Any]] = {
       // SUM inputs: every file must carry a writer-exact sum for the
       // column (and its non-null count, for NULL-when-empty); any gap
       // or overflow bails the whole pushdown
@@ -184,8 +155,8 @@ object VortexStatsPushdown {
           var total = 0L
           var nn = 0L
           var ok = true
-          files.foreach { case (st, _) =>
-            entryFor(st) match {
+          files.foreach { f =>
+            f.entry match {
               case Some(e) if ok =>
                 e.cols.find(_.name == n) match {
                   case Some(c) if c.sum.isDefined =>
@@ -207,8 +178,8 @@ object VortexStatsPushdown {
       // fold state per (col, isMin): Left(long) or Right(utf8 bytes)
       val fold = collection.mutable.Map[(String, Boolean), Either[Long, Array[Byte]]]()
 
-      chunkLists.foreach { chunks =>
-        chunks.foreach { chunk =>
+      files.foreach { f =>
+        f.metas.foreach { chunk =>
           totalRows += chunk.rowCount
           countCols.foreach { n =>
             nonNull(n) += chunk.rowCount - chunk.columns(fieldIdx(n)).nullCount
@@ -304,7 +275,7 @@ object VortexStatsPushdown {
     val rows: Seq[UnsafeRow] =
       try {
         if (groupCols.isEmpty) {
-          val vals = aggregateFiles(listed).getOrElse(return None)
+          val vals = aggregateFiles(selected).getOrElse(return None)
           Seq(proj(new GenericInternalRow(vals)).copy())
         } else {
           // group by the TYPED partition value, not the raw path
@@ -314,10 +285,9 @@ object VortexStatsPushdown {
           // would merge the duplicate groups afterwards.
           // (UTF8String/boxed numerics/Decimal all have value
           // equality, so Seq[Any] keys group correctly.)
-          listed.groupBy { case (_, kvs) =>
-            groupCols.map(g => PartitionedLayout.toInternal(
-              kvs.collectFirst { case (`g`, v) => v }.get, fileSchema(g).dataType))
-          }.toSeq.map { case (gTyped, files) =>
+          selected.groupBy(f => groupCols.map(g => PartitionedLayout.toInternal(
+            f.partValues(f.partCols.indexOf(g)), fileSchema(g).dataType)))
+            .toSeq.map { case (gTyped, files) =>
             val aggVals = aggregateFiles(files).getOrElse(return None)
             proj(new GenericInternalRow((gTyped ++ aggVals).toArray[Any])).copy()
           }

@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions.col
   *
   * The statement is the single clause `[(predicate, SET)]` of the
   * shared row-level pipeline (RowLevelStatement): candidates are the
-  * files the pushed-down scan of `load(dir).filter(pred)` reads, the
+  * files, and their chunks, that the scan's own chunk selection keeps
+  * from the statement's listing for the filters the predicate pushes
+  * down, the
   * SET projection covers the full table row (each assignment cast to
   * its column's exact type, unassigned columns carried as they are),
   * and each candidate's kernel — untouched, merge-on-read append +
@@ -92,8 +94,8 @@ object VortexUpdate {
       if (st.listed.isEmpty) UpdateResult(0, 0, 0, 0L, phaseMs = st.phaseMs)
       else {
         st.begin()
-        val df = spark.read.format("vortex").load(dir)
-        val tableCols = df.schema.fieldNames.toSet
+        val df = st.table
+        val tableCols = st.schema.fieldNames.toSet
         assignments.keys.foreach(k => require(tableCols.contains(k),
           s"vortex update: SET column $k is not a top-level column of the table"))
         val assignKeys: Array[String] = assignments.keys.toArray.sorted

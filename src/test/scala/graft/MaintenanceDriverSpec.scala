@@ -27,7 +27,7 @@ class MaintenanceDriverSpec extends AnyFunSuite {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("vortex_driver").toString
 
-  private val Phases = Seq("lock", "plan", "tasks", "commit")
+  private val Phases = Seq("lock", "plan", "candidates", "tasks", "commit")
 
   /** run `body`, then check its phases against the call's wall clock */
   private def phased[R](keys: Seq[String])(body: => R)(phaseMs: R => Map[String, Long]): R = {

@@ -185,6 +185,26 @@ class VortexMergeSpec extends AnyFunSuite {
     assert(check.where(col("v") === 8L).select("p").head().getString(0) == "p2")
   }
 
+  test("MERGE into a partitioned dataset a DELETE emptied inserts under the partition directory") {
+    import spark.implicits._
+    graft.plans.RewriteVortexDml.install(spark)
+    spark.conf.set("spark.sql.catalog.vtx", "graft.sources.vortex.VortexCatalog")
+    val dir = tmp()
+    Seq((1L, "a", "Brand1"), (2L, "b", "Brand2")).toDF("id", "s", "brand")
+      .write.format("vortex").option("partitionBy", "brand").mode("overwrite").save(dir)
+    VortexDelete.delete(spark, dir, col("brand").like("Bran%"), deletionVectors = true)
+    assert(spark.read.format("vortex").load(dir).count() == 0L)
+    Seq((3L, "c", "Brand3")).toDF("id", "s", "brand").createOrReplaceTempView("emptied_src")
+    spark.sql(s"MERGE INTO vtx.`$dir` t USING emptied_src s ON t.id = s.id " +
+      "WHEN NOT MATCHED THEN INSERT *")
+    val got = spark.read.format("vortex").load(dir).select("id", "s", "brand").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+    assert(got == Seq((3L, "c", "Brand3")))
+    val root = new java.io.File(dir)
+    assert(!root.list().exists(_.startsWith("part-merge-ins-")), root.list().toSeq)
+    assert(new java.io.File(root, "brand=Brand3").list().count(_.startsWith("part-merge-ins-")) == 1)
+  }
+
   test("insert half is exactly-once under crash re-runs, including NULL-key inserts") {
     import spark.implicits._
     val dir = tmp()

@@ -427,7 +427,23 @@ def q_nested_window():
 MAINT_TABLES = ['orders', 'customer', 'events', 'supplier', 'part', 'nestedx']
 
 def maint_pred(t):
-    return nx_pred() if t == 'nestedx' else pred(t)
+    """A DML predicate: the query grammar (pred) plus the shapes whose
+    pruning differs most between translated and optimized filters --
+    IS [NOT] NULL and an IN list above Spark's InSet threshold (10).
+    Drawn here, not in pred(), so query seeds keep their sequences."""
+    if t == 'nestedx':
+        return nx_pred()
+    s = T[t]
+    k = rng.random()
+    if k < 0.15:
+        c = rng.choice(s['ints'] + s['strs'] + s['dbls'])
+        return f"{c} IS {rng.choice(['', 'NOT '])}NULL"
+    if k < 0.3:
+        c = rng.choice(s['ints'])
+        base = int(rng.choice(CONST[t][c]))
+        vals = rng.sample(range(base - 40, base + 41), rng.randint(11, 14))
+        return f"{c} IN ({', '.join(str(v) for v in sorted(vals))})"
+    return pred(t)
 
 def maint_sets(t):
     """col:=expr assignments valid (and identical) in both engines."""
