@@ -169,12 +169,15 @@ object FuzzRun {
     *                                      one Engine.withTransaction; crash =
     *                                      hard death before close, rolled back
     *                                      by the NEXT op's lock acquisition)
+    *                  partby=<col>       (stage Hive-partitioned by col)
+    *                  bucketby=<col>     (stage in FuzzBuckets buckets of col)
     *                  timetravel=1       (commit-log generations + retirement)
     *                  readversion=N      (read back `versionAsOf N`)
     *                  select=<sql over view maintv>
     */
   private val MaintPrefix = "--GRAFT-MAINT--"
   private val MaintSep = "\u0001"
+  private val FuzzBuckets = 4
 
   private def runMaintenance(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                              extras: Seq[(String, String)], dsl: String)
@@ -187,15 +190,19 @@ object FuzzRun {
       .getOrElse(Tables.t(spark, sfDir, table))
     val dir = java.nio.file.Files.createTempDirectory("fuzz_maint").toString
     try {
-      // optional Hive-partitioned staging (r11): the same op sequences
-      // then exercise partition-dir pruning, the partition guards, the
-      // layout-aware merge insert half, and partitioned streaming
-      lines.collectFirst { case l if l.startsWith("partby=") =>
-        l.stripPrefix("partby=") } match {
-        case Some(c) => src.write.format("vortex").option("partitionBy", c)
-          .mode("overwrite").save(dir)
-        case None => sources.vortex.VortexBulkCopy.copy(src, dir)
+      // optional Hive-partitioned (r11) or bucketed staging: the same
+      // op sequences then exercise partition-dir and bucket pruning,
+      // the partition and bucket-key guards, the layout-aware merge
+      // insert half, and partitioned streaming
+      def directive(key: String): Option[String] =
+        lines.collectFirst { case l if l.startsWith(key) => l.stripPrefix(key) }
+      val (partBy, bucketBy) = (directive("partby="), directive("bucketby="))
+      def layout(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]) = {
+        val p = partBy.fold(w)(c => w.option("partitionBy", c))
+        bucketBy.fold(p)(c => p.option("bucketBy", c).option("buckets", FuzzBuckets.toString))
       }
+      if (partBy.isEmpty && bucketBy.isEmpty) sources.vortex.VortexBulkCopy.copy(src, dir)
+      else layout(src.write.format("vortex")).mode("overwrite").save(dir)
       // `maintbase` = the UNMUTATED original (merge sources derive
       // from it, mirroring the twin's derivation from the raw table)
       src.createOrReplaceTempView("maintbase")
@@ -232,13 +239,8 @@ object FuzzRun {
             // commit-atomic per file, no lease; inside a transaction
             // group it joins the group's fate (FORMAT.md contract
             // bound: a rollback removes it)
-            val w = spark.table("maintbase").where(expr(parts(1)))
-              .write.format("vortex").mode("append")
-            lines.collectFirst { case pl if pl.startsWith("partby=") =>
-              pl.stripPrefix("partby=") } match {
-              case Some(c) => w.option("partitionBy", c).save(dir)
-              case None => w.save(dir)
-            }
+            layout(spark.table("maintbase").where(expr(parts(1)))
+              .write.format("vortex").mode("append")).save(dir)
           case "fold" =>
             sources.vortex.VortexMaintenance.foldMasks(spark, dir)
           case "expire" =>

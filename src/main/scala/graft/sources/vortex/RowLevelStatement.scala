@@ -204,13 +204,29 @@ private[graft] object RowLevelStatement {
     private var log: Option[VortexCommitLog.Ctx] = None
     private var begun = false
     private lazy val rootQ = fs.makeQualified(root).toString
+    /** the root's stats manifests, read once: the first recorded
+      * schema and the entries by relative path */
+    private lazy val manifest =
+      try StatsManifest.readAll(root, hconf)
+      catch { case _: Exception => (None, Map.empty[String, StatsManifest.FileStats]) }
     /** the root's manifest entries, by qualified file path */
-    private lazy val entries = ChunkSelection.manifestEntries(Seq(root.toString), hconf)
+    private lazy val entries = manifest._2.values.map(e => s"$rootQ/${e.relPath}" -> e).toMap
 
     /** The table as the statement plans it, by inferSchema's rules over
       * the prologue's listing: its schema and its partition columns. */
     lazy val (schema: StructType, partCols: Seq[String]) =
-      VortexDataSource.tableSchema(Seq(root.toString), listed, hconf, mergeSchema = false)
+      VortexDataSource.tableSchema(Seq(root.toString), listed, hconf, mergeSchema = false,
+        Seq(manifest))
+
+    /** The dataset's bloom and sketch opt-ins: the columns for which
+      * every manifest entry of a listed file carries a bloom (a sketch). */
+    lazy val (bloomCols: Set[String], sketchCols: Set[String]) = {
+      val es = listed.flatMap { case (f, _) => entries.get(s"$rootQ/${relOf(f.getPath)}") }
+      def all(has: StatsManifest.ColStats => Boolean): Set[String] =
+        if (es.isEmpty) Set.empty
+        else es.map(_.cols.filter(has).map(_.name).toSet).reduce(_ intersect _)
+      (all(_.bloom.isDefined), all(_.sketch.isDefined))
+    }
 
     /** the dataset's bucket layout (key, buckets), read once */
     lazy val bucket: Option[(String, Int)] =
@@ -366,13 +382,12 @@ private[graft] object RowLevelStatement {
   }
 
   /** Write a data file named `dstName` beside the candidate through
-    * `fill`'s writer (`schema` = the file's own stored schema), and
-    * build its manifest entry from the new footer plus the writer's
-    * exact sums, blooms and sketches. A column the writer saw only as
+    * `fill`'s writer (`schema` = the file's own stored schema), taking
+    * the writer's manifest entry. A column the writer saw only as
     * verbatim pages ([[VortexFileWriter.blind]]) keeps the candidate's
-    * pre-statement stats: `fill` copies a column blind only when the
-    * file keeps every row and that column's values. Returns the staged
-    * file and `fill`'s result. */
+    * pre-statement sum, bloom and sketch: `fill` copies a column blind
+    * only when the file keeps every row and that column's values.
+    * Returns the staged file and `fill`'s result. */
   def write[T](c: Candidate, dstName: String, schema: StructType, conf: Configuration)
               (fill: VortexFileWriter => T): (Staged, T) =
     withTmp(c, dstName, conf) { tmp =>
@@ -380,21 +395,15 @@ private[graft] object RowLevelStatement {
         bloomCols = c.bloomCols, sketchCols = c.sketchCols)
       // a failed fill must not leave the tmp's stream open
       val t = try fill(writer) catch { case e: Throwable => writer.abort(); throw e }
-      writer.close()
-      val footer = VortexFileReader.readFooter(tmp, conf)
-      val (sums, blooms, sketches) = (writer.columnSums, writer.columnBlooms, writer.columnSketches)
-      val base = StatsManifest.fromFooter(c.rel(dstName),
-        tmp.getFileSystem(conf).getFileStatus(tmp).getLen, footer)
-      val entry = base.copy(cols = base.cols.map { col =>
-        val i = schema.fieldIndex(col.name)
-        if (!writer.blind(i)) col.copy(sum = sums(i), bloom = blooms(i), sketch = sketches(i))
-        else {
+      val written = writer.close()
+      val entry = written.copy(relPath = c.rel(dstName), cols = written.cols.zipWithIndex.map {
+        case (col, i) if writer.blind(i) =>
           val old = c.stats.get(col.name)
           col.copy(sum = old.flatMap(_.sum), bloom = old.flatMap(_.bloom),
             sketch = old.flatMap(_.sketch))
-        }
+        case (col, _) => col
       })
-      (Staged(tmp.toString, dstName, Some(entry), footer.schema.json), t)
+      (Staged(tmp.toString, dstName, Some(entry), schema.json), t)
     }
 
   /** Stage the candidate's next mask sidecar (`seq` = nextMaskSeq). */

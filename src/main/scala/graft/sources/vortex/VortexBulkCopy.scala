@@ -11,9 +11,9 @@ import org.apache.spark.util.SerializableConfiguration
 
 /** Job-level commit shared by the DSv2 write path (VortexBatchWrite)
   * and the columnar bulk-copy path (VortexBulkCopy): delete replaced
-  * files, refresh the stats manifest from committed footers + writer
-  * sums, maintain the bucket-spec marker. One implementation so both
-  * paths produce identical dataset layouts and pruning metadata. */
+  * files, record the writers' manifest entries in one stats manifest,
+  * maintain the bucket-spec marker. One implementation so both paths
+  * produce identical dataset layouts and pruning metadata. */
 object VortexCommitOps {
 
   def commitJob(dir: String, hconf: Configuration, jobId: String,
@@ -23,47 +23,14 @@ object VortexCommitOps {
                 bucketSpec: Option[(String, Int)]): Unit = {
     val root = new Path(dir)
     val fs = root.getFileSystem(hconf)
-    val written = messages.flatMap(_.files)
-      .map(f => fs.makeQualified(new Path(f)).toString).toSet
+    val written = messages.flatMap(_.files(dir))
+      .map(f => fs.makeQualified(f).toString).toSet
     preExisting.filterNot(written.contains).foreach(f => fs.delete(new Path(f), false))
     if (truncate) StatsManifest.delete(root, hconf) // stale stats go with the data
-    // pruning tier 1.5: aggregate each committed footer to file-level
-    // stats in one manifest per commit job (see StatsManifest); the
-    // writers' exact column sums ride along for SUM pushdown
-    val rootQ = fs.makeQualified(root).toString
-    val sumsByFile: Map[String, IndexedSeq[Option[Long]]] =
-      messages.flatMap(_.sums)
-        .map { case (f, s) => fs.makeQualified(new Path(f)).toString -> s }.toMap
-    val bloomsByFile: Map[String, IndexedSeq[Option[Array[Byte]]]] =
-      messages.flatMap(_.blooms)
-        .map { case (f, b) => fs.makeQualified(new Path(f)).toString -> b }.toMap
-    val sketchesByFile: Map[String, IndexedSeq[Option[Array[Byte]]]] =
-      messages.flatMap(_.sketches)
-        .map { case (f, s) => fs.makeQualified(new Path(f)).toString -> s }.toMap
-    val entries = written.toSeq.sorted.flatMap { f =>
-      try {
-        val p = new Path(f)
-        val st = fs.getFileStatus(p)
-        val rel = f.stripPrefix(rootQ).stripPrefix("/")
-        val base = StatsManifest.fromFooter(rel, st.getLen, VortexFileReader.readFooter(p, hconf))
-        val withSums = sumsByFile.get(f) match {
-          case Some(s) if s.length == base.cols.length =>
-            base.copy(cols = base.cols.zip(s).map { case (c, cs) => c.copy(sum = cs) })
-          case _ => base
-        }
-        val withBlooms = bloomsByFile.get(f) match {
-          case Some(b) if b.length == withSums.cols.length =>
-            withSums.copy(cols = withSums.cols.zip(b).map { case (c, cb) => c.copy(bloom = cb) })
-          case _ => withSums
-        }
-        Some(sketchesByFile.get(f) match {
-          case Some(sk) if sk.length == withBlooms.cols.length =>
-            withBlooms.copy(cols = withBlooms.cols.zip(sk).map { case (c, cs) => c.copy(sketch = cs) })
-          case _ => withBlooms
-        })
-      } catch { case _: Exception => None }
-    }
-    StatsManifest.write(root, hconf, jobId, entries,
+    // pruning tier 1.5: every committed file's entry, as its writer
+    // built it (footer stats, exact length, sums, blooms, sketches),
+    // in one manifest per commit job (see StatsManifest)
+    StatsManifest.write(root, hconf, jobId, messages.flatMap(_.entries).sortBy(_.relPath),
       Some(StructType(schema.fields.filterNot(f => partitionCols.contains(f.name)))))
     bucketSpec match {
       case Some((k, n)) => BucketSpecFile.write(root, hconf, k, n)
@@ -90,9 +57,9 @@ object VortexCommitOps {
   * same file format, commit protocol, stats manifest, and SUM-pushdown
   * sums (spec-asserted byte-identical files).
   *
-  * Scale note: one output file per input split, task-side rename-on-
-  * success, driver-side manifest commit — the same O(files) driver
-  * work as the DSv2 path; nothing here collects data.
+  * Scale note: one output file per input split, driver-side rename
+  * and manifest commit of the entries the tasks return — O(files)
+  * driver work, like the DSv2 path; nothing here collects data.
   */
 object VortexBulkCopy {
 
@@ -164,8 +131,7 @@ object VortexBulkCopy {
     // finishes after its sibling leaves at most an invisible tmp file,
     // never a readable duplicate — exactly-once on disk without the
     // commit coordinator (whose API is private to Spark). Driver-side
-    // rename is O(files this job wrote) — the same order as the
-    // footer reads the manifest commit already does.
+    // rename is O(files this job wrote), as is the manifest commit.
     val taskMessages = colPlan.executeColumnar().mapPartitionsWithIndex { (pid, it) =>
       if (!it.hasNext) Iterator.empty
       else {
@@ -178,10 +144,7 @@ object VortexBulkCopy {
         val w = new VortexFileWriter(tmp, sconf.value, schema, chunkRows, bloomCols)
         try {
           while (it.hasNext) w.writeBatch(it.next())
-          w.close()
-          Iterator.single(VortexCommit(Seq(file.toString),
-            Map(file.toString -> w.columnSums),
-            Map(file.toString -> w.columnBlooms)))
+          Iterator.single(VortexCommit(Seq(w.close().copy(relPath = name))))
         } catch {
           case e: Throwable =>
             try { w.close() } catch { case _: Exception => }
@@ -218,10 +181,9 @@ object VortexBulkCopy {
     // (one round trip per file) — serial renames would make commit
     // latency O(files · RTT) at large file counts
     val renameFailed = new java.util.concurrent.atomic.AtomicReference[String](null)
-    java.util.Arrays.stream(taskMessages.flatMap(_.files).toArray).parallel().forEach { f =>
-      val p = new Path(f)
+    java.util.Arrays.stream(taskMessages.flatMap(_.files(dir)).toArray).parallel().forEach { p =>
       val tmp = new Path(p.getParent, s".${p.getName}.inprogress")
-      if (!p.getFileSystem(hconf).rename(tmp, p)) renameFailed.compareAndSet(null, f)
+      if (!p.getFileSystem(hconf).rename(tmp, p)) renameFailed.compareAndSet(null, p.toString)
     }
     if (renameFailed.get != null)
       throw new IOException(s"vortex: rename failed for ${renameFailed.get}")
@@ -241,23 +203,22 @@ object VortexBulkCopy {
     // files, so reads of its empty dataset return 0 rows — mirror that
     // with one driver-written footer-only file.
     val messages =
-      if (taskMessages.flatMap(_.files).nonEmpty) taskMessages
+      if (taskMessages.exists(_.entries.nonEmpty)) taskMessages
       else {
         // same tmp-then-promote discipline as the task files: a failed
         // driver write must never leave a visible corrupt file
         val name = f"part-00000-$jobId-driver.vortex"
         val p = new Path(dir, name)
         val tmp = new Path(dir, s".$name.inprogress")
-        val w = new VortexFileWriter(tmp, hconf, schema, chunkRows, bloomCols)
-        try w.close()
-        catch { case e: Throwable =>
-          try { fs.delete(tmp, false) } catch { case _: Exception => }
-          throw e
-        }
+        val entry =
+          try new VortexFileWriter(tmp, hconf, schema, chunkRows, bloomCols).close()
+          catch { case e: Throwable =>
+            try { fs.delete(tmp, false) } catch { case _: Exception => }
+            throw e
+          }
         if (!fs.rename(tmp, p))
           throw new IOException(s"vortex: rename failed for $p")
-        Seq(VortexCommit(Seq(p.toString),
-          Map(p.toString -> w.columnSums), Map(p.toString -> w.columnBlooms)))
+        Seq(VortexCommit(Seq(entry.copy(relPath = name))))
       }
     messages
     } catch { case e: Throwable => cleanupPromoted(); throw e }

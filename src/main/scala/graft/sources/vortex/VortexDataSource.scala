@@ -46,8 +46,10 @@ class VortexDataSource extends TableProvider with DataSourceRegister {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val conf = SparkSession.active.sessionState.newHadoopConf()
-    VortexDataSource.tableSchema(paths(options), VortexDataSource.listAll(paths(options), conf),
-      conf, Option(options.get("mergeschema")).exists(_.toBoolean))._1
+    val raws = paths(options)
+    VortexDataSource.tableSchema(raws, VortexDataSource.listAll(raws, conf),
+      conf, Option(options.get("mergeschema")).exists(_.toBoolean),
+      VortexDataSource.manifestsOf(raws, conf))._1
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -177,7 +179,8 @@ object VortexDataSource {
   /** The table schema of `listed`, the files under `raws`, and the
     * names of its partition columns — inferSchema's rules, which a
     * row-level statement applies to the listing it already holds:
-    *  - the file schema is the manifest-held one (zero footer I/O;
+    *  - the file schema is the one `manifests` (the roots' stats
+    *    manifests, [[manifestsOf]]) recorded first (zero footer I/O;
     *    planning's drift guard still validates any file the manifest
     *    does not cover), else the first file's footer, or under
     *    `mergeSchema` the by-name union of every file's
@@ -193,23 +196,30 @@ object VortexDataSource {
   def tableSchema(raws: Seq[String],
                   listed: Seq[(org.apache.hadoop.fs.FileStatus, Seq[(String, String)])],
                   conf: org.apache.hadoop.conf.Configuration,
-                  mergeSchema: Boolean): (StructType, Seq[String]) =
+                  mergeSchema: Boolean,
+                  manifests: => Seq[Manifests]): (StructType, Seq[String]) = {
+    lazy val read = manifests
     if (listed.isEmpty)
-      manifestRecoveredSchema(raws, conf).getOrElse(throw new IllegalArgumentException(
+      recoveredSchema(read).getOrElse(throw new IllegalArgumentException(
         s"vortex: no files found for ${raws.mkString(",")}"))
     else withPartitions(
       if (mergeSchema) mergedSchema(raws, listed, conf)
-      else manifestSchema(raws, conf).getOrElse(
+      else read.iterator.flatMap(_._1).nextOption().getOrElse(
         VortexFileReader.readFooter(listed.head._1.getPath, conf).schema),
       listed)
+  }
 
-  /** the schema the first readable stats manifest of `raws` recorded */
-  private def manifestSchema(raws: Seq[String],
-                             conf: org.apache.hadoop.conf.Configuration): Option[StructType] =
-    raws.iterator.flatMap { raw =>
-      try StatsManifest.rootOf(raw, conf).flatMap(p => StatsManifest.readAll(p, conf)._1)
+  /** one dataset root's stats manifests: the first recorded schema and
+    * the entries by relative path ([[StatsManifest.readAll]]) */
+  type Manifests = (Option[StructType], Map[String, StatsManifest.FileStats])
+
+  /** the stats manifests of each root of `raws`; an unreadable root has none */
+  def manifestsOf(raws: Seq[String], conf: org.apache.hadoop.conf.Configuration)
+      : Seq[Manifests] =
+    raws.flatMap { raw =>
+      try StatsManifest.rootOf(raw, conf).map(StatsManifest.readAll(_, conf))
       catch { case _: Exception => None }
-    }.nextOption()
+    }
 
   /** `fileSchema` plus the partition columns whose `col=value` segments
     * `files`' paths carry and that it does not store, and the names of
@@ -233,13 +243,11 @@ object VortexDataSource {
     * review-found r13). Returns the schema and its partition columns. */
   def manifestRecoveredSchema(raws: Seq[String], conf: org.apache.hadoop.conf.Configuration)
       : Option[(StructType, Seq[String])] =
-    manifestSchema(raws, conf).map { fsch =>
-      val entryRels = raws.iterator.flatMap { raw =>
-        try StatsManifest.rootOf(raw, conf).map(p =>
-          StatsManifest.readAll(p, conf)._2.keys.toSeq).getOrElse(Seq.empty)
-        catch { case _: Exception => Seq.empty }
-      }.toSeq
-      withPartitions(fsch, entryRels.map { rel =>
+    recoveredSchema(manifestsOf(raws, conf))
+
+  private def recoveredSchema(manifests: Seq[Manifests]): Option[(StructType, Seq[String])] =
+    manifests.iterator.flatMap(_._1).nextOption().map { fsch =>
+      withPartitions(fsch, manifests.flatMap(_._2.keys).map { rel =>
         (null, rel.split('/').dropRight(1).toSeq.filter(_.contains("=")).map { s =>
           val Array(k, v) = s.split("=", 2)
           k -> PartitionedLayout.unescape(v)
@@ -1125,8 +1133,8 @@ class VortexStreamingWrite(schema: StructType, dir: String, chunkRows: Int)
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val fs = new Path(dir).getFileSystem(hconf)
-    messages.collect { case VortexCommit(fls, _, _, _) => fls }.flatten
-      .foreach(f => fs.delete(new Path(f), false))
+    messages.collect { case m: VortexCommit => m.files(dir) }.flatten
+      .foreach(f => fs.delete(f, false))
   }
 }
 
@@ -1185,21 +1193,17 @@ class VortexBatchWrite(schema: StructType, dir: String, truncate: Boolean, chunk
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val fs = new Path(dir).getFileSystem(hconf)
-    messages.collect { case VortexCommit(fls, _, _, _) => fls }.flatten
-      .foreach(f => fs.delete(new Path(f), false))
+    messages.collect { case m: VortexCommit => m.files(dir) }.flatten
+      .foreach(f => fs.delete(f, false))
   }
 }
 
-/** `sums`: per created file, the writer's exact per-stored-column sums
-  * (see VortexFileWriter.columnSums) — commit folds them into the
-  * manifest for SUM pushdown. `blooms`: per created file, the writer's
-  * per-stored-column SBBF bytes (columns opted in via "bloomFilters"),
-  * folded into the manifest for plan-time point-lookup pruning. */
-case class VortexCommit(files: Seq[String],
-                        sums: Map[String, IndexedSeq[Option[Long]]] = Map.empty,
-                        blooms: Map[String, IndexedSeq[Option[Array[Byte]]]] = Map.empty,
-                        sketches: Map[String, IndexedSeq[Option[Array[Byte]]]] = Map.empty)
-    extends WriterCommitMessage
+/** One task's written files: each file's stats manifest entry, as its
+  * [[VortexFileWriter]] built it, with `relPath` relative to the
+  * write's directory. */
+case class VortexCommit(entries: Seq[StatsManifest.FileStats]) extends WriterCommitMessage {
+  def files(dir: String): Seq[Path] = entries.map(e => new Path(dir, e.relPath))
+}
 
 class VortexWriterFactory(schema: StructType, dir: String, jobId: String,
                           conf: SerializableConfiguration,
@@ -1209,27 +1213,32 @@ class VortexWriterFactory(schema: StructType, dir: String, jobId: String,
                           bloomMaxBytes: Int = VortexFormat.DefaultBloomMaxBytes,
                           sketchCols: Set[String] = Set.empty) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    if (partitionCols.isEmpty && bucketSpec.isEmpty)
-      new VortexDataWriter(schema, dir, jobId, conf.value, partitionId, taskId, chunkRows,
-        bloomCols, bloomMaxBytes, sketchCols)
-    else
-      new VortexPartitionedDataWriter(schema, dir, jobId, conf.value, partitionId, taskId,
-        chunkRows, partitionCols, bucketSpec, bloomCols, bloomMaxBytes, sketchCols)
+    new VortexDataWriter(schema, dir, jobId, conf.value, partitionId, taskId,
+      chunkRows, partitionCols, bucketSpec, bloomCols, bloomMaxBytes, sketchCols)
 }
 
-/** Hive-style partitioned writer: one open file per partition value
+/** The task writer. Bytes land in hidden `.…inprogress` files
+  * (excluded from listings) and only become data files via rename at
+  * task commit — readers never observe a partially-written file, which
+  * also makes the streaming sink's per-epoch files safe to tail.
+  *
+  * Hive-style partitioning: one open file per partition value
   * combination seen by this task; partition columns are stored in the
   * path, not the pages. A bucket spec adds an innermost `__bucket=k`
   * path segment with k derived per row from the key column (which
-  * stays stored — it is data, not layout). */
-class VortexPartitionedDataWriter(schema: StructType, dir: String, jobId: String,
-                                  conf: org.apache.hadoop.conf.Configuration,
-                                  partitionId: Int, taskId: Long, chunkRows: Int,
-                                  partitionCols: Seq[String],
-                                  bucketSpec: Option[(String, Int)] = None,
-                                  bloomCols: Set[String] = Set.empty,
-                                  bloomMaxBytes: Int = VortexFormat.DefaultBloomMaxBytes,
-                                  sketchCols: Set[String] = Set.empty) extends DataWriter[InternalRow] {
+  * stays stored — it is data, not layout). With neither, the task
+  * writes one file at `dir` — opened up front, so a task that sees no
+  * row still commits a footer-only file — and when nothing is stored
+  * in the path a record goes to the file writer as it is. */
+class VortexDataWriter(schema: StructType, dir: String, jobId: String,
+                       conf: org.apache.hadoop.conf.Configuration,
+                       partitionId: Int, taskId: Long, chunkRows: Int,
+                       partitionCols: Seq[String] = Seq.empty,
+                       bucketSpec: Option[(String, Int)] = None,
+                       bloomCols: Set[String] = Set.empty,
+                       bloomMaxBytes: Int = VortexFormat.DefaultBloomMaxBytes,
+                       sketchCols: Set[String] = Set.empty) extends DataWriter[InternalRow] {
+  private val name = f"part-$partitionId%05d-$jobId-$taskId.vortex"
   private val partIdx = partitionCols.map(schema.fieldIndex).toArray
   private val partDts = partIdx.map(schema.fields(_).dataType)
   private val storedIdx = schema.fields.indices.filterNot(partIdx.contains).toArray
@@ -1237,10 +1246,24 @@ class VortexPartitionedDataWriter(schema: StructType, dir: String, jobId: String
   private val bucketAt = bucketSpec.map { case (k, n) =>
     (schema.fieldIndex(k), schema(k).dataType, n)
   }
-  private val writers = scala.collection.mutable.LinkedHashMap[String, (Path, VortexFileWriter)]()
-  private val reuse = new GenericInternalRow(storedIdx.length)
+  // layout key ("" = dir itself) → its open file writer
+  private val writers = scala.collection.mutable.LinkedHashMap[String, VortexFileWriter]()
+  private val reuse = if (partIdx.isEmpty) null else new GenericInternalRow(storedIdx.length)
+
+  private def rel(key: String): String = if (key.isEmpty) name else s"$key/$name"
+  private def tmpOf(key: String): Path = {
+    val parent = if (key.isEmpty) new Path(dir) else new Path(dir, key)
+    new Path(parent, s".$name.inprogress")
+  }
+  private def open(key: String): VortexFileWriter =
+    writers.getOrElseUpdate(key, new VortexFileWriter(tmpOf(key), conf, storedSchema, chunkRows,
+      bloomCols, bloomMaxBytes, sketchCols))
+
+  // the one file at `dir` when nothing routes rows (null otherwise)
+  private val flat = if (partIdx.isEmpty && bucketAt.isEmpty) open("") else null
 
   override def write(record: InternalRow): Unit = {
+    if (flat != null) { flat.write(record); return }
     val segs = partIdx.indices.map { i =>
       val v = record.get(partIdx(i), partDts(i))
       require(v != null, s"vortex: null partition value for ${partitionCols(i)}")
@@ -1249,75 +1272,37 @@ class VortexPartitionedDataWriter(schema: StructType, dir: String, jobId: String
       val v = if (record.isNullAt(idx)) null else record.get(idx, dt)
       s"${BucketSpecFile.BucketCol}=${BucketSpecFile.bucketOf(v, dt, n)}"
     }
-    val key = segs.mkString("/")
-    val (_, w) = writers.getOrElseUpdate(key, {
-      val name = f"part-$partitionId%05d-$jobId-$taskId.vortex"
-      val p = new Path(new Path(dir, key), name)
-      (p, new VortexFileWriter(new Path(new Path(dir, key), s".$name.inprogress"),
-        conf, storedSchema, chunkRows, bloomCols, bloomMaxBytes, sketchCols))
-    })
-    var c = 0
-    while (c < storedIdx.length) {
-      reuse.update(c, record.get(storedIdx(c), storedSchema.fields(c).dataType))
-      c += 1
+    val w = open(segs.mkString("/"))
+    if (reuse == null) w.write(record)
+    else {
+      var c = 0
+      while (c < storedIdx.length) {
+        reuse.update(c, record.get(storedIdx(c), storedSchema.fields(c).dataType))
+        c += 1
+      }
+      w.write(reuse)
     }
-    w.write(reuse)
   }
 
-  override def commit(): WriterCommitMessage = {
-    writers.values.foreach { case (p, w) =>
-      w.close()
-      val fs = p.getFileSystem(conf)
-      val tmp = new Path(p.getParent, s".${p.getName}.inprogress")
-      if (!fs.rename(tmp, p)) throw new java.io.IOException(s"vortex: rename failed for $p")
+  override def commit(): VortexCommit = {
+    val entries = writers.toSeq.map { case (key, w) =>
+      val entry = w.close()
+      val (tmp, file) = (tmpOf(key), new Path(dir, rel(key)))
+      if (!tmp.getFileSystem(conf).rename(tmp, file))
+        throw new java.io.IOException(s"vortex: rename failed for $file")
+      entry.copy(relPath = rel(key))
     }
-    VortexCommit(writers.values.map(_._1.toString).toSeq,
-      writers.values.map { case (p, w) => p.toString -> w.columnSums }.toMap,
-      writers.values.map { case (p, w) => p.toString -> w.columnBlooms }.toMap,
-      writers.values.map { case (p, w) => p.toString -> w.columnSketches }.toMap)
+    writers.clear()
+    VortexCommit(entries)
   }
   override def abort(): Unit = {
-    writers.values.foreach { case (p, w) =>
-      try w.close() catch { case _: Exception => }
-      val fs = p.getFileSystem(conf)
-      fs.delete(new Path(p.getParent, s".${p.getName}.inprogress"), false)
-      fs.delete(p, false)
+    writers.foreach { case (key, w) =>
+      w.abort()
+      val fs = tmpOf(key).getFileSystem(conf)
+      fs.delete(tmpOf(key), false)
+      fs.delete(new Path(dir, rel(key)), false)
     }
-  }
-  override def close(): Unit = {}
-}
-
-/** Task writer with atomic visibility: bytes land in a hidden
-  * `.…inprogress` file (excluded from listings) and only become a
-  * data file via rename at task commit — readers never observe a
-  * partially-written file, which also makes the streaming sink's
-  * per-epoch files safe to tail. */
-class VortexDataWriter(schema: StructType, dir: String, jobId: String,
-                       conf: org.apache.hadoop.conf.Configuration,
-                       partitionId: Int, taskId: Long, chunkRows: Int,
-                       bloomCols: Set[String] = Set.empty,
-                       bloomMaxBytes: Int = VortexFormat.DefaultBloomMaxBytes,
-                       sketchCols: Set[String] = Set.empty) extends DataWriter[InternalRow] {
-  private val name = f"part-$partitionId%05d-$jobId-$taskId.vortex"
-  private val file = new Path(dir, name)
-  private val tmp = new Path(dir, s".$name.inprogress")
-  private val writer = new VortexFileWriter(tmp, conf, schema, chunkRows, bloomCols,
-    bloomMaxBytes, sketchCols)
-  private var closed = false
-
-  override def write(record: InternalRow): Unit = writer.write(record)
-  override def commit(): WriterCommitMessage = {
-    writer.close(); closed = true
-    val fs = file.getFileSystem(conf)
-    if (!fs.rename(tmp, file)) throw new java.io.IOException(s"vortex: rename failed for $file")
-    VortexCommit(Seq(file.toString), Map(file.toString -> writer.columnSums),
-      Map(file.toString -> writer.columnBlooms),
-      Map(file.toString -> writer.columnSketches))
-  }
-  override def abort(): Unit = {
-    if (!closed) try writer.close() catch { case _: Exception => }
-    val fs = file.getFileSystem(conf)
-    fs.delete(tmp, false); fs.delete(file, false)
+    writers.clear()
   }
   override def close(): Unit = {}
 }

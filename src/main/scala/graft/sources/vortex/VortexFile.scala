@@ -187,14 +187,19 @@ final class VortexFileWriter(path: Path, conf: Configuration, schema: StructType
     chunks += ChunkMeta(count, metas)
   }
 
-  def close(): Unit = {
+  /** Write the footer and close the file. Returns the file's stats
+    * manifest entry, built from the footer in hand, the file's exact
+    * length and this writer's sums, blooms and sketches (none for a
+    * [[blind]] column); its `relPath` is the caller's to set. */
+  def close(): StatsManifest.FileStats = {
     flushChunk()
     if (bloomOn.exists(identity))
       bloomResults = fields.indices.map(c =>
         if (bloomOn(c)) Some(bloomBuilders(c).result()) else None)
+    val footer = Footer(schema, chunks.toArray)
     val bos = new java.io.ByteArrayOutputStream()
     val dos = new DataOutputStream(bos)
-    writeFooter(dos, Footer(schema, chunks.toArray))
+    writeFooter(dos, footer)
     dos.flush()
     val fb = bos.toByteArray
     out.write(fb)
@@ -202,6 +207,11 @@ final class VortexFileWriter(path: Path, conf: Configuration, schema: StructType
     tail.putLong(fb.length.toLong); tail.put(Magic)
     out.write(tail.array())
     out.flush(); out.close()
+    val (sums, blooms, sketches) = (columnSums, columnBlooms, columnSketches)
+    val base = StatsManifest.fromFooter("", pos + fb.length + 12, footer)
+    base.copy(cols = base.cols.zipWithIndex.map { case (col, c) =>
+      col.copy(sum = sums(c), bloom = blooms(c), sketch = sketches(c))
+    })
   }
 
   /** Close the output without writing a footer — for a writer whose

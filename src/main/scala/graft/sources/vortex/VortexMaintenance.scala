@@ -200,10 +200,11 @@ object VortexMaintenance {
 
     val sconf = new SerializableConfiguration(hconf)
     // tasks are fully NON-DESTRUCTIVE (r12 review fix): each writes its
-    // merged file as a dot-hidden tmp and returns (tmp, dstName, bytes)
-    // — nothing renames in until the whole job succeeded, so a partial
-    // job failure commits nothing (tmps are vacuum litter)
-    val results: Array[(String, String, Long)] = stmt.timed("tasks") {
+    // merged file as a dot-hidden tmp and returns (tmp, dstName, bytes,
+    // the writer's manifest entry) — nothing renames in until the whole
+    // job succeeded, so a partial job failure commits nothing (tmps are
+    // vacuum litter)
+    val results: Array[(String, String, Long, StatsManifest.FileStats)] = stmt.timed("tasks") {
       spark.sparkContext
         .parallelize(batches.map(_._1), batches.length)
         .map(batch => compactBatch(batch, sconf.value))
@@ -221,13 +222,13 @@ object VortexMaintenance {
     val retireDirQ = stmt.generation.map(g =>
       fs.makeQualified(VortexCommitLog.retiredDir(root, g)).toString)
       .getOrElse("")
-    val createdPaths = new scala.collection.mutable.ArrayBuffer[String]
+    def dstOf(batch: Seq[String], dstName: String) = new Path(new Path(batch.head).getParent, dstName)
     batches.zip(results).zipWithIndex.foreach {
-      case (((batch, _), (tmp, dstName, _)), bi) =>
+      case (((batch, _), (tmp, dstName, _, _)), bi) =>
         if (failAfterBatchCommits >= 0 && bi >= failAfterBatchCommits)
           throw new RuntimeException(
             s"vortex compact: injected crash after $failAfterBatchCommits batch commits (test seam)")
-        val dst = new Path(new Path(batch.head).getParent, dstName)
+        val dst = dstOf(batch, dstName)
         val marker = MaintenanceCommit.writeCompactMarker(fs, root,
           s"$markerJob-$bi", MaintenanceCommit.CompactCommit(
             stmt.relOf(dst), batch.map(f => stmt.relOf(new Path(f))), retireDirQ))
@@ -238,7 +239,6 @@ object VortexMaintenance {
             throw new java.io.IOException(s"vortex compact: failed to remove absorbed $f")
         }
         fs.delete(marker, false)
-        createdPaths += dst.toString
     }
 
     def inherited(batch: Seq[String]): (Map[String, Long], Map[String, Array[Byte]]) = {
@@ -274,34 +274,15 @@ object VortexMaintenance {
       }.toMap
       (sums, blooms)
     }
-    val inheritedByCreated: Map[String, (Map[String, Long], Map[String, Array[Byte]])] =
-      batches.map(_._1).zip(createdPaths).map { case (batch, created) =>
-        created -> inherited(batch) }.toMap
-
-    // extend the stats manifest with the new files (tier-1.5 pruning),
-    // ONE manifest write per schema version: the manifest envelope
-    // records a single schema, and per-entry schema validation trusts
-    // an entry only under its own manifest's recorded schema
-    val jobId = java.util.UUID.randomUUID().toString.take(8)
-    def entryOf(created: String): Option[StatsManifest.FileStats] =
-      try {
-        val p = new Path(created)
-        val st = fs.getFileStatus(p)
-        val rel = fs.makeQualified(p).toString.stripPrefix(rootQ).stripPrefix("/")
-        val base = StatsManifest.fromFooter(rel, st.getLen, VortexFileReader.readFooter(p, hconf))
-        val (sums, blooms) = inheritedByCreated.getOrElse(created, (Map.empty[String, Long], Map.empty[String, Array[Byte]]))
-        Some(base.copy(cols = base.cols.map(c =>
+    // extend the stats manifest with the new files (tier-1.5 pruning):
+    // each writer's entry — every column blind, so no sum or bloom —
+    // plus what its sources' entries let it inherit
+    MaintenanceCommit.writeManifests(root, hconf, "compact",
+      batches.zip(results).map { case ((batch, sk), (_, dstName, _, entry)) =>
+        val (sums, blooms) = inherited(batch)
+        (sk, entry.copy(relPath = stmt.relOf(dstOf(batch, dstName)), cols = entry.cols.map(c =>
           c.copy(sum = sums.get(c.name), bloom = blooms.get(c.name)))))
-      } catch { case _: Exception => None }
-    createdPaths.toSeq.zip(batches.map(_._2)).flatMap { case (created, sk) =>
-      entryOf(created).map(e => (sk, e))
-    }.groupBy(_._1).toSeq.sortBy(_._1).zipWithIndex.foreach { case ((sk, group), i) =>
-      val schema =
-        try Some(org.apache.spark.sql.types.DataType.fromJson(sk)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        catch { case _: Exception => None }
-      StatsManifest.write(root, hconf, s"compact-$jobId-$i", group.map(_._2).toIndexedSeq, schema)
-    }
+      })
     } // commit
 
     CompactResult(byDir.size, batches.length,
@@ -329,11 +310,11 @@ object VortexMaintenance {
   }
 
   /** Merge one batch into one file by chunk byte-copy; returns
-    * (tmp path, destination basename, bytes copied) — NON-DESTRUCTIVE:
-    * the driver renames in under the marker protocol. Runs on an
-    * executor. */
-  private def compactBatch(batch: Seq[String],
-                           conf: org.apache.hadoop.conf.Configuration): (String, String, Long) = {
+    * (tmp path, destination basename, bytes copied, the writer's
+    * manifest entry) — NON-DESTRUCTIVE: the driver renames in under
+    * the marker protocol. Runs on an executor. */
+  private def compactBatch(batch: Seq[String], conf: org.apache.hadoop.conf.Configuration)
+      : (String, String, Long, StatsManifest.FileStats) = {
     val first = new Path(batch.head)
     val fs = first.getFileSystem(conf)
     val parent = first.getParent
@@ -362,10 +343,10 @@ object VortexMaintenance {
         w.writeChunk(chunk.rowCount, raw, chunk.columns, null, null)
       } finally in.close()
     }
-    w.close()
+    val entry = w.close()
 
     // no rename here: the driver commits batch-by-batch under the
     // crash-marker protocol (see MaintenanceCommit.repairStaleCompactions)
-    (tmp.toString, name, copied)
+    (tmp.toString, name, copied, entry)
   }
 }

@@ -44,10 +44,10 @@ import org.apache.spark.sql.types.StructType
   *    `part-merge-<md5(src)>.vortex` names — the same crash-convergence
   *    contract, and the same `failAfterCommits` crash seam, as
   *    DELETE/UPDATE.
-  *  - APPEND: source rows no task matched are staged — by one
-  *    driver-side file write whose manifest entry stays in memory for
-  *    an unpartitioned, unbucketed dataset, through the distributed
-  *    vortex writer otherwise — and renamed in under
+  *  - APPEND: source rows no task matched are staged — by the vortex
+  *    DataWriter, run on the driver with the dataset's partition
+  *    columns, bucket spec and bloom/sketch opt-ins, whose manifest
+  *    entries stay in memory — and renamed in under
   *    `part-merge-ins-<md5(source content + key + clauses)>.vortex`,
   *    one per layout directory — a directory already holding this
   *    statement's insert file (or its deterministic maintenance
@@ -340,87 +340,55 @@ object VortexMerge {
       st.phaseMs)
   }
 
-  /** The shared insert half: stage `rows` (target-schema Catalyst rows)
-    * through the normal vortex writer into a dot-hidden scratch dir,
-    * then rename one file per layout directory into place under the
-    * statement-derived name `part-merge-ins-<srcHash>.vortex` — a
-    * directory already holding this statement's insert file (or its
-    * deterministic maintenance replacement) is skipped, which makes
-    * the insert half exactly-once under crash re-runs (see the class
-    * scaladoc). Returns the number of rows actually inserted. */
+  /** The shared insert half: write `rows` (target-schema Catalyst rows)
+    * on the driver through the one vortex DataWriter into a dot-hidden
+    * scratch dir — under the dataset's partition directories and
+    * buckets, with its bloom and sketch opt-ins — then rename one file
+    * per layout directory into place under the statement-derived name
+    * `part-merge-ins-<srcHash>.vortex`, recording the writer's manifest
+    * entries. A directory already holding this statement's insert file
+    * (or its deterministic maintenance replacement) is skipped, which
+    * makes the insert half exactly-once under crash re-runs (see the
+    * class scaladoc). Returns the number of rows actually inserted. */
   private def appendInserts(st: RowLevelStatement.Statement, tSchema: StructType,
                             rows: Seq[InternalRow], srcHash: String,
                             failAfterInserts: Int): Long = {
     if (rows.isEmpty) return 0L
-    val (spark, fs, root, hconf) = (st.spark, st.fs, st.root, st.hconf)
+    val (fs, root, hconf) = (st.fs, st.root, st.hconf)
     var inserted = 0L
     val insBase = s"part-merge-ins-$srcHash.vortex"
     val insRepl = replacementName(insBase)
     val stage = new Path(root, s".merge-stage-$srcHash")
     fs.delete(stage, true) // leftover scratch of a crashed run
-    import scala.jdk.CollectionConverters._
-    // the layout the statement planned with: an emptied dataset keeps
-    // its partition columns (recovered from the manifest), so inserts
-    // still land under their `col=value` directories
-    val layoutPartCols = st.partCols
-    val bucketSpec = st.bucket
-    // the staged files (path, stage-relative path, manifest entry) and
-    // their schema
-    val (staged, stagedSchema): (Seq[(Path, String, Option[StatsManifest.FileStats])],
-                                 Option[String]) =
-    if (layoutPartCols.isEmpty && bucketSpec.isEmpty) {
-      // driver-direct staging (r15): the insert set
-      // is bounded driver state by merge's contract, and routing it
-      // through a Spark write job costs a whole job launch (~0.12-0.19 s
-      // at sf1) to move a few thousand rows. One VortexFileWriter call
-      // produces the identical file, and its entry and schema go to the
-      // rename step in memory. Partitioned / bucketed layouts keep the
-      // distributed writer (their routing lives in the DSv2 path).
-      fs.mkdirs(stage)
-      val f = new Path(stage, "part-d00000.vortex")
-      val w = new VortexFileWriter(f, hconf, tSchema)
-      rows.foreach(w.write)
-      w.close()
-      val footer = VortexFileReader.readFooter(f, hconf)
-      val base = StatsManifest.fromFooter(f.getName,
-        fs.getFileStatus(f).getLen, footer)
-      val sums = tSchema.fieldNames.zip(w.columnSums).toMap
-      val entry = base.copy(cols = base.cols.map(c =>
-        c.copy(sum = sums.getOrElse(c.name, None))))
-      (Seq((f, f.getName, Some(entry))), Some(footer.schema.json))
-    } else {
-      val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToScalaConverter(tSchema)
-      val ext = rows.map(r => conv(r).asInstanceOf[org.apache.spark.sql.Row])
-      var w = spark.createDataFrame(ext.asJava, tSchema)
-        .coalesce(1).write.format("vortex").mode("overwrite")
-      if (layoutPartCols.nonEmpty)
-        w = w.option("partitionBy", layoutPartCols.mkString(","))
-      // the staging dir carries no bucket marker — pass the dataset's
-      // spec explicitly so bucket routing survives the indirection
-      bucketSpec.foreach { case (k, n) =>
-        w = w.option("bucketBy", k).option("buckets", n.toString) }
-      w.save(stage.toString)
-      // the writer's manifest segment holds the staged files' entries
-      val stageQ = fs.makeQualified(stage).toString
-      val (stSchema, stEntries) = StatsManifest.readAll(stage, hconf)
-      (VortexDataSource.listAll(Seq(stage.toString), hconf).map { case (st, _) =>
-        val rel = fs.makeQualified(st.getPath).toString.stripPrefix(stageQ).stripPrefix("/")
-        (st.getPath, rel, stEntries.get(rel))
-      }, stSchema.map(_.json))
-    }
+    // the insert files' stored schema: partition values live in paths
+    val storedJson = StructType(tSchema.fields.filterNot(f => st.partCols.contains(f.name))).json
     // scratch cleanup rides a finally: a crash mid-rename must not
     // strand a full staged copy of the insert set inside the dataset
     // (the name embeds the statement hash — no other statement would
     // ever clean it; renamed files are already out of the scratch dir,
     // so deleting it is always safe) — review-found r11
     try {
+    // the writer's entries, relative to the scratch dir, in path
+    // order. On the driver: the insert set is bounded by merge's
+    // contract, and a Spark write job would cost a job launch to move
+    // a few thousand rows. The layout is the one the statement planned
+    // with: an emptied dataset keeps its partition columns (recovered
+    // from the manifest), so inserts still land under their
+    // `col=value` directories
+    val staged = {
+      val w = new VortexDataWriter(tSchema, stage.toString, "merge", hconf, 0, 0L,
+        VortexFormat.DefaultChunkRows, st.partCols, st.bucket,
+        bloomCols = st.bloomCols, sketchCols = st.sketchCols)
+      try { rows.foreach(w.write); w.commit().entries.sortBy(_.relPath) }
+      catch { case e: Throwable => w.abort(); throw e }
+    }
     val renamedEntries = scala.collection.mutable.ArrayBuffer[StatsManifest.FileStats]()
     // manifest state before this run, read lazily — only the crash-
     // repair skip branch below consults it
     lazy val preManifest = StatsManifest.read(root, hconf)
     val backfillEntries = scala.collection.mutable.ArrayBuffer[(String, StatsManifest.FileStats)]()
-    staged.foreach { case (file, rel, stEntry) =>
+    staged.foreach { stEntry =>
+      val rel = stEntry.relPath
       val relDir = rel.lastIndexOf('/') match {
         case -1 => ""; case i => rel.substring(0, i)
       }
@@ -432,13 +400,11 @@ object VortexMerge {
           throw new RuntimeException(
             s"vortex merge: injected crash after $failAfterInserts insert renames (test seam)")
         fs.mkdirs(finalDir)
-        if (!fs.rename(file, new Path(finalDir, insBase)))
+        if (!fs.rename(new Path(stage, rel), new Path(finalDir, insBase)))
           throw new java.io.IOException(
             s"vortex merge: insert rename failed for $finalDir/$insBase")
-        stEntry.foreach { e =>
-          renamedEntries += e.copy(relPath = dstRel)
-          inserted += e.rows
-        }
+        renamedEntries += stEntry.copy(relPath = dstRel)
+        inserted += stEntry.rows
       } else {
         // this directory's inserts committed in a prior run of this
         // same statement — skipping the rename is the exactly-once
@@ -462,10 +428,8 @@ object VortexMerge {
         }
       }
     }
-    stagedSchema.foreach { sj =>
-      MaintenanceCommit.writeManifests(root, hconf, "merge-ins",
-        renamedEntries.toSeq.map(e => (sj, e)))
-    }
+    MaintenanceCommit.writeManifests(root, hconf, "merge-ins",
+      renamedEntries.toSeq.map(e => (storedJson, e)))
     if (backfillEntries.nonEmpty)
       MaintenanceCommit.writeManifests(root, hconf, "merge-ins-backfill",
         backfillEntries.toSeq)

@@ -2,9 +2,12 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.vortex.{StatsManifest, VortexMerge, VortexUpdate}
+import graft.sources.vortex.{BucketSpecFile, StatsManifest, VortexDataSource, VortexFileReader,
+  VortexInputPartition, VortexMerge, VortexUpdate}
 
 /** ADVICE r11 (medium): DML must not move a row's BUCKETING key in
   * place — the row would stay in its old __bucket=k directory while
@@ -148,5 +151,55 @@ class DmlBucketGuardSpec extends AnyFunSuite {
     val out = spark.read.format("vortex").load(dir)
     assert(out.count() == 50L)
     assert(out.filter(col("v") === "n0" || col("v") === "x").count() == 0L)
+  }
+
+  Seq("bucketed" -> false, "partitioned and bucketed" -> true).foreach { case (layout, partitioned) =>
+    test(s"MERGE inserts into a $layout dataset land in their key's bucket, exactly once") {
+      import spark.implicits._
+      val dir = tmp()
+      val w = (0L until 400L).map(i => (i, s"p${i % 2}", s"v$i")).toDF("k", "p", "v")
+        .write.format("vortex").option("bucketBy", "k").option("buckets", "4")
+      (if (partitioned) w.option("partitionBy", "p") else w).mode("overwrite").save(dir)
+      val newKeys = 1000L until 1012L
+      val src = newKeys.map(i => (i, s"p${i % 2}", s"new$i")).toDF("k", "p", "v")
+      assert(VortexMerge.merge(spark, dir, src, Seq("k")).rowsInserted == newKeys.length)
+      val hconf = spark.sessionState.newHadoopConf()
+      val inserts = VortexDataSource.listAll(Seq(dir), hconf).map(_._1)
+        .filter(_.getPath.getName.startsWith("part-merge-ins-"))
+      // each insert file sits in the bucket directory of every key it holds
+      val stored = inserts.flatMap { st =>
+        val bucket = st.getPath.getParent.getName.stripPrefix(s"${BucketSpecFile.BucketCol}=").toInt
+        val footer = VortexFileReader.readFooter(st.getPath, hconf)
+        val kc = footer.schema.fieldIndex("k")
+        val ks = VortexFileReader.readChunks(st.getPath, hconf, footer, 0, footer.chunks.length,
+          Array(kc)).flatMap { case (n, vecs) => (0 until n).map(i => vecs(0).longs(i)) }.toSeq
+        ks.foreach(k => assert(BucketSpecFile.bucketOf(k, LongType, 4) == bucket,
+          s"key $k in ${st.getPath}"))
+        ks
+      }
+      assert(stored.sorted == newKeys)
+      // the manifest covers every insert file
+      val rootQ = fs.makeQualified(new Path(dir)).toString
+      val m = StatsManifest.read(new Path(dir), hconf)
+      inserts.foreach { st =>
+        val rel = fs.makeQualified(st.getPath).toString.stripPrefix(rootQ).stripPrefix("/")
+        assert(m.get(rel).exists(_.len == st.getLen), s"$rel is not covered")
+      }
+      // a point read plans only its key's bucket and finds the row
+      val df = spark.read.format("vortex").load(dir)
+      newKeys.foreach { k =>
+        val q = df.filter(col("k") === k)
+        val planned = q.queryExecution.sparkPlan.collect { case b: BatchScanExec => b }
+          .flatMap(_.inputPartitions).collect { case v: VortexInputPartition => new Path(v.file) }
+        assert(planned.nonEmpty && planned.forall(_.getParent.getName ==
+          s"${BucketSpecFile.BucketCol}=${BucketSpecFile.bucketOf(k, LongType, 4)}"), s"key $k: $planned")
+        assert(q.select("v").as[String].collect().toSeq == Seq(s"new$k"))
+      }
+      // a re-run inserts nothing twice
+      assert(VortexMerge.merge(spark, dir, src, Seq("k")).rowsInserted == 0L)
+      val after = spark.read.format("vortex").load(dir)
+      assert(after.count() == 400L + newKeys.length)
+      assert(after.filter(col("k") >= 1000L).count() == newKeys.length)
+    }
   }
 }

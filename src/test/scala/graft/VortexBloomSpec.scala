@@ -1,10 +1,13 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.vortex.{BloomBuilder, Sbbf, VortexFileReader}
+import graft.sources.vortex.{BloomBuilder, Sbbf, StatsManifest, VortexDataSource, VortexFileReader,
+  VortexInputPartition, VortexMaintenance, VortexMerge}
 
 /** Manifest bloom filters: plan-time `=`/`IN` file pruning on
   * high-cardinality unsorted columns where min/max ranges never prune
@@ -143,5 +146,45 @@ class VortexBloomSpec extends AnyFunSuite {
       df.write.format("vortex").option("partitionBy", "p")
         .option("bloomFilters", "p").mode("overwrite").save(dir)
     }
+  }
+
+  /** names of the files a query's scan plans */
+  private def plannedFiles(df: DataFrame): Set[String] =
+    df.queryExecution.sparkPlan.collect { case b: BatchScanExec => b }
+      .flatMap(_.inputPartitions).collect { case v: VortexInputPartition => new Path(v.file).getName }
+      .toSet
+
+  test("a MERGE insert keeps the bloom opt-in through a compaction") {
+    val dir = Files.createTempDirectory("vortex_bloom_merge_").toString
+    // keys are hashes: every file's range spans ~the whole domain, so
+    // only a bloom prunes. One large file the compaction leaves alone,
+    // two small ones it absorbs
+    def keys(lo: Long, hi: Long, files: Int) =
+      spark.range(lo, hi).select(expr("xxhash64(id)").as("k"), col("id").as("v")).repartition(files)
+    keys(0, 20000, 1).write.format("vortex").option("bloomFilters", "k").mode("overwrite").save(dir)
+    keys(20000, 20080, 2).write.format("vortex").option("bloomFilters", "k").mode("append").save(dir)
+    val conf = spark.sessionState.newHadoopConf()
+    val large = VortexDataSource.listAll(Seq(dir), conf).map(_._1).maxBy(_.getLen)
+    // ten new keys near 0, inside every file's range
+    val src = spark.range(1, 11).selectExpr("id AS k", "-1L AS v")
+    assert(VortexMerge.merge(spark, dir, src, Seq("k")).rowsInserted == 10)
+    val res = VortexMaintenance.compact(spark, dir, targetBytes = 50000)
+    assert(res.filesAbsorbed == 3 && res.batches == 1, res)
+    val files = VortexDataSource.listAll(Seq(dir), conf).map(_._1)
+    val compacted = files.find(_.getPath.getName.startsWith("part-compact-")).get
+    val entry = StatsManifest.read(new Path(dir), conf)(compacted.getPath.getName)
+    assert(entry.len == compacted.getLen)
+    assert(entry.cols.find(_.name == "k").get.bloom.isDefined,
+      "the compacted file lost the bloom of its MERGE-inserted source")
+    val df = spark.read.format("vortex").load(dir)
+    // an inserted key: the large file's bloom prunes it
+    val ins = df.filter(col("k") === 5L)
+    assert(plannedFiles(ins) == Set(compacted.getPath.getName))
+    assert(ins.count() == 1)
+    // a key of the large file only: the compacted file's bloom prunes it
+    val key7 = spark.range(7, 8).select(expr("xxhash64(id)")).head().getLong(0)
+    val old = df.filter(col("k") === key7)
+    assert(plannedFiles(old) == Set(large.getPath.getName))
+    assert(old.count() == 1)
   }
 }

@@ -635,16 +635,25 @@ def q_maint():
     # ~1/3 of queries stage the copy Hive-PARTITIONED: same twin, but
     # the Spark side now runs dir pruning, partition guards, the
     # layout-aware merge insert half, and partitioned streaming.
-    # Assignments to the partition column are rejected by design, so
-    # the generators below must avoid it.
-    partby = PARTBY.get(t) if rng.random() < 0.35 and t in PARTBY else None
+    # ~1/4 stage it BUCKETED by the maintenance key instead (never
+    # both): bucket pruning, the bucket-key guards and the bucketed
+    # merge insert half. Assignments to the partition column or the
+    # bucket key are rejected by design, so the generators below must
+    # avoid them. One draw decides both, so partitioned staging keeps
+    # the seed sequences it had before bucketed staging existed.
+    layout = rng.random()
+    partby = PARTBY.get(t) if layout < 0.35 and t in PARTBY else None
+    bucketby = MAINT_KEY[t] if partby is None and 0.35 <= layout < 0.6 else None
     if partby:
         ops_spark.append(f"partby={partby}")
+    if bucketby:
+        ops_spark.append(f"bucketby={bucketby}")
+    fixed = {partby, bucketby} - {None}
     def no_part_sets(sets):
-        kept = [kv for kv in sets if kv[0] != partby]
+        kept = [kv for kv in sets if kv[0] not in fixed]
         if kept:
             return kept
-        ints = [c for c in (T[t]['ints'] if t != 'nestedx' else []) if c != partby]
+        ints = [c for c in (T[t]['ints'] if t != 'nestedx' else []) if c not in fixed]
         if t == 'nestedx':
             return [("dec1", "CAST(dec1 + 1 AS DECIMAL(12,2))")]
         return [(ints[0], f"{ints[0]} + 3")]
