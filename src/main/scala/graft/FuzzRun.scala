@@ -378,6 +378,11 @@ object FuzzRun {
           if (!errs.isEmpty) throw errs.peek()
         } else { runOp(l); oi += 1 }
       }
+      // fsck-lite: whatever the ops crashed, a later op's prologue
+      // repaired, so the crash judgment over the raw walk finds nothing
+      val (_, _, left) = sources.vortex.VortexDataSource.walk(Seq(dir),
+        spark.sessionState.newHadoopConf())
+      if (!left.isEmpty) sys.error(s"fuzz maintenance: uncommitted state after the ops: $left")
       // explicit schema: a delete can legitimately empty the dataset,
       // and schema inference over zero files has nothing to infer
       var streamQn: Option[String] = None

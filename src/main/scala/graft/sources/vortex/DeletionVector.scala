@@ -167,6 +167,10 @@ object DeletionVector {
       dataPath -> (sorted.head._2.toString, sorted.map(_._2.toString))
     }
 
+  /** the newest mask seq [[bind]] bound to `file`, 0 when it has none */
+  def newestSeq(maskBind: Map[String, (String, Seq[String])], file: String): Int =
+    maskBind.get(file).flatMap(b => parseName(new Path(b._1).getName)).fold(0)(_._2)
+
   // ---- I/O (masks are immutable → cache by exact path) ------------------
 
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, Mask]()

@@ -6,10 +6,11 @@ import org.apache.spark.sql.types.StructType
 
 /** Commit-side helpers of the maintenance statements: the remover
   * that retires or deletes superseded files, the per-schema
-  * stats-manifest write, the cross-statement crash repairs that keep
-  * the deterministic-name crash contract safe across DIFFERENT
-  * statements, and the compaction commit markers. The per-file commit
-  * itself lives in RowLevelStatement. */
+  * stats-manifest write, the deterministic replacement names, the
+  * compaction commit markers, and the one crash judgment
+  * ([[uncommitted]]) every read hides and every statement prologue
+  * repairs ([[repair]]). The per-file commit itself lives in
+  * RowLevelStatement. */
 private[graft] object MaintenanceCommit {
 
   /** How a maintenance commit removes a COMMITTED file it supersedes
@@ -53,100 +54,134 @@ private[graft] object MaintenanceCommit {
     }
   }
 
-  /** Crash repair across DIFFERENT statements: the deterministic
-    * replacement names make a re-run of the SAME statement converge,
-    * but a crash that left a source F and its committed replacement
-    * (part-{delete|update|merge}-md5(F)) COEXISTING would let a later
-    * statement with a different predicate interleave against the pair
-    * and double-commit survivors. Every maintenance op calls this
-    * before planning: a replacement whose SOURCE still exists is
-    * provably the rename-in half of an uncommitted (failed) statement —
-    * drop it, restoring the pre-crash source as the single truth (the
-    * failed statement's contract is already "re-run to converge").
-    * Returns the number of stale replacements removed. */
-  def repairStaleReplacements(
-      fs: FileSystem,
-      listed: Seq[FileStatus]): Int = {
-    // a Seq, NOT a basename-keyed Map: the partitioned writer reuses one
-    // basename across every partition directory a task writes, so a
-    // crash can leave stale pairs in SEVERAL directories at once — all
-    // of them must repair, not just one per name
-    val stalePaths: Seq[Path] =
-      listed.map(_.getPath).groupBy(_.getParent.toString).toSeq
-        .flatMap { case (_, ps) =>
-          val present = ps.map(_.getName).toSet
-          ps.flatMap { p =>
-            val hash = VortexDelete.replacementName(p.getName)
-              .stripPrefix("part-delete-")
-            Seq("part-delete-", "part-update-", "part-merge-", "part-fold-")
-              .collect { case pre if present.contains(pre + hash) =>
-                new Path(p.getParent, pre + hash) }
-          }
-        }
-    var dropped = 0
-    stalePaths.foreach { stale =>
-      if (try fs.delete(stale, false) catch { case _: Exception => false }) {
-        dropped += 1
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"vortex maintenance: dropped stale replacement $stale " +
-          "(its source file still exists — a prior statement crashed mid-commit)")
-      }
-    }
-    dropped
-  }
+  // ---- deterministic names ----
+  //
+  // A row-level statement names each file it writes after its SOURCE
+  // basename (`md5(src)`, 16 hex chars), so a re-run of the same
+  // statement after a crash overwrites its own stale halves instead of
+  // duplicating them, and a file's uncommitted state is decidable from
+  // the listing alone ([[uncommitted]]).
 
+  /** the replacement kinds: `part-<kind>-<md5(src)>.vortex` replaces
+    * its source, so it is committed only once the source is gone */
+  private val ReplacementKinds = Seq("delete", "update", "merge", "fold")
+  private val ReplacementName =
+    s"^part-(?:${ReplacementKinds.mkString("|")})-([0-9a-f]{16})\\.vortex$$".r
+  /** `part-updv-<md5(src)>-<seq>.vortex`: a merge-on-read UPDATE's
+    * appended rows, committed once the source's mask `seq` is */
   private val UpdvName = "^part-updv-([0-9a-f]{16})-(\\d+)\\.vortex$".r
 
-  /** Crash repair for the merge-on-read UPDATE tier: its per-file
-    * commit is append-updated-rows THEN mask-old-rows, so a crash
-    * between the two leaves the updated rows appended while the old
-    * rows are still live — a duplicate that would otherwise survive
-    * until the same statement re-runs. The append name carries the
-    * mask seq it pairs with (`part-updv-<md5(src)>-<seq>.vortex`): an
-    * updv file whose SOURCE still exists with newest mask seq < seq is
-    * provably that orphaned append half — drop it, restoring the
-    * pre-statement state (the failed statement's contract is re-run to
-    * converge). A committed updv file (source's mask seq ≥ its seq, or
-    * source gone — e.g. folded away) is live data and is never
-    * touched. Returns the number of orphans removed. */
-  def repairStaleUpdvAppends(
-      fs: FileSystem,
-      listed: Seq[FileStatus],
-      maskBind: Map[String, (String, Seq[String])]): Int = {
-    def newestSeq(file: Path): Int =
-      maskBind.get(file.toString).map(_._2.flatMap(m =>
-        DeletionVector.parseName(new Path(m).getName).map(_._2))
-        .foldLeft(0)(math.max)).getOrElse(0)
-    var dropped = 0
-    listed.map(_.getPath).groupBy(_.getParent.toString).foreach { case (_, ps) =>
-      val hashOf: Map[String, Path] = ps.map(p =>
-        VortexDelete.replacementName(p.getName)
-          .stripPrefix("part-delete-").stripSuffix(".vortex") -> p).toMap
-      ps.foreach { p =>
-        p.getName match {
-          case UpdvName(h, s) =>
-            hashOf.get(h).foreach { src =>
-              if (s.toInt > newestSeq(src) &&
-                  (try fs.delete(p, false) catch { case _: Exception => false })) {
-                dropped += 1
-                org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                  s"vortex maintenance: dropped orphaned update append $p " +
-                  s"(source $src has no mask at seq ${s.toInt} — a prior " +
-                  "UPDATE crashed between its append and mask commits)")
-              }
-            }
-          case _ =>
+  private def nameHash(srcName: String): String =
+    java.util.HexFormat.of().formatHex(java.security.MessageDigest.getInstance("MD5")
+      .digest(srcName.getBytes("UTF-8"))).take(16)
+
+  /** the `kind` statement's replacement of the file named `srcName` */
+  def replacementName(kind: String, srcName: String): String = {
+    require(ReplacementKinds.contains(kind), s"vortex: no replacement kind $kind")
+    s"part-$kind-${nameHash(srcName)}.vortex"
+  }
+
+  /** the merge-on-read UPDATE append that pairs with mask `maskSeq` of
+    * the file named `srcName` */
+  def appendName(srcName: String, maskSeq: Int): String =
+    s"part-updv-${nameHash(srcName)}-$maskSeq.vortex"
+
+  // ---- the crash judgment ----
+
+  /** What a walk of a dataset holds that belongs to no committed state:
+    * `stale` replacements, `orphans` (merge-on-read appends whose mask
+    * never committed) and the compact `markers` with what each hides. */
+  final case class Uncommitted(stale: Seq[Path], orphans: Seq[Path], markers: Seq[Marker]) {
+    /** the data files no reader and no planner may see */
+    lazy val hidden: Set[String] =
+      (stale ++ orphans ++ markers.flatMap(_.absorbed)).map(_.toString).toSet
+    def isEmpty: Boolean = stale.isEmpty && orphans.isEmpty && markers.isEmpty
+  }
+
+  /** One compact marker under `root`: its commit (None: torn bytes) and
+    * the absorbed sources it hides — the listed ones when its output is
+    * listed, none otherwise. */
+  final case class Marker(path: Path, root: Path, commit: Option[CompactCommit],
+                          absorbed: Seq[Path])
+
+  /** THE crash judgment, shared by every read's listing and every
+    * maintenance statement's repair, over one walk: `files` (the data
+    * files), `maskBind` (their masks, [[DeletionVector.bind]]) and the
+    * compact `markers`. Per directory:
+    *  - a replacement (`part-{delete,update,merge,fold}-<h>`) whose
+    *    source (the file whose name hashes to `h`) is listed is stale:
+    *    the source's removal never committed, the source is the truth;
+    *  - an updv append `part-updv-<h>-<s>` whose listed source's newest
+    *    mask seq is below `s` is an orphan: its mask never committed
+    *    (a committed one, or one whose source is gone, is live data);
+    *  - then, over what remains, a marker whose output is listed hides
+    *    its listed absorbed sources (the removals never finished); a
+    *    marker whose output is not listed, or whose bytes are torn,
+    *    hides nothing. A marker that cannot be read throws: an intact
+    *    marker on a flaky store must never pass for a torn one. */
+  def uncommitted(files: Seq[FileStatus], maskBind: Map[String, (String, Seq[String])],
+                  markers: Seq[Path], conf: Configuration): Uncommitted = {
+    // (file, stale replacement?) for every uncommitted data file
+    val found = files.map(_.getPath).groupBy(_.getParent.toString).values.toSeq.flatMap { ps =>
+      lazy val sources = ps.map(p => nameHash(p.getName) -> p).toMap
+      ps.flatMap(p => p.getName match {
+        case ReplacementName(h) if sources.get(h).exists(_ != p) => Some(p -> true)
+        case UpdvName(h, seq) if sources.get(h).exists(src =>
+            seq.toInt > DeletionVector.newestSeq(maskBind, src.toString)) => Some(p -> false)
+        case _ => None
+      })
+    }.sortBy(_._1.toString)
+    lazy val remaining: Map[String, Path] = {
+      val gone = found.map(_._1).toSet
+      files.map(_.getPath).filterNot(gone).map(p => p.toString -> p).toMap
+    }
+    val judged = markers.map { mp =>
+      val fs = mp.getFileSystem(conf)
+      val root = mp.getParent
+      def listed(rel: String) = remaining.get(fs.makeQualified(new Path(root, rel)).toString)
+      val commit = readCompactMarker(fs, mp)
+      Marker(mp, root, commit, commit.toSeq.flatMap(c =>
+        if (listed(c.outRel).isEmpty) Nil else c.srcRels.flatMap(listed)))
+    }
+    Uncommitted(found.collect { case (p, true) => p }, found.collect { case (p, false) => p }, judged)
+  }
+
+  /** Make `u` true on disk (the caller holds the maintenance lease):
+    * delete the stale replacements and orphans — uncommitted litter no
+    * generation references — finish each committed compaction's
+    * source removals through the remover its marker names, then drop
+    * every marker. A litter delete that fails throws before the caller
+    * plans anything: once a statement replaced or re-masked the
+    * litter's source, the judgment would take the litter for committed
+    * data. The dataset then stays as the crash left it, reads still
+    * hide the litter, and a re-run repairs again. */
+  def repair(fs: FileSystem, u: Uncommitted): Unit = {
+    val log = org.slf4j.LoggerFactory.getLogger(getClass)
+    (u.stale ++ u.orphans).foreach { p =>
+      if (!fs.delete(p, false))
+        throw new java.io.IOException(s"vortex maintenance: cannot delete uncommitted $p")
+      log.warn(s"vortex maintenance: dropped uncommitted $p (a prior statement crashed mid-commit)")
+    }
+    u.markers.foreach { m =>
+      m.commit.foreach { c =>
+        val rm = if (c.retireDirQ.isEmpty) PlainRemover
+          else new RetireRemover(fs.makeQualified(m.root).toString, c.retireDirQ)
+        m.absorbed.foreach { p =>
+          if (!rm.remove(fs, p))
+            throw new java.io.IOException(s"vortex compact repair: failed to remove absorbed $p")
         }
       }
+      log.warn(s"vortex maintenance: settled compact marker ${m.path.getName} " +
+        s"(${m.absorbed.length} absorbed sources removed)")
+      fs.delete(m.path, false)
     }
-    dropped
   }
 
   // ---- compaction commit markers (r12 review-found crash window) ----
   //
   // Compaction outputs carry RANDOM `part-compact-<uuid>` names (their
   // identity is a batch of sources, not one source), so the
-  // deterministic-name repair above cannot pair them: moving the
+  // deterministic-name judgment above cannot pair them: moving the
   // absorbed-source removal driver-side (for retirement) opened a
   // window where a crash between the output rename and the source
   // removals would leave BOTH live — permanent row duplication no
@@ -154,11 +189,13 @@ private[graft] object MaintenanceCommit {
   // BEFORE the rename: `.compact-commit-<id>.json` at the dataset root
   // records the output's relative path, the absorbed sources, and the
   // statement's retire directory (empty = plain delete). Commit order:
-  // marker → rename output in → remove sources → delete marker. Repair
-  // (every maintenance statement start, under the lease):
-  //   - marker + output PRESENT  → finish the removals, drop marker
+  // marker → rename output in → remove sources → delete marker.
+  // [[uncommitted]] judges each marker (reads hide what it decides,
+  // every statement start repairs it under the lease):
+  //   - marker + output PRESENT  → the sources are hidden; repair
+  //                                finishes the removals, drops marker
   //   - marker + output ABSENT   → nothing renamed; drop marker
-  //   - unreadable marker        → torn at write, which precedes the
+  //   - torn marker bytes        → torn at write, which precedes the
   //                                rename; drop it
   // Markers are dot-hidden (invisible to data listings).
 
@@ -198,59 +235,5 @@ private[graft] object MaintenanceCommit {
     val out = fs.create(p, true)
     try out.write(m.writeValueAsBytes(node)) finally out.close()
     p
-  }
-
-  private def removeTo(fs: FileSystem, rootQ: String, retireDirQ: String,
-                       p: Path): Boolean =
-    if (retireDirQ.isEmpty) fs.delete(p, false)
-    else {
-      val q = fs.makeQualified(p).toString
-      val dst = new Path(retireDirQ + "/" + q.stripPrefix(rootQ).stripPrefix("/"))
-      fs.mkdirs(dst.getParent)
-      fs.rename(p, dst)
-    }
-
-  /** Complete (or roll back) the batches of a crashed compact — see the
-    * marker contract above. Caller holds the maintenance lease. Returns
-    * the number of markers processed. */
-  def repairStaleCompactions(fs: FileSystem, root: Path): Int = {
-    val markers =
-      (try fs.listStatus(root).toSeq catch { case _: Exception => Seq.empty })
-        .map(_.getPath).filter(_.getName.startsWith(CompactMarkerPrefix))
-    if (markers.isEmpty) return 0
-    val rootQ = fs.makeQualified(root).toString
-    val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    var processed = 0
-    markers.foreach { mp =>
-      // Open/read failures PROPAGATE (readCompactMarker): a transient
-      // IO error on an INTACT marker (flaky object store) must fail the
-      // statement loudly, not silently delete the marker while
-      // output+sources both live — that would reinstate exactly the
-      // permanent-duplication window the marker protocol exists to
-      // close (review-found r12). Only a marker whose BYTES do not
-      // parse is provably torn at write (which precedes the rename)
-      // and safe to drop.
-      val parsed: Option[CompactCommit] = readCompactMarker(fs, mp)
-      parsed match {
-        case Some(c) if fs.exists(new Path(root, c.outRel)) =>
-          // output committed: finish the source removals
-          c.srcRels.foreach { rel =>
-            val p = new Path(root, rel)
-            if (fs.exists(p) && !removeTo(fs, rootQ, c.retireDirQ, p))
-              throw new java.io.IOException(
-                s"vortex compact repair: failed to remove absorbed $p")
-          }
-          log.warn(s"vortex maintenance: completed crashed compact batch " +
-            s"${c.outRel} (${c.srcRels.length} sources; marker ${mp.getName})")
-        case Some(c) =>
-          log.warn(s"vortex maintenance: rolled back uncommitted compact " +
-            s"batch ${c.outRel} (marker ${mp.getName})")
-        case None =>
-          log.warn(s"vortex maintenance: dropped torn compact marker ${mp.getName}")
-      }
-      fs.delete(mp, false)
-      processed += 1
-    }
-    processed
   }
 }

@@ -11,8 +11,9 @@ class ConcurrentMaintenanceException(msg: String)
   * concurrency contract of this engine, in one place:
   *
   *  - **Readers never take a lock.** A reader planning during a
-  *    maintenance commit gets per-file before-or-after consistency via
-  *    the consistent listing view (VortexDataSource.consistentView);
+  *    maintenance commit gets per-file before-or-after consistency:
+  *    every listing hides what the one crash judgment
+  *    (MaintenanceCommit.uncommitted) finds uncommitted;
   *    a reader pinning a commit-log generation (VortexCommitLog,
   *    `versionAsOf`) gets statement-level snapshot isolation.
   *  - **Writers serialize through this lock.** Every maintenance

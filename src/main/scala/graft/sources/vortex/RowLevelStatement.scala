@@ -20,13 +20,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * clauses plus, for MERGE, a keyed source — and shares everything,
   * its per-file kernel included:
   *
-  *  1. PROLOGUE ([[run]]): the dataset's maintenance lease, the
-  *     crashed-compaction repair, ONE raw listing with the mask
-  *     binding, the two cross-statement crash repairs (stale
-  *     replacements, orphaned merge-on-read appends — the dataset is
-  *     re-listed only when they dropped something), then, once the
-  *     statement knows it has work ([[Statement.begin]]), the commit
-  *     log's pre-statement generation and the remover that retires
+  *  1. PROLOGUE ([[run]]): the dataset's maintenance lease, ONE raw
+  *     walk with the mask binding, the repair of what the crash
+  *     judgment finds in it ([[MaintenanceCommit.uncommitted]]: stale
+  *     replacements, orphaned merge-on-read appends, crashed compact
+  *     batches) and the listing the statement plans on — the walk
+  *     minus the files the judgment hides — then, once the statement
+  *     knows it has work ([[Statement.begin]]), the commit log's
+  *     pre-statement generation and the remover that retires
   *     superseded files into it.
   *  2. BIND ([[bind]], [[where]]): the table schema comes from the
   *     prologue's listing by inferSchema's rules ([[Statement.schema]]);
@@ -75,7 +76,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * source, so no committed state ever loses a row; replacement names
   * are deterministic in the source name, so re-running the same
   * statement after a crash overwrites its own stale halves, and the
-  * prologue's repairs drop the halves a crashed statement left for a
+  * prologue's repair drops the halves a crashed statement left for a
   * DIFFERENT statement to find.
   */
 private[graft] object RowLevelStatement {
@@ -109,15 +110,11 @@ private[graft] object RowLevelStatement {
     val hconf = spark.sessionState.newHadoopConf()
     val root = new Path(dir)
     val fs = root.getFileSystem(hconf)
-    // crashed compact batches first: their markers pair random
-    // part-compact names with their absorbed sources
-    MaintenanceCommit.repairStaleCompactions(fs, root)
-    def list() = VortexDataSource.listAllWithMasks(Seq(dir), hconf, consistent = false)
-    val (listed0, maskBind0) = list()
-    val repaired = MaintenanceCommit.repairStaleReplacements(fs, listed0.map(_._1)) +
-      MaintenanceCommit.repairStaleUpdvAppends(fs, listed0.map(_._1), maskBind0)
-    // planning must never see a replacement the repair just dropped
-    val (listed, maskBind) = if (repaired == 0) (listed0, maskBind0) else list()
+    // one walk: repair what the crash judgment finds in it, then plan
+    // on the walk minus what the judgment hides — no second listing
+    val (walked, maskBind, uncommitted) = VortexDataSource.walk(Seq(dir), hconf)
+    MaintenanceCommit.repair(fs, uncommitted)
+    val listed = walked.filterNot(f => uncommitted.hidden(f._1.getPath.toString))
     val st = new Statement(spark, op, root, fs, hconf, listed, maskBind, ph)
     val result = body(st)
     st.finish()
@@ -187,7 +184,7 @@ private[graft] object RowLevelStatement {
   final case class Mask(mask: Staged) extends Change
   /** merge-on-read UPDATE: rename the appended `data` in, then the
     * `mask` that hides the old rows, then drop the older masks (the
-    * append name carries the mask seq — see repairStaleUpdvAppends) */
+    * append name carries the mask seq — see VortexUpdate.appendName) */
   final case class AppendMask(data: Staged, mask: Staged) extends Change
 
   /** One file task's result: its change, the kernel that ran, and the
@@ -239,7 +236,7 @@ private[graft] object RowLevelStatement {
 
     /** Open the statement in the commit log (a no-op without one):
       * the log's latest generation becomes the pre-statement state,
-      * reusing the prologue's post-repair listing. Called once the
+      * reusing the prologue's committed listing. Called once the
       * statement knows it has work, before it commits anything. */
     def begin(): Unit = if (!begun) {
       log = VortexCommitLog.begin(spark, fs, root, hconf, op, Some((listed, maskBind)))
@@ -275,9 +272,8 @@ private[graft] object RowLevelStatement {
         case -1 => ""
         case i => rel.substring(0, i)
       }
-      val nextSeq = maskBind.get(file).map(_._2.flatMap(m =>
-        DeletionVector.parseName(new Path(m).getName).map(_._2)).max + 1).getOrElse(1)
-      Candidate(file, partCols, partValues, plannedChunks, maskFile, nextSeq, dstName, relDir,
+      Candidate(file, partCols, partValues, plannedChunks, maskFile,
+        DeletionVector.newestSeq(maskBind, file) + 1, dstName, relDir,
         entries.get(s"$rootQ/$rel").map(_.cols.map(c => c.name -> c).toMap).getOrElse(Map.empty))
     }
 

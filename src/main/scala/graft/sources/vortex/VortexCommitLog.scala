@@ -120,12 +120,11 @@ object VortexCommitLog {
 
   /** the CONSISTENT current listing as snapshot entries (sorted by rel
     * path — the comparison key for change detection). `pre` lets a
-    * maintenance statement hand over the listing it already walked
-    * (valid only when its repairs dropped nothing, in which case the
-    * raw and consistent views provably coincide — every coexisting
-    * pair would have been repaired and counted) so enabling the commit
-    * log costs ONE extra walk per statement (finish), not two
-    * (review-found r12). */
+    * maintenance statement hand over the listing it already holds —
+    * its walk minus what the crash judgment hides, the same files
+    * [[VortexDataSource.listAllWithMasks]] would return — so enabling
+    * the commit log costs ONE extra walk per statement (finish), not
+    * two. */
   private def currentEntries(fs: FileSystem, root: Path,
                              conf: Configuration,
                              pre: Option[PreListing] = None): IndexedSeq[FileEntry] = {
@@ -151,14 +150,14 @@ object VortexCommitLog {
   type PreListing =
     (Seq[(FileStatus, Seq[(String, String)])], Map[String, (String, Seq[String])])
 
-  /** Maintenance-op hook, called AFTER the pre-planning repair: when
+  /** Maintenance-op hook, called AFTER the prologue's repair: when
     * time travel is on (conf) or the dataset already has a log, ensure
     * the log's latest generation describes the CURRENT (pre-statement)
     * state — writing a catch-up generation if out-of-band appends
     * drifted it — and return the commit context whose remover retires
-    * files under the statement's own generation number. Pass
-    * `preListed` (the statement's own walk) ONLY when the statement's
-    * repairs dropped nothing — see [[currentEntries]]. */
+    * files under the statement's own generation number. `preListed` is
+    * the statement's committed listing, when it holds one — see
+    * [[currentEntries]]. */
   def begin(spark: SparkSession, fs: FileSystem, root: Path,
             conf: Configuration, op: String,
             preListed: Option[PreListing] = None): Option[Ctx] = {

@@ -73,19 +73,25 @@ object VortexDataSource {
 
   /** [[listAll]] plus deletion-vector binding: data-file path →
     * (newest mask sidecar path, all mask paths), collected during the
-    * same directory walk (zero extra I/O — see DeletionVector). */
+    * same directory walk (zero extra I/O — see DeletionVector). The
+    * files are the committed state only: the walk minus what the crash
+    * judgment hides ([[walk]]), so a reader planning during a
+    * maintenance commit, or after a crash, never serves a row twice. */
   def listAllWithMasks(raw: Seq[String], conf: org.apache.hadoop.conf.Configuration)
       : (Seq[(org.apache.hadoop.fs.FileStatus, Seq[(String, String)])],
-         Map[String, (String, Seq[String])]) =
-    listAllWithMasks(raw, conf, consistent = true)
-
-  /** `consistent = false` returns the RAW listing — maintenance ops
-    * need it to SEE the stale pairs their pre-planning repair removes;
-    * every read path takes the default consistent view. */
-  def listAllWithMasks(raw: Seq[String], conf: org.apache.hadoop.conf.Configuration,
-                       consistent: Boolean)
-      : (Seq[(org.apache.hadoop.fs.FileStatus, Seq[(String, String)])],
          Map[String, (String, Seq[String])]) = {
+    val (files, masks, u) = walk(raw, conf)
+    (files.filterNot(f => u.hidden(f._1.getPath.toString)), masks)
+  }
+
+  /** The RAW walk of `raw` — every data file in path order, the mask
+    * binding, and [[MaintenanceCommit.uncommitted]]'s judgment of what
+    * in it belongs to no committed state. Reads take the walk minus the
+    * hidden files ([[listAllWithMasks]]); a maintenance statement also
+    * repairs what the judgment found. */
+  def walk(raw: Seq[String], conf: org.apache.hadoop.conf.Configuration)
+      : (Seq[(org.apache.hadoop.fs.FileStatus, Seq[(String, String)])],
+         Map[String, (String, Seq[String])], MaintenanceCommit.Uncommitted) = {
     val walked = raw.flatMap { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(conf)
@@ -94,83 +100,7 @@ object VortexDataSource {
     }
     val masks = DeletionVector.bind(walked.flatMap(_._2))
     val files = walked.flatMap(_._1).sortBy(_._1.getPath.toString)
-    if (!consistent) return (files, masks)
-    val view = consistentView(files, masks)
-    val markers = walked.flatMap(_._3)
-    if (markers.isEmpty) (view, masks)
-    else {
-      // a crashed compact's commit marker: output renamed in but the
-      // absorbed sources not yet removed → BOTH live in the raw listing
-      // (random part-compact names defeat the deterministic-name pair
-      // test above). Apply the repair's judgment NON-destructively at
-      // plan time: output present → exclude its absorbed sources;
-      // output absent → nothing renamed, sources are the truth
-      // (review-found r12 — plain readers on a read-mostly dataset
-      // otherwise serve duplicated rows until some later maintenance
-      // statement happens to run).
-      val present = view.map(_._1.getPath.toString).toSet
-      val excluded: Set[String] = markers.flatMap { mp =>
-        val fs = mp.getFileSystem(conf)
-        val root = mp.getParent
-        MaintenanceCommit.readCompactMarker(fs, mp).toSeq.flatMap { c =>
-          val outQ = fs.makeQualified(new Path(root, c.outRel)).toString
-          if (present.contains(outQ))
-            c.srcRels.map(rel => fs.makeQualified(new Path(root, rel)).toString)
-          else Seq.empty
-        }
-      }.toSet
-      (view.filterNot(g => excluded.contains(g._1.getPath.toString)), masks)
-    }
-  }
-
-  private val UpdvName = "^part-updv-([0-9a-f]{16})-(\\d+)\\.vortex$".r
-
-  /** Per-file read consistency over in-flight maintenance commits —
-    * the read-side half of the deterministic-name contract. A listing
-    * captured mid-commit can hold BOTH a source file and its committed
-    * replacement (`part-{delete|update|merge|fold}-<md5(source)>`), or
-    * an UPDATE's appended updv file whose paired mask has not renamed
-    * in yet (`part-updv-<md5(source)>-<seq>` with seq beyond the
-    * source's newest mask): both would serve surviving rows twice.
-    * The view resolves every such pair to its BEFORE state by
-    * excluding the replacement/orphan — the same judgment the
-    * maintenance repair makes destructively, applied non-destructively
-    * at plan time. This makes READS per-file before-or-after
-    * consistent under concurrent maintenance; cross-FILE statement
-    * atomicity still requires quiescing (a directory format has no
-    * commit log to pin a statement boundary — documented contract). */
-  def consistentView(
-      files: Seq[(org.apache.hadoop.fs.FileStatus, Seq[(String, String)])],
-      maskBind: Map[String, (String, Seq[String])])
-      : Seq[(org.apache.hadoop.fs.FileStatus, Seq[(String, String)])] = {
-    val prefixes = Seq("part-delete-", "part-update-", "part-merge-", "part-fold-")
-    files.groupBy(_._1.getPath.getParent.toString).values.flatMap { group =>
-      // md5-name hash of every file in this directory → the pair tests
-      lazy val hashes: Map[String, Path] = group.map { g =>
-        VortexDelete.replacementName(g._1.getPath.getName)
-          .stripPrefix("part-delete-").stripSuffix(".vortex") -> g._1.getPath
-      }.toMap
-      def newestSeq(p: Path): Int =
-        maskBind.get(p.toString).map(_._2.flatMap(m =>
-          DeletionVector.parseName(new Path(m).getName).map(_._2))
-          .foldLeft(0)(math.max)).getOrElse(0)
-      group.filter { g =>
-        val n = g._1.getPath.getName
-        n match {
-          case UpdvName(h, s) =>
-            // orphaned append half of a crashed UPDATE: exclude
-            hashes.get(h).forall(src => s.toInt <= newestSeq(src))
-          case _ =>
-            // replacement whose source still exists: the source's
-            // delete has not committed — the pair is mid-commit (or a
-            // crashed statement awaiting repair); the source is truth
-            !prefixes.exists(pre => n.startsWith(pre) && n.endsWith(".vortex") && {
-              val h = n.stripPrefix(pre).stripSuffix(".vortex")
-              hashes.get(h).exists(_.getName != n)
-            })
-        }
-      }
-    }.toSeq.sortBy(_._1.getPath.toString)
+    (files, masks, MaintenanceCommit.uncommitted(files.map(_._1), masks, walked.flatMap(_._3), conf))
   }
 
   def expand(raw: Seq[String], conf: org.apache.hadoop.conf.Configuration): Seq[Path] =

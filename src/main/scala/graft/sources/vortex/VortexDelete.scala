@@ -35,10 +35,12 @@ import org.apache.spark.sql.types.StructType
   * VortexDeleteSpec's crash/idempotence scenarios.
   *
   * Concurrent-reader contract (r11): a reader PLANNING during the
-  * commit gets per-file before-or-after consistency — the consistent
-  * listing view (VortexDataSource.consistentView) resolves a
-  * coexisting source/replacement pair to its before state, so a
-  * survivor is never served twice (MaintenanceRepairSpec). What
+  * commit gets per-file before-or-after consistency — the crash
+  * judgment every listing goes through (MaintenanceCommit.uncommitted)
+  * hides a replacement whose source still exists, resolving the pair
+  * to its before state, so a survivor is never served twice
+  * (MaintenanceRepairSpec). The next statement's prologue repairs
+  * what that same judgment finds. What
   * remains out of contract for plain (non-time-travel) reads:
   * cross-FILE statement atomicity (a reader can see file A after and
   * file B before the same statement — pin a commit-log generation for
@@ -58,11 +60,8 @@ object VortexDelete {
   /** Replacement basename derived from the SOURCE basename: a re-run
     * after a crash mid-commit regenerates the same name, so the stale
     * replacement is overwritten instead of duplicated. */
-  private[graft] def replacementName(srcName: String): String = {
-    val h = java.util.HexFormat.of().formatHex(java.security.MessageDigest.getInstance("MD5")
-      .digest(srcName.getBytes("UTF-8"))).take(16)
-    s"part-delete-$h.vortex"
-  }
+  private[graft] def replacementName(srcName: String): String =
+    MaintenanceCommit.replacementName("delete", srcName)
 
   def delete(spark: SparkSession, dir: String, predicate: Column): DeleteResult =
     deleteImpl(spark, dir, predicate, deletionVectors = false, failAfterCommits = -1)

@@ -79,7 +79,7 @@ object VortexMaintenance {
   def foldMasks(spark: SparkSession, dir: String): FoldResult =
     RowLevelStatement.run(spark, dir, "foldMasks")(fold)
 
-  /** [[foldMasks]] body — `st` holds the prologue's post-repair listing;
+  /** [[foldMasks]] body — `st` holds the prologue's committed listing;
     * a crashed fold's `part-fold-` replacement is repaired there like
     * any other statement's. */
   private def fold(st: RowLevelStatement.Statement): FoldResult = {
@@ -89,8 +89,7 @@ object VortexMaintenance {
     else {
       st.begin()
       val cands = targets.map(f => st.candidate(f,
-        "part-fold-" + VortexDelete.replacementName(new Path(f).getName)
-          .stripPrefix("part-delete-"),
+        MaintenanceCommit.replacementName("fold", new Path(f).getName),
         maskFile = st.maskBind(f)._1))
       // no clauses: only the mask drops rows
       val outcomes = st.execute(cands, RowLevelStatement.Shape("foldMasks", null, Nil))
@@ -135,11 +134,12 @@ object VortexMaintenance {
     // manifest state BEFORE the rewrite: sources are deleted during
     // compaction, but their (path,len)-validated entries let the new
     // files inherit what a footer can't reproduce — writer-exact SUMs
-    // (merged sum = exact sum of source sums) and bloom filters (a
+    // (merged sum = exact sum of source sums), bloom filters (a
     // byte-copied merge's file bloom is EXACTLY the OR of its
     // sources', valid only when every source shares the same SBBF
-    // geometry: the block pick depends on block count). Any source
-    // missing the stat → the stat is dropped, conservatively.
+    // geometry: the block pick depends on block count) and quantile
+    // sketches (merged bucket-wise). Any source missing the stat → the
+    // stat is dropped, conservatively.
     val preManifest = StatsManifest.read(root, hconf)
     val lenByPath: Map[String, Long] = listed.map { case (st, _) =>
       fs.makeQualified(st.getPath).toString -> st.getLen }.toMap
@@ -214,7 +214,7 @@ object VortexMaintenance {
     stmt.timed("commit") {
     // driver commit, PER BATCH under a crash marker (the random
     // part-compact names have no source pairing the deterministic-name
-    // repair could use — see MaintenanceCommit.repairStaleCompactions):
+    // judgment could use — see MaintenanceCommit's marker contract):
     // marker → rename output in → remove absorbed sources (retiring
     // when time travel is on) → drop marker. A crash at any point
     // repairs exactly at the next statement.
@@ -241,47 +241,48 @@ object VortexMaintenance {
         fs.delete(marker, false)
     }
 
-    def inherited(batch: Seq[String]): (Map[String, Long], Map[String, Array[Byte]]) = {
+    /** per column, what the compacted file of `batch` inherits from
+      * its sources' entries: the exact sum, the OR-ed bloom and the
+      * merged sketch — each only when every source carries it */
+    def inherited(batch: Seq[String]): Map[String, StatsManifest.ColStats] = {
       val srcEntries = batch.map { f =>
         val q = fs.makeQualified(new Path(f)).toString
         preManifest.get(q.stripPrefix(rootQ).stripPrefix("/"))
           .filter(e => lenByPath.get(q).contains(e.len))
       }
-      if (srcEntries.exists(_.isEmpty)) return (Map.empty, Map.empty)
+      if (srcEntries.exists(_.isEmpty)) return Map.empty
       val es = srcEntries.map(_.get)
-      val colNames = es.head.cols.map(_.name)
-      val sums = colNames.flatMap { cn =>
-        val ss = es.map(_.cols.find(_.name == cn).flatMap(_.sum))
-        if (ss.exists(_.isEmpty)) None
-        else try Some(cn -> ss.map(_.get).reduce(Math.addExact(_, _)))
-        catch { case _: ArithmeticException => None }
-      }.toMap
-      val blooms = colNames.flatMap { cn =>
-        val bs = es.map(_.cols.find(_.name == cn).flatMap(_.bloom))
-        if (bs.exists(_.isEmpty)) None
-        else {
-          val arrs = bs.map(_.get)
-          if (arrs.map(_.length).distinct.size != 1) None
-          else {
-            val acc = arrs.head.clone()
-            arrs.tail.foreach { a =>
-              var i = 0
-              while (i < acc.length) { acc(i) = (acc(i) | a(i)).toByte; i += 1 }
-            }
-            Some(cn -> acc)
+      def every[T](cn: String, stat: StatsManifest.ColStats => Option[T]): Option[Seq[T]] = {
+        val vs = es.map(_.cols.find(_.name == cn).flatMap(stat))
+        if (vs.exists(_.isEmpty)) None else Some(vs.map(_.get))
+      }
+      es.head.cols.map { c =>
+        val cn = c.name
+        val sum = every(cn, _.sum).flatMap(ss =>
+          try Some(ss.reduce(Math.addExact(_, _))) catch { case _: ArithmeticException => None })
+        val bloom = every(cn, _.bloom).filter(_.map(_.length).distinct.size == 1).map { arrs =>
+          val acc = arrs.head.clone()
+          arrs.tail.foreach { a =>
+            var i = 0
+            while (i < acc.length) { acc(i) = (acc(i) | a(i)).toByte; i += 1 }
           }
+          acc
         }
+        // bucket-wise count addition: the merge IS the sketch of the union
+        val sketch = every(cn, _.sketch.flatMap(QuantileSketch.fromBytes))
+          .filter(_.map(_.prefixBits).distinct.size == 1)
+          .map(_.reduce[QuantileSketch](_ merge _).toBytes)
+        cn -> c.copy(sum = sum, bloom = bloom, sketch = sketch)
       }.toMap
-      (sums, blooms)
     }
     // extend the stats manifest with the new files (tier-1.5 pruning):
-    // each writer's entry — every column blind, so no sum or bloom —
-    // plus what its sources' entries let it inherit
+    // each writer's entry — every column blind, so no sum, bloom or
+    // sketch — plus what its sources' entries let it inherit
     MaintenanceCommit.writeManifests(root, hconf, "compact",
       batches.zip(results).map { case ((batch, sk), (_, dstName, _, entry)) =>
-        val (sums, blooms) = inherited(batch)
+        val inh = inherited(batch)
         (sk, entry.copy(relPath = stmt.relOf(dstOf(batch, dstName)), cols = entry.cols.map(c =>
-          c.copy(sum = sums.get(c.name), bloom = blooms.get(c.name)))))
+          inh.get(c.name).fold(c)(i => c.copy(sum = i.sum, bloom = i.bloom, sketch = i.sketch)))))
       })
     } // commit
 
@@ -346,7 +347,7 @@ object VortexMaintenance {
     val entry = w.close()
 
     // no rename here: the driver commits batch-by-batch under the
-    // crash-marker protocol (see MaintenanceCommit.repairStaleCompactions)
+    // crash-marker protocol (see MaintenanceCommit's marker contract)
     (tmp.toString, name, copied, entry)
   }
 }

@@ -79,7 +79,7 @@ object VortexMerge {
                                phaseMs: Map[String, Long] = Map.empty)
 
   private[graft] def replacementName(srcName: String): String =
-    "part-merge-" + VortexDelete.replacementName(srcName).stripPrefix("part-delete-")
+    MaintenanceCommit.replacementName("merge", srcName)
 
   /** the largest source whose single-column key set is pushed into
     * candidate planning as `key IN (…)` */

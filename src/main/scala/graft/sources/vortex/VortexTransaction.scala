@@ -261,7 +261,7 @@ object VortexTransaction {
     // (bound to no live file); the bound-only view would miss it and
     // the restore below would wrongly hunt the retired areas for a
     // mask that never left (review-found r13)
-    val (listed, rawMasks, _) =
+    val (listed, rawMasks, markers) =
       PartitionedLayout.listWithPartitionsMasksAndMarkers(root, conf)
     val liveFiles: Map[String, Path] =
       listed.map(f => relOf(f._1.getPath) -> f._1.getPath).toMap
@@ -302,9 +302,7 @@ object VortexTransaction {
     // 3. the dead group's compact markers (if it crashed mid-compact)
     //    reference state this rollback just rewrote — drop them so the
     //    next statement's repair cannot re-apply the dead removals
-    (try fs.listStatus(root).toSeq catch { case _: Exception => Seq.empty })
-      .map(_.getPath).filter(p => MaintenanceCommit.isCompactMarker(p.getName))
-      .foreach(p => fs.delete(p, false))
+    markers.foreach(p => fs.delete(p, false))
     // 4. this JVM may hold mask-cache entries for sidecars the rollback
     //    just deleted whose paths a later statement will REUSE at seq 1
     //    (the cache key also carries len+mtime — this clear makes

@@ -42,7 +42,7 @@ object VortexUpdate {
                                 phaseMs: Map[String, Long] = Map.empty)
 
   private[graft] def replacementName(srcName: String): String =
-    "part-update-" + VortexDelete.replacementName(srcName).stripPrefix("part-delete-")
+    MaintenanceCommit.replacementName("update", srcName)
 
   /** Appended-updates file of the MERGE-ON-READ tier, named
     * DETERMINISTICALLY from the source basename PLUS the mask sequence
@@ -50,14 +50,13 @@ object VortexUpdate {
     * append instead of duplicating it, and the seq makes the
     * append-committed/mask-lost crash window EXACTLY detectable — a
     * `part-updv-<h>-<s>` whose source's newest mask seq is < s is
-    * provably the orphaned append half of a failed statement
-    * (MaintenanceCommit.repairStaleUpdvAppends drops it). Unlike a
+    * provably the orphaned append half of a failed statement, which
+    * the crash judgment (MaintenanceCommit.uncommitted) hides from
+    * reads and the next statement's prologue deletes. Unlike a
     * replacement, a committed updv file legitimately COEXISTS with its
-    * (masked) source, so it must NOT be in repairStaleReplacements's
-    * prefix set. */
+    * (masked) source, so the judgment never treats it as one. */
   private[graft] def appendName(srcName: String, maskSeq: Int): String =
-    "part-updv-" + VortexDelete.replacementName(srcName)
-      .stripPrefix("part-delete-").stripSuffix(".vortex") + s"-$maskSeq.vortex"
+    MaintenanceCommit.appendName(srcName, maskSeq)
 
   def update(spark: SparkSession, dir: String,
              assignments: Map[String, Column], predicate: Column): UpdateResult =

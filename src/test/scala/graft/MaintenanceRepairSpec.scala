@@ -62,6 +62,7 @@ class MaintenanceRepairSpec extends AnyFunSuite {
     // a different statement triggers the repair; predicate matches nothing
     val res = VortexDelete.delete(spark, dir, col("v") < 0L)
     assert(res.rowsDeleted == 0L, res)
+    assert(CrashJudgmentSpec.uncommitted(spark, dir).isEmpty, "uncommitted state left after the repair")
     val after = spark.read.format("vortex").load(dir)
     assert(after.count() == 200L, "both stale replacements must be dropped")
     assert(after.agg(sum("v")).head().getLong(0) == (0L until 200L).sum)
@@ -92,6 +93,7 @@ class MaintenanceRepairSpec extends AnyFunSuite {
 
     val res = VortexMaintenance.foldMasks(spark, dir)
     assert(res.foldedFiles == 1 && res.rowsDropped == 100L, res)
+    assert(CrashJudgmentSpec.uncommitted(spark, dir).isEmpty, "uncommitted state left after the repair")
     val after = spark.read.format("vortex").load(dir)
     assert(after.count() == 900L)
     assert(after.agg(sum("id")).head().getLong(0) == (100L until 1000L).sum)
@@ -128,6 +130,7 @@ class MaintenanceRepairSpec extends AnyFunSuite {
     val res = VortexUpdate.update(spark, dir, Map("v" -> lit(9L)),
       col("id") < 0L, deletionVectors = true)
     assert(res.rowsUpdated == 0L, res)
+    assert(CrashJudgmentSpec.uncommitted(spark, dir).isEmpty, "uncommitted state left after the repair")
     val after = spark.read.format("vortex").load(dir)
     assert(after.count() == 1000L, "orphaned append must be dropped")
     assert(after.where(col("v") === -1L).count() == 10L, "committed pair intact")
@@ -162,6 +165,7 @@ class MaintenanceRepairSpec extends AnyFunSuite {
     assert(n < 3000L && n >= 2700L, s"got $n")
     // re-run converges to the full after state
     VortexDelete.delete(spark, dir, col("id") % 10L === 0L)
+    assert(CrashJudgmentSpec.uncommitted(spark, dir).isEmpty, "uncommitted state left after the repair")
     assert(spark.read.format("vortex").load(dir).count() == 2700L)
   }
 
@@ -182,6 +186,7 @@ class MaintenanceRepairSpec extends AnyFunSuite {
     // the delete's pre-planning repair must recognize the fold prefix
     val res = VortexDelete.delete(spark, dir, col("id") >= 450L)
     assert(res.rowsDeleted == 50L, res)
+    assert(CrashJudgmentSpec.uncommitted(spark, dir).isEmpty, "uncommitted state left after the repair")
     val after = spark.read.format("vortex").load(dir)
     assert(after.count() == 400L) // 50..449 exactly once
     assert(after.agg(sum("id")).head().getLong(0) == (50L until 450L).sum)

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.vortex.VortexMaintenance
+import graft.sources.vortex.{QuantileSketch, SketchPercentile, StatsManifest, VortexMaintenance}
 
 /** Small-file compaction: chunk byte-copy merge must preserve every
   * row/value (incl. across encodings) while collapsing file counts,
@@ -97,6 +97,7 @@ class VortexCompactionSpec extends AnyFunSuite {
     // uncommitted ones — but NEVER a duplicate: the marker of the
     // in-flight batch pairs its output with its absorbed sources
     VortexMaintenance.compact(spark, dir) // next statement repairs, then compacts
+    assert(CrashJudgmentSpec.uncommitted(spark, dir).isEmpty, "uncommitted state left after the repair")
     assert(fingerprint(dir) == before, "no row lost or duplicated across the crash")
 
     // crash BEFORE any rename (failAfter=0): everything rolls back
@@ -111,6 +112,7 @@ class VortexCompactionSpec extends AnyFunSuite {
     assert(fingerprint(dir2) == before2, "nothing committed before the first marker")
     assert(vortexFiles(dir2).size == 8, "no output renamed in")
     VortexMaintenance.compact(spark, dir2)
+    assert(CrashJudgmentSpec.uncommitted(spark, dir2).isEmpty, "uncommitted state left after the repair")
     assert(fingerprint(dir2) == before2)
   }
 
@@ -144,7 +146,11 @@ class VortexCompactionSpec extends AnyFunSuite {
     graft.sources.vortex.MaintenanceCommit.writeCompactMarker(fs, root3, "t1",
       graft.sources.vortex.MaintenanceCommit.CompactCommit(out, Seq(liveSrc), ""))
     // repair: the duplicate source must go, the output must stay
-    assert(graft.sources.vortex.MaintenanceCommit.repairStaleCompactions(fs, root3) == 1)
+    val (_, _, found) = graft.sources.vortex.VortexDataSource.walk(Seq(dir3),
+      spark.sparkContext.hadoopConfiguration)
+    assert(found.markers.length == 1)
+    graft.sources.vortex.MaintenanceCommit.repair(fs, found)
+    assert(CrashJudgmentSpec.uncommitted(spark, dir3).isEmpty, "uncommitted state left after the repair")
     val names = vortexFiles(dir3).map(_.getName)
     assert(names.contains(out) && !names.contains(liveSrc), names.toString)
     assert(spark.read.format("vortex").load(dir3).count() == 6000L)
@@ -250,5 +256,33 @@ class VortexCompactionSpec extends AnyFunSuite {
     // same LONG domain the writer hashed — xxhash64 is type-sensitive)
     assert(reads.filter(col("key") === expr("xxhash64(cast(0 as bigint))")).count() == 1)
     assert(reads.filter(col("key") === expr("xxhash64(cast(5999 as bigint))")).count() == 1)
+  }
+
+  test("compaction keeps distribution sketches: merged, equal to a fresh write's") {
+    val hconf = spark.sessionState.newHadoopConf()
+    def entries(dir: String) = StatsManifest.read(new org.apache.hadoop.fs.Path(dir), hconf)
+    def sketchOf(e: StatsManifest.FileStats) =
+      e.cols.find(_.name == "v").flatMap(_.sketch).flatMap(QuantileSketch.fromBytes)
+    val data = spark.range(0, 6000).selectExpr("id", "CAST(id % 997 AS DOUBLE) / 8 AS v")
+    val dir = Files.createTempDirectory("vortex_compact_sketch_").toString
+    data.where("id < 3000").repartition(2).write.format("vortex")
+      .option("distributionSketches", "v").mode("overwrite").save(dir)
+    data.where("id >= 3000").repartition(2).write.format("vortex")
+      .option("distributionSketches", "v").mode("append").save(dir)
+    val res = VortexMaintenance.compact(spark, dir)
+    assert(res.filesAbsorbed == 4 && res.batches == 1)
+    val live = vortexFiles(dir).map(_.getName)
+    assert(live.length == 1)
+    val compacted = entries(dir).values.find(_.relPath == live.head).get
+    val fresh = Files.createTempDirectory("vortex_compact_sketch_fresh_").toString
+    data.coalesce(1).write.format("vortex").option("distributionSketches", "v")
+      .mode("overwrite").save(fresh)
+    val want = sketchOf(entries(fresh).values.head).get
+    val got = sketchOf(compacted).getOrElse(fail("the compacted entry has no sketch"))
+    assert(got.toBytes.toSeq == want.toBytes.toSeq)
+    // percentile routing answers from the manifest, without a scan
+    assert(SketchPercentile.manifestSketch(spark, dir, "v").isDefined)
+    val sorted = data.collect().map(_.getDouble(1)).sorted
+    assert(SketchPercentile.exactRankValue(spark, dir, "v", 3001L) == sorted(3000))
   }
 }

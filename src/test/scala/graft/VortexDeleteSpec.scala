@@ -200,6 +200,7 @@ class VortexDeleteSpec extends AnyFunSuite {
       // interrupted file's stale replacement overwritten, the rest done
       val res = VortexDelete.delete(spark, dir, col("id") % 10L === 3L)
       assert(res.rowsDeleted <= 400L, res) // never re-deletes committed work
+      assert(CrashJudgmentSpec.uncommitted(spark, dir).isEmpty, "uncommitted state left after the repair")
       val left = spark.read.format("vortex").load(dir)
       assert(left.count() == expect.length.toLong, s"failAt=$failAt")
       assert(left.agg(sum("id")).head().getLong(0) == expect.sum, s"failAt=$failAt")
@@ -239,6 +240,7 @@ class VortexDeleteSpec extends AnyFunSuite {
     val left = spark.read.format("vortex").load(dir)
     assert(left.count() == 900L)
     assert(left.agg(sum("id")).head().getLong(0) == (100L until 1000L).sum)
+    assert(CrashJudgmentSpec.uncommitted(spark, dir).isEmpty, "uncommitted state left after the repair")
   }
 
   test("crash-window pair + a DIFFERENT statement: stale replacement repaired, no dup") {
@@ -265,6 +267,7 @@ class VortexDeleteSpec extends AnyFunSuite {
     // commit twice
     val res = VortexDelete.delete(spark, dir, col("id") >= 900L)
     assert(res.rowsDeleted == 100L, res)
+    assert(CrashJudgmentSpec.uncommitted(spark, dir).isEmpty, "uncommitted state left after the repair")
     val left = spark.read.format("vortex").load(dir)
     assert(left.count() == 900L) // ids 0..899 exactly once
     assert(left.agg(sum("id")).head().getLong(0) == (0L until 900L).sum)

@@ -228,6 +228,7 @@ class VortexMergeSpec extends AnyFunSuite {
     val res = VortexMerge.merge(spark, dir, src, Seq("v"))
     val after = spark.read.format("vortex").load(dir)
     assert(after.count() == 94L, s"res=$res")
+    assert(CrashJudgmentSpec.uncommitted(spark, dir).isEmpty, "uncommitted state left after the repair")
     assert(after.where(col("v").isNull).count() == 1L, "NULL-key row exactly once")
     Seq(1000L, 1001L, 1002L).foreach(k =>
       assert(after.where(col("v") === k).count() == 1L, s"v=$k"))

@@ -98,6 +98,7 @@ class VortexTransactionSpec extends AnyFunSuite {
     // the dead group's intermediate state is on disk; marker present
     // next writer on the dataset triggers recovery FIRST
     VortexUpdate.update(spark, dir, Map("v" -> lit(0L)), col("id") === -1L) // no-op match
+    assert(CrashJudgmentSpec.uncommitted(spark, dir).isEmpty, "uncommitted state left after the repair")
     assert(fingerprint(dir) == before,
       "recovery must restore the pre-group state across BOTH statements")
     // recovered dataset still works transactionally
@@ -122,6 +123,7 @@ class VortexTransactionSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("injected"), e.getMessage)
     assert(fingerprint(dir) == before, "pre-group state restored exactly")
+    assert(CrashJudgmentSpec.uncommitted(spark, dir).isEmpty, "uncommitted state left after the repair")
     runGroup(dir)
     assert(spark.read.format("vortex").load(dir).count() == 300L)
   }
@@ -225,6 +227,8 @@ class VortexTransactionSpec extends AnyFunSuite {
     // a writer on EACH dataset triggers recovery -> roll FORWARD
     VortexUpdate.update(spark, corpusB, Map("v" -> lit(0L)), col("id") === -1L)
     VortexDelete.delete(spark, tombsB, col("id") === -99L) // no-op writer
+    assert(CrashJudgmentSpec.uncommitted(spark, corpusB).isEmpty, "uncommitted state left after the repair")
+    assert(CrashJudgmentSpec.uncommitted(spark, tombsB).isEmpty, "uncommitted state left after the repair")
     assert(fingerprint(corpusB) == fingerprint(corpusA),
       "decided group must roll FORWARD, not back")
     assert(fingerprint(tombsB) == fingerprint(tombsA),
@@ -261,6 +265,7 @@ class VortexTransactionSpec extends AnyFunSuite {
     VortexUpdate.update(spark, dir, Map("v" -> lit(0L)), col("id") === -1L)
     assert(fingerprint(dir) == before,
       "a torn decision temp must not roll a crashed group forward")
+    assert(CrashJudgmentSpec.uncommitted(spark, dir).isEmpty, "uncommitted state left after the repair")
     assert(!fs.exists(tornTmp), "dead decision temp swept by recovery")
   }
 
@@ -393,6 +398,7 @@ class VortexTransactionSpec extends AnyFunSuite {
     out.write("""{"id":"deadbeef","pregen":0,"gen":1}""".getBytes("UTF-8"))
     out.close()
     VortexDelete.delete(spark, dir, col("id") === -1L) // no-op writer → recovery
+    assert(CrashJudgmentSpec.uncommitted(spark, dir).isEmpty, "uncommitted state left after the repair")
     assert(!fs.exists(mp), "marker finalized away")
     assert(fingerprint(dir) == committed, "committed state untouched")
   }

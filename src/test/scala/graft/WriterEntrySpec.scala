@@ -15,7 +15,8 @@ import graft.sources.vortex.StatsManifest.FileStats
   * built by reading the file back: `StatsManifest.fromFooter` over the
   * listed length and the re-read footer, plus the sums, blooms and
   * sketches a fresh writer computes over the file's stored rows (for a
-  * compacted file: the sums and OR-ed blooms it inherits, no sketch).
+  * compacted file: the sums, OR-ed blooms and merged sketches it
+  * inherits).
   * Footer I/O is pinned too: a write, a bulk copy and a MERGE insert
   * fetch no footer of a file they wrote, and compaction fetches only
   * its sources'. */
@@ -229,7 +230,7 @@ class WriterEntrySpec extends AnyFunSuite {
     assert(n == 8, s"compaction fetched $n footers for 8 sources")
     val checked = checkEntries(dir, Set("k"), Set("v")) { ref =>
       ref.copy(cols = ref.cols.map(c =>
-        c.copy(bloom = if (c.name == "k") Some(ored) else None, sketch = None)))
+        c.copy(bloom = if (c.name == "k") Some(ored) else None)))
     }
     assert(checked == 1)
   }
